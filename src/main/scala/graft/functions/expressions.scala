@@ -447,6 +447,81 @@ case class IvfArgmaxCell(child: Expression,
       newChild: Expression): IvfArgmaxCell = copy(child = newChild)
 }
 
+/** IVF probe routing kernel: a row's top-`nprobe` cells, best first,
+  * under the exact integer score 2·qv·c − ‖c‖² (highest first, the
+  * LOWEST cell wins ties). Null and NaN scores are skipped, as
+  * [[TopKByScore]] skips them, and so are centroids whose length differs
+  * from the row's — so a row with a null or NaN element routes nowhere
+  * (empty array). Null for null input. Cell ids are indices into
+  * `cents`; the tables ride the task closure as one reference object
+  * (the [[IvfArgmaxCell]] shape), so a probe ranks its cells in the
+  * projection that quantizes it — no explode/aggregate/self-join. */
+case class IvfTopCells(child: Expression, cents: Array[Array[Double]],
+    cn: Array[Double], nprobe: Int)
+    extends UnaryExpression {
+  require(cents.length == cn.length, "one norm per centroid")
+  require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+  override def dataType: DataType = ArrayType(IntegerType, false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "ivf_top_cells"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"ivf_top_cells expects array<double>, got ${t.sql}")
+  }
+
+  /** Row kernel — public so generated code can call it through the
+    * codegen reference object. */
+  def topCells(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    val n = a.numElements()
+    val k = math.min(nprobe, cents.length)
+    val bestC = new Array[Int](k)
+    val bestS = new Array[Double](k)
+    var size = 0
+    var hasNull = false
+    var i = 0
+    while (i < n) { if (a.isNullAt(i)) hasNull = true; i += 1 }
+    if (!hasNull) {
+      val q = a.toDoubleArray()
+      var ci = 0
+      while (ci < cents.length) {
+        val c = cents(ci)
+        if (c.length == n) {
+          var d = 0.0
+          var j = 0
+          while (j < n) { d += c(j) * q(j); j += 1 }
+          val s = d * 2 - cn(ci)
+          // cells arrive in ascending id order, so an equal score never
+          // displaces a kept cell: ties stay with the lowest id
+          if (!java.lang.Double.isNaN(s) && (size < k || s > bestS(size - 1))) {
+            var p = if (size < k) size else size - 1
+            while (p > 0 && s > bestS(p - 1)) {
+              bestS(p) = bestS(p - 1); bestC(p) = bestC(p - 1); p -= 1
+            }
+            bestS(p) = s; bestC(p) = ci
+            if (size < k) size += 1
+          }
+        }
+        ci += 1
+      }
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      java.util.Arrays.copyOf(bestC, size))
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    topCells(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("ivfRouter", this,
+      classOf[IvfTopCells].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.topCells($c);")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): IvfTopCells = copy(child = newChild)
+}
+
 /** Shared row math of the native PQ kernels: per-subspace squared
   * distances of a quantized vector against every codebook block.
   * `cbBlock(s)(ci)` is code ci's slice for subspace s, `csq(s)(ci)` its
@@ -850,6 +925,11 @@ object GraftFunctions {
       cents: Array[Array[Double]], cn: Array[Double]): Column =
     col(IvfArgmaxCell(expr(qv), superCents, superCn, memberCells,
       cents, cn))
+  /** Native IVF probe routing: a quantized vector's top-`nprobe` cells,
+    * best first (see [[IvfTopCells]]). */
+  def ivfTopCells(qv: Column, cents: Array[Array[Double]],
+      cn: Array[Double], nprobe: Int): Column =
+    col(IvfTopCells(expr(qv), cents, cn, nprobe))
   /** Native PQ encode: quantized vector → nSub code indices (see
     * [[PqEncodeCodes]]). */
   def pqEncodeCodes(qv: Column, cbBlock: Array[Array[Array[Double]]],

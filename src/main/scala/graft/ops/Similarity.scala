@@ -187,8 +187,8 @@ object Similarity {
     topKReduce(scored, k)
   }
 
-  /** IVF with EXTERNALLY SUPPLIED centroid rows ("seeded" IVF) — identical
-    * probe/cell-join/top-k plan to [[ivfTopK]], but the coarse quantizer is
+  /** IVF with EXTERNALLY SUPPLIED centroid rows ("seeded" IVF) — the
+    * cell-join/top-k shape of [[ivfTopK]], but the coarse quantizer is
     * a set of designated seed vectors instead of fitted k-means centers,
     * and cell assignment runs on QUANTIZED integers (exact in double
     * arithmetic), so the cell partition and probe sets are bit-reproducible
@@ -200,14 +200,15 @@ object Similarity {
     * Cell ids are indices into the seed rows in ascending `seedId` order;
     * assignment argmax and probe ranking both break score ties by lowest
     * cell id (matching `row_number() OVER (ORDER BY score DESC, cell ASC)`
-    * in an external engine). */
+    * in an external engine). Each query row is routed to its own
+    * top-`nprobe` cells by one native kernel call ([[routeToCells]]) and
+    * probed through the plan the persisted index shares ([[ivfProbe]]). */
   def ivfTopKSeeded(corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String,
       seeds: DataFrame, seedId: String, seedVec: String,
       k: Int, nprobe: Int = 4, quantScale: Int = 10000): DataFrame = {
     val (centTab, cnTab) = collectSeedTable(seeds, seedId, seedVec,
       quantScale)
-    val cellScores = scorerFromTable(centTab, cnTab)
     val quant = (v: Column) =>
       transform(v, x => round(x.cast("double") * quantScale))
     // corpus assignment through the NATIVE argmax kernel (flat mode) —
@@ -225,26 +226,60 @@ object Similarity {
         quant(col(corpusVec)).as("__qn"))
       .select(col("corpus_id"), col("cvec"), col("cnorm"),
         assignCell.as("cell"))
+    ivfProbe(assigned, centTab, cnTab, quantScale, queries, queryId,
+      queryVec, k, nprobe)
+  }
+
+  /** The probe plan shared by [[ivfTopKSeeded]] and the persisted-index
+    * probes: each query row is routed to its top-`nprobe` cells
+    * ([[routeToCells]]), the (cell, corpus_id, cvec, cnorm) `postings`
+    * are equi-joined on `cell` against that BROADCAST probe set, and a
+    * bounded cosine top-`k` per query id closes it. When `postings` is a
+    * cell-partitioned parquet read the cell join triggers dynamic
+    * partition pruning, so only probed cells' files are scanned. */
+  private def ivfProbe(postings: DataFrame, centTab: Array[Array[Double]],
+      cnTab: Array[Double], quantScale: Int, queries: DataFrame,
+      queryId: String, queryVec: String, k: Int,
+      nprobe: Int): DataFrame = {
     val q0 = queries.select(col(queryId).as("query_id"),
-        col(queryVec).as("qvec"), norm(col(queryVec)).as("qnorm"),
-        quant(col(queryVec)).as("__qn"))
-      .withColumn("scores", cellScores(col("__qn")))
+      col(queryVec).as("qvec"), norm(col(queryVec)).as("qnorm"),
+      transform(col(queryVec), x => round(x.cast("double") * quantScale))
+        .as("__qn"))
+    val probes = routeToCells(q0, col("__qn"), centTab, cnTab, nprobe)
       .drop("__qn")
-    val probes = q0
-      .select(col("query_id"), posexplode(col("scores")))
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
-        nprobe).as("cells"))
-      .select(col("query_id"), explode(col("cells.id")).as("cell"))
-      .select(col("query_id"), col("cell").cast("int").as("cell"))
-      .join(q0.select(col("query_id"), col("qvec"), col("qnorm")),
-        Seq("query_id"))
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
+    val scored = postings.join(broadcast(probes), Seq("cell"))
       .select(col("query_id"), col("corpus_id"),
         cosinePre(dot(col("cvec"), col("qvec")), col("cnorm"), col("qnorm"))
           .as("score"))
     topKReduce(scored, k)
   }
+
+  /** Per-row probe routing — the one cell-ranking implementation of
+    * every IVF and IVF-PQ probe: each row of `rows` is repeated once per
+    * cell of its top-`nprobe` cells, as a new `cell` INT column. `qv` is
+    * the row's quantized vector, ranked against the quantized centroid
+    * table by the native [[graft.functions.IvfTopCells]] kernel
+    * (2·q·c − ‖c‖², highest first, ties to the lowest cell). A row whose
+    * vector is null, holds a null or NaN, or matches no centroid's
+    * length routes nowhere.
+    *
+    * Rows route independently: two rows sharing a query id each probe
+    * their OWN cells, and their candidates merge into one top-k per id
+    * in [[topKReduce]] (a corpus row reached by both appears once per
+    * row that reached it).
+    *
+    * The `cell < #cells` bound holds for every kernel output; it stays
+    * in the plan as the probe side's selective predicate. Spark's
+    * PartitionPruning adds the dynamic pruning filter on the
+    * postings/codes `cell` partitions only when the other join side
+    * carries one, and a driver-local query set folds every filter below
+    * the generator into its LocalRelation. */
+  private def routeToCells(rows: DataFrame, qv: Column,
+      centTab: Array[Array[Double]], cnTab: Array[Double],
+      nprobe: Int): DataFrame =
+    rows.withColumn("cell",
+        explode(GraftFunctions.ivfTopCells(qv, centTab, cnTab, nprobe)))
+      .where(col("cell") < centTab.length)
 
   /** Driver-side cell scorer compiled from the (small-by-contract) seed
     * rows: `qv => array(2·qv·c_i − ||c_i||²)` over the quantized seed
@@ -1113,15 +1148,15 @@ object Similarity {
     * the ratio grows with dims.
     *
     * Query path: cells are ranked exactly as q38 (integer quantized
-    * scores, ties to the lowest cell id); each query probes its
-    * `nProbe` best cells; candidates are scored by a per-query lookup
-    * table LUT[s][ci] = ‖q_s − c_{ci,s}‖² built once per query from the
-    * codebook literals, so a candidate costs nSub array probes — no dot
-    * products at scan time. This is the NON-RESIDUAL ADC variant (codes
-    * quantize the vector itself, not the cell residual): the codebook
-    * is one global table — the same one q248 audits — and every
-    * distance is an exact integer after quantization, replayable by any
-    * engine. All magnitudes stay under 2^53, so the double-typed
+    * scores, ties to the lowest cell id) by the native routing kernel
+    * ([[routeToCells]]); each query row probes its own `nProbe` best
+    * cells carrying a lookup table LUT[s][ci] = ‖q_s − c_{ci,s}‖² built
+    * once per row from the codebook tables, so a candidate costs nSub
+    * array probes — no dot products at scan time ([[pqAdcScore]]). This
+    * is the NON-RESIDUAL ADC variant (codes quantize the vector itself,
+    * not the cell residual): the codebook is one global table — the
+    * same one q248 audits — and every distance is an exact integer
+    * after quantization, replayable by any engine. All magnitudes stay under 2^53, so the double-typed
     * aggregate scores are still exact integers.
     *
     * Output: (query_id, corpus_id, approx_d2, rank), ranked by
@@ -1149,7 +1184,6 @@ object Similarity {
     }
     val (centTab, cnTab) = collectSeedTable(seeds, seedId, seedVec,
       quantScale)
-    val cellScores = scorerFromTable(centTab, cnTab)
     // corpus assignment: (corpus_id, qv, cell) in ONE pass through the
     // NATIVE argmax kernel (flat mode — identical ties-to-lowest-index
     // semantics as the transform+array_position form it replaces, but
@@ -1176,16 +1210,9 @@ object Similarity {
     val q0 = queries.select(col(queryId).cast("long").as("query_id"),
         quantD(col(queryVec)).as("qv"))
       .where(col("qv").isNotNull && size(col("qv")) === inDims)
-      .withColumn("cscores", cellScores(col("qv")))
-    val probes = q0
-      .select(col("query_id"), posexplode(col("cscores")))
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
-        nProbe).as("cells"))
-      .select(col("query_id"), explode(col("cells.id")).as("cell"))
-      .select(col("query_id"), col("cell").cast("int").as("cell"))
-    ivfPqAdc(base, q0.select(col("query_id"), col("qv")), probes,
-      cb, inDims, nSub, k)
+    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
+    pqAdcScore(pqEncode(base, cbBlock, csq), q0, centTab, cnTab, nProbe,
+      cbBlock, csq, k)
   }
 
   /** PQ codebook rows collected from the corpus (small by contract —
@@ -1202,19 +1229,6 @@ object Similarity {
         col("qv").isNotNull && size(col("qv")) === inDims)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
       .sortBy(_._1).map(_._2).toSeq
-
-  /** Shared PQ-encode + ADC-score tail of the IVF-PQ family: `base` is
-    * the coarse-assigned corpus (corpus_id, qv quantized, cell:int) —
-    * however the coarse quantizer chose the cell ([[ivfPqTopK]]'s exact
-    * argmax or [[ivfPqTopKTwoLevel]]'s two-level route) — `q0` the
-    * quantized queries (query_id, qv), `probes` the per-query probe
-    * cells. Everything downstream is quantizer-independent: one-pass
-    * encode to (corpus_id, cell, nSub codes), per-query ADC LUTs,
-    * O(codes) index traffic. */
-  private def ivfPqAdc(base: DataFrame, q0: DataFrame, probes: DataFrame,
-      cb: Seq[Seq[Long]], inDims: Int, nSub: Int, k: Int): DataFrame =
-    pqAdcScore(pqEncode(base, cb, inDims, nSub), q0, probes, cb, inDims,
-      nSub, k)
 
   /** The PQ kernel tables derived from the (quantized) codebook alone:
     * `cbBlock(s)(ci)` = code ci's slice for subspace s, `csq(s)(ci)`
@@ -1247,13 +1261,12 @@ object Similarity {
     * honest shape: (corpus_id, cell, codes) IS the index artifact a
     * real pipeline persists ([[buildIvfPqIndex]] writes exactly this
     * frame). */
-  private def pqEncode(base: DataFrame, cb: Seq[Seq[Long]], inDims: Int,
-      nSub: Int): DataFrame = {
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
+  private def pqEncode(base: DataFrame,
+      cbBlock: Array[Array[Array[Double]]],
+      csq: Array[Array[Double]]): DataFrame =
     base.select(col("corpus_id"), col("cell"),
         GraftFunctions.pqEncodeCodes(col("qv"), cbBlock, csq).as("codes"))
       .truncateLineage(eager = false)
-  }
 
   /** [[pqEncode]] plus the two per-posting margin columns the PERSISTED
     * index carries: `nb2` = ‖x‖² and `e2` = ‖x − x̂‖², both exact
@@ -1262,10 +1275,9 @@ object Similarity {
     * stored distortion is what makes [[annNearDupPairsPq]]'s ADC
     * prefilter provably lossless; the in-query paths keep the leaner
     * [[pqEncode]]. */
-  private def pqEncodeIndexed(base: DataFrame, cb: Seq[Seq[Long]],
-      inDims: Int, nSub: Int,
+  private def pqEncodeIndexed(base: DataFrame,
+      cbBlock: Array[Array[Array[Double]]], csq: Array[Array[Double]],
       payloadCols: Seq[String] = Nil): DataFrame = {
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
     val pl = payloadCols.map(col)
     base.select(col("corpus_id") +: col("cell") +:
         GraftFunctions.pqEncodeWithErr(col("qv"), cbBlock, csq)
@@ -1277,25 +1289,31 @@ object Similarity {
       .truncateLineage(eager = false)
   }
 
-  /** ADC scoring of pre-encoded codes against quantized queries: one
-    * native [[graft.functions.PqQueryLut]] call per query row builds
-    * the per-(subspace, code) LUT, candidates in probed cells sum nSub
-    * LUT lookups each, bounded top-k. */
+  /** The shared ADC probe tail of the IVF-PQ family, over pre-encoded
+    * (cell, corpus_id, codes) rows — however the coarse quantizer chose
+    * each row's cell ([[ivfPqTopK]]'s exact argmax, [[ivfPqTopKTwoLevel]]'s
+    * two-level route, or a persisted index's codes). `q0` holds the
+    * quantized queries (query_id, qv). One native
+    * [[graft.functions.PqQueryLut]] call per query row builds its
+    * per-(subspace, code) LUT, the row is routed to its top-`nprobe`
+    * cells ([[routeToCells]]) carrying that LUT, and candidates in
+    * probed cells sum nSub LUT lookups each into a bounded top-k. */
   private def pqAdcScore(coded: DataFrame, q0: DataFrame,
-      probes: DataFrame, cb: Seq[Seq[Long]], inDims: Int, nSub: Int,
+      centTab: Array[Array[Double]], cnTab: Array[Double], nprobe: Int,
+      cbBlock: Array[Array[Array[Double]]], csq: Array[Array[Double]],
       k: Int): DataFrame = {
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
-    val qlut = q0.select(col("query_id"),
-      GraftFunctions.pqQueryLut(col("qv"), cbBlock, csq).as("lut"))
-    val probesL = probes.join(qlut, Seq("query_id"))
+    val probes = routeToCells(
+      q0.select(col("query_id"), col("qv"),
+        GraftFunctions.pqQueryLut(col("qv"), cbBlock, csq).as("lut")),
+      col("qv"), centTab, cnTab, nprobe).drop("qv")
     // ADC scoring: nSub LUT probes per candidate; negated distance so
     // the bounded top-k aggregate's (max score, ties id asc) semantics
     // realize (min distance, ties corpus_id asc)
-    val approxD2 = (0 until nSub).map { s =>
+    val approxD2 = cbBlock.indices.map { s =>
       element_at(element_at(col("lut"), s + 1),
         element_at(col("codes"), s + 1) + 1)
     }.reduce(_ + _)
-    val scored = coded.join(broadcast(probesL), Seq("cell"))
+    val scored = coded.join(broadcast(probes), Seq("cell"))
       .select(col("query_id"), col("corpus_id"), (-approxD2).as("score"))
     // the result plan references the coded checkpoint (lazy barrier), so
     // its blocks live exactly as long as the caller's frame — reaped by
@@ -1450,9 +1468,9 @@ object Similarity {
     * external engine replays the identical assignment (the q284
     * oracle). QUERIES still rank all cells exactly for their probe sets
     * (queries are small by contract — a query batch, not the corpus —
-    * and scoring them via the same broadcast centroid table keeps even
-    * that free of √N literals). Everything downstream is the shared
-    * [[ivfPqAdc]] tail. */
+    * and the native routing kernel keeps even that free of √N
+    * literals). Everything downstream is the shared [[pqAdcScore]]
+    * tail. */
   def ivfPqTopKTwoLevel(corpus: DataFrame, corpusId: String,
       corpusVec: String, queries: DataFrame, queryId: String,
       queryVec: String, codebookIds: Seq[Long], inDims: Int, nSub: Int,
@@ -1461,7 +1479,6 @@ object Similarity {
     require(nSub >= 1 && inDims % nSub == 0,
       s"inDims $inDims must divide into nSub $nSub")
     require(codebookIds.nonEmpty, "need at least one codebook row")
-    val spark = corpus.sparkSession
     val quantD = (v: Column) =>
       transform(v, x => round(x.cast("double") * quantScale))
     val valid = corpus.select(col(corpusId).cast("long").as("__id"),
@@ -1481,7 +1498,8 @@ object Similarity {
     // position), quantized to exact integers. Collected driver-side to
     // group them under the super-quantizer — √N rows of dims doubles
     // (16 MB at 10⁹ vectors), the same driver contract as the k-means
-    // clusterCenters; they return to the executors as ONE broadcast.
+    // clusterCenters; they return to the executors inside the kernels'
+    // reference objects.
     val seedRows = hashSeeds(valid, "__id", "__v", cells)
       .select(transform(col("svec"),
         x => round(x.cast("double") * quantScale)).as("cv"))
@@ -1525,19 +1543,6 @@ object Similarity {
       (0 until nCells).groupBy(cellToSuper)
     val memberCells: Array[Array[Int]] = Array.tabulate(superCount)(g =>
       membersByG.getOrElse(g, IndexedSeq.empty).sorted.toArray)
-    // the flat centroid table for query probe ranking — broadcast DATA,
-    // not plan literals (queries are few; the table is √N rows)
-    val centFrame = spark.createDataFrame(
-      spark.sparkContext.parallelize((0 until nCells).map(ci =>
-        org.apache.spark.sql.Row(ci, cents(ci), cn(ci))), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)),
-        org.apache.spark.sql.types.StructField("cn",
-          org.apache.spark.sql.types.DoubleType))))
     // corpus assignment: one native codegen'd call per row (super argmax
     // then member argmax, ties to the lowest index at both levels —
     // exactly the oracle's two row_number ranks)
@@ -1548,21 +1553,14 @@ object Similarity {
       .select(col("corpus_id"), col("qv"),
         GraftFunctions.ivfArgmaxCell(col("qv"), superCentsArr, superCnArr,
           memberCells, centsArr, cnArr).as("cell"))
-    // query probes: exact ranking over ALL cells via the broadcast
-    // centroid table (queries are small by contract); ties lowest cell
+    // query probes: exact ranking over ALL cells (queries are small by
+    // contract), ties to the lowest cell
     val q0 = queries.select(col(queryId).cast("long").as("query_id"),
         quantD(col(queryVec)).as("qv"))
       .where(col("qv").isNotNull && size(col("qv")) === inDims)
-    val probes = q0.crossJoin(broadcast(centFrame))
-      .select(col("query_id"), col("cell"),
-        (GraftFunctions.vectorDot(col("cv"), col("qv")) * 2 - col("cn"))
-          .as("score"))
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.topKByScore(col("score"),
-        col("cell").cast("long"), probe).as("cells"))
-      .select(col("query_id"), explode(col("cells.id")).as("cell"))
-      .select(col("query_id"), col("cell").cast("int").as("cell"))
-    ivfPqAdc(base, q0, probes, cb, inDims, nSub, k)
+    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
+    pqAdcScore(pqEncode(base, cbBlock, csq), q0, centsArr, cnArr, probe,
+      cbBlock, csq, k)
   }
 
   private def md5hex15(s: String): String =
@@ -1648,9 +1646,18 @@ object Similarity {
     * `quantScale`/`twoLevelThreshold` are the build's quantization
     * parameters, carried WITH the index (persisted in `<path>/meta`,
     * read back by [[readIvfIndex]]) so append and probe can never
-    * silently diverge from the build's rounding or routing. */
+    * silently diverge from the build's rounding or routing.
+    *
+    * The driver-side quantizer table (quantized centroids in cell order
+    * and their ‖c‖²) is collected once per frames value, on first use,
+    * and reused by every probe, audit and dedup pass over it. A frames
+    * value is a snapshot: re-open the index with [[readIvfIndex]] after
+    * a rebuild overwrites its root. */
   final case class IvfIndexFrames(centroids: DataFrame, postings: DataFrame,
-      quantScale: Int = 10000, twoLevelThreshold: Int = 4096)
+      quantScale: Int = 10000, twoLevelThreshold: Int = 4096) {
+    private[ops] lazy val cellTable: (Array[Array[Double]], Array[Double]) =
+      collectSeedTable(centroids, "cell", "cvec", quantScale)
+  }
 
   /** Build the index frames for a seed set (e.g. [[hashSeeds]] output or
     * the persisted centers of a prior clustering job): cell index =
@@ -2455,47 +2462,38 @@ object Similarity {
   }
 
   /** Probe a (persisted or in-memory) index: [[ivfTopKSeeded]]'s exact
-    * probe plan — per-query cell ranking over the collected centroid
-    * table, top-`nprobe` cells through the bounded top-k aggregate, then
-    * an equi-join of postings against the broadcast probe set and a
-    * bounded cosine top-`k`. When `idx` came from [[readIvfIndex]] the
-    * cell join triggers dynamic partition pruning on the postings scan
-    * (the probe side is broadcast, the join key is the disk-partition
-    * column), so only the probed cells' files are read — verified by
-    * AnnIndexSpec against the physical plan. */
+    * probe plan — each query row routed to its top-`nprobe` cells by one
+    * native kernel call over the index's quantizer table (collected once
+    * per frames value), then an equi-join of postings against the
+    * broadcast probe set and a bounded cosine top-`k` per query id. Each
+    * row probes its own cells, so an id carried by several rows gets the
+    * best `k` over all of its rows' candidates. When `idx` came from
+    * [[readIvfIndex]] the cell join triggers dynamic partition pruning
+    * on the postings scan (the probe side is broadcast, the join key is
+    * the disk-partition column), so only the probed cells' files are
+    * read — verified by AnnIndexSpec against the physical plan, also for
+    * a driver-local query set. Once the table is collected a probe runs
+    * at most three Spark jobs: the broadcast, the scan with its partial
+    * top-k, and the final top-k. */
   def probeIvfIndex(idx: IvfIndexFrames, queries: DataFrame,
       queryId: String, queryVec: String, k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val quantScale = idx.quantScale
-    val (centTab, cnTab) = collectSeedTable(idx.centroids, "cell", "cvec",
-      quantScale)
+      nprobe: Int = 4): DataFrame =
+    probePostings(idx, idx.postings, queries, queryId, queryVec, k, nprobe)
+
+  /** [[probeIvfIndex]] over `postings` (the index's own, or a filtered
+    * subset of them) under `idx`'s quantizer. */
+  private def probePostings(idx: IvfIndexFrames, postings: DataFrame,
+      queries: DataFrame, queryId: String, queryVec: String, k: Int,
+      nprobe: Int): DataFrame = {
+    val (centTab, cnTab) = idx.cellTable
     if (centTab.isEmpty) {
       // empty index: every probe finds nothing (complete, don't throw)
       return queries.limit(0)
         .select(col(queryId).as("query_id"), lit(0L).as("corpus_id"),
           lit(0.0).as("score"), lit(0).cast("int").as("rank"))
     }
-    val cellScores = scorerFromTable(centTab, cnTab)
-    val q0 = queries.select(col(queryId).as("query_id"),
-        col(queryVec).as("qvec"), norm(col(queryVec)).as("qnorm"),
-        transform(col(queryVec), x => round(x.cast("double") * quantScale))
-          .as("__qn"))
-      .withColumn("scores", cellScores(col("__qn")))
-      .drop("__qn")
-    val probes = q0
-      .select(col("query_id"), posexplode(col("scores")))
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
-        nprobe).as("cells"))
-      .select(col("query_id"), explode(col("cells.id")).as("cell"))
-      .select(col("query_id"), col("cell").cast("int").as("cell"))
-      .join(q0.select(col("query_id"), col("qvec"), col("qnorm")),
-        Seq("query_id"))
-    val scored = idx.postings.join(broadcast(probes), Seq("cell"))
-      .select(col("query_id"), col("corpus_id"),
-        cosinePre(dot(col("cvec"), col("qvec")), col("cnorm"), col("qnorm"))
-          .as("score"))
-    topKReduce(scored, k)
+    ivfProbe(postings, centTab, cnTab, idx.quantScale, queries, queryId,
+      queryVec, k, nprobe)
   }
 
   /** ATTRIBUTE-FILTERED probe — "nearest ENGLISH documents", "same
@@ -2531,8 +2529,7 @@ object Similarity {
     try {
       val filtered = idx.postings.where(predicate)
       filtered.queryExecution.analyzed // resolve NOW, not at the action
-      probeIvfIndex(idx.copy(postings = filtered), queries, queryId,
-        queryVec, k, nprobe)
+      probePostings(idx, filtered, queries, queryId, queryVec, k, nprobe)
     } catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNRESOLVED_COLUMN") &&
@@ -2702,8 +2699,7 @@ object Similarity {
     require(thresholdPpm >= 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm must be in [0, 1000000], got $thresholdPpm")
     val quantScale = idx.quantScale
-    val (centTab, cnTab) = collectSeedTable(idx.centroids, "cell", "cvec",
-      quantScale)
+    val (centTab, cnTab) = idx.cellTable
     if (centTab.isEmpty) {
       return newRows.limit(0)
         .select(col(idCol).cast("long").as("id_new"),
@@ -2725,6 +2721,9 @@ object Similarity {
       .where(col("__qn").isNotNull)
       .withColumn("nq2", dot(col("__qn"), col("__qn")))
       .truncateLineage(eager = false)
+    // cells are ranked per id_new, not per row ([[routeToCells]]): a
+    // micro-batch may repeat an id, and its pairs are defined over the
+    // id's pooled cell ranking
     val probes = q0
       .withColumn("scores", cellScores(col("__qn")))
       .select(col("id_new"), posexplode(col("scores")))
@@ -2980,14 +2979,13 @@ object Similarity {
         "— the index predates the stored-distortion format; rebuild it " +
         "(buildIvfPqIndex + writeIvfPqIndex) to use the ADC prefilter")
     val quantScale = pq.quantScale
-    val (centTab, cnTab) = collectSeedTable(pq.centroids, "cell", "cvec",
-      quantScale)
-    val cb = collectCodebookFrame(pq.codebook, quantScale)
+    val (centTab, cnTab) = pq.cellTable
     val emptyPairs = newRows.limit(0)
       .select(col(idCol).cast("long").as("id_new"),
         lit(0L).as("id_existing"), lit(0).cast("int").as("cell"))
-    if (centTab.isEmpty || cb.isEmpty) return (emptyPairs, emptyPairs)
-    val (cbBlock, _) = pqTables(cb, pq.inDims, pq.nSub)
+    if (centTab.isEmpty || pq.codebookTable.isEmpty)
+      return (emptyPairs, emptyPairs)
+    val (cbBlock, _) = pq.pqKernelTables
     val cellScores = scorerFromTable(centTab, cnTab)
     val quant = (v: Column) =>
       transform(v, x => round(x.cast("double") * quantScale))
@@ -3029,7 +3027,7 @@ object Similarity {
     // wrappers per candidate, which at 10⁷ candidates exceeded the
     // exact dots the prefilter avoids
     val adot = GraftFunctions.pqAdcDotFlat(col("dlut"), col("codes"),
-      cb.length)
+      pq.codebookTable.length)
     val cand = codesIn
       .select(col("cell"), col("corpus_id").as("id_existing"),
         col("codes"), col("e2"), col("nb2"))
@@ -3071,10 +3069,8 @@ object Similarity {
       s"annNearDupPairsPq: the PQ index (quantScale ${pq.quantScale}) " +
         s"and the raw index (${raw.quantScale}) were quantized under " +
         "different scales — their cells do not correspond")
-    val (rawTab, _) = collectSeedTable(raw.centroids, "cell", "cvec",
-      raw.quantScale)
-    val (pqTab, _) = collectSeedTable(pq.centroids, "cell", "cvec",
-      pq.quantScale)
+    val (rawTab, _) = raw.cellTable
+    val (pqTab, _) = pq.cellTable
     require(rawTab.length == pqTab.length &&
       rawTab.indices.forall(j =>
         java.util.Arrays.equals(rawTab(j), pqTab(j))),
@@ -3132,10 +3128,22 @@ object Similarity {
     * THE at-rest layout when raw vectors don't fit the budget. Probes
     * score candidates by ADC lookup tables against the codes only;
     * exact re-ranking (if wanted) joins the survivors back to a raw
-    * vector table via [[rerankExactTopK]]. */
+    * vector table via [[rerankExactTopK]].
+    *
+    * As for [[IvfIndexFrames]], the driver-side quantizer tables — the
+    * centroid table, the quantized codebook and its PQ kernel tables —
+    * are collected once per frames value, on first use. */
   final case class IvfPqIndexFrames(centroids: DataFrame,
       codebook: DataFrame, codes: DataFrame, inDims: Int, nSub: Int,
-      quantScale: Int, twoLevelThreshold: Int = 4096)
+      quantScale: Int, twoLevelThreshold: Int = 4096) {
+    private[ops] lazy val cellTable: (Array[Array[Double]], Array[Double]) =
+      collectSeedTable(centroids, "cell", "cvec", quantScale)
+    private[ops] lazy val codebookTable: Seq[Seq[Long]] =
+      collectCodebookFrame(codebook, quantScale)
+    private[ops] lazy val pqKernelTables
+        : (Array[Array[Array[Double]]], Array[Array[Double]]) =
+      pqTables(codebookTable, inDims, nSub)
+  }
 
   /** (cell INT, corpus_id, qv) coarse assignment keeping the QUANTIZED
     * vector (the PQ-encode input), two-level-routed at high cell
@@ -3228,8 +3236,9 @@ object Similarity {
     val base = coarseAssignQuantized(corpus, corpusId, corpusVec,
       centTab, cnTab, quantScale, twoLevelThreshold, inDims,
       payloadCols)
+    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
     IvfPqIndexFrames(rawSeeds.toDF("cell", "cvec"), codebookFrame,
-      pqEncodeIndexed(base, cb, inDims, nSub, payloadCols)
+      pqEncodeIndexed(base, cbBlock, csq, payloadCols)
         .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
           col("codes") +: col("e2") +: col("nb2") +:
           payloadCols.map(col): _*),
@@ -3345,10 +3354,8 @@ object Similarity {
           s"$path — an append under a different coarse-routing switch " +
           "would corrupt cell assignment")
     }
-    val (centTab, cnTab) = collectSeedTable(idx.centroids, "cell",
-      "cvec", idx.quantScale)
-    val cb = collectCodebookFrame(idx.codebook, idx.quantScale)
-    if (centTab.isEmpty || cb.isEmpty) {
+    val (centTab, cnTab) = idx.cellTable
+    if (centTab.isEmpty || idx.codebookTable.isEmpty) {
       require(delta.isEmpty,
         s"appendToIvfPqIndex: empty quantizer at $path but the delta " +
           "is non-empty — rebuild from a non-empty corpus first")
@@ -3372,7 +3379,8 @@ object Similarity {
     // appends into a pre-margin-column index root (codes without
     // e2/nb2) would leave mixed file schemas behind — compact/rebuild
     // such a root before appending with this version
-    pqEncodeIndexed(base, cb, idx.inDims, idx.nSub, payloadCols)
+    val (cbBlock, csq) = idx.pqKernelTables
+    pqEncodeIndexed(base, cbBlock, csq, payloadCols)
       .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
         col("codes") +: col("e2") +: col("nb2") +:
         payloadCols.map(col): _*)
@@ -3390,39 +3398,38 @@ object Similarity {
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1))
       .sortBy(_._1).map(_._2).toSeq
 
-  /** Probe a PQ index: probe cells exactly like [[probeIvfIndex]], then
-    * ADC-score ONLY the probed cells' codes (dynamic partition pruning
-    * on the codes scan when the index came from [[readIvfPqIndex]]) —
-    * per-candidate cost is nSub LUT lookups, and the scan reads nSub
-    * ints per row instead of inDims floats. Returns (query_id,
-    * corpus_id, approx_d2, rank). */
+  /** Probe a PQ index: probe cells exactly like [[probeIvfIndex]] (per
+    * query row, one native routing call over the quantizer table
+    * collected once per frames value), then ADC-score ONLY the probed
+    * cells' codes (dynamic partition pruning on the codes scan when the
+    * index came from [[readIvfPqIndex]]) — per-candidate cost is nSub
+    * LUT lookups, and the scan reads nSub ints per row instead of inDims
+    * floats. Each query row carries its own LUT to its own cells; an id
+    * carried by several rows gets the best `k` over all of them. Returns
+    * (query_id, corpus_id, approx_d2, rank). */
   def probeIvfPqIndex(idx: IvfPqIndexFrames, queries: DataFrame,
       queryId: String, queryVec: String, k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val (centTab, cnTab) = collectSeedTable(idx.centroids, "cell",
-      "cvec", idx.quantScale)
-    val cb = collectCodebookFrame(idx.codebook, idx.quantScale)
-    if (centTab.isEmpty || cb.isEmpty) {
+      nprobe: Int = 4): DataFrame =
+    probePqCodes(idx, idx.codes, queries, queryId, queryVec, k, nprobe)
+
+  /** [[probeIvfPqIndex]] over `codes` (the index's own, or a filtered
+    * subset of them) under `idx`'s quantizer. */
+  private def probePqCodes(idx: IvfPqIndexFrames, codes: DataFrame,
+      queries: DataFrame, queryId: String, queryVec: String, k: Int,
+      nprobe: Int): DataFrame = {
+    val (centTab, cnTab) = idx.cellTable
+    if (centTab.isEmpty || idx.codebookTable.isEmpty) {
       return queries.limit(0)
         .select(col(queryId).cast("long").as("query_id"),
           lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
           lit(0L).as("rank"))
     }
-    val cellScores = scorerFromTable(centTab, cnTab)
     val q0 = queries.select(col(queryId).cast("long").as("query_id"),
         transform(col(queryVec),
           x => round(x.cast("double") * idx.quantScale)).as("qv"))
       .where(col("qv").isNotNull && size(col("qv")) === idx.inDims)
-    val probes = q0
-      .withColumn("cscores", cellScores(col("qv")))
-      .select(col("query_id"), posexplode(col("cscores")))
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
-        nprobe).as("cells"))
-      .select(col("query_id"), explode(col("cells.id")).as("cell"))
-      .select(col("query_id"), col("cell").cast("int").as("cell"))
-    pqAdcScore(idx.codes, q0.select(col("query_id"), col("qv")), probes,
-      cb, idx.inDims, idx.nSub, k)
+    val (cbBlock, csq) = idx.pqKernelTables
+    pqAdcScore(codes, q0, centTab, cnTab, nprobe, cbBlock, csq, k)
   }
 
   /** [[probeIvfPqIndex]] with a metadata predicate over the codes'
@@ -3444,8 +3451,7 @@ object Similarity {
     try {
       val filtered = idx.codes.where(predicate)
       filtered.queryExecution.analyzed // resolve NOW, not at the action
-      probeIvfPqIndex(idx.copy(codes = filtered), queries, queryId,
-        queryVec, k, nprobe)
+      probePqCodes(idx, filtered, queries, queryId, queryVec, k, nprobe)
     } catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNRESOLVED_COLUMN") &&
@@ -3533,16 +3539,14 @@ object Similarity {
     if (!resuming) {
       val idxs = srcPaths.map(p => p -> readIvfIndex(spark, p))
       val (p0, first) = idxs.head
-      val (t0, _) = collectSeedTable(first.centroids, "cell", "cvec",
-        first.quantScale)
+      val (t0, _) = first.cellTable
       idxs.tail.foreach { case (p, i) =>
         require(i.quantScale == first.quantScale &&
           i.twoLevelThreshold == first.twoLevelThreshold,
           s"mergeIvfIndexes: $p meta (${i.quantScale}, " +
             s"${i.twoLevelThreshold}) contradicts $p0 " +
             s"(${first.quantScale}, ${first.twoLevelThreshold})")
-        val (t, _) = collectSeedTable(i.centroids, "cell", "cvec",
-          first.quantScale)
+        val (t, _) = i.cellTable
         require(t.length == t0.length &&
           t.indices.forall(j => java.util.Arrays.equals(t(j), t0(j))),
           s"mergeIvfIndexes: $p was built under DIFFERENT centroids than " +
@@ -3722,9 +3726,8 @@ object Similarity {
     }
     val idxs = srcPaths.map(p => p -> readIvfPqIndex(spark, p))
     val (p0, first) = idxs.head
-    val (t0, _) = collectSeedTable(first.centroids, "cell", "cvec",
-      first.quantScale)
-    val cb0 = collectCodebookFrame(first.codebook, first.quantScale)
+    val (t0, _) = first.cellTable
+    val cb0 = first.codebookTable
     idxs.tail.foreach { case (p, i) =>
       require(i.inDims == first.inDims && i.nSub == first.nSub &&
         i.quantScale == first.quantScale &&
@@ -3733,15 +3736,13 @@ object Similarity {
           s"${i.quantScale}, ${i.twoLevelThreshold}) contradicts $p0 " +
           s"(${first.inDims}, ${first.nSub}, ${first.quantScale}, " +
           s"${first.twoLevelThreshold})")
-      val (t, _) = collectSeedTable(i.centroids, "cell", "cvec",
-        first.quantScale)
+      val (t, _) = i.cellTable
       require(t.length == t0.length &&
         t.indices.forall(j => java.util.Arrays.equals(t(j), t0(j))),
         s"mergeIvfPqIndexes: $p was built under DIFFERENT centroids " +
           s"than $p0 — codes routed under different geometry cannot be " +
           "merged")
-      val cb = collectCodebookFrame(i.codebook, first.quantScale)
-      require(cb == cb0,
+      require(i.codebookTable == cb0,
         s"mergeIvfPqIndexes: $p was encoded under a DIFFERENT codebook " +
           s"than $p0 — its codes index other reconstruction points and " +
           "cannot be merged; re-encode one side under the shared " +

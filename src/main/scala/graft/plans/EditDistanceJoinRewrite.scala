@@ -41,6 +41,9 @@ import graft.functions.DeletionVariants
   *    equality key makes reapplication a no-op (the optimizer batch runs
   *    to fixpoint);
   *  - disabled with `spark.graft.editJoin.rewrite=false`.
+  *
+  * Hints: each side keeps the user's join hint; a side without a
+  * strategy gets NO_BROADCAST_HASH (see [[rewrite]]).
   */
 object EditDistanceJoinRewrite extends Rule[LogicalPlan] {
 
@@ -150,8 +153,10 @@ object EditDistanceJoinRewrite extends Rule[LogicalPlan] {
     // most candidates never reach it.
     val banded = GreaterThanOrEqual(
       Levenshtein(x, y, Some(Literal(k))), Literal(0))
-    val others =
-      splitConjuncts(j.condition.get).filterNot(_ eq levConjunct)
+    // every semantically identical copy of the matched conjunct goes —
+    // the banded form below decides them all
+    val others = splitConjuncts(j.condition.get)
+      .filterNot(_.semanticEquals(levConjunct))
     val newCond =
       (Seq(EqualTo(lKey, rKey), witness) ++ others :+ banded).reduce(And)
     // NEVER broadcast a deletion-neighborhood side: the generate fans
@@ -162,10 +167,14 @@ object EditDistanceJoinRewrite extends Rule[LogicalPlan] {
     // broadcast-probe task (measured at 10x bench scale: 110 s of
     // single-core wall; the shuffled plan does the same work in
     // seconds). A shuffled join keys BOTH sides on the variant — the
-    // partitioning a 100 TB run needs anyway.
-    val noBhj = HintInfo(strategy = Some(NO_BROADCAST_HASH))
+    // partitioning a 100 TB run needs anyway. A side's own user hint
+    // wins: the strategy only fills a side that has none.
+    def noBroadcast(h: Option[HintInfo]): Option[HintInfo] = {
+      val i = h.getOrElse(HintInfo())
+      Some(i.copy(strategy = i.strategy.orElse(Some(NO_BROADCAST_HASH))))
+    }
     val newJoin = Join(lGen, rGen, Inner, Some(newCond),
-      JoinHint(Some(noBhj), Some(noBhj)))
+      JoinHint(noBroadcast(j.hint.leftHint), noBroadcast(j.hint.rightHint)))
     Project(j.output, newJoin)
   }
 }

@@ -1658,4 +1658,217 @@ class AnnIndexSpec extends SparkSuite {
       assert(files === 1, s"${d.getName} has $files files after compact")
     }
   }
+
+  // ----- per-row probe routing (IvfTopCells) -----
+
+  /** Bounded top-k per query id, as [[Similarity]]'s own reduction. */
+  private def topKRows(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(graft.functions.GraftFunctions.topKByScore(col("score"),
+        col("corpus_id"), k).as("topk"))
+      .select(col("query_id"), posexplode(col("topk")))
+      .select(col("query_id"), col("col.id").as("corpus_id"),
+        col("col.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
+
+  /** probeIvfIndex as planned before per-row routing, kept as the
+    * reference: cells ranked per query id through the bounded aggregate
+    * and joined back onto the queries. */
+  private def aggregateRankedIvfProbe(idx: Similarity.IvfIndexFrames,
+      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+    val (cents, cn) = Similarity.collectSeedTable(idx.centroids, "cell",
+      "cvec", idx.quantScale)
+    val q0 = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("qvec"),
+      Similarity.norm(col("embedding")).as("qnorm"),
+      transform(col("embedding"),
+        x => round(x.cast("double") * idx.quantScale)).as("__qn"))
+    val probes = graft.functions.AggregateCellRanking
+      .cells(q0, "query_id", "__qn", cents, cn, nprobe)
+      .select(col("query_id"), explode(col("cells")).as("cell"))
+      .join(q0.select("query_id", "qvec", "qnorm"), Seq("query_id"))
+    val nn = col("cnorm") * col("qnorm")
+    topKRows(idx.postings.join(broadcast(probes), Seq("cell"))
+      .select(col("query_id"), col("corpus_id"),
+        when(nn === 0, lit(0.0))
+          .otherwise(Similarity.dot(col("cvec"), col("qvec")) / nn)
+          .as("score")), k)
+  }
+
+  /** probeIvfPqIndex as planned before per-row routing (the reference):
+    * per-id cells, LUTs joined back on query id. */
+  private def aggregateRankedPqProbe(idx: Similarity.IvfPqIndexFrames,
+      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+    val (cents, cn) = Similarity.collectSeedTable(idx.centroids, "cell",
+      "cvec", idx.quantScale)
+    val (cbBlock, csq) = idx.pqKernelTables
+    val q0 = queries.select(col("vec_id").cast("long").as("query_id"),
+        transform(col("embedding"),
+          x => round(x.cast("double") * idx.quantScale)).as("qv"))
+      .where(col("qv").isNotNull && size(col("qv")) === idx.inDims)
+    val probes = graft.functions.AggregateCellRanking
+      .cells(q0, "query_id", "qv", cents, cn, nprobe)
+      .select(col("query_id"), explode(col("cells")).as("cell"))
+      .join(q0.select(col("query_id"), graft.functions.GraftFunctions
+        .pqQueryLut(col("qv"), cbBlock, csq).as("lut")), Seq("query_id"))
+    val d2 = (0 until idx.nSub).map { s =>
+      element_at(element_at(col("lut"), s + 1),
+        element_at(col("codes"), s + 1) + 1)
+    }.reduce(_ + _)
+    topKRows(idx.codes.join(broadcast(probes), Seq("cell"))
+        .select(col("query_id"), col("corpus_id"), (-d2).as("score")), k)
+      .select(col("query_id"), col("corpus_id"),
+        (-col("score")).cast("long").as("approx_d2"),
+        col("rank").cast("long").as("rank"))
+  }
+
+  /** Every output column, rows ordered by (query_id, rank). */
+  private def fullRows(df: DataFrame): Seq[Seq[Any]] =
+    df.select(col("query_id").cast("long"), col("corpus_id").cast("long"),
+        col(df.columns(2)).cast("double"), col("rank").cast("long"))
+      .collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[Long], r(3).asInstanceOf[Long]))
+
+  /** A persisted IVF and IVF-PQ index over the fixture corpus, read back. */
+  private def persistedPair(tag: String, cells: Int = 8)
+      : (Similarity.IvfIndexFrames, Similarity.IvfPqIndexFrames) = {
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", cells)
+    val path = tmpDir(tag)
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, "vec_id",
+      "embedding", seeds, "sid", "svec"), path + "/ivf")
+    Similarity.writeIvfPqIndex(Similarity.buildIvfPqIndex(corpus,
+      "vec_id", "embedding", seeds, "sid", "svec",
+      codebookIds = 0L until 16L, inDims = dims, nSub = 2), path + "/pq")
+    (Similarity.readIvfIndex(spark, path + "/ivf"),
+      Similarity.readIvfPqIndex(spark, path + "/pq"))
+  }
+
+  test("per-row routed probes equal the aggregate-ranked plan row for " +
+    "row when query ids are unique (IVF and PQ)") {
+    import spark.implicits._
+    val (ivf, pq) = persistedPair("rankparity")
+    // a folded local query set and a scanned one
+    val local = corpus.where(col("vec_id") < 12)
+    val scanned = spark.createDataFrame(
+      local.rdd, local.schema).repartition(3)
+    val dup = Seq((900L, vec(7)), (901L, vec(7))).toDF("vec_id",
+      "embedding")
+    for (queries <- Seq(local, scanned, dup); nprobe <- Seq(1, 4, 8)) {
+      val gotIvf = fullRows(Similarity.probeIvfIndex(ivf, queries,
+        "vec_id", "embedding", k = 5, nprobe = nprobe))
+      assert(gotIvf === fullRows(aggregateRankedIvfProbe(ivf, queries, 5, nprobe)))
+      assert(gotIvf.nonEmpty)
+      val gotPq = fullRows(Similarity.probeIvfPqIndex(pq, queries,
+        "vec_id", "embedding", k = 5, nprobe = nprobe))
+      assert(gotPq === fullRows(aggregateRankedPqProbe(pq, queries, 5, nprobe)))
+      assert(gotPq.nonEmpty)
+    }
+  }
+
+  test("a driver-local query set keeps dynamic partition pruning on the " +
+    "postings and codes scans") {
+    import spark.implicits._
+    val (ivf, pq) = persistedPair("localdpp")
+    // no filter anywhere on the query side: the shape a serving caller
+    // (and the benchmark) builds with Seq(...).toDF
+    val q = Seq((5L, vec(5)), (9L, vec(9))).toDF("vec_id", "embedding")
+    for (probe <- Seq(
+        Similarity.probeIvfIndex(ivf, q, "vec_id", "embedding", 5, 2),
+        Similarity.probeIvfPqIndex(pq, q, "vec_id", "embedding", 5, 2))) {
+      val planned = probe.queryExecution.executedPlan.toString
+      assert(planned.toLowerCase.contains("dynamicpruning"),
+        s"DPP lost for a driver-local query set; plan:\n$planned")
+      assert(probe.collect().length === 10)
+      // the final adaptive plan still prunes: AQE replaces a pruning
+      // filter it cannot serve from the broadcast with `true`
+      val last = probe.queryExecution.executedPlan.toString
+      assert(last.contains("dynamicpruningexpression(cell") &&
+        !last.contains("dynamicpruningexpression(true)"),
+        s"the executed plan scans every cell:\n$last")
+    }
+  }
+
+  private def jobsOf(body: => Unit): (Int, Seq[String]) =
+    org.apache.spark.TestJobs.of(spark)(body)
+
+  test("a warm probe on read-back frames runs at most 3 jobs and " +
+    "collects no centroid or codebook table") {
+    import spark.implicits._
+    val (ivf, pq) = persistedPair("budget")
+    val q = Seq((3L, vec(3)), (11L, vec(11))).toDF("vec_id", "embedding")
+    def readsTables(plans: Seq[String]): Boolean =
+      plans.exists(p => p.contains("/centroids") || p.contains("/codebook"))
+    for ((name, probe) <- Seq[(String, () => Unit)](
+        "ivf" -> (() => Similarity.probeIvfIndex(ivf, q, "vec_id",
+          "embedding", 5, 3).collect()),
+        "pq" -> (() => Similarity.probeIvfPqIndex(pq, q, "vec_id",
+          "embedding", 5, 3).collect()))) {
+      val (coldJobs, coldPlans) = jobsOf(probe())
+      // the first probe on a frames value collects its tables — the
+      // detector sees it
+      assert(readsTables(coldPlans), s"$name: cold plans $coldPlans")
+      val (warmJobs, warmPlans) = jobsOf(probe())
+      assert(warmJobs <= 3, s"$name: $warmJobs jobs; plans:\n$warmPlans")
+      assert(warmJobs < coldJobs)
+      assert(!readsTables(warmPlans), s"$name re-read its tables")
+    }
+    // the filtered variant shares the frames' tables too
+    val (fJobs, fPlans) = jobsOf(Similarity.probeIvfIndexFiltered(ivf, q,
+      "vec_id", "embedding", 5, col("corpus_id") > 10L, 3).collect())
+    assert(fJobs <= 3 && !readsTables(fPlans), s"$fJobs jobs: $fPlans")
+  }
+
+  test("re-opening an index rebuilt under different seeds routes under " +
+    "the new centroids") {
+    val path = tmpDir("reopen")
+    val q = corpus.where(col("vec_id") < 6)
+    def build(seedRows: DataFrame) = Similarity.buildIvfIndex(corpus,
+      "vec_id", "embedding", Similarity.hashSeeds(seedRows, "vec_id",
+        "embedding", 8), "sid", "svec")
+    Similarity.writeIvfIndex(build(corpus.where(col("vec_id") < 100)),
+      path)
+    val before = Similarity.readIvfIndex(spark, path)
+    probeRows(Similarity.probeIvfIndex(before, q, "vec_id", "embedding",
+      k = 5, nprobe = 2)) // tables collected for the old root
+    val rebuilt = build(corpus.where(col("vec_id") >= 100))
+    Similarity.writeIvfIndex(rebuilt, path)
+    val after = Similarity.readIvfIndex(spark, path)
+    def table(i: Similarity.IvfIndexFrames) = i.cellTable._1.map(_.toSeq).toSeq
+    assert(table(after) !== table(before))
+    assert(probeRows(Similarity.probeIvfIndex(after, q, "vec_id",
+      "embedding", k = 5, nprobe = 2)) ===
+      probeRows(Similarity.probeIvfIndex(rebuilt, q, "vec_id",
+        "embedding", k = 5, nprobe = 2)))
+  }
+
+  test("a query id carried by several rows: each row probes its own " +
+    "cells and the rows' candidates merge into one top-k per id") {
+    import spark.implicits._
+    val (ivf, pq) = persistedPair("repeatedid")
+    val rowsA = Seq((1L, vec(3))).toDF("vec_id", "embedding")
+    val rowsB = Seq((1L, vec(150))).toDF("vec_id", "embedding")
+    val both = rowsA.unionAll(rowsB)
+    // (corpus_id, score) best first: score desc (IVF cosine; PQ −d²),
+    // corpus_id asc
+    def merged(parts: Seq[Seq[Seq[Any]]], sign: Double): Seq[(Long, Double)] =
+      parts.flatten.map(r => (r(1).asInstanceOf[Long],
+          sign * r(2).asInstanceOf[Double]))
+        .sortBy { case (id, s) => (-s, id) }.take(5)
+    def pairs(rows: Seq[Seq[Any]], sign: Double): Seq[(Long, Double)] =
+      rows.map(r => (r(1).asInstanceOf[Long],
+        sign * r(2).asInstanceOf[Double]))
+    for (nprobe <- Seq(1, 2)) {
+      def ivfProbe(q: DataFrame) = fullRows(Similarity.probeIvfIndex(ivf,
+        q, "vec_id", "embedding", k = 5, nprobe = nprobe))
+      def pqProbe(q: DataFrame) = fullRows(Similarity.probeIvfPqIndex(pq,
+        q, "vec_id", "embedding", k = 5, nprobe = nprobe))
+      val gotIvf = ivfProbe(both)
+      assert(gotIvf.map(_(3)) === (1L to 5L))
+      assert(pairs(gotIvf, 1.0) ===
+        merged(Seq(ivfProbe(rowsA), ivfProbe(rowsB)), 1.0))
+      val gotPq = pqProbe(both)
+      assert(gotPq.map(_(3)) === (1L to 5L))
+      assert(pairs(gotPq, -1.0) ===
+        merged(Seq(pqProbe(rowsA), pqProbe(rowsB)), -1.0))
+    }
+  }
 }

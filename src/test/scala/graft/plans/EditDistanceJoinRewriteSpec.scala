@@ -114,4 +114,65 @@ class EditDistanceJoinRewriteSpec extends SparkSuite {
       assert(viaRule === viaOp)
     }
   }
+
+  /** The (left, right) join strategies of the rewritten join. */
+  private def rewrittenHints(df: DataFrame): (Option[String], Option[String]) =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.left.output.exists(_.name.startsWith("__graft_edv")) =>
+        (j.hint.leftHint.flatMap(_.strategy).map(_.toString),
+          j.hint.rightHint.flatMap(_.strategy).map(_.toString))
+    }.getOrElse(fail("rule did not fire:\n" +
+      df.queryExecution.optimizedPlan.toString.take(2000)))
+
+  test("a user join hint survives the rewrite; unhinted sides refuse " +
+      "broadcast") {
+    withRule {
+      val want = naiveJoin().select("ia", "ib").as[(Long, Long)]
+        .collect().toSet
+      val a = names.select(col("id").as("ia"), col("s").as("sa"))
+      val b = names.select(col("id").as("ib"), col("s").as("sb"))
+      val cond = levenshtein(col("sa"), col("sb")) <= 1 &&
+        col("ia") < col("ib")
+      val plain = a.join(b, cond)
+      assert(rewrittenHints(plain) ===
+        ((Some("no_broadcast_hash"), Some("no_broadcast_hash"))))
+      val hinted = a.join(b.hint("shuffle_hash"), cond)
+      assert(rewrittenHints(hinted) ===
+        ((Some("no_broadcast_hash"), Some("shuffle_hash"))))
+      val physical = hinted.queryExecution.executedPlan.toString
+      assert(physical.contains("ShuffledHashJoin"), physical.take(2000))
+      assert(hinted.select("ia", "ib").as[(Long, Long)].collect().toSet ===
+        want)
+      val bcast = a.join(broadcast(b), cond)
+      assert(rewrittenHints(bcast)._2 === Some("broadcast"))
+      assert(bcast.select("ia", "ib").as[(Long, Long)].collect().toSet ===
+        want)
+    }
+  }
+
+  test("a duplicated levenshtein conjunct is banded away with the " +
+      "matched one") {
+    withRule {
+      val a = names.select(col("id").as("ia"), col("s").as("sa"))
+      val b = names.select(col("id").as("ib"), col("s").as("sb"))
+      // the same predicate twice, the copy written the other way round
+      val df = a.join(b, levenshtein(col("sa"), col("sb")) <= 1 &&
+        col("ia") < col("ib") && lit(1) >= levenshtein(col("sa"), col("sb")))
+      // the stock optimizer already drops the copy, so apply the rule to
+      // the analyzed plan, where both conjuncts are still present
+      val analyzed = df.queryExecution.analyzed
+      def unbanded(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        p.flatMap(_.expressions).flatMap(_.collect {
+          case l: org.apache.spark.sql.catalyst.expressions.Levenshtein
+              if l.threshold.isEmpty => l
+        })
+      assert(unbanded(analyzed).size === 2)
+      val rewritten = EditDistanceJoinRewrite(analyzed)
+      assert(rewritten.toString.contains("__graft_edv"))
+      assert(unbanded(rewritten).isEmpty, rewritten.toString.take(2000))
+      assert(df.select("ia", "ib").as[(Long, Long)].collect().toSet ===
+        naiveJoin().select("ia", "ib").as[(Long, Long)].collect().toSet)
+    }
+  }
 }
