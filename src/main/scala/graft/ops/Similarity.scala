@@ -301,15 +301,48 @@ object Similarity {
   private[ops] def collectSeedTable(seeds: DataFrame, seedId: String,
       seedVec: String, quantScale: Int)
       : (Array[Array[Double]], Array[Double]) = {
-    val seedRows = seeds
+    val rows = seeds
       .select(col(seedId).as("sid"),
-        transform(col(seedVec), x => round(x.cast("double") * quantScale))
-          .as("cv"))
-      .withColumn("cn", dot(col("cv"), col("cv")))
+        col(seedVec).cast("array<double>").as("v"))
       .orderBy(col("sid"))
-      .select("cv", "cn").collect()
-    (seedRows.map(_.getSeq[Double](0).toArray),
-      seedRows.map(_.getDouble(1)))
+      .select("v").collect()
+    quantizeTable(rows.map(r => vectorOf(r, 0, "collectSeedTable")).toSeq,
+      quantScale)
+  }
+
+  /** Column `i` of `r` (an array of doubles) as a primitive array; a null
+    * vector or element fails loudly under `op`. */
+  private def vectorOf(r: org.apache.spark.sql.Row, i: Int,
+      op: String): Array[Double] = {
+    require(!r.isNullAt(i), s"$op: a quantizer row has a null vector")
+    r.getSeq[Any](i).map { x =>
+      require(x != null, s"$op: a quantizer vector holds a null element")
+      x.asInstanceOf[Double]
+    }.toArray
+  }
+
+  /** THE rounding rule of every driver-side quantizer table: each
+    * element becomes round(x·quantScale), HALF_UP through
+    * `java.math.BigDecimal` exactly as Spark's `round` computes it (a
+    * NaN or infinity passes through), and each row's ‖c‖² comes from the
+    * `vector_dot` kernel itself ([[graft.functions.GraftHashImpl.dotD]]),
+    * so the table is bit-identical to the one the engine would compute
+    * with `transform(v, x => round(x·qs))` and `vector_dot(cv, cv)`. The
+    * input is the vectors in table order, already widened to double (a
+    * float32 element widens exactly, as Spark's cast does). */
+  private[ops] def quantizeTable(vecs: Seq[Array[Double]],
+      quantScale: Int): (Array[Array[Double]], Array[Double]) = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val q = vecs.map(_.map { x =>
+      val v = x * quantScale
+      if (v.isNaN || v.isInfinite) v
+      else java.math.BigDecimal.valueOf(v)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+    }).toArray
+    (q, q.map { v =>
+      val a = ArrayData.toArrayData(v)
+      graft.functions.GraftHashImpl.dotD(a, a).doubleValue()
+    })
   }
 
   private[ops] def scorerFromTable(cents: Array[Array[Double]],
@@ -455,7 +488,17 @@ object Similarity {
     * types whose tie order the kernel does not reproduce (only int/long
     * ids take the fused path; string order would differ between
     * UTF8String bytes and java.lang.String chars for supplementary
-    * code points). */
+    * code points).
+    *
+    * EAGER, unlike the plan around it: the fused path collects the whole
+    * unlabeled side to the driver and broadcasts it when this function
+    * is CALLED, so building the result frame runs a Spark job before any
+    * action. The collect has no size guard — the query side is assumed
+    * small, and a large one is held on the driver whole — and the
+    * broadcast is never destroyed, since the returned frame may
+    * recompute from it for as long as it is referenced. (A lazy,
+    * guarded operator that builds nothing until an action runs is the
+    * open fix.) */
   private def knnScoredPartials(labeled: DataFrame, unlabeled: DataFrame,
       k: Int): DataFrame = {
     import org.apache.spark.sql.Row
@@ -1806,9 +1849,9 @@ object Similarity {
     Seq((idx.quantScale, idx.twoLevelThreshold))
       .toDF("quant_scale", "two_level_threshold")
       .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    idx.postings.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(path + "/postings")
+    writeCells(idx.postings,
+      footerRowCount(session, path + "/centroids").toInt, "overwrite",
+      path + "/postings")
   }
 
   /** The single meta row read DRIVER-SIDE (plain parquet-hadoop, no
@@ -1847,13 +1890,8 @@ object Similarity {
       defaults: Map[String, Int] = Map.empty): Option[Seq[Int]] = {
     import org.apache.hadoop.fs.Path
     val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) return None
-    val dataFiles = fs.listStatus(d).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val dataFiles = parquetDataFiles(
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration), d)
     if (dataFiles.isEmpty) return None
     require(dataFiles.length == 1,
       s"readMetaRow: ${dataFiles.length} data files in $dir — a meta " +
@@ -1889,6 +1927,227 @@ object Similarity {
       case Some(Seq(qs, tlt)) => (qs, tlt)
       case _ => (10000, 4096)
     }
+
+  /** The persisted (inDims, nSub, quantScale, twoLevelThreshold) of the
+    * PQ index at `path`; a root without a meta row is not a PQ root. */
+  private def readPqMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, op: String): Seq[Int] =
+    readMetaRow(spark, path + "/meta",
+      Seq("in_dims", "n_sub", "quant_scale", "two_level_threshold"),
+      defaults = Map("two_level_threshold" -> 4096))
+      .getOrElse(throw new IllegalStateException(
+        s"$op: no meta row at $path — not a PQ index root"))
+
+  // ===== Driver-side open of a persisted root (no Spark job) =====
+
+  /** A persisted root's quantizer as its appends use it: the meta
+    * values, the quantized centroid table in cell order, the payload
+    * columns its postings/codes carry and, for a PQ root, the quantized
+    * codebook in ci order. Opened by [[openIvfRoot]]/[[openPqRoot]]
+    * with plain parquet-hadoop reads on the driver — no Spark job — and
+    * quantized by [[quantizeTable]], so the tables equal the ones a
+    * [[readIvfIndex]]/[[readIvfPqIndex]] frames value collects. */
+  private[graft] final case class OpenedRoot(quantScale: Int,
+      twoLevelThreshold: Int, centTab: Array[Array[Double]],
+      cnTab: Array[Double], payloadCols: Seq[String], inDims: Int = 0,
+      nSub: Int = 0, codebook: Seq[Seq[Long]] = Nil) {
+    lazy val pqKernelTables
+        : (Array[Array[Array[Double]]], Array[Array[Double]]) =
+      pqTables(codebook, inDims, nSub)
+  }
+
+  /** The open of one root carried across calls — a maintenance stream
+    * keeps one for its lifetime. [[current]] lists `centroids/`,
+    * `codebook/` and `meta/` on the driver (names, sizes, mtimes; no
+    * Spark job) and reopens the root only when that listing changed, so
+    * a rebuild of the root by another writer is routed under from the
+    * next call on. The stamp is taken before the open: a change racing
+    * the open shows up as a changed stamp on the next call. */
+  private[graft] final class RootView(path: String, pq: Boolean) {
+    private var stamp: Seq[(String, Long, Long)] = null
+    private var opened: OpenedRoot = null
+    def current(spark: org.apache.spark.sql.SparkSession): OpenedRoot =
+      synchronized {
+        val now = quantizerStamp(spark, path)
+        if (opened == null || now != stamp) {
+          opened =
+            if (pq) openPqRoot(spark, path) else openIvfRoot(spark, path)
+          stamp = now
+        }
+        opened
+      }
+  }
+
+  private def quantizerStamp(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    Seq("centroids", "codebook", "meta").flatMap { d =>
+      val dir = new Path(path + "/" + d)
+      if (!fs.exists(dir)) Seq((d, -1L, -1L))
+      else fs.listStatus(dir).toSeq.map(s =>
+        (d + "/" + s.getPath.getName, s.getLen, s.getModificationTime))
+        .sorted
+    }
+  }
+
+  /** Open the IVF root at `path`. `supplied` is the legacy caller's
+    * (quantScale, twoLevelThreshold): it must match a persisted meta,
+    * and stands in for a pre-meta root's. */
+  private[ops] def openIvfRoot(spark: org.apache.spark.sql.SparkSession,
+      path: String, supplied: Option[(Int, Int)] = None): OpenedRoot = {
+    val (qs, tlt) = supplied match {
+      case None => readIvfMeta(spark, path)
+      case Some((sqs, stlt)) =>
+        readMetaRow(spark, path + "/meta",
+          Seq("quant_scale", "two_level_threshold")) match {
+          case Some(Seq(mqs, mtlt)) =>
+            require(sqs == mqs && stlt == mtlt,
+              s"appendToIvfIndex: supplied (quantScale=$sqs, " +
+                s"twoLevelThreshold=$stlt) contradict the index's " +
+                s"persisted meta ($mqs, $mtlt) at $path — an append " +
+                "under different quantization would corrupt cell " +
+                "assignment")
+          case _ => () // pre-meta index
+        }
+        (sqs, stlt)
+    }
+    val (centTab, cnTab) = quantizeTable(
+      readVectorTable(spark, path + "/centroids", "cell", "cvec"), qs)
+    OpenedRoot(qs, tlt, centTab, cnTab, payloadColumns(spark,
+      path + "/postings", Set("cell", "corpus_id", "cvec", "cnorm")))
+  }
+
+  private[ops] def openPqRoot(spark: org.apache.spark.sql.SparkSession,
+      path: String): OpenedRoot = {
+    val Seq(inDims, nSub, qs, tlt) =
+      readPqMeta(spark, path, "appendToIvfPqIndex")
+    val (centTab, cnTab) = quantizeTable(
+      readVectorTable(spark, path + "/centroids", "cell", "cvec"), qs)
+    OpenedRoot(qs, tlt, centTab, cnTab, payloadColumns(spark,
+        path + "/codes", Set("cell", "corpus_id", "codes", "e2", "nb2")),
+      inDims, nSub, codebookRows(
+        readVectorTable(spark, path + "/codebook", "ci", "cv"), qs))
+  }
+
+  /** The parquet data files directly under `dir` (none when it is
+    * absent), by name. */
+  private def parquetDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath).filter { p =>
+      val n = p.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getName)
+
+  private def withFooter[T](spark: org.apache.spark.sql.SparkSession,
+      f: org.apache.hadoop.fs.Path)(
+      body: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+        spark.sparkContext.hadoopConfiguration))
+    try body(rd) finally rd.close()
+  }
+
+  /** The rows of the small `(key, vector)` table at `dir` (centroids or
+    * codebook) read on the driver, as double vectors in ascending key
+    * order — the order `orderBy(key)` gives; keys and vector elements
+    * may be of any integer or floating-point parquet type. A missing or
+    * file-less dir, a null vector or a null element fails loudly. */
+  private def readVectorTable(spark: org.apache.spark.sql.SparkSession,
+      dir: String, key: String, vec: String): Seq[Array[Double]] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val d = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = parquetDataFiles(d.getFileSystem(conf), d)
+    if (files.isEmpty)
+      throw new IllegalStateException(
+        s"no parquet data file at $dir — not an index root")
+    def num(g: Group, field: Int, rep: Int): Double =
+      g.getType.getType(field).asPrimitiveType.getPrimitiveTypeName match {
+        case FLOAT => g.getFloat(field, rep).toDouble
+        case DOUBLE => g.getDouble(field, rep)
+        case INT32 => g.getInteger(field, rep).toDouble
+        case INT64 => g.getLong(field, rep).toDouble
+        case t => throw new IllegalStateException(
+          s"$dir: unsupported $vec element type $t")
+      }
+    def vector(g: Group): Array[Double] = {
+      require(g.getFieldRepetitionCount(vec) > 0,
+        s"$dir: a quantizer row has a null vector")
+      // Spark's LIST layout: a repeated group holding the element
+      val list = g.getGroup(vec, 0)
+      Array.tabulate(list.getFieldRepetitionCount(0)) { i =>
+        val el = list.getGroup(0, i)
+        require(el.getFieldRepetitionCount(0) > 0,
+          s"$dir: a quantizer vector holds a null element")
+        num(el, 0, 0)
+      }
+    }
+    def keyOf(g: Group): Option[Long] =
+      if (g.getFieldRepetitionCount(key) == 0) None
+      else Some(num(g, g.getType.getFieldIndex(key), 0).toLong)
+    val rows = files.flatMap { f =>
+      val rd = org.apache.parquet.hadoop.ParquetReader.builder(
+        new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
+        .withConf(conf).build()
+      try Iterator.continually(rd.read()).takeWhile(_ != null)
+        .map(g => keyOf(g) -> vector(g)).toVector
+      finally rd.close()
+    }
+    rows.sortBy(_._1).map(_._2)
+  }
+
+  /** The payload columns of the cell-partitioned `dir` (postings or
+    * codes): the non-`core` columns of one data file's footer — what a
+    * schema-inferring read of the dir reports — or none when the dir
+    * holds no data file yet. */
+  private def payloadColumns(spark: org.apache.spark.sql.SparkSession,
+      dir: String, core: Set[String]): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(d)) return Nil
+    fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName).iterator
+      .flatMap(c => parquetDataFiles(fs, c)).nextOption() match {
+      case None => Nil
+      case Some(f) => withFooter(spark, f)(_.getFooter.getFileMetaData
+        .getSchema.getFields.asScala.map(_.getName).toSeq
+        .filterNot(core))
+    }
+  }
+
+  /** Rows of the parquet data files directly under `dir`, from their
+    * footers (0 when there are none). */
+  private def footerRowCount(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Long = {
+    import org.apache.hadoop.fs.Path
+    val d = new Path(dir)
+    parquetDataFiles(d.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      d).map(f => withFooter(spark, f)(_.getRecordCount)).sum
+  }
+
+  /** The one cell-partitioned write of the index lifecycle — build,
+    * append and compaction, both index kinds: `rows` hashed by `cell`
+    * onto min(`cells`, session shuffle width) partitions and written
+    * partitioned by `cell` into `dir`. Each cell hashes to one task, so
+    * a write leaves one file per touched cell; and AQE cannot coalesce
+    * a fixed-count exchange, so the cells are written by that many
+    * tasks in parallel rather than by one task opening every cell's
+    * writer in turn. */
+  private def writeCells(rows: DataFrame, cells: Int, mode: String,
+      dir: String): Unit = {
+    val width =
+      rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.repartition(math.max(1, math.min(cells, width)), col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(dir)
+  }
 
   /** Crash recovery for the compaction swap: a crash between
     * `rename(live → retired)` and `rename(staged → live)` leaves the
@@ -2148,9 +2407,19 @@ object Similarity {
     * only monotone within one stream's checkpoint. */
   def appendToIvfIndexOnce(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
-      batchId: Long): Boolean = {
+      batchId: Long): Boolean =
+    appendToIvfIndexOnce(spark, path, delta, idCol, vecCol, batchId,
+      new RootView(path, pq = false))
+
+  /** [[appendToIvfIndexOnce]] routing under a carried [[RootView]] of
+    * the root — the form the maintenance streams call. */
+  private[graft] def appendToIvfIndexOnce(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      delta: DataFrame, idCol: String, vecCol: String, batchId: Long,
+      view: RootView): Boolean = {
     if (readAppendHwm(spark, path) >= batchId) return false
-    appendToIvfIndex(spark, path, delta, idCol, vecCol)
+    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
+      () => view.current(spark))
     recordAppendHwm(spark, path, batchId)
     true
   }
@@ -2162,9 +2431,18 @@ object Similarity {
     * closing the transient two-root misalignment window (r16 advice). */
   def appendToIvfPqIndexOnce(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
-      batchId: Long): Boolean = {
+      batchId: Long): Boolean =
+    appendToIvfPqIndexOnce(spark, path, delta, idCol, vecCol, batchId,
+      new RootView(path, pq = true))
+
+  /** [[appendToIvfPqIndexOnce]] routing under a carried [[RootView]]. */
+  private[graft] def appendToIvfPqIndexOnce(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      delta: DataFrame, idCol: String, vecCol: String, batchId: Long,
+      view: RootView): Boolean = {
     if (readAppendHwm(spark, path) >= batchId) return false
-    appendToIvfPqIndex(spark, path, delta, idCol, vecCol)
+    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol,
+      () => view.current(spark))
     recordAppendHwm(spark, path, batchId)
     true
   }
@@ -2363,21 +2641,30 @@ object Similarity {
   }
 
   /** Append a delta of new vectors to a persisted index WITHOUT
-    * retraining: the frozen centroids are read back from `path` and the
-    * delta is assigned under them (same quantized argmax rule as build),
-    * then appended into the existing cell directories. O(|delta| · cells
-    * · dims) — the existing corpus is never touched, which is the whole
-    * point at 100 TB: nightly embedding deltas land in minutes while the
-    * index stays probe-consistent (a re-trained index would reshuffle
-    * every posting). */
+    * retraining: the delta is assigned under the frozen centroids (same
+    * quantized argmax rule as build) and appended into the existing cell
+    * directories, one file per touched cell, the cells written in
+    * parallel. O(|delta| · cells · dims) — the existing corpus is never
+    * touched, which is the whole point at 100 TB: nightly embedding
+    * deltas land in minutes while the index stays probe-consistent (a
+    * re-trained index would reshuffle every posting).
+    *
+    * The root is opened on the driver with no Spark job: `meta/`, the
+    * centroid table and one postings file footer (the payload columns
+    * the delta must supply) are read with plain parquet-hadoop, and the
+    * centroids quantized under the same rule [[readIvfIndex]] frames
+    * use. The index is self-describing: quantization scale and routing
+    * threshold come from the persisted meta, never from the caller. The
+    * only Spark jobs are the delta's assignment and write — plus, when
+    * the root has pending tombstones, their resurrection check. The
+    * maintenance streams carry one open across batches and reopen it
+    * only when a listing of `centroids/`, `codebook/` and `meta/`
+    * changes ([[graft.streaming.Streams.indexMaintenanceStream]]). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String,
-      vecCol: String): Unit = {
-    // the index is self-describing: quantization scale and routing
-    // threshold come from the persisted meta, never from the caller
-    val (qs, tlt) = readIvfMeta(spark, path)
-    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol, qs, tlt)
-  }
+      vecCol: String): Unit =
+    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
+      () => openIvfRoot(spark, path))
 
   /** Legacy explicit-parameter append, kept for pre-meta indexes: when
     * the index HAS a meta file the supplied parameters must match it —
@@ -2385,47 +2672,39 @@ object Similarity {
     * loudly instead. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int, twoLevelThreshold: Int): Unit = {
-    readMetaRow(spark, path + "/meta",
-      Seq("quant_scale", "two_level_threshold")) match {
-      case Some(Seq(mqs, mtlt)) =>
-        require(quantScale == mqs && twoLevelThreshold == mtlt,
-          s"appendToIvfIndex: supplied (quantScale=$quantScale, " +
-            s"twoLevelThreshold=$twoLevelThreshold) contradict the " +
-            s"index's persisted meta ($mqs, $mtlt) at $path — an append " +
-            "under different quantization would corrupt cell assignment")
-      case _ => () // pre-meta index
-    }
-    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol, quantScale,
-      twoLevelThreshold)
+      quantScale: Int, twoLevelThreshold: Int): Unit =
+    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
+      () => openIvfRoot(spark, path, Some((quantScale, twoLevelThreshold))))
+
+  /** Never append into a half-swapped root: runs the compaction-swap
+    * recovery on `<path>/<dirName>`, then refuses a root whose live dir
+    * is gone while compaction leftovers survived recovery — it is
+    * externally damaged, and appending would silently rebuild the dir
+    * holding only the delta. */
+  private def recoverForAppend(spark: org.apache.spark.sql.SparkSession,
+      path: String, dirName: String, op: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    recoverIvfPostings(spark, path, dirName)
+    val live = new Path(path + "/" + dirName)
+    val staged = new Path(path + "/" + dirName + "_compacting")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live) && fs.exists(staged))
+      throw new IllegalStateException(
+        s"$op: $path has no live $dirName but leftover compaction state " +
+          s"survived recovery — refusing to rebuild the $dirName from a " +
+          "delta")
   }
 
+  /** The raw-vector append under the root opened by `open` (called
+    * after the half-swapped-root recovery). */
   private def appendToIvfIndexImpl(
       spark: org.apache.spark.sql.SparkSession, path: String,
       delta: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int, twoLevelThreshold: Int): Unit =
+      open: () => OpenedRoot): Unit =
     withWriterLease(spark, path, "appendToIvfIndex") { verifyLease =>
-    // never append into a half-swapped root (a crashed compaction's
-    // live dir may be MISSING — appending would recreate postings
-    // containing only this delta)
-    recoverIvfPostings(spark, path, "postings")
-    locally {
-      import org.apache.hadoop.fs.Path
-      val live = new Path(path + "/postings")
-      val staged = new Path(path + "/postings_compacting")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a root whose live dir is gone while compaction leftovers survived
-      // recovery is externally damaged — appending would silently rebuild
-      // postings holding only this delta
-      if (!fs.exists(live) && fs.exists(staged))
-        throw new IllegalStateException(
-          s"appendToIvfIndex: $path has no live postings but leftover " +
-            "compaction state survived recovery — refusing to rebuild " +
-            "the postings from a delta")
-    }
-    val cents = spark.read.parquet(path + "/centroids")
-    val (centTab, cnTab) = collectSeedTable(cents, "cell", "cvec",
-      quantScale)
+    recoverForAppend(spark, path, "postings", "appendToIvfIndex")
+    val root = open()
+    val (centTab, cnTab) = (root.centTab, root.cnTab)
     if (centTab.isEmpty) {
       // an empty index (built from an empty corpus) can place nothing:
       // appending an empty delta is a no-op; a non-empty delta is a
@@ -2445,20 +2724,12 @@ object Similarity {
     resurrectTombstones(spark, path, delta.select(col(idCol)))
     // payload columns are self-describing too: whatever non-core
     // columns the existing postings carry, the delta must supply under
-    // the same names (the select below fails loudly if it can't)
-    val payloadCols: Seq[String] =
-      try spark.read.parquet(path + "/postings").columns.toSeq
-        .filterNot(Set("cell", "corpus_id", "cvec", "cnorm"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Seq.empty
-      }
-    // one file per touched cell per append (not delta-splits × cells);
-    // the routing tables re-derive deterministically from the persisted
+    // the same names (the select below fails loudly if it can't). The
+    // routing tables re-derive deterministically from the persisted
     // centroids, so delta rows route exactly the way base rows did
-    assignPostings(delta, idCol, vecCol, centTab, cnTab, quantScale,
-      twoLevelThreshold, payloadCols)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path + "/postings")
+    writeCells(assignPostings(delta, idCol, vecCol, centTab, cnTab,
+        root.quantScale, root.twoLevelThreshold, root.payloadCols),
+      centTab.length, "append", path + "/postings")
   }
 
   /** Probe a (persisted or in-memory) index: [[ivfTopKSeeded]]'s exact
@@ -3260,9 +3531,9 @@ object Similarity {
     Seq((idx.inDims, idx.nSub, idx.quantScale, idx.twoLevelThreshold))
       .toDF("in_dims", "n_sub", "quant_scale", "two_level_threshold")
       .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    idx.codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(path + "/codes")
+    writeCells(idx.codes,
+      footerRowCount(session, path + "/centroids").toInt, "overwrite",
+      path + "/codes")
   }
 
   /** Re-open a persisted PQ index (self-describing via its meta row;
@@ -3275,11 +3546,7 @@ object Similarity {
     // a meta written before the field existed reads as the historical
     // default it was built under
     val Seq(metaInDims, metaNSub, metaQs, metaTlt) =
-      readMetaRow(spark, path + "/meta",
-        Seq("in_dims", "n_sub", "quant_scale", "two_level_threshold"),
-        defaults = Map("two_level_threshold" -> 4096))
-        .getOrElse(throw new IllegalStateException(
-          s"readIvfPqIndex: no meta row at $path — not a PQ index root"))
+      readPqMeta(spark, path, "readIvfPqIndex")
     val codes =
       try spark.read.parquet(path + "/codes")
       catch {
@@ -3318,15 +3585,26 @@ object Similarity {
   }
 
   /** Append a delta to a persisted PQ index without retraining: the
-    * frozen centroids AND codebook read back from `path`, the delta
-    * coarse-assigned and PQ-encoded under them, one file per touched
-    * cell. The index is self-describing: ALL quantizer parameters —
-    * including the assignment-affecting `two_level_threshold` routing
-    * switch — come from the persisted meta, never from the caller. */
+    * delta coarse-assigned and PQ-encoded under the frozen centroids AND
+    * codebook, one file per touched cell, the cells written in parallel.
+    * The index is self-describing: ALL quantizer parameters — including
+    * the assignment-affecting `two_level_threshold` routing switch —
+    * come from the persisted meta, never from the caller.
+    *
+    * As for [[appendToIvfIndex]], the root is opened on the driver with
+    * no Spark job: `meta/`, `centroids/`, `codebook/` and one codes file
+    * footer (the payload columns) are read with plain parquet-hadoop and
+    * quantized under the rule [[readIvfPqIndex]] frames use, so the
+    * only Spark jobs are the delta's encode and write (and a tombstone
+    * resurrection check when tombstones are pending). The PQ maintenance
+    * stream carries the open across batches, reopening it when the
+    * listing of `centroids/`, `codebook/` and `meta/` changes
+    * ([[graft.streaming.Streams.pqIndexMaintenanceStream]]). */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String,
       vecCol: String): Unit =
-    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol, None)
+    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol,
+      () => openPqRoot(spark, path))
 
   /** Legacy explicit-threshold append: the supplied value must match
     * the index's persisted meta — a mismatched re-supply would
@@ -3336,26 +3614,27 @@ object Similarity {
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
       twoLevelThreshold: Int): Unit =
-    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol,
-      Some(twoLevelThreshold))
+    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol, () => {
+      val root = openPqRoot(spark, path)
+      require(twoLevelThreshold == root.twoLevelThreshold,
+        s"appendToIvfPqIndex: supplied twoLevelThreshold=" +
+          s"$twoLevelThreshold contradicts the index's persisted meta " +
+          s"(${root.twoLevelThreshold}) at $path — an append under a " +
+          "different coarse-routing switch would corrupt cell assignment")
+      root
+    })
 
+  /** The PQ append under the root opened by `open` (called after the
+    * half-swapped-root recovery). */
   private def appendToIvfPqIndexImpl(
       spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
-      suppliedTlt: Option[Int]): Unit =
+      open: () => OpenedRoot): Unit =
     withWriterLease(spark, path, "appendToIvfPqIndex") { verifyLease =>
-    // readIvfPqIndex runs the half-swapped-root recovery, so the append
-    // can never recreate a codes dir holding only this delta
-    val idx = readIvfPqIndex(spark, path)
-    suppliedTlt.foreach { t =>
-      require(t == idx.twoLevelThreshold,
-        s"appendToIvfPqIndex: supplied twoLevelThreshold=$t contradicts " +
-          s"the index's persisted meta (${idx.twoLevelThreshold}) at " +
-          s"$path — an append under a different coarse-routing switch " +
-          "would corrupt cell assignment")
-    }
-    val (centTab, cnTab) = idx.cellTable
-    if (centTab.isEmpty || idx.codebookTable.isEmpty) {
+    recoverForAppend(spark, path, "codes", "appendToIvfPqIndex")
+    val root = open()
+    val (centTab, cnTab) = (root.centTab, root.cnTab)
+    if (centTab.isEmpty || root.codebook.isEmpty) {
       require(delta.isEmpty,
         s"appendToIvfPqIndex: empty quantizer at $path but the delta " +
           "is non-empty — rebuild from a non-empty corpus first")
@@ -3367,36 +3646,42 @@ object Similarity {
     resurrectTombstones(spark, path, delta.select(col(idCol)))
     // payload columns self-describe from the existing codes schema
     // (same contract as the raw-vector append)
-    val payloadCols: Seq[String] =
-      try spark.read.parquet(path + "/codes").columns.toSeq
-        .filterNot(Set("cell", "corpus_id", "codes", "e2", "nb2"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Seq.empty
-      }
+    val payloadCols = root.payloadCols
     val base = coarseAssignQuantized(delta, idCol, vecCol, centTab,
-      cnTab, idx.quantScale, idx.twoLevelThreshold, idx.inDims,
+      cnTab, root.quantScale, root.twoLevelThreshold, root.inDims,
       payloadCols)
     // appends into a pre-margin-column index root (codes without
     // e2/nb2) would leave mixed file schemas behind — compact/rebuild
     // such a root before appending with this version
-    val (cbBlock, csq) = idx.pqKernelTables
-    pqEncodeIndexed(base, cbBlock, csq, payloadCols)
-      .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
-        col("codes") +: col("e2") +: col("nb2") +:
-        payloadCols.map(col): _*)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path + "/codes")
+    val (cbBlock, csq) = root.pqKernelTables
+    writeCells(pqEncodeIndexed(base, cbBlock, csq, payloadCols)
+        .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
+          col("codes") +: col("e2") +: col("nb2") +:
+          payloadCols.map(col): _*),
+      centTab.length, "append", path + "/codes")
   }
 
   /** The codebook frame as quantized driver-side rows in ci order. */
-  private def collectCodebookFrame(codebook: DataFrame,
+  private[ops] def collectCodebookFrame(codebook: DataFrame,
       quantScale: Int): Seq[Seq[Long]] =
-    codebook.select(col("ci"),
-        transform(col("cv"),
-          x => round(x.cast("double") * quantScale).cast("long"))
-          .as("qv"))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1))
-      .sortBy(_._1).map(_._2).toSeq
+    codebookRows(codebook.select(col("ci"),
+        col("cv").cast("array<double>"))
+      .collect().map(r => r.getInt(0) ->
+        vectorOf(r, 1, "collectCodebookFrame"))
+      .sortBy(_._1).map(_._2).toSeq, quantScale)
+
+  /** Codebook vectors (in ci order) quantized by [[quantizeTable]]'s
+    * rule, as the longs Spark's `cast("long")` of the rounded values
+    * gives — which fails on a non-finite or out-of-range value. */
+  private def codebookRows(vecs: Seq[Array[Double]],
+      quantScale: Int): Seq[Seq[Long]] =
+    quantizeTable(vecs, quantScale)._1.map(_.map { d =>
+      if (d.isNaN || d.isInfinite || d < -9.223372036854775808E18 ||
+          d >= 9.223372036854775808E18)
+        throw new ArithmeticException(
+          s"quantized codebook value $d does not fit a long")
+      d.toLong
+    }.toSeq).toSeq
 
   /** Probe a PQ index: probe cells exactly like [[probeIvfIndex]] (per
     * query row, one native routing call over the quantizer table
@@ -3888,13 +4173,12 @@ object Similarity {
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(staged, true)
     fs.delete(retired, true)
-    // a fresh/empty index has no posting files to compact — this is an
-    // exception probe: schema inference over the dir throws exactly when
-    // there is nothing inferable to compact
-    val hasFiles =
-      try { spark.read.parquet(live.toString); true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!hasFiles) return
+    // a fresh/empty index has no posting files to compact: schema
+    // inference over the dir throws exactly when there is nothing
+    // inferable to compact
+    val input =
+      try spark.read.parquet(live.toString)
+      catch { case _: org.apache.spark.sql.AnalysisException => return }
     // file sets are compared RELATIVE to their root dir, so the same
     // set can be re-checked after the retire rename moves it wholesale
     def relativize(root: Path, p: Path): String = {
@@ -3912,7 +4196,6 @@ object Similarity {
       }
       out.toSet
     }
-    val input = spark.read.parquet(live.toString)
     // the exact file set this compaction will fold in — compared against
     // a fresh listing immediately before the retire-rename, so an append
     // landing DURING the compaction (a single-writer-contract violation)
@@ -3940,9 +4223,8 @@ object Similarity {
         broadcast(spark.read.parquet(tombFiles.map(_.toString): _*)
           .select(col("corpus_id"))),
         Seq("corpus_id"), "left_anti")
-    folded.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(staged.toString)
+    writeCells(folded, footerRowCount(spark, path + "/centroids").toInt,
+      "overwrite", staged.toString)
     afterStage()
     val liveNow = listDataFiles(live)
     if (liveNow != inputFiles) {

@@ -1059,10 +1059,25 @@ object Streams {
     * index's own meta), and after every `compactEvery`-th batch the
     * postings are compacted back to one file per cell
     * ([[graft.ops.Similarity.compactIvfIndex]]) so probe cost tracks
-    * bytes, not an ever-growing append-file count. The single-writer
-    * contract holds by construction WITHIN the stream (append and
-    * compaction run serialized inside the same foreachBatch, and
-    * micro-batches never overlap) and is ENFORCED against other
+    * bytes, not an ever-growing append-file count.
+    *
+    * The root is opened once per stream, on the driver and with no
+    * Spark job: meta, the quantized centroid table and the postings'
+    * payload columns are read with plain parquet-hadoop on the first
+    * batch and carried for the life of the stream. Before each batch a
+    * driver-side listing of `centroids/`, `codebook/` and `meta/`
+    * (names, sizes, mtimes) is compared with the one taken at the open;
+    * when it changed — another writer rebuilt the root — the root is
+    * reopened, so that batch already routes under the new centroids.
+    * Everything else still runs per batch: the batch-id high-water-mark
+    * check and record, the compaction-swap recovery, the lease verify
+    * and tombstone resurrection. A non-compacting batch therefore runs
+    * only the delta's assignment and cell-parallel write (3 Spark jobs
+    * on a small micro-batch).
+    *
+    * The single-writer contract holds by construction WITHIN the stream
+    * (append and compaction run serialized inside the same foreachBatch,
+    * and micro-batches never overlap) and is ENFORCED against other
     * processes: the stream holds the root's writer lease for its whole
     * lifetime ([[graft.ops.Similarity.acquireWriterLease]] — a
     * long-running writer is exactly what the lease exists for), so a
@@ -1079,51 +1094,61 @@ object Streams {
       vecCol: String, indexPath: String, checkpointPath: String,
       compactEvery: Int = 0,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startWithHeldLease(deltas.sparkSession, indexPath,
-      "indexMaintenanceStream") {
-      deltas.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val spark = batch.sparkSession
-            graft.ops.Similarity.appendToIvfIndexOnce(spark, indexPath,
-              batch.toDF(), idCol, vecCol, batchId)
-            if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-              graft.ops.Similarity.compactIvfIndex(spark, indexPath)
-        }
-        .option("checkpointLocation", checkpointPath)
-        .trigger(trigger)
-        .start()
-    }
+    maintenanceStream(deltas, indexPath, checkpointPath, compactEvery,
+      trigger, "indexMaintenanceStream", pq = false) { (spark, df, id, v) =>
+      graft.ops.Similarity.appendToIvfIndexOnce(spark, indexPath, df,
+        idCol, vecCol, id, v)
+    }(graft.ops.Similarity.compactIvfIndex)
 
   /** [[indexMaintenanceStream]] for a persisted PQ index: each
     * micro-batch PQ-encoded and appended under the FROZEN quantizer and
     * codebook ([[graft.ops.Similarity.appendToIvfPqIndex]] — all
     * parameters from the index's own meta), codes compacted back to one
     * file per cell every `compactEvery` batches
-    * ([[graft.ops.Similarity.compactIvfPqIndex]]). Same
-    * stream-held-lease, exactly-once-replay and single-writer
-    * properties as the raw-vector maintenance stream. */
+    * ([[graft.ops.Similarity.compactIvfPqIndex]]). The root — meta,
+    * centroid table, quantized codebook and the codes' payload columns —
+    * is opened once on the driver with no Spark job and carried across
+    * batches, reopened only when the listing of `centroids/`,
+    * `codebook/` and `meta/` changes, exactly as for the raw-vector
+    * stream. Same stream-held-lease, exactly-once-replay and
+    * single-writer properties as the raw-vector maintenance stream. */
   def pqIndexMaintenanceStream(deltas: DataFrame, idCol: String,
       vecCol: String, indexPath: String, checkpointPath: String,
       compactEvery: Int = 0,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startWithHeldLease(deltas.sparkSession, indexPath,
-      "pqIndexMaintenanceStream") {
+    maintenanceStream(deltas, indexPath, checkpointPath, compactEvery,
+      trigger, "pqIndexMaintenanceStream", pq = true) { (spark, df, id, v) =>
+      graft.ops.Similarity.appendToIvfPqIndexOnce(spark, indexPath, df,
+        idCol, vecCol, id, v)
+    }(graft.ops.Similarity.compactIvfPqIndex)
+
+  /** The shared body of the two maintenance streams: under the held
+    * lease, each batch appends through `append` with the stream's one
+    * carried view of the root, then compacts every `compactEvery`-th
+    * batch. */
+  private def maintenanceStream(deltas: DataFrame, indexPath: String,
+      checkpointPath: String, compactEvery: Int, trigger: Trigger,
+      op: String, pq: Boolean)(
+      append: (org.apache.spark.sql.SparkSession, DataFrame, Long,
+        graft.ops.Similarity.RootView) => Boolean)(
+      compact: (org.apache.spark.sql.SparkSession, String) => Unit)
+      : StreamingQuery = {
+    val view = new graft.ops.Similarity.RootView(indexPath, pq)
+    startWithHeldLease(deltas.sparkSession, indexPath, op) {
       deltas.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            batchId: Long) =>
             val spark = batch.sparkSession
-            graft.ops.Similarity.appendToIvfPqIndexOnce(spark, indexPath,
-              batch.toDF(), idCol, vecCol, batchId)
+            append(spark, batch.toDF(), batchId, view)
             if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-              graft.ops.Similarity.compactIvfPqIndex(spark, indexPath)
+              compact(spark, indexPath)
         }
         .option("checkpointLocation", checkpointPath)
         .trigger(trigger)
         .start()
     }
+  }
 
   /** The streams of THIS process currently holding an index root's
     * writer lease — consulted before acquiring so that a back-to-back

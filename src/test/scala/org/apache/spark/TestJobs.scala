@@ -45,4 +45,60 @@ object TestJobs {
     (ids.size, ids.distinct.flatMap(id =>
       id.toLongOption.flatMap(x => Option(plans.get(x)))))
   }
+
+  /** Runs `body` under a fresh job group on this thread and returns, for
+    * each job it started in start order, the task count of the job's
+    * result (last) stage. */
+  def resultStageTasks(spark: SparkSession)(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"test-tasks-${java.util.UUID.randomUUID()}"
+    val tasks = new ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
+          tasks.add(e.jobId -> e.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted tasks")
+    try body
+    finally {
+      sc.clearJobGroup()
+      sc.listenerBus.waitUntilEmpty()
+      sc.removeSparkListener(listener)
+    }
+    tasks.asScala.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  /** Runs `body` (which runs streaming queries on their own threads) and
+    * returns the jobs each micro-batch started, keyed by (streaming query
+    * id, batch id) — the local properties Structured Streaming sets on
+    * the thread that runs a batch — in start order, each labelled by the
+    * distinct operation scopes of its result stage's RDDs (a stream
+    * thread's jobs all share one call site, so the scopes are what tells
+    * a schema inference from a sort or a write apart). */
+  def perBatch(spark: SparkSession)(body: => Unit)
+      : Map[(String, Long), Seq[String]] = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(Int, (String, Long), String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null) {
+          val q = e.properties.getProperty("sql.streaming.queryId")
+          val b = e.properties.getProperty("streaming.sql.batchId")
+          if (q != null && b != null)
+            jobs.add((e.jobId, q -> b.toLong,
+              e.stageInfos.maxBy(_.stageId).rddInfos.sortBy(_.id)
+                .flatMap(_.scope.map(_.name)).distinct.mkString(" > ")))
+        }
+    }
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      sc.listenerBus.waitUntilEmpty()
+      sc.removeSparkListener(listener)
+    }
+    jobs.asScala.toSeq.sortBy(_._1).groupBy(_._2)
+      .map { case (k, v) => k -> v.map(_._3) }
+  }
 }
