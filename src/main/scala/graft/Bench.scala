@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: times every SparkEntry query at the given SF and
@@ -22,32 +21,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The bounded-buffer object aggregates (topk_by_score,
-      // bounded_collect_set) keep O(k) state per key, so the engine's
-      // conservative 128-key sort-fallback would turn a cheap hash
-      // aggregation into a full sort-and-spill of the scored input
-      // (measured: 2.5x on 10x-scale margin mining). 64Ki keys x the
-      // bounded buffers stays well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      // JVM-pressure fix at source (r11 directive #1): even with the UI
-      // disabled, the app-status stores retain per-execution SQL plan
-      // graphs (default 1000 executions) and per-job/stage/task rows in
-      // driver heap. 262 queries x compiled-FHIR-schema plan strings is
-      // gigabytes of dead-but-referenced state — the measured 2.3->30 GB
-      // heap climb that made q97 a phantom regression. Bound them hard:
-      // the bench only needs the telemetry it collects itself.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+    val spark = localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // Warmup (not timed): shuffle machinery, each table's parquet footer,
     // then every query once at the smallest SF to compile codegen and let

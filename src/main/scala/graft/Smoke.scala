@@ -1,25 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke surface: runs the flagship entry() flow (driver checks rows>0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The bounded-buffer object aggregates (topk_by_score,
-      // bounded_collect_set) keep O(k) state per key, so the engine's
-      // conservative 128-key sort-fallback would turn a cheap hash
-      // aggregation into a full sort-and-spill of the scored input
-      // (measured: 2.5x on 10x-scale margin mining). 64Ki keys x the
-      // bounded buffers stays well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession("4")
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)

@@ -119,8 +119,10 @@ object SparkEntry {
     * exit. Concurrent runs over different SF dirs get distinct paths. */
   private val scratchRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Recursive delete of a scratch sub-path (a consuming merge needs a
-    * fresh destination on every run of the same query). */
+  /** Recursive delete of a scratch path: query bodies clear the inputs,
+    * outputs and checkpoints a previous run left (a consuming merge
+    * also needs a fresh destination), and [[scratchDir]] its whole tree
+    * at JVM exit. */
   private def rmScratch(path: String): Unit = {
     def rm(f: java.io.File): Unit = {
       val kids = f.listFiles()
@@ -134,16 +136,9 @@ object SparkEntry {
     val key = java.lang.Integer.toHexString(dir.hashCode)
     val p = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_${tag}_$key")
-    if (scratchRegistered.add(p.toString)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(); ()
-        }
-        rm(p.toFile)
-      }))
-    }
+    if (scratchRegistered.add(p.toString))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        rmScratch(p.toString)))
     p.toString
   }
 
@@ -693,14 +688,9 @@ object SparkEntry {
       val sigs = mediaSigs(t(s, dir, "documents").select(col("doc_id")),
         "img:", dupEvery = 10, maskShift = 0)
       val root = scratchDir("q113_media", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, idx, pairs, chk) = (s"$root/in", s"$root/index",
         s"$root/pairs", s"$root/chk")
-      Seq(in, idx, pairs, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, idx, pairs, chk).foreach(rmScratch)
       sigs.where(pmod(col("id"), lit(2)) === 0)
         .coalesce(1).write.mode("overwrite").parquet(in)
       sigs.where(pmod(col("id"), lit(2)) === 1)
@@ -3212,13 +3202,8 @@ object SparkEntry {
           graft.ops.Dedup.wordShingles(col("text"), 3))).as("g"))
         .distinct().collect().map(_.getString(0)).toSeq.sorted
       val root = scratchDir("q269", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val in = s"$root/in"
-      rmr(new java.io.File(in))
+      rmScratch(in)
       val corpus = docs.where(col("doc_id") >= 5)
         .select(col("doc_id"), col("text"))
       corpus.where(pmod(col("doc_id"), lit(2)) === 0)
@@ -3428,14 +3413,9 @@ object SparkEntry {
         .where(col("embedding").isNotNull && size(col("embedding")) === 64)
       val seeds = Similarity.hashSeeds(e, "vec_id", "embedding", 32)
       val root = scratchDir("annstream", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, idxp, outp, chk) = (s"$root/in", s"$root/index",
         s"$root/out", s"$root/chk")
-      Seq(in, outp, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, outp, chk).foreach(rmScratch)
       Similarity.writeIvfIndex(Similarity.buildIvfIndex(e, "vec_id",
         "embedding", seeds, "sid", "svec"), idxp)
       val qset = e.where(col("vec_id") < 8)
@@ -3528,14 +3508,9 @@ object SparkEntry {
         .where(col("embedding").isNotNull && size(col("embedding")) === 64)
       val seeds = Similarity.hashSeeds(e, "vec_id", "embedding", 32)
       val root = scratchDir("anndedup", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, idxp, pairs, chk) = (s"$root/in", s"$root/index",
         s"$root/pairs", s"$root/chk")
-      Seq(in, pairs, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, pairs, chk).foreach(rmScratch)
       // centroids only — writeIvfIndex(overwrite) also clears any
       // postings a previous run appended
       Similarity.writeIvfIndex(Similarity.buildIvfIndex(
@@ -3758,13 +3733,8 @@ object SparkEntry {
       val delta = e.where(pmod(col("vec_id"), lit(7)) === 0)
       val seeds = Similarity.hashSeeds(base, "vec_id", "embedding", 32)
       val root = scratchDir("pqmaint", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, idxp, chk) = (s"$root/in", s"$root/index", s"$root/chk")
-      Seq(in, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, chk).foreach(rmScratch)
       val idx = Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
         seeds, "sid", "svec",
         codebookIds = Seq(16L, 17L, 18L, 19L, 20L, 22L, 23L, 24L),
@@ -4255,13 +4225,8 @@ object SparkEntry {
         .where(col("embedding").isNotNull && size(col("embedding")) === 64)
       val seeds = Similarity.hashSeeds(e, "vec_id", "embedding", 32)
       val root = scratchDir("annmaint", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, idxp, chk) = (s"$root/in", s"$root/index", s"$root/chk")
-      Seq(in, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, chk).foreach(rmScratch)
       // centroids only — writeIvfIndex(overwrite) also clears any
       // postings a previous run appended
       Similarity.writeIvfIndex(Similarity.buildIvfIndex(
@@ -4340,13 +4305,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .where(col("event_type").isNotNull && col("user_id").isNotNull)
       val root = scratchDir("q258_hll", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, regs, chk) = (s"$root/in", s"$root/regs", s"$root/chk")
-      Seq(in, regs, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, regs, chk).foreach(rmScratch)
       val vals = ev.select(col("event_type"), col("user_id"))
       vals.where(pmod(col("user_id"), lit(2)) === 0)
         .coalesce(1).write.mode("overwrite").parquet(in)
@@ -4471,13 +4431,8 @@ object SparkEntry {
       import graft.ops.Sketches
       val ev = t(s, dir, "events").where(col("user_id").isNotNull)
       val root = scratchDir("q244_cms", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, cells, chk) = (s"$root/in", s"$root/cells", s"$root/chk")
-      Seq(in, cells, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, cells, chk).foreach(rmScratch)
       val vals = ev.select(col("user_id"))
       vals.where(pmod(col("user_id"), lit(2)) === 0)
         .coalesce(1).write.mode("overwrite").parquet(in)
@@ -4756,13 +4711,8 @@ object SparkEntry {
     "q213_jsonl_ingest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = scratchDir("q213_jsonl", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val out = s"$root/jsonl"
-      rmr(new java.io.File(out))
+      rmScratch(out)
       docs.select(to_json(struct(col("doc_id"), col("text"),
         col("lang"), col("source"), col("n_chars"))).as("value"))
         .write.mode("overwrite").text(out)
@@ -4793,13 +4743,8 @@ object SparkEntry {
     "q214_corrupt_record_audit" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = scratchDir("q214_corrupt", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val out = s"$root/jsonl"
-      rmr(new java.io.File(out))
+      rmScratch(out)
       val good = to_json(struct(col("doc_id"), col("lang"),
         col("source"), col("n_chars")))
       docs.select(when(pmod(col("doc_id"), lit(13)) === 0,
@@ -4840,13 +4785,8 @@ object SparkEntry {
     "q215_csv_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = scratchDir("q215_csv", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val out = s"$root/csv"
-      rmr(new java.io.File(out))
+      rmScratch(out)
       val tricky = concat(col("lang"), lit(",\""), col("source"),
         lit("\n"), col("doc_id").cast("string"))
       docs.select(col("doc_id"), col("source"), col("lang"),
@@ -4954,13 +4894,8 @@ object SparkEntry {
           min(col("value").cast("decimal(18,4)")).as("vmin"),
           max(col("value").cast("decimal(18,4)")).as("vmax"))
       val root = scratchDir("q208_ivm", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val base = s"$root/base"
-      rmr(new java.io.File(base))
+      rmScratch(base)
       rollup(ev.where(col("ts") < cut)).write.mode("overwrite")
         .parquet(base)
       val merged = s.read.parquet(base)
@@ -5031,13 +4966,8 @@ object SparkEntry {
       val docs = t(s, dir, "documents").select(col("doc_id"),
         col("text"))
       val root = scratchDir("q200_shh", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val in = s"$root/in"
-      rmr(new java.io.File(in))
+      rmScratch(in)
       docs.where(pmod(col("doc_id"), lit(2)) === 0)
         .coalesce(1).write.mode("append").parquet(in)
       docs.where(pmod(col("doc_id"), lit(2)) === 1)
@@ -5153,13 +5083,8 @@ object SparkEntry {
     "q196_stream_late_audit" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val root = scratchDir("q196_late", dir)
-      def rmr(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rmr)
-        f.delete(); ()
-      }
       val (in, out, chk) = (s"$root/in", s"$root/out", s"$root/chk")
-      Seq(in, out, chk).foreach(p => rmr(new java.io.File(p)))
+      Seq(in, out, chk).foreach(rmScratch)
       val cols = Seq(col("event_id"), col("ts"), col("event_type"))
       // Two SEQUENTIAL runs against one checkpoint (the production
       // file-sink path): run 1 ingests the even-id rows and its

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The bounded-buffer object aggregates (topk_by_score,
-      // bounded_collect_set) keep O(k) state per key, so the engine's
-      // conservative 128-key sort-fallback would turn a cheap hash
-      // aggregation into a full sort-and-spill of the scored input
-      // (measured: 2.5x on 10x-scale margin mining). 64Ki keys x the
-      // bounded buffers stays well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (same contract as SPARK_GRAFT_BENCH_ONLY):

@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  FloatType, IntegerType, LongType, StructField, StructType}
 import graft.Lineage._
 import org.apache.spark.sql.functions._
 
@@ -344,6 +347,12 @@ object Similarity {
       graft.functions.GraftHashImpl.dotD(a, a).doubleValue()
     })
   }
+
+  /** Bit-equality of two quantizer tables. */
+  private def sameTable(a: Array[Array[Double]],
+      b: Array[Array[Double]]): Boolean =
+    a.length == b.length &&
+      a.indices.forall(j => java.util.Arrays.equals(a(j), b(j)))
 
   private[ops] def scorerFromTable(cents: Array[Array[Double]],
       cn: Array[Double]): Column => Column = {
@@ -1326,7 +1335,7 @@ object Similarity {
         GraftFunctions.pqEncodeWithErr(col("qv"), cbBlock, csq)
           .as("enc") +:
         dot(col("qv"), col("qv")).as("nb2") +: pl: _*)
-      .select(col("corpus_id") +: col("cell") +:
+      .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
         col("enc").getField("codes").as("codes") +:
         col("enc").getField("err2").as("e2") +: col("nb2") +: pl: _*)
       .truncateLineage(eager = false)
@@ -1720,42 +1729,39 @@ object Similarity {
       quantScale: Int = 10000,
       twoLevelThreshold: Int = 4096,
       payloadCols: Seq[String] = Nil): IvfIndexFrames = {
-    val session = corpus.sparkSession
-    // quantize through ONE rounding rule: the persisted centroids are
-    // float32, so the build-time table quantizes from the float32 cast
-    // too — a double-precision seed source (e.g. k-means centers) would
-    // otherwise round differently at build vs the read-back append/probe
-    val seedsF = seeds.select(col(seedId).as("__sid"),
-      col(seedVec).cast("array<float>").as("__svec"))
-    val (centTab, cnTab) = collectSeedTable(seedsF, "__sid", "__svec",
-      quantScale)
-    if (centTab.isEmpty) {
-      // empty corpus → empty seed draw → a typed empty index (the
-      // 100 TB empty-partition contract: complete, don't throw)
-      import session.implicits._
-      return IvfIndexFrames(
-        Seq.empty[(Int, Seq[Float])].toDF("cell", "cvec"),
+    val (centroids, centTab, cnTab) =
+      seedCentroids(seeds, seedId, seedVec, quantScale)
+    IvfIndexFrames(centroids,
+      if (centTab.isEmpty)
+        // empty corpus → empty seed draw → a typed empty index (the
+        // 100 TB empty-partition contract: complete, don't throw)
         corpus.limit(0)
           .select(lit(0).cast("int").as("cell") +:
             col(corpusId).cast("long").as("corpus_id") +:
             col(corpusVec).cast("array<float>").as("cvec") +:
-            lit(0.0).as("cnorm") +: payloadCols.map(col): _*),
-        quantScale, twoLevelThreshold)
-    }
-    // seeds are small by contract (collectSeedTable already holds them on
-    // the driver); the centroids frame is created from the same ascending-
-    // seedId collect, so the persisted cell index agrees with centTab by
-    // construction — and no window/shuffle appears in any plan.
-    val rawSeeds: Seq[(Int, Seq[Float])] = seedsF
-      .orderBy(col("__sid")).select("__svec").collect()
-      .toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](0)) }
-    import session.implicits._
-    val centroids = rawSeeds.toDF("cell", "cvec")
-    IvfIndexFrames(centroids,
-      assignPostings(corpus, corpusId, corpusVec, centTab, cnTab,
+            lit(0.0).as("cnorm") +: payloadCols.map(col): _*)
+      else assignPostings(corpus, corpusId, corpusVec, centTab, cnTab,
         quantScale, twoLevelThreshold, payloadCols),
       quantScale, twoLevelThreshold)
+  }
+
+  /** A build's centroids frame (cell = position in ascending `seedId`
+    * order, cvec = the float32 seed) and its quantized table, from ONE
+    * collect of the (small) seed set, so the two agree by construction.
+    * The table quantizes the float32 values the root persists: a double
+    * seed source would otherwise round differently than at read-back. */
+  private def seedCentroids(seeds: DataFrame, seedId: String,
+      seedVec: String, quantScale: Int)
+      : (DataFrame, Array[Array[Double]], Array[Double]) = {
+    val session = seeds.sparkSession
+    import session.implicits._
+    val vecs = seeds.select(col(seedId).as("sid"),
+        col(seedVec).cast("array<float>").cast("array<double>").as("v"))
+      .orderBy(col("sid")).select("v").collect()
+      .map(r => vectorOf(r, 0, "collectSeedTable")).toSeq
+    val (centTab, cnTab) = quantizeTable(vecs, quantScale)
+    (vecs.map(_.map(_.toFloat).toSeq).zipWithIndex.map(_.swap)
+      .toDF("cell", "cvec"), centTab, cnTab)
   }
 
   /** The q284 two-level routing tables derived from a quantized centroid
@@ -1789,6 +1795,18 @@ object Similarity {
     (superCents, superCn, memberCells)
   }
 
+  /** The cell of the quantized vector `qv` under a centroid table — the
+    * coarse assignment of both index kinds' build and append: one native
+    * [[graft.functions.IvfArgmaxCell]] call per row, flat exact argmax
+    * below `twoLevelThreshold` cells and the q284 two-level route
+    * ([[twoLevelTables]]) at or above it. */
+  private def argmaxCell(qv: Column, centTab: Array[Array[Double]],
+      cnTab: Array[Double], twoLevelThreshold: Int): Column =
+    if (centTab.length >= twoLevelThreshold) {
+      val (sc, scn, members) = twoLevelTables(centTab, cnTab)
+      GraftFunctions.ivfArgmaxCell(qv, sc, scn, members, centTab, cnTab)
+    } else GraftFunctions.ivfArgmaxCell(qv, centTab, cnTab, null, null, null)
+
   /** (cell, corpus_id, cvec, cnorm) under a driver-side centroid table —
     * the shared assignment kernel of build and append. At or above
     * `twoLevelThreshold` cells, assignment routes through the q284
@@ -1802,18 +1820,11 @@ object Similarity {
       cnTab: Array[Double], quantScale: Int,
       twoLevelThreshold: Int,
       payloadCols: Seq[String] = Nil): DataFrame = {
-    val reserved = Set("cell", "corpus_id", "cvec", "cnorm", "__qn")
+    val reserved = IvfKind.core + "__qn"
     require(payloadCols.forall(p => !reserved(p)),
       s"assignPostings: payload columns $payloadCols collide with the " +
         s"postings schema names $reserved")
     val pl = payloadCols.map(col)
-    val assign =
-      if (centTab.length >= twoLevelThreshold) {
-        val (sc, scn, members) = twoLevelTables(centTab, cnTab)
-        GraftFunctions.ivfArgmaxCell(col("__qn"), sc, scn, members,
-          centTab, cnTab)
-      } else GraftFunctions.ivfArgmaxCell(col("__qn"), centTab, cnTab,
-        null, null, null)
     widenForCompute(corpus)
       .select(col(corpusId).cast("long").as("corpus_id") +:
         col(corpusVec).cast("array<float>").as("cvec") +: pl: _*)
@@ -1822,8 +1833,9 @@ object Similarity {
         norm(col("cvec")).as("cnorm") +:
         transform(col("cvec"), x => round(x.cast("double") * quantScale))
           .as("__qn") +: pl: _*)
-      .select(assign.as("cell") +: col("corpus_id") +: col("cvec") +:
-        col("cnorm") +: pl: _*)
+      .select(argmaxCell(col("__qn"), centTab, cnTab, twoLevelThreshold)
+        .as("cell") +: col("corpus_id") +: col("cvec") +: col("cnorm") +:
+        pl: _*)
   }
 
   /** Persist the index: `<path>/centroids` (one small file) and
@@ -1835,24 +1847,8 @@ object Similarity {
     * ONE task writing one file (parquet row groups keep huge cells
     * splittable for readers). Overwrites any previous index at `path`
     * (the rebuild contract; use [[appendToIvfIndex]] for deltas). */
-  def writeIvfIndex(idx: IvfIndexFrames, path: String): Unit = {
-    val session = idx.centroids.sparkSession
-    import session.implicits._
-    clearTombstones(session, path) // a rebuild defines the corpus anew
-    clearAppendHwm(session, path) // …and starts a new append history
-    idx.centroids.coalesce(1).write.mode("overwrite")
-      .parquet(path + "/centroids")
-    // self-describing index: the quantization scale and routing
-    // threshold are properties OF the index, not parameters a later
-    // append/probe caller has to remember — a mismatched re-supply
-    // would silently corrupt cell assignment
-    Seq((idx.quantScale, idx.twoLevelThreshold))
-      .toDF("quant_scale", "two_level_threshold")
-      .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    writeCells(idx.postings,
-      footerRowCount(session, path + "/centroids").toInt, "overwrite",
-      path + "/postings")
-  }
+  def writeIvfIndex(idx: IvfIndexFrames, path: String): Unit =
+    writeRoot(IvfKind, idx, path)
 
   /** The single meta row read DRIVER-SIDE (plain parquet-hadoop, no
     * Spark job): the file is a few hundred bytes and every lifecycle
@@ -1885,164 +1881,232 @@ object Similarity {
     *     the same thing, by rule 1).
     * MetaEvolutionSpec pins all three rules against hand-written
     * legacy meta dirs. */
-  private def readMetaRow(spark: org.apache.spark.sql.SparkSession,
+  private def readMetaRow(spark: SparkSession,
       dir: String, fields: Seq[String],
       defaults: Map[String, Int] = Map.empty): Option[Seq[Int]] = {
-    import org.apache.hadoop.fs.Path
-    val d = new Path(dir)
-    val dataFiles = parquetDataFiles(
-      d.getFileSystem(spark.sparkContext.hadoopConfiguration), d)
+    val dataFiles = parquetDataFiles(spark, new Path(dir))
     if (dataFiles.isEmpty) return None
     require(dataFiles.length == 1,
       s"readMetaRow: ${dataFiles.length} data files in $dir — a meta " +
         "dir must hold exactly one; an external copy or partial " +
         "overwrite left ambiguous metadata and routing appends under " +
         "an arbitrary row would corrupt the index. Repair the root.")
-    val f = dataFiles.head
-    val rd = org.apache.parquet.hadoop.ParquetReader.builder(
-      new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-      .withConf(spark.sparkContext.hadoopConfiguration).build()
-    try {
-      val g = rd.read()
-      require(g != null, s"readMetaRow: empty meta file $f")
-      Some(fields.map { n =>
-        if (g.getType.containsField(n)) g.getInteger(n, 0)
-        else defaults.getOrElse(n, throw new IllegalStateException(
-          s"readMetaRow: required field $n missing from meta at $dir"))
-      })
-    } finally rd.close()
+    val g = records(spark, dataFiles.head).headOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"readMetaRow: empty meta file ${dataFiles.head}"))
+    Some(fields.map { n =>
+      if (g.getType.containsField(n)) g.getInteger(n, 0)
+      else defaults.getOrElse(n, throw new IllegalStateException(
+        s"readMetaRow: required field $n missing from meta at $dir"))
+    })
   }
 
-  /** The persisted (quantScale, twoLevelThreshold) of the index at
-    * `path`; defaults for a pre-meta index. `two_level_threshold`
-    * carries the evolution-contract default (4096 — the hard-coded
-    * routing switch of builds that predate the column), so a legacy
-    * meta holding only `quant_scale` reopens under the behavior it
-    * was built with instead of failing. */
-  private def readIvfMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int) =
-    readMetaRow(spark, path + "/meta",
-      Seq("quant_scale", "two_level_threshold"),
-      defaults = Map("two_level_threshold" -> 4096)) match {
-      case Some(Seq(qs, tlt)) => (qs, tlt)
-      case _ => (10000, 4096)
+  /** The meta-evolution defaults of both kinds (rule 1 above): 4096 is
+    * the hard-coded routing switch of builds that predate the column. */
+  private val metaDefaults = Map("two_level_threshold" -> 4096)
+
+  /** The meta of the `kind` root at `path`, by field name. A root
+    * without a meta row opens under the kind's `preMeta` values or, when
+    * the kind has none, fails loudly. `supplied` is a legacy caller's
+    * re-supply of some fields: each must equal the persisted value, and
+    * on a pre-meta root it stands in for it. */
+  private def readMeta(spark: SparkSession,
+      kind: IndexKind[_], path: String, op: String,
+      supplied: Map[String, Int] = Map.empty): Map[String, Int] =
+    readMetaRow(spark, path + "/meta", kind.metaFields, metaDefaults) match {
+      case Some(values) =>
+        val meta = kind.metaFields.zip(values).toMap
+        require(supplied.forall { case (f, v) => meta(f) == v },
+          s"$op: supplied $supplied contradict the index's persisted " +
+            s"meta $meta at $path — an append under a different " +
+            "quantizer would corrupt cell assignment")
+        meta
+      case None =>
+        kind.metaFields.zip(kind.preMeta.getOrElse(
+          throw new IllegalStateException(
+            s"$op: no meta row at $path — not an ${kind.label} index root")))
+          .toMap ++ supplied
     }
 
-  /** The persisted (inDims, nSub, quantScale, twoLevelThreshold) of the
-    * PQ index at `path`; a root without a meta row is not a PQ root. */
-  private def readPqMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, op: String): Seq[Int] =
-    readMetaRow(spark, path + "/meta",
-      Seq("in_dims", "n_sub", "quant_scale", "two_level_threshold"),
-      defaults = Map("two_level_threshold" -> 4096))
-      .getOrElse(throw new IllegalStateException(
-        s"$op: no meta row at $path — not a PQ index root"))
+  // ===== The two index kinds =====
+
+  /** What tells the two persisted index kinds apart; the lifecycle —
+    * write, read, open, append, merge, compaction — is written once and
+    * takes a kind. `label` names the kind's public verbs in messages
+    * (`appendTo<label>Index`). `dataDir` is the cell-partitioned corpus
+    * dir and `coreSchema` its core columns as a partition-discovered
+    * read reports them (`coreColumns`, then `cell`; every other column
+    * is payload). `tableDirs` are the quantizer's `(dir, key, vector)`
+    * tables, centroids first, `metaFields` the meta row's columns and
+    * `preMeta` the values a root without `meta/` opens under (None: meta
+    * is required). The accessors map the frames type `F` to and from its
+    * tables, meta values (in `metaFields` order) and data. */
+  private[graft] sealed abstract class IndexKind[F](val label: String,
+      val dataDir: String, coreColumns: Seq[(String, DataType)],
+      val tableDirs: Seq[(String, String, String)],
+      val metaFields: Seq[String], val preMeta: Option[Seq[Int]]) {
+    val coreSchema: StructType = StructType((coreColumns :+
+      ("cell" -> IntegerType)).map(c => StructField(c._1, c._2)))
+    val core: Set[String] = coreSchema.fieldNames.toSet
+    /** The directories a rebuild replaces and a consuming merge moves
+      * from the first source; a maintenance stream reopens its root when
+      * their listing changes. */
+    def quantizerDirs: Seq[String] = tableDirs.map(_._1) :+ "meta"
+    def emptyQuantizer(root: OpenedRoot): Boolean
+    def encode(delta: DataFrame, idCol: String, vecCol: String,
+        root: OpenedRoot): DataFrame
+    def tables(idx: F): Seq[DataFrame]
+    def meta(idx: F): Seq[Int]
+    def data(idx: F): DataFrame
+    def frames(tables: Seq[DataFrame], data: DataFrame,
+        meta: Map[String, Int]): F
+  }
+
+  /** The raw-vector IVF index: postings carry the float32 vector and its
+    * norm; a pre-meta root opens under the historical (10000, 4096). */
+  private[graft] object IvfKind extends IndexKind[IvfIndexFrames]("Ivf",
+      "postings", Seq("corpus_id" -> LongType,
+        "cvec" -> ArrayType(FloatType), "cnorm" -> DoubleType),
+      Seq(("centroids", "cell", "cvec")),
+      Seq("quant_scale", "two_level_threshold"), Some(Seq(10000, 4096))) {
+    def emptyQuantizer(root: OpenedRoot): Boolean = root.centTab.isEmpty
+    def encode(delta: DataFrame, idCol: String, vecCol: String,
+        root: OpenedRoot): DataFrame =
+      assignPostings(delta, idCol, vecCol, root.centTab, root.cnTab,
+        root.quantScale, root.twoLevelThreshold, root.payloadCols)
+    def tables(idx: IvfIndexFrames): Seq[DataFrame] = Seq(idx.centroids)
+    def meta(idx: IvfIndexFrames): Seq[Int] =
+      Seq(idx.quantScale, idx.twoLevelThreshold)
+    def data(idx: IvfIndexFrames): DataFrame = idx.postings
+    def frames(tables: Seq[DataFrame], data: DataFrame,
+        meta: Map[String, Int]): IvfIndexFrames =
+      IvfIndexFrames(tables.head, data, meta("quant_scale"),
+        meta("two_level_threshold"))
+  }
+
+  /** The IVF-PQ index: codes carry the PQ code array and the two margin
+    * columns; the codebook is a second quantizer table, and meta is
+    * required. */
+  private[graft] object PqKind extends IndexKind[IvfPqIndexFrames]("IvfPq",
+      "codes", Seq("corpus_id" -> LongType,
+        "codes" -> ArrayType(IntegerType), "e2" -> DoubleType,
+        "nb2" -> DoubleType),
+      Seq(("centroids", "cell", "cvec"), ("codebook", "ci", "cv")),
+      Seq("in_dims", "n_sub", "quant_scale", "two_level_threshold"), None) {
+    def emptyQuantizer(root: OpenedRoot): Boolean =
+      root.centTab.isEmpty || root.codebook.isEmpty
+    def encode(delta: DataFrame, idCol: String, vecCol: String,
+        root: OpenedRoot): DataFrame = {
+      val (cbBlock, csq) = root.pqKernelTables
+      pqEncodeIndexed(coarseAssignQuantized(delta, idCol, vecCol,
+          root.centTab, root.cnTab, root.quantScale, root.twoLevelThreshold,
+          root.meta("in_dims"), root.payloadCols),
+        cbBlock, csq, root.payloadCols)
+    }
+    def tables(idx: IvfPqIndexFrames): Seq[DataFrame] =
+      Seq(idx.centroids, idx.codebook)
+    def meta(idx: IvfPqIndexFrames): Seq[Int] =
+      Seq(idx.inDims, idx.nSub, idx.quantScale, idx.twoLevelThreshold)
+    def data(idx: IvfPqIndexFrames): DataFrame = idx.codes
+    def frames(tables: Seq[DataFrame], data: DataFrame,
+        meta: Map[String, Int]): IvfPqIndexFrames =
+      IvfPqIndexFrames(tables(0), tables(1), data, meta("in_dims"),
+        meta("n_sub"), meta("quant_scale"), meta("two_level_threshold"))
+  }
 
   // ===== Driver-side open of a persisted root (no Spark job) =====
 
-  /** A persisted root's quantizer as its appends use it: the meta
-    * values, the quantized centroid table in cell order, the payload
-    * columns its postings/codes carry and, for a PQ root, the quantized
-    * codebook in ci order. Opened by [[openIvfRoot]]/[[openPqRoot]]
-    * with plain parquet-hadoop reads on the driver — no Spark job — and
-    * quantized by [[quantizeTable]], so the tables equal the ones a
-    * [[readIvfIndex]]/[[readIvfPqIndex]] frames value collects. */
-  private[graft] final case class OpenedRoot(quantScale: Int,
-      twoLevelThreshold: Int, centTab: Array[Array[Double]],
-      cnTab: Array[Double], payloadCols: Seq[String], inDims: Int = 0,
-      nSub: Int = 0, codebook: Seq[Seq[Long]] = Nil) {
+  /** A persisted root's quantizer as its appends use it: the meta by
+    * field name, the quantized centroid table in cell order, the data
+    * dir's payload columns and (PQ) the quantized codebook in ci order.
+    * Read on the driver with no Spark job by [[openRoot]] and quantized
+    * by [[quantizeTable]], as a read-back frames value collects them. */
+  private[graft] final case class OpenedRoot(meta: Map[String, Int],
+      centTab: Array[Array[Double]], cnTab: Array[Double],
+      payloadCols: Seq[String], codebook: Seq[Seq[Long]]) {
+    def quantScale: Int = meta("quant_scale")
+    def twoLevelThreshold: Int = meta("two_level_threshold")
     lazy val pqKernelTables
         : (Array[Array[Array[Double]]], Array[Array[Double]]) =
-      pqTables(codebook, inDims, nSub)
+      pqTables(codebook, meta("in_dims"), meta("n_sub"))
   }
 
   /** The open of one root carried across calls — a maintenance stream
-    * keeps one for its lifetime. [[current]] lists `centroids/`,
-    * `codebook/` and `meta/` on the driver (names, sizes, mtimes; no
-    * Spark job) and reopens the root only when that listing changed, so
-    * a rebuild of the root by another writer is routed under from the
-    * next call on. The stamp is taken before the open: a change racing
-    * the open shows up as a changed stamp on the next call. */
-  private[graft] final class RootView(path: String, pq: Boolean) {
+    * keeps one for its lifetime. [[current]] lists the kind's quantizer
+    * dirs on the driver (names, sizes, mtimes; no Spark job) and reopens
+    * the root only when that listing changed, so a rebuild of the root
+    * by another writer is routed under from the next call on. The stamp
+    * is taken before the open: a change racing the open shows up as a
+    * changed stamp on the next call. */
+  private[graft] final class RootView(val path: String,
+      val kind: IndexKind[_]) {
     private var stamp: Seq[(String, Long, Long)] = null
     private var opened: OpenedRoot = null
-    def current(spark: org.apache.spark.sql.SparkSession): OpenedRoot =
-      synchronized {
-        val now = quantizerStamp(spark, path)
-        if (opened == null || now != stamp) {
-          opened =
-            if (pq) openPqRoot(spark, path) else openIvfRoot(spark, path)
-          stamp = now
-        }
-        opened
+    def current(spark: SparkSession): OpenedRoot = synchronized {
+      val now = quantizerStamp(spark)
+      if (opened == null || now != stamp) {
+        opened = openRoot(spark, kind, path)
+        stamp = now
       }
-  }
+      opened
+    }
 
-  private def quantizerStamp(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(String, Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Seq("centroids", "codebook", "meta").flatMap { d =>
-      val dir = new Path(path + "/" + d)
-      if (!fs.exists(dir)) Seq((d, -1L, -1L))
-      else fs.listStatus(dir).toSeq.map(s =>
-        (d + "/" + s.getPath.getName, s.getLen, s.getModificationTime))
-        .sorted
+    private def quantizerStamp(spark: SparkSession)
+        : Seq[(String, Long, Long)] = {
+      val fs = fileSystem(spark, new Path(path))
+      kind.quantizerDirs.flatMap { d =>
+        val dir = new Path(path + "/" + d)
+        if (!fs.exists(dir)) Seq((d, -1L, -1L))
+        else fs.listStatus(dir).toSeq.map(s =>
+          (d + "/" + s.getPath.getName, s.getLen, s.getModificationTime))
+          .sorted
+      }
     }
   }
 
-  /** Open the IVF root at `path`. `supplied` is the legacy caller's
-    * (quantScale, twoLevelThreshold): it must match a persisted meta,
-    * and stands in for a pre-meta root's. */
-  private[ops] def openIvfRoot(spark: org.apache.spark.sql.SparkSession,
-      path: String, supplied: Option[(Int, Int)] = None): OpenedRoot = {
-    val (qs, tlt) = supplied match {
-      case None => readIvfMeta(spark, path)
-      case Some((sqs, stlt)) =>
-        readMetaRow(spark, path + "/meta",
-          Seq("quant_scale", "two_level_threshold")) match {
-          case Some(Seq(mqs, mtlt)) =>
-            require(sqs == mqs && stlt == mtlt,
-              s"appendToIvfIndex: supplied (quantScale=$sqs, " +
-                s"twoLevelThreshold=$stlt) contradict the index's " +
-                s"persisted meta ($mqs, $mtlt) at $path — an append " +
-                "under different quantization would corrupt cell " +
-                "assignment")
-          case _ => () // pre-meta index
-        }
-        (sqs, stlt)
+  /** Open the `kind` root at `path`: its meta ([[readMeta]], with a
+    * legacy caller's `supplied` fields checked against it), its
+    * quantizer tables and the payload columns of one data file footer. */
+  private[ops] def openRoot(spark: SparkSession,
+      kind: IndexKind[_], path: String,
+      supplied: Map[String, Int] = Map.empty): OpenedRoot = {
+    val meta = readMeta(spark, kind, path, s"appendTo${kind.label}Index",
+      supplied)
+    val qs = meta("quant_scale")
+    val tables = kind.tableDirs.map { case (dir, key, vec) =>
+      readVectorTable(spark, s"$path/$dir", key, vec)
     }
-    val (centTab, cnTab) = quantizeTable(
-      readVectorTable(spark, path + "/centroids", "cell", "cvec"), qs)
-    OpenedRoot(qs, tlt, centTab, cnTab, payloadColumns(spark,
-      path + "/postings", Set("cell", "corpus_id", "cvec", "cnorm")))
+    val (centTab, cnTab) = quantizeTable(tables.head, qs)
+    OpenedRoot(meta, centTab, cnTab,
+      payloadColumns(spark, s"$path/${kind.dataDir}", kind.core),
+      tables.drop(1).flatMap(codebookRows(_, qs)))
   }
 
-  private[ops] def openPqRoot(spark: org.apache.spark.sql.SparkSession,
-      path: String): OpenedRoot = {
-    val Seq(inDims, nSub, qs, tlt) =
-      readPqMeta(spark, path, "appendToIvfPqIndex")
-    val (centTab, cnTab) = quantizeTable(
-      readVectorTable(spark, path + "/centroids", "cell", "cvec"), qs)
-    OpenedRoot(qs, tlt, centTab, cnTab, payloadColumns(spark,
-        path + "/codes", Set("cell", "corpus_id", "codes", "e2", "nb2")),
-      inDims, nSub, codebookRows(
-        readVectorTable(spark, path + "/codebook", "ci", "cv"), qs))
-  }
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The parquet data files directly under `dir` (none when it is
     * absent), by name. */
-  private def parquetDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+  private def parquetDataFiles(spark: SparkSession, dir: Path): Seq[Path] = {
+    val fs = fileSystem(spark, dir)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.map(_.getPath).filter { p =>
       val n = p.getName
       n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
     }.sortBy(_.getName)
+  }
 
-  private def withFooter[T](spark: org.apache.spark.sql.SparkSession,
-      f: org.apache.hadoop.fs.Path)(
+  /** The records of the parquet file `f`, read on the driver. */
+  private def records(spark: SparkSession, f: Path)
+      : Vector[org.apache.parquet.example.data.Group] = {
+    val rd = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try Iterator.continually(rd.read()).takeWhile(_ != null).toVector
+    finally rd.close()
+  }
+
+  private def withFooter[T](spark: SparkSession, f: Path)(
       body: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
@@ -2055,14 +2119,11 @@ object Similarity {
     * order — the order `orderBy(key)` gives; keys and vector elements
     * may be of any integer or floating-point parquet type. A missing or
     * file-less dir, a null vector or a null element fails loudly. */
-  private def readVectorTable(spark: org.apache.spark.sql.SparkSession,
+  private def readVectorTable(spark: SparkSession,
       dir: String, key: String, vec: String): Seq[Array[Double]] = {
-    import org.apache.hadoop.fs.Path
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val d = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = parquetDataFiles(d.getFileSystem(conf), d)
+    val files = parquetDataFiles(spark, new Path(dir))
     if (files.isEmpty)
       throw new IllegalStateException(
         s"no parquet data file at $dir — not an index root")
@@ -2090,32 +2151,24 @@ object Similarity {
     def keyOf(g: Group): Option[Long] =
       if (g.getFieldRepetitionCount(key) == 0) None
       else Some(num(g, g.getType.getFieldIndex(key), 0).toLong)
-    val rows = files.flatMap { f =>
-      val rd = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-        .withConf(conf).build()
-      try Iterator.continually(rd.read()).takeWhile(_ != null)
-        .map(g => keyOf(g) -> vector(g)).toVector
-      finally rd.close()
-    }
-    rows.sortBy(_._1).map(_._2)
+    files.flatMap(records(spark, _)).map(g => keyOf(g) -> vector(g))
+      .sortBy(_._1).map(_._2)
   }
 
   /** The payload columns of the cell-partitioned `dir` (postings or
     * codes): the non-`core` columns of one data file's footer — what a
     * schema-inferring read of the dir reports — or none when the dir
     * holds no data file yet. */
-  private def payloadColumns(spark: org.apache.spark.sql.SparkSession,
+  private def payloadColumns(spark: SparkSession,
       dir: String, core: Set[String]): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
     val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, d)
     if (!fs.exists(d)) return Nil
     fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       .sortBy(_.getName).iterator
-      .flatMap(c => parquetDataFiles(fs, c)).nextOption() match {
+      .flatMap(parquetDataFiles(spark, _)).nextOption() match {
       case None => Nil
       case Some(f) => withFooter(spark, f)(_.getFooter.getFileMetaData
         .getSchema.getFields.asScala.map(_.getName).toSeq
@@ -2125,13 +2178,9 @@ object Similarity {
 
   /** Rows of the parquet data files directly under `dir`, from their
     * footers (0 when there are none). */
-  private def footerRowCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val d = new Path(dir)
-    parquetDataFiles(d.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      d).map(f => withFooter(spark, f)(_.getRecordCount)).sum
-  }
+  private def footerRowCount(spark: SparkSession, dir: String): Long =
+    parquetDataFiles(spark, new Path(dir))
+      .map(f => withFooter(spark, f)(_.getRecordCount)).sum
 
   /** The one cell-partitioned write of the index lifecycle — build,
     * append and compaction, both index kinds: `rows` hashed by `cell`
@@ -2156,15 +2205,15 @@ object Similarity {
     * first, so that window can never be misread as an empty index (and
     * a subsequent append can never silently rebuild postings holding
     * just its delta). Single-writer contract: build/append/compact must
-    * not run concurrently against one index root. */
+    * not run concurrently against one index root. True when the root is
+    * damaged: its live dir is gone while a staged one survived recovery
+    * — reading it as empty, or appending a delta as the whole dir,
+    * would silently lose the corpus. */
   private def recoverIvfPostings(
-      spark: org.apache.spark.sql.SparkSession, root: String,
-      dirName: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(root + "/" + dirName)
-    val staged = new Path(root + "/" + dirName + "_compacting")
-    val retired = new Path(root + "/" + dirName + "_retired")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, root: String,
+      dirName: String): Boolean = {
+    val (live, staged, retired) = swapDirs(root, dirName, "compacting")
+    val fs = fileSystem(spark, live)
     if (!fs.exists(live) && fs.exists(retired)) {
       // mid-swap crash: retired IS the pre-compaction corpus — restore
       // it and discard the partial stage (it will be re-compacted)
@@ -2176,8 +2225,23 @@ object Similarity {
       // live is current, retired is the superseded copy
       fs.delete(retired, true)
     }
-    ()
+    !fs.exists(live) && fs.exists(staged)
   }
+
+  /** The failure of `op` on a root [[recoverIvfPostings]] found
+    * damaged. */
+  private def damagedRoot(op: String, path: String, kind: IndexKind[_],
+      refusal: String): IllegalStateException =
+    new IllegalStateException(s"$op: $path has no live ${kind.dataDir} " +
+      s"but leftover compaction state survived recovery — refusing to " +
+      refusal)
+
+  /** The live dir `<root>/<name>` and the staged and retired siblings of
+    * its two-rename swap. */
+  private def swapDirs(root: String, name: String, staged: String)
+      : (Path, Path, Path) =
+    (new Path(s"$root/$name"), new Path(s"$root/${name}_$staged"),
+      new Path(s"$root/${name}_retired"))
 
   // ===== Best-effort single-writer lease =====
 
@@ -2209,30 +2273,21 @@ object Similarity {
   private val heldLeases =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def qualifiedRoot(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): String =
-    fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString
+  private def qualifiedRoot(fs: FileSystem, root: String): String =
+    fs.makeQualified(new Path(root)).toString
 
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  private def readMarker(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](256)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** Create the `_writer` marker on `root` (throwing if a live one
     * exists, taking over a stale one) and return the held token. */
-  private def acquireMarker(spark: org.apache.spark.sql.SparkSession,
+  private def acquireMarker(spark: SparkSession,
       root: String, op: String): String = {
-    import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val marker = new Path(root + "/_writer")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, marker)
     fs.mkdirs(rootPath)
     val staleMs = spark.conf.get(leaseStaleKey, "3600000").toLong
     val token = java.util.UUID.randomUUID().toString
@@ -2260,11 +2315,10 @@ object Similarity {
 
   /** Delete the marker only if it still carries `token` (a takeover's
     * marker is not ours to delete). */
-  private def releaseMarker(spark: org.apache.spark.sql.SparkSession,
+  private def releaseMarker(spark: SparkSession,
       root: String, token: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val marker = new Path(root + "/_writer")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, marker)
     try {
       if (fs.exists(marker) && readMarker(fs, marker) == token)
         fs.delete(marker, false)
@@ -2282,11 +2336,9 @@ object Similarity {
     * `spark.graft.annIndexWriterLease=true`) re-enter the held lease
     * instead of colliding with it. Same stale-takeover rule as the
     * per-operation lease, so a crashed holder cannot brick the root. */
-  def acquireWriterLease(spark: org.apache.spark.sql.SparkSession,
+  def acquireWriterLease(spark: SparkSession,
       root: String, op: String): () => Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, new Path(root))
     val key = qualifiedRoot(fs, root)
     val token = acquireMarker(spark, root, op)
     heldLeases.put(key, token)
@@ -2305,13 +2357,12 @@ object Similarity {
     * ([[acquireWriterLease]]), the operation runs re-entrantly under
     * the held token and the lease stays held afterwards. */
   private def withWriterLease[T](
-      spark: org.apache.spark.sql.SparkSession, root: String,
+      spark: SparkSession, root: String,
       op: String)(body: (() => Unit) => T): T = {
     if (!spark.conf.get(leaseConfKey, "false").toBoolean)
       return body(() => ())
-    import org.apache.hadoop.fs.Path
     val marker = new Path(root + "/_writer")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, marker)
     val heldToken = heldLeases.get(qualifiedRoot(fs, root))
     def verifyAgainst(token: String): Unit = {
       val held =
@@ -2344,51 +2395,46 @@ object Similarity {
   /** The highest streaming batch id whose append committed to the index
     * root, or -1 when none is recorded. Driver-side file listing only —
     * no Spark job (the same cheap-read posture as the meta row). */
-  def readAppendHwm(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    import org.apache.hadoop.fs.Path
+  def readAppendHwm(spark: SparkSession, path: String): Long =
+    hwmMarks(spark, path).map(_._2).foldLeft(-1L)(math.max)
+
+  /** The high-water-mark markers at the root `path` with their batch
+    * ids. */
+  private def hwmMarks(spark: SparkSession, path: String)
+      : Seq[(Path, Long)] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return -1L
-    fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(appendHwmPrefix))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(appendHwmPrefix).toLong).toOption)
-      .foldLeft(-1L)(math.max)
+    val fs = fileSystem(spark, root)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
+      val n = p.getName
+      if (!n.startsWith(appendHwmPrefix)) None
+      else scala.util.Try(n.stripPrefix(appendHwmPrefix).toLong).toOption
+        .map(p -> _)
+    }
   }
 
   /** Record `batchId` as committed: create the new marker (idempotent —
     * a replay that lost the race finds it already there), then drop any
     * superseded markers. */
-  private def recordAppendHwm(spark: org.apache.spark.sql.SparkSession,
+  private def recordAppendHwm(spark: SparkSession,
       path: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, root)
     fs.mkdirs(root)
-    val marker = new Path(root, appendHwmPrefix + batchId)
-    try fs.create(marker, false).close()
+    try fs.create(new Path(root, appendHwmPrefix + batchId), false).close()
     catch { case _: java.io.IOException => () } // already recorded
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith(appendHwmPrefix) &&
-        scala.util.Try(p.getName.stripPrefix(appendHwmPrefix).toLong)
-          .toOption.exists(_ < batchId))
-      .foreach(p => fs.delete(p, false))
+    hwmMarks(spark, path).foreach { case (p, b) =>
+      if (b < batchId) fs.delete(p, false)
+    }
   }
 
   /** Drop all high-water-mark markers (rebuild path: a rebuilt index
     * starts a new append history — a NEW stream checkpoint restarts
     * batch ids at 0, and a stale mark would silently swallow its first
     * batches). */
-  private def clearAppendHwm(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(appendHwmPrefix))
-      .foreach(p => fs.delete(p, false))
+  private def clearAppendHwm(spark: SparkSession, path: String): Unit = {
+    val fs = fileSystem(spark, new Path(path))
+    hwmMarks(spark, path).foreach(m => fs.delete(m._1, false))
   }
 
   /** [[appendToIvfIndex]] under foreachBatch's at-least-once replay
@@ -2405,45 +2451,32 @@ object Similarity {
     * to that single boundary. Contract: one stream per root (the
     * single-writer contract the index already carries) — batch ids are
     * only monotone within one stream's checkpoint. */
-  def appendToIvfIndexOnce(spark: org.apache.spark.sql.SparkSession,
+  def appendToIvfIndexOnce(spark: SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Boolean =
-    appendToIvfIndexOnce(spark, path, delta, idCol, vecCol, batchId,
-      new RootView(path, pq = false))
-
-  /** [[appendToIvfIndexOnce]] routing under a carried [[RootView]] of
-    * the root — the form the maintenance streams call. */
-  private[graft] def appendToIvfIndexOnce(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      delta: DataFrame, idCol: String, vecCol: String, batchId: Long,
-      view: RootView): Boolean = {
-    if (readAppendHwm(spark, path) >= batchId) return false
-    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
-      () => view.current(spark))
-    recordAppendHwm(spark, path, batchId)
-    true
-  }
+    appendOnce(spark, new RootView(path, IvfKind), delta, idCol, vecCol,
+      batchId)
 
   /** [[appendToIvfPqIndex]] under the same exactly-once wrapper as
     * [[appendToIvfIndexOnce]]. In dual-index streaming the two roots
     * carry INDEPENDENT marks, so a crash between the raw and PQ
     * appends of one batch replays into "raw skipped, PQ completed" —
     * closing the transient two-root misalignment window (r16 advice). */
-  def appendToIvfPqIndexOnce(spark: org.apache.spark.sql.SparkSession,
+  def appendToIvfPqIndexOnce(spark: SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Boolean =
-    appendToIvfPqIndexOnce(spark, path, delta, idCol, vecCol, batchId,
-      new RootView(path, pq = true))
+    appendOnce(spark, new RootView(path, PqKind), delta, idCol, vecCol,
+      batchId)
 
-  /** [[appendToIvfPqIndexOnce]] routing under a carried [[RootView]]. */
-  private[graft] def appendToIvfPqIndexOnce(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      delta: DataFrame, idCol: String, vecCol: String, batchId: Long,
-      view: RootView): Boolean = {
-    if (readAppendHwm(spark, path) >= batchId) return false
-    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol,
+  /** The exactly-once append of either kind, routing under `view` — the
+    * maintenance streams carry one view for their lifetime. */
+  private[graft] def appendOnce(spark: SparkSession,
+      view: RootView, delta: DataFrame, idCol: String, vecCol: String,
+      batchId: Long): Boolean = {
+    if (readAppendHwm(spark, view.path) >= batchId) return false
+    appendIndex(spark, view.kind, view.path, delta, idCol, vecCol,
       () => view.current(spark))
-    recordAppendHwm(spark, path, batchId)
+    recordAppendHwm(spark, view.path, batchId)
     true
   }
 
@@ -2467,7 +2500,7 @@ object Similarity {
     * [[writeIvfPqIndex]]) clears all tombstones — the new corpus
     * defines the index. Idempotent: deleting an absent or
     * already-tombstoned id is a no-op. */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def deleteFromIvfIndex(spark: SparkSession,
       path: String, ids: DataFrame, idCol: String): Unit = {
     recoverTombstones(spark, path)
     ids.select(col(idCol).cast("long").as("corpus_id"))
@@ -2478,7 +2511,7 @@ object Similarity {
 
   /** [[deleteFromIvfIndex]] under the PQ name, for discoverability —
     * the tombstone layer is shared. */
-  def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def deleteFromIvfPqIndex(spark: SparkSession,
       path: String, ids: DataFrame, idCol: String): Unit =
     deleteFromIvfIndex(spark, path, ids, idCol)
 
@@ -2486,12 +2519,11 @@ object Similarity {
     * no pending tombstones. Runs the staged-rewrite crash recovery
     * first, so a half-swapped resurrection can never serve a stale or
     * missing tombstone set. */
-  private def readTombstones(spark: org.apache.spark.sql.SparkSession,
+  private def readTombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
     recoverTombstones(spark, path)
     val dir = new Path(path + "/tombstones")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, dir)
     if (!fs.exists(dir)) return None
     try Some(spark.read.parquet(dir.toString))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -2499,7 +2531,7 @@ object Similarity {
 
   /** Apply the pending tombstones (if any) to a postings/codes frame —
     * broadcast anti-join on corpus_id, map-side only. */
-  private def applyTombstones(spark: org.apache.spark.sql.SparkSession,
+  private def applyTombstones(spark: SparkSession,
       path: String, rows: DataFrame): DataFrame =
     readTombstones(spark, path) match {
       case Some(tomb) => rows.join(
@@ -2513,12 +2545,9 @@ object Similarity {
     * staged dir is complete iff its _SUCCESS marker exists (the write
     * finished before any rename started). */
   private def recoverTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(path + "/tombstones")
-    val staged = new Path(path + "/tombstones_staged")
-    val retired = new Path(path + "/tombstones_retired")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, path: String): Unit = {
+    val (live, staged, retired) = swapDirs(path, "tombstones", "staged")
+    val fs = fileSystem(spark, live)
     if (fs.exists(live)) {
       // the swap either never started or fully completed: leftovers are
       // stale
@@ -2544,13 +2573,10 @@ object Similarity {
   }
 
   /** Drop the whole tombstone state at a root (rebuild path). */
-  private def clearTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Seq("tombstones", "tombstones_staged", "tombstones_retired")
-      .foreach(d => fs.delete(new Path(path + "/" + d), true))
+  private def clearTombstones(spark: SparkSession, path: String): Unit = {
+    val (live, staged, retired) = swapDirs(path, "tombstones", "staged")
+    val fs = fileSystem(spark, live)
+    Seq(live, staged, retired).foreach(fs.delete(_, true))
   }
 
   /** Resurrection: remove `deltaIds` from the pending tombstone set
@@ -2566,18 +2592,15 @@ object Similarity {
     * root before appending previously-deleted ids. No-op when no
     * tombstone intersects the delta. */
   private def resurrectTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       deltaIds: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val tomb = readTombstones(spark, path).getOrElse(return)
     val delta = deltaIds.select(
       col(deltaIds.columns.head).cast("long").as("corpus_id"))
     if (tomb.join(broadcast(delta), Seq("corpus_id"), "left_semi")
         .isEmpty) return
-    val live = new Path(path + "/tombstones")
-    val staged = new Path(path + "/tombstones_staged")
-    val retired = new Path(path + "/tombstones_retired")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (live, staged, retired) = swapDirs(path, "tombstones", "staged")
+    val fs = fileSystem(spark, live)
     tomb.join(broadcast(delta), Seq("corpus_id"), "left_anti")
       .coalesce(1).write.mode("overwrite").parquet(staged.toString)
     require(fs.rename(live, retired),
@@ -2588,19 +2611,33 @@ object Similarity {
     ()
   }
 
-  /** The postings schema as persisted (partition column `cell` last, the
-    * order a partition-discovered read reports). */
-  private def postingsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("corpus_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cvec",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("cnorm",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType)))
+  // ===== The lifecycle, once for both index kinds =====
+
+  /** Write a root of `kind`, overwriting any previous one: tombstones
+    * and the append high-water mark are cleared (a rebuild defines the
+    * corpus anew), each quantizer table and the meta row become one
+    * small file, and the data rows go through [[writeCells]]. */
+  private def writeRoot[F](kind: IndexKind[F], idx: F, path: String)
+      : Unit = {
+    val data = kind.data(idx)
+    val session = data.sparkSession
+    clearTombstones(session, path)
+    clearAppendHwm(session, path)
+    kind.tableDirs.zip(kind.tables(idx)).foreach { case ((dir, _, _), t) =>
+      t.coalesce(1).write.mode("overwrite").parquet(s"$path/$dir")
+    }
+    // self-describing index: the quantizer parameters are properties OF
+    // the index, not parameters a later append/probe caller has to
+    // remember — a mismatched re-supply would silently corrupt cell
+    // assignment
+    session.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row.fromSeq(kind.meta(idx))),
+        StructType(kind.metaFields.map(StructField(_, IntegerType,
+          nullable = false))))
+      .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
+    writeCells(data, footerRowCount(session, path + "/centroids").toInt,
+      "overwrite", s"$path/${kind.dataDir}")
+  }
 
   /** Re-open a persisted index. The postings read is partition-discovered
     * on `cell`: a probe joining on `cell` dynamically prunes unprobed
@@ -2608,36 +2645,32 @@ object Similarity {
     * index (centroids written, no posting files yet — a cell-partitioned
     * write of zero rows leaves no inferable files) reads back with empty
     * postings rather than failing schema inference. */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfIndexFrames = {
-    recoverIvfPostings(spark, path, "postings")
-    val postings =
-      try spark.read.parquet(path + "/postings")
+  def readIvfIndex(spark: SparkSession, path: String): IvfIndexFrames =
+    readIndex(spark, IvfKind, path)
+
+  /** The read of either kind: the compaction-swap recovery, the meta,
+    * then the data dir, partition-discovered on `cell`. A damaged root
+    * fails loudly instead of silently serving an empty corpus; a fresh
+    * one (no data files yet) reads back with empty data. Pending
+    * tombstones filter EVERY consumer of the frames (probe, dedup,
+    * audits, stats, merge) — a broadcast anti-join on corpus_id,
+    * map-side only, until the next compaction removes them physically. */
+  private def readIndex[F](spark: SparkSession,
+      kind: IndexKind[F], path: String): F = {
+    val op = s"read${kind.label}Index"
+    if (recoverIvfPostings(spark, path, kind.dataDir))
+      throw damagedRoot(op, path, kind, "serve an empty index")
+    val meta = readMeta(spark, kind, path, op)
+    val data =
+      try spark.read.parquet(s"$path/${kind.dataDir}")
       catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          // only a PROVABLY fresh index (no compaction siblings left
-          // behind) reads back empty — anything else is a broken root
-          // and must fail loudly, not silently serve an empty corpus
-          import org.apache.hadoop.fs.Path
-          val staged = new Path(path + "/postings_compacting")
-          val retired = new Path(path + "/postings_retired")
-          val fs = staged.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(staged) || fs.exists(retired))
-            throw new IllegalStateException(
-              s"readIvfIndex: $path has no live postings but leftover " +
-                "compaction state survived recovery — refusing to serve " +
-                "an empty index", e)
+        case _: org.apache.spark.sql.AnalysisException =>
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            postingsSchema)
+            kind.coreSchema)
       }
-    val (qs, tlt) = readIvfMeta(spark, path)
-    // pending tombstones filter EVERY consumer of the read-back frame
-    // (probe, dedup, audits, stats, merge) — broadcast anti-join on
-    // corpus_id, map-side only, physically removed at next compaction
-    IvfIndexFrames(spark.read.parquet(path + "/centroids"),
-      applyTombstones(spark, path, postings), qs, tlt)
+    kind.frames(kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}")),
+      applyTombstones(spark, path, data), meta)
   }
 
   /** Append a delta of new vectors to a persisted index WITHOUT
@@ -2658,78 +2691,60 @@ object Similarity {
     * only Spark jobs are the delta's assignment and write — plus, when
     * the root has pending tombstones, their resurrection check. The
     * maintenance streams carry one open across batches and reopen it
-    * only when a listing of `centroids/`, `codebook/` and `meta/`
-    * changes ([[graft.streaming.Streams.indexMaintenanceStream]]). */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, delta: DataFrame, idCol: String,
-      vecCol: String): Unit =
-    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
-      () => openIvfRoot(spark, path))
+    * only when a listing of `centroids/` and `meta/` changes
+    * ([[graft.streaming.Streams.indexMaintenanceStream]]). */
+  def appendToIvfIndex(spark: SparkSession, path: String, delta: DataFrame,
+      idCol: String, vecCol: String): Unit =
+    appendIndex(spark, IvfKind, path, delta, idCol, vecCol,
+      () => openRoot(spark, IvfKind, path))
 
   /** Legacy explicit-parameter append, kept for pre-meta indexes: when
     * the index HAS a meta file the supplied parameters must match it —
     * a mismatch would silently corrupt cell assignment, so it fails
     * loudly instead. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def appendToIvfIndex(spark: SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
       quantScale: Int, twoLevelThreshold: Int): Unit =
-    appendToIvfIndexImpl(spark, path, delta, idCol, vecCol,
-      () => openIvfRoot(spark, path, Some((quantScale, twoLevelThreshold))))
+    appendIndex(spark, IvfKind, path, delta, idCol, vecCol, () =>
+      openRoot(spark, IvfKind, path, Map("quant_scale" -> quantScale,
+        "two_level_threshold" -> twoLevelThreshold)))
 
-  /** Never append into a half-swapped root: runs the compaction-swap
-    * recovery on `<path>/<dirName>`, then refuses a root whose live dir
-    * is gone while compaction leftovers survived recovery — it is
-    * externally damaged, and appending would silently rebuild the dir
-    * holding only the delta. */
-  private def recoverForAppend(spark: org.apache.spark.sql.SparkSession,
-      path: String, dirName: String, op: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    recoverIvfPostings(spark, path, dirName)
-    val live = new Path(path + "/" + dirName)
-    val staged = new Path(path + "/" + dirName + "_compacting")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(staged))
-      throw new IllegalStateException(
-        s"$op: $path has no live $dirName but leftover compaction state " +
-          s"survived recovery — refusing to rebuild the $dirName from a " +
-          "delta")
-  }
-
-  /** The raw-vector append under the root opened by `open` (called
-    * after the half-swapped-root recovery). */
-  private def appendToIvfIndexImpl(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      delta: DataFrame, idCol: String, vecCol: String,
-      open: () => OpenedRoot): Unit =
-    withWriterLease(spark, path, "appendToIvfIndex") { verifyLease =>
-    recoverForAppend(spark, path, "postings", "appendToIvfIndex")
-    val root = open()
-    val (centTab, cnTab) = (root.centTab, root.cnTab)
-    if (centTab.isEmpty) {
-      // an empty index (built from an empty corpus) can place nothing:
-      // appending an empty delta is a no-op; a non-empty delta is a
-      // caller bug and must fail LOUDLY, not drop rows
-      require(delta.isEmpty,
-        s"appendToIvfIndex: no centroids at $path but the delta is " +
-          "non-empty — rebuild the index from a non-empty corpus first")
-      return
+  /** The append of either kind under the root opened by `open`, inside
+    * the writer lease and after the compaction-swap recovery. */
+  private def appendIndex(spark: SparkSession,
+      kind: IndexKind[_], path: String, delta: DataFrame, idCol: String,
+      vecCol: String, open: () => OpenedRoot): Unit = {
+    val op = s"appendTo${kind.label}Index"
+    withWriterLease(spark, path, op) { verifyLease =>
+      // never append into a damaged root: the delta would silently
+      // become the whole data dir
+      if (recoverIvfPostings(spark, path, kind.dataDir))
+        throw damagedRoot(op, path, kind,
+          s"rebuild the ${kind.dataDir} from a delta")
+      val root = open()
+      if (kind.emptyQuantizer(root))
+        // an empty index (built from an empty corpus) can place nothing:
+        // appending an empty delta is a no-op; a non-empty delta is a
+        // caller bug and must fail LOUDLY, not drop rows
+        require(delta.isEmpty,
+          s"$op: empty quantizer at $path but the delta is non-empty — " +
+            "rebuild the index from a non-empty corpus first")
+      else {
+        // appending a tombstoned id RESURRECTS it: the tombstone set is
+        // rewritten without the delta's ids BEFORE the rows land (a
+        // crash between the steps can never leave appended-but-invisible
+        // rows; see resurrectTombstones for the crash contract) — and
+        // AFTER the lease verify, so a taken-over lease aborts with the
+        // root unmutated. The encode selects the payload columns the
+        // existing data carries, so a delta missing one fails loudly,
+        // and routes exactly as the base rows did (the routing tables
+        // re-derive deterministically from the persisted centroids).
+        verifyLease()
+        resurrectTombstones(spark, path, delta.select(col(idCol)))
+        writeCells(kind.encode(delta, idCol, vecCol, root),
+          root.centTab.length, "append", s"$path/${kind.dataDir}")
+      }
     }
-    // appending a tombstoned id RESURRECTS it: the tombstone set is
-    // rewritten without the delta's ids BEFORE the postings land (a
-    // crash between the steps can never leave appended-but-invisible
-    // rows; see resurrectTombstones for the crash contract) — and
-    // AFTER the lease verify, so a taken-over lease aborts with the
-    // root unmutated (r16 ADVICE #3)
-    verifyLease()
-    resurrectTombstones(spark, path, delta.select(col(idCol)))
-    // payload columns are self-describing too: whatever non-core
-    // columns the existing postings carry, the delta must supply under
-    // the same names (the select below fails loudly if it can't). The
-    // routing tables re-derive deterministically from the persisted
-    // centroids, so delta rows route exactly the way base rows did
-    writeCells(assignPostings(delta, idCol, vecCol, centTab, cnTab,
-        root.quantScale, root.twoLevelThreshold, root.payloadCols),
-      centTab.length, "append", path + "/postings")
   }
 
   /** Probe a (persisted or in-memory) index: [[ivfTopKSeeded]]'s exact
@@ -2757,15 +2772,18 @@ object Similarity {
       queries: DataFrame, queryId: String, queryVec: String, k: Int,
       nprobe: Int): DataFrame = {
     val (centTab, cnTab) = idx.cellTable
-    if (centTab.isEmpty) {
-      // empty index: every probe finds nothing (complete, don't throw)
-      return queries.limit(0)
-        .select(col(queryId).as("query_id"), lit(0L).as("corpus_id"),
-          lit(0.0).as("score"), lit(0).cast("int").as("rank"))
-    }
+    // empty index: every probe finds nothing (complete, don't throw)
+    if (centTab.isEmpty) return noIvfHits(queries, queryId)
     ivfProbe(postings, centTab, cnTab, idx.quantScale, queries, queryId,
       queryVec, k, nprobe)
   }
+
+  /** The empty result of an IVF probe: query_id keeps its original type
+    * (no cast), so empty frames from either probe path union cleanly. */
+  private def noIvfHits(queries: DataFrame, queryId: String): DataFrame =
+    queries.limit(0)
+      .select(col(queryId).as("query_id"), lit(0L).as("corpus_id"),
+        lit(0.0).as("score"), lit(0).cast("int").as("rank"))
 
   /** ATTRIBUTE-FILTERED probe — "nearest ENGLISH documents", "same
     * source bucket only": [[probeIvfIndex]] with a metadata predicate
@@ -2785,36 +2803,38 @@ object Similarity {
     * globally. */
   def probeIvfIndexFiltered(idx: IvfIndexFrames, queries: DataFrame,
       queryId: String, queryVec: String, k: Int, predicate: Column,
-      nprobe: Int = 4): DataFrame = {
-    // a CORE-ONLY postings schema (a fresh index — centroids written,
-    // zero posting files — or one built without payload columns) can
-    // never resolve a payload predicate: the declared payload columns
-    // exist only in posting files. Probing it with one is legitimately
-    // empty; unknown columns over a payload-carrying schema are a
-    // caller bug (a typo'd predicate) and keep the loud resolution
-    // error. Detection is STRUCTURAL (column set == the core postings
-    // schema), not row emptiness — a fully-tombstoned index also reads
-    // back row-empty, and a typo there must stay loud (r16 ADVICE #4).
-    // Analysis is forced eagerly: a Spark 4 Column wraps ColumnNodes,
-    // so the referenced names are not introspectable before resolution.
+      nprobe: Int = 4): DataFrame =
+    probeFiltered(idx.postings, IvfKind, predicate,
+        noIvfHits(queries, queryId)) { postings =>
+      probePostings(idx, postings, queries, queryId, queryVec, k, nprobe)
+    }
+
+  /** `probe` over `rows` (a kind's data frame) filtered by `predicate`,
+    * or `empty` when the predicate cannot resolve against a CORE-ONLY
+    * schema. A fresh index (centroids written, zero data files) or one
+    * built without payload columns can never resolve a payload
+    * predicate: the declared payload columns exist only in the data
+    * files, so probing it with one is legitimately empty. Unknown
+    * columns over a payload-carrying schema are a caller bug (a typo'd
+    * predicate) and keep the loud resolution error. Detection is
+    * STRUCTURAL (column set == the kind's core schema), not row
+    * emptiness — a fully-tombstoned index also reads back row-empty,
+    * and a typo there must stay loud. Analysis is forced eagerly: a
+    * Spark 4 Column wraps ColumnNodes, so the referenced names are not
+    * introspectable before resolution. */
+  private def probeFiltered(rows: DataFrame, kind: IndexKind[_],
+      predicate: Column, empty: => DataFrame)(
+      probe: DataFrame => DataFrame): DataFrame =
     try {
-      val filtered = idx.postings.where(predicate)
+      val filtered = rows.where(predicate)
       filtered.queryExecution.analyzed // resolve NOW, not at the action
-      probePostings(idx, filtered, queries, queryId, queryVec, k, nprobe)
+      probe(filtered)
     } catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNRESOLVED_COLUMN") &&
-            idx.postings.columns.toSet ==
-              postingsSchema.map(_.name).toSet =>
-        // same empty-result schema as probeIvfIndex's empty path:
-        // query_id keeps its original type (no cast), so the two
-        // empty frames union cleanly
-        queries.limit(0)
-          .select(col(queryId).as("query_id"),
-            lit(0L).as("corpus_id"), lit(0.0).as("score"),
-            lit(0).cast("int").as("rank"))
+            rows.columns.toSet == kind.core =>
+        empty
     }
-  }
 
   /** [[ivfRecallAudit]] under an attribute filter: truth =
     * [[bruteForceTopK]] over the PREDICATE-FILTERED corpus, probe =
@@ -2827,25 +2847,11 @@ object Similarity {
   def ivfFilteredRecallAudit(idx: IvfIndexFrames, corpus: DataFrame,
       corpusId: String, corpusVec: String, queries: DataFrame,
       queryId: String, queryVec: String, k: Int,
-      nprobes: Seq[Int], predicate: Column): DataFrame = {
-    require(nprobes.nonEmpty,
-      "ivfFilteredRecallAudit: nprobes must be non-empty")
-    require(nprobes.forall(_ >= 1),
-      s"ivfFilteredRecallAudit: every nprobe must be >= 1, got $nprobes")
-    val truth = bruteForceTopK(corpus.where(predicate), corpusId,
-        corpusVec, queries, queryId, queryVec, k)
-      .select(col("query_id").cast("long").as("query_id"),
-        col("corpus_id").cast("long").as("corpus_id"),
-        lit(1L).as("__t"))
-    val probed = nprobes.distinct.sorted.map { np =>
+      nprobes: Seq[Int], predicate: Column): DataFrame =
+    recallAudit("ivfFilteredRecallAudit", corpus.where(predicate),
+        corpusId, corpusVec, queries, queryId, queryVec, k, nprobes)(np =>
       probeIvfIndexFiltered(idx, queries, queryId, queryVec, k,
-        predicate, np)
-        .select(lit(np).cast("int").as("nprobe"),
-          col("query_id").cast("long").as("query_id"),
-          col("corpus_id").cast("long").as("corpus_id"))
-    }.reduce(_ unionAll _)
-    recallOverlap(probed, truth)
-  }
+        predicate, np))
 
   /** Near-duplicate pairs of a batch of NEW vectors against an index's
     * existing postings — the probe kernel of streaming SemDeDup: each new
@@ -3194,7 +3200,7 @@ object Similarity {
     * estimate from parquet metadata counts (footer row counts — no
     * corpus scan; the pending-tombstone overcount is noise at routing
     * granularity); a fresh index (no posting files) routes raw. */
-  def annNearDupRoutesToPq(spark: org.apache.spark.sql.SparkSession,
+  def annNearDupRoutesToPq(spark: SparkSession,
       rawIndexPath: String): Boolean = {
     val n =
       try spark.read.parquet(rawIndexPath + "/postings").count()
@@ -3213,7 +3219,7 @@ object Similarity {
     * either route (the prefilter is lossless), so callers need no
     * awareness of which ran — the routing rule the r16 verdict asked
     * the caller to stop having to know. */
-  def annNearDupPairsAuto(spark: org.apache.spark.sql.SparkSession,
+  def annNearDupPairsAuto(spark: SparkSession,
       rawIndexPath: String, pqIndexPath: String, newRows: DataFrame,
       idCol: String, vecCol: String, thresholdPpm: Long,
       nprobe: Int = 4, maxPairsPerNew: Int = 0,
@@ -3342,9 +3348,7 @@ object Similarity {
         "different scales — their cells do not correspond")
     val (rawTab, _) = raw.cellTable
     val (pqTab, _) = pq.cellTable
-    require(rawTab.length == pqTab.length &&
-      rawTab.indices.forall(j =>
-        java.util.Arrays.equals(rawTab(j), pqTab(j))),
+    require(sameTable(rawTab, pqTab),
       "annNearDupPairsPq: the PQ and raw indexes carry DIFFERENT " +
         "quantized centroids — their cells do not correspond and the " +
         "survivor semi-join would match wrong postings; build both " +
@@ -3430,25 +3434,19 @@ object Similarity {
       corpusVec: String, centTab: Array[Array[Double]],
       cnTab: Array[Double], quantScale: Int, twoLevelThreshold: Int,
       inDims: Int, payloadCols: Seq[String] = Nil): DataFrame = {
-    val reserved = Set("cell", "corpus_id", "codes", "e2", "nb2", "qv")
+    val reserved = PqKind.core + "qv"
     require(payloadCols.forall(p => !reserved(p)),
       s"coarseAssignQuantized: payload columns $payloadCols collide " +
         s"with the codes schema names $reserved")
     val pl = payloadCols.map(col)
-    val assign =
-      if (centTab.length >= twoLevelThreshold) {
-        val (sc, scn, members) = twoLevelTables(centTab, cnTab)
-        GraftFunctions.ivfArgmaxCell(col("qv"), sc, scn, members,
-          centTab, cnTab)
-      } else GraftFunctions.ivfArgmaxCell(col("qv"), centTab, cnTab,
-        null, null, null)
     widenForCompute(corpus)
       .select(col(corpusId).cast("long").as("corpus_id") +:
         transform(col(corpusVec).cast("array<float>"),
           x => round(x.cast("double") * quantScale)).as("qv") +: pl: _*)
       .where(col("qv").isNotNull && size(col("qv")) === inDims)
-      .select(col("corpus_id") +: col("qv") +: assign.as("cell") +:
-        pl: _*)
+      .select(col("corpus_id") +: col("qv") +:
+        argmaxCell(col("qv"), centTab, cnTab, twoLevelThreshold).as("cell")
+        +: pl: _*)
   }
 
   /** Build the PQ index: hash/k-means seed rows become the coarse
@@ -3471,8 +3469,8 @@ object Similarity {
       s"inDims $inDims must divide into nSub $nSub")
     val session = corpus.sparkSession
     import session.implicits._
-    val (centTab, cnTab) = collectSeedTable(seeds, seedId, seedVec,
-      quantScale)
+    val (centroids, centTab, cnTab) =
+      seedCentroids(seeds, seedId, seedVec, quantScale)
     val cbRows: Seq[(Int, Seq[Float])] = corpus
       .select(col(corpusId).cast("long").as("id"),
         col(corpusVec).cast("array<float>").as("cv"))
@@ -3494,172 +3492,55 @@ object Similarity {
             payloadCols.map(col): _*),
         inDims, nSub, quantScale, twoLevelThreshold)
     }
-    val rawSeeds: Seq[(Int, Seq[Float])] = seeds
-      .select(col(seedId).as("sid"),
-        col(seedVec).cast("array<float>").as("cvec"))
-      .orderBy(col("sid")).select("cvec").collect()
-      .toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](0)) }
     val codebookFrame = cbRows.toDF("ci", "cv")
-    // quantize through the SAME Column path probe/append use — one
-    // rounding rule everywhere, no driver-vs-engine divergence
-    val cb = collectCodebookFrame(codebookFrame, quantScale)
+    val (cbBlock, csq) = pqTables(
+      collectCodebookFrame(codebookFrame, quantScale), inDims, nSub)
     val base = coarseAssignQuantized(corpus, corpusId, corpusVec,
       centTab, cnTab, quantScale, twoLevelThreshold, inDims,
       payloadCols)
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
-    IvfPqIndexFrames(rawSeeds.toDF("cell", "cvec"), codebookFrame,
-      pqEncodeIndexed(base, cbBlock, csq, payloadCols)
-        .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
-          col("codes") +: col("e2") +: col("nb2") +:
-          payloadCols.map(col): _*),
+    IvfPqIndexFrames(centroids, codebookFrame,
+      pqEncodeIndexed(base, cbBlock, csq, payloadCols),
       inDims, nSub, quantScale, twoLevelThreshold)
   }
 
   /** Persist the PQ index: tiny `centroids`/`codebook`/`meta` files plus
     * `codes` partitioned by cell (one file per cell — the same shuffled
-    * layout as [[writeIvfIndex]]). */
-  def writeIvfPqIndex(idx: IvfPqIndexFrames, path: String): Unit = {
-    val session = idx.centroids.sparkSession
-    import session.implicits._
-    clearTombstones(session, path) // a rebuild defines the corpus anew
-    clearAppendHwm(session, path) // …and starts a new append history
-    idx.centroids.coalesce(1).write.mode("overwrite")
-      .parquet(path + "/centroids")
-    idx.codebook.coalesce(1).write.mode("overwrite")
-      .parquet(path + "/codebook")
-    Seq((idx.inDims, idx.nSub, idx.quantScale, idx.twoLevelThreshold))
-      .toDF("in_dims", "n_sub", "quant_scale", "two_level_threshold")
-      .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    writeCells(idx.codes,
-      footerRowCount(session, path + "/centroids").toInt, "overwrite",
-      path + "/codes")
-  }
+    * layout as [[writeIvfIndex]], through the same root writer). */
+  def writeIvfPqIndex(idx: IvfPqIndexFrames, path: String): Unit =
+    writeRoot(PqKind, idx, path)
 
-  /** Re-open a persisted PQ index (self-describing via its meta row;
-    * fresh indexes read back with empty codes). */
-  def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfPqIndexFrames = {
-    recoverIvfPostings(spark, path, "codes")
-    // two_level_threshold is assignment-affecting (it picks the coarse
-    // routing path), so it is part of the persisted quantizer definition;
-    // a meta written before the field existed reads as the historical
-    // default it was built under
-    val Seq(metaInDims, metaNSub, metaQs, metaTlt) =
-      readPqMeta(spark, path, "readIvfPqIndex")
-    val codes =
-      try spark.read.parquet(path + "/codes")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          // same contract as readIvfIndex: only a provably fresh index
-          // (no compaction siblings left after recovery) reads empty
-          import org.apache.hadoop.fs.Path
-          val staged = new Path(path + "/codes_compacting")
-          val retired = new Path(path + "/codes_retired")
-          val fs = staged.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(staged) || fs.exists(retired))
-            throw new IllegalStateException(
-              s"readIvfPqIndex: $path has no live codes but leftover " +
-                "compaction state survived recovery — refusing to serve " +
-                "an empty index", e)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("corpus_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("codes",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.IntegerType)),
-              org.apache.spark.sql.types.StructField("e2",
-                org.apache.spark.sql.types.DoubleType),
-              org.apache.spark.sql.types.StructField("nb2",
-                org.apache.spark.sql.types.DoubleType),
-              org.apache.spark.sql.types.StructField("cell",
-                org.apache.spark.sql.types.IntegerType))))
-      }
-    IvfPqIndexFrames(spark.read.parquet(path + "/centroids"),
-      spark.read.parquet(path + "/codebook"),
-      applyTombstones(spark, path, codes),
-      metaInDims, metaNSub, metaQs, metaTlt)
-  }
+  /** Re-open a persisted PQ index (self-describing via its meta row,
+    * which a PQ root must have; fresh indexes read back with empty
+    * codes) — the same read as [[readIvfIndex]]. */
+  def readIvfPqIndex(spark: SparkSession, path: String): IvfPqIndexFrames =
+    readIndex(spark, PqKind, path)
 
   /** Append a delta to a persisted PQ index without retraining: the
     * delta coarse-assigned and PQ-encoded under the frozen centroids AND
     * codebook, one file per touched cell, the cells written in parallel.
     * The index is self-describing: ALL quantizer parameters — including
     * the assignment-affecting `two_level_threshold` routing switch —
-    * come from the persisted meta, never from the caller.
-    *
-    * As for [[appendToIvfIndex]], the root is opened on the driver with
-    * no Spark job: `meta/`, `centroids/`, `codebook/` and one codes file
-    * footer (the payload columns) are read with plain parquet-hadoop and
-    * quantized under the rule [[readIvfPqIndex]] frames use, so the
-    * only Spark jobs are the delta's encode and write (and a tombstone
-    * resurrection check when tombstones are pending). The PQ maintenance
-    * stream carries the open across batches, reopening it when the
-    * listing of `centroids/`, `codebook/` and `meta/` changes
-    * ([[graft.streaming.Streams.pqIndexMaintenanceStream]]). */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, delta: DataFrame, idCol: String,
-      vecCol: String): Unit =
-    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol,
-      () => openPqRoot(spark, path))
+    * come from the persisted meta, never from the caller. It is the
+    * append of [[appendToIvfIndex]], with `codebook/` in the driver-side
+    * open. Appends into a pre-margin-column root (codes without e2/nb2)
+    * would leave mixed file schemas behind — compact or rebuild such a
+    * root first. */
+  def appendToIvfPqIndex(spark: SparkSession, path: String,
+      delta: DataFrame, idCol: String, vecCol: String): Unit =
+    appendIndex(spark, PqKind, path, delta, idCol, vecCol,
+      () => openRoot(spark, PqKind, path))
 
   /** Legacy explicit-threshold append: the supplied value must match
     * the index's persisted meta — a mismatched re-supply would
     * coarse-route the delta under different geometry (the silent-cell-
     * corruption class the self-describing meta exists to prevent), so
     * it fails loudly instead. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def appendToIvfPqIndex(spark: SparkSession,
       path: String, delta: DataFrame, idCol: String, vecCol: String,
       twoLevelThreshold: Int): Unit =
-    appendToIvfPqIndexImpl(spark, path, delta, idCol, vecCol, () => {
-      val root = openPqRoot(spark, path)
-      require(twoLevelThreshold == root.twoLevelThreshold,
-        s"appendToIvfPqIndex: supplied twoLevelThreshold=" +
-          s"$twoLevelThreshold contradicts the index's persisted meta " +
-          s"(${root.twoLevelThreshold}) at $path — an append under a " +
-          "different coarse-routing switch would corrupt cell assignment")
-      root
-    })
-
-  /** The PQ append under the root opened by `open` (called after the
-    * half-swapped-root recovery). */
-  private def appendToIvfPqIndexImpl(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, delta: DataFrame, idCol: String, vecCol: String,
-      open: () => OpenedRoot): Unit =
-    withWriterLease(spark, path, "appendToIvfPqIndex") { verifyLease =>
-    recoverForAppend(spark, path, "codes", "appendToIvfPqIndex")
-    val root = open()
-    val (centTab, cnTab) = (root.centTab, root.cnTab)
-    if (centTab.isEmpty || root.codebook.isEmpty) {
-      require(delta.isEmpty,
-        s"appendToIvfPqIndex: empty quantizer at $path but the delta " +
-          "is non-empty — rebuild from a non-empty corpus first")
-      return
-    }
-    // same resurrection contract (and same verify-before-mutate order)
-    // as the raw-vector append
-    verifyLease()
-    resurrectTombstones(spark, path, delta.select(col(idCol)))
-    // payload columns self-describe from the existing codes schema
-    // (same contract as the raw-vector append)
-    val payloadCols = root.payloadCols
-    val base = coarseAssignQuantized(delta, idCol, vecCol, centTab,
-      cnTab, root.quantScale, root.twoLevelThreshold, root.inDims,
-      payloadCols)
-    // appends into a pre-margin-column index root (codes without
-    // e2/nb2) would leave mixed file schemas behind — compact/rebuild
-    // such a root before appending with this version
-    val (cbBlock, csq) = root.pqKernelTables
-    writeCells(pqEncodeIndexed(base, cbBlock, csq, payloadCols)
-        .select(col("cell").cast("int").as("cell") +: col("corpus_id") +:
-          col("codes") +: col("e2") +: col("nb2") +:
-          payloadCols.map(col): _*),
-      centTab.length, "append", path + "/codes")
-  }
+    appendIndex(spark, PqKind, path, delta, idCol, vecCol, () =>
+      openRoot(spark, PqKind, path,
+        Map("two_level_threshold" -> twoLevelThreshold)))
 
   /** The codebook frame as quantized driver-side rows in ci order. */
   private[ops] def collectCodebookFrame(codebook: DataFrame,
@@ -3703,12 +3584,8 @@ object Similarity {
       queries: DataFrame, queryId: String, queryVec: String, k: Int,
       nprobe: Int): DataFrame = {
     val (centTab, cnTab) = idx.cellTable
-    if (centTab.isEmpty || idx.codebookTable.isEmpty) {
-      return queries.limit(0)
-        .select(col(queryId).cast("long").as("query_id"),
-          lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
-          lit(0L).as("rank"))
-    }
+    if (centTab.isEmpty || idx.codebookTable.isEmpty)
+      return noPqHits(queries, queryId)
     val q0 = queries.select(col(queryId).cast("long").as("query_id"),
         transform(col(queryVec),
           x => round(x.cast("double") * idx.quantScale)).as("qv"))
@@ -3716,6 +3593,13 @@ object Similarity {
     val (cbBlock, csq) = idx.pqKernelTables
     pqAdcScore(codes, q0, centTab, cnTab, nprobe, cbBlock, csq, k)
   }
+
+  /** The empty result of a PQ probe. */
+  private def noPqHits(queries: DataFrame, queryId: String): DataFrame =
+    queries.limit(0)
+      .select(col(queryId).cast("long").as("query_id"),
+        lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
+        lit(0L).as("rank"))
 
   /** [[probeIvfPqIndex]] with a metadata predicate over the codes'
     * payload columns — the COMPRESSED twin of [[probeIvfIndexFiltered]]
@@ -3733,20 +3617,9 @@ object Similarity {
   def probeIvfPqIndexFiltered(idx: IvfPqIndexFrames, queries: DataFrame,
       queryId: String, queryVec: String, k: Int, predicate: Column,
       nprobe: Int = 4): DataFrame =
-    try {
-      val filtered = idx.codes.where(predicate)
-      filtered.queryExecution.analyzed // resolve NOW, not at the action
-      probePqCodes(idx, filtered, queries, queryId, queryVec, k, nprobe)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNRESOLVED_COLUMN") &&
-            idx.codes.columns.toSet ==
-              Set("cell", "corpus_id", "codes", "e2", "nb2") =>
-        // schema identical to probeIvfPqIndex's own empty path
-        queries.limit(0)
-          .select(col(queryId).cast("long").as("query_id"),
-            lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
-            lit(0L).as("rank"))
+    probeFiltered(idx.codes, PqKind, predicate,
+        noPqHits(queries, queryId)) { codes =>
+      probePqCodes(idx, codes, queries, queryId, queryVec, k, nprobe)
     }
 
   /** Per-cell posting statistics — the skew report read before trusting
@@ -3779,13 +3652,15 @@ object Similarity {
     * one file per cell at `destPath`) — never a retrain, and the merged
     * index probes exactly like a single build over the union (cell
     * assignment depends only on the shared centroids). Sources must
-    * agree EXACTLY: same meta and bit-identical quantized centroid
-    * tables — a mismatch means the postings were routed under different
-    * geometry and must fail loudly, not interleave. Sources are read
-    * through the usual crash recovery; `destPath` must be a new root. */
-  def mergeIvfIndexes(spark: org.apache.spark.sql.SparkSession,
+    * agree EXACTLY: same meta, bit-identical quantized centroid tables
+    * and the same payload columns in the same order — a mismatch means
+    * the postings were routed under different geometry, or would land
+    * under the wrong column names, and must fail loudly, not interleave.
+    * Sources are read through the usual crash recovery; `destPath` must
+    * be a new root. */
+  def mergeIvfIndexes(spark: SparkSession,
       srcPaths: Seq[String], destPath: String): Unit =
-    mergeIvfIndexes(spark, srcPaths, destPath, consumeSources = false)
+    mergeIndexes(spark, IvfKind, srcPaths, destPath, consumeSources = false)
 
   /** [[mergeIvfIndexes]] with the CONSUMING fast path: when
     * `consumeSources` is true the merge is pure filesystem renames —
@@ -3808,54 +3683,65 @@ object Similarity {
     * `consumeSources = false` (default) the sources are left intact
     * and the merge is the one cell-partitioned union rewrite. Both
     * paths verify geometry identically first. */
-  def mergeIvfIndexes(spark: org.apache.spark.sql.SparkSession,
+  def mergeIvfIndexes(spark: SparkSession,
       srcPaths: Seq[String], destPath: String,
+      consumeSources: Boolean): Unit =
+    mergeIndexes(spark, IvfKind, srcPaths, destPath, consumeSources)
+
+  /** The merge of either kind. Unless this is the resume of a crashed
+    * consuming merge, every source runs a read's crash recovery and is
+    * opened on the driver, and each must equal the first in meta,
+    * quantized centroids, (PQ) quantized codebook and payload columns,
+    * names and order. Then, under the destination's lease, either the
+    * cell files move or the union of the sources is rewritten. */
+  private def mergeIndexes[F](spark: SparkSession,
+      kind: IndexKind[F], srcPaths: Seq[String], destPath: String,
       consumeSources: Boolean): Unit = {
-    require(srcPaths.nonEmpty, "mergeIvfIndexes: no source indexes")
+    val op = s"merge${kind.label}Indexes"
+    require(srcPaths.nonEmpty, s"$op: no source indexes")
     require(!srcPaths.contains(destPath),
-      s"mergeIvfIndexes: destPath $destPath must not be a source " +
+      s"$op: destPath $destPath must not be a source " +
         "(the overwrite would race its own input)")
     // a matching intent marker at dest means THIS merge already started
-    // and crashed mid-move: geometry was verified by the original
+    // and crashed mid-move: the sources were verified by the original
     // invocation before any file moved, and partially-drained sources
     // can no longer be re-read for verification — resume the moves
     val resuming = consumeSources &&
-      checkMergeIntent(spark, destPath, srcPaths, "mergeIvfIndexes")
-    if (!resuming) {
-      val idxs = srcPaths.map(p => p -> readIvfIndex(spark, p))
-      val (p0, first) = idxs.head
-      val (t0, _) = first.cellTable
-      idxs.tail.foreach { case (p, i) =>
-        require(i.quantScale == first.quantScale &&
-          i.twoLevelThreshold == first.twoLevelThreshold,
-          s"mergeIvfIndexes: $p meta (${i.quantScale}, " +
-            s"${i.twoLevelThreshold}) contradicts $p0 " +
-            s"(${first.quantScale}, ${first.twoLevelThreshold})")
-        val (t, _) = i.cellTable
-        require(t.length == t0.length &&
-          t.indices.forall(j => java.util.Arrays.equals(t(j), t0(j))),
-          s"mergeIvfIndexes: $p was built under DIFFERENT centroids than " +
-            s"$p0 — postings routed under different geometry cannot be " +
-            "merged; rebuild one side under the shared quantizer")
-      }
-      withWriterLease(spark, destPath, "mergeIvfIndexes") { verifyLease =>
-        verifyLease()
-        if (consumeSources)
-          moveMergeRoots(spark, srcPaths, destPath,
-            dataDir = "postings", smallDirs = Seq("centroids", "meta"),
-            op = "mergeIvfIndexes", resuming = false)
-        else
-          writeIvfIndex(IvfIndexFrames(first.centroids,
-            idxs.map(_._2.postings).reduce(_ unionAll _),
-            first.quantScale, first.twoLevelThreshold), destPath)
-      }
-    } else
-      withWriterLease(spark, destPath, "mergeIvfIndexes") { verifyLease =>
-        verifyLease()
-        moveMergeRoots(spark, srcPaths, destPath,
-          dataDir = "postings", smallDirs = Seq("centroids", "meta"),
-          op = "mergeIvfIndexes", resuming = true)
-      }
+      checkMergeIntent(spark, destPath, srcPaths, op)
+    val sources =
+      if (resuming) Nil
+      else srcPaths.map(p =>
+        (p, readIndex(spark, kind, p), openRoot(spark, kind, p)))
+    sources.drop(1).foreach { case (p, _, o) =>
+      val (p0, _, o0) = sources.head
+      require(o.meta == o0.meta,
+        s"$op: $p meta ${o.meta} contradicts $p0 ${o0.meta}")
+      require(sameTable(o.centTab, o0.centTab),
+        s"$op: $p was built under DIFFERENT centroids than $p0 — rows " +
+          "routed under different geometry cannot be merged; rebuild one " +
+          "side under the shared quantizer")
+      require(o.codebook == o0.codebook,
+        s"$op: $p was encoded under a DIFFERENT codebook than $p0 — its " +
+          "codes index other reconstruction points and cannot be merged; " +
+          "re-encode one side under the shared codebook")
+      // the rewrite unions the sources by position and the consuming
+      // merge moves their files as they are: different payload columns
+      // would land one source's values under the other's names
+      require(o.payloadCols == o0.payloadCols,
+        s"$op: $p carries payload columns ${o.payloadCols} but $p0 " +
+          s"carries ${o0.payloadCols} — sources must carry the same " +
+          "payload columns in the same order")
+    }
+    withWriterLease(spark, destPath, op) { verifyLease =>
+      verifyLease()
+      if (consumeSources)
+        moveMergeRoots(spark, srcPaths, destPath, kind.dataDir,
+          kind.quantizerDirs, op, resuming)
+      else
+        writeRoot(kind, kind.frames(kind.tables(sources.head._2),
+          sources.map(s => kind.data(s._2)).reduce(_ unionAll _),
+          sources.head._3.meta), destPath)
+    }
   }
 
   /** True iff `destPath` carries a `_merge_intent` marker recording
@@ -3863,11 +3749,10 @@ object Similarity {
     * merge crashed mid-move); loud failure when the marker records a
     * DIFFERENT merge — resuming someone else's half-move would
     * interleave unrelated file sets. */
-  private def checkMergeIntent(spark: org.apache.spark.sql.SparkSession,
+  private def checkMergeIntent(spark: SparkSession,
       destPath: String, srcPaths: Seq[String], op: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     val intent = new Path(destPath + "/_merge_intent")
-    val fs = intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, intent)
     if (!fs.exists(intent)) return false
     val recorded = readMarker(fs, intent)
     require(recorded == srcPaths.mkString("\n"),
@@ -3896,12 +3781,11 @@ object Similarity {
     * invocation verified them before the first move), skips
     * already-moved dirs/files, ignores already-deleted sources, and
     * completes the merge. */
-  private def moveMergeRoots(spark: org.apache.spark.sql.SparkSession,
+  private def moveMergeRoots(spark: SparkSession,
       srcPaths: Seq[String], destPath: String, dataDir: String,
       smallDirs: Seq[String], op: String, resuming: Boolean): Unit = {
-    import org.apache.hadoop.fs.Path
     val dest = new Path(destPath)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, dest)
     if (!resuming)
       require(!fs.exists(new Path(destPath + "/" + dataDir)),
         s"$op: consuming merge needs a fresh destination root — " +
@@ -3929,43 +3813,31 @@ object Similarity {
     }
     val destData = new Path(destPath + "/" + dataDir)
     fs.mkdirs(destData)
-    val destTomb = new Path(destPath + "/tombstones")
+    // the data files of `from` moved into `to`, a name already taken
+    // there prefixed with the source's position
+    def moveFiles(from: Path, to: Path, si: Int): Unit = {
+      fs.mkdirs(to)
+      fs.listStatus(from).map(_.getPath).filterNot(p =>
+        p.getName.startsWith("_") || p.getName.startsWith(".")).foreach { f =>
+        val t0 = new Path(to, f.getName)
+        val t =
+          if (fs.exists(t0)) new Path(to, s"src$si-${f.getName}") else t0
+        require(fs.rename(f, t), s"$op: could not move $f to $t")
+      }
+    }
     srcPaths.zipWithIndex.foreach { case (src, si) =>
       val srcData = new Path(src + "/" + dataDir)
-      if (fs.exists(srcData)) {
-        fs.listStatus(srcData).filter(_.isDirectory).foreach { cellDir =>
-          val target = new Path(destData, cellDir.getPath.getName)
-          if (!fs.exists(target)) {
-            require(fs.rename(cellDir.getPath, target),
-              s"$op: could not move ${cellDir.getPath} to $target")
-          } else {
-            fs.listStatus(cellDir.getPath).foreach { f =>
-              val name = f.getPath.getName
-              if (!name.startsWith("_") && !name.startsWith(".")) {
-                val t0 = new Path(target, name)
-                val t = if (fs.exists(t0))
-                  new Path(target, s"src$si-$name") else t0
-                require(fs.rename(f.getPath, t),
-                  s"$op: could not move ${f.getPath} to $t")
-              }
-            }
+      if (fs.exists(srcData))
+        fs.listStatus(srcData).filter(_.isDirectory).map(_.getPath)
+          .foreach { cellDir =>
+            val target = new Path(destData, cellDir.getName)
+            if (fs.exists(target)) moveFiles(cellDir, target, si)
+            else require(fs.rename(cellDir, target),
+              s"$op: could not move $cellDir to $target")
           }
-        }
-      }
       val srcTomb = new Path(src + "/tombstones")
-      if (fs.exists(srcTomb)) {
-        fs.mkdirs(destTomb)
-        fs.listStatus(srcTomb).foreach { f =>
-          val name = f.getPath.getName
-          if (!name.startsWith("_") && !name.startsWith(".")) {
-            val t0 = new Path(destTomb, name)
-            val t = if (fs.exists(t0))
-              new Path(destTomb, s"src$si-$name") else t0
-            require(fs.rename(f.getPath, t),
-              s"$op: could not move tombstone ${f.getPath} to $t")
-          }
-        }
-      }
+      if (fs.exists(srcTomb))
+        moveFiles(srcTomb, new Path(destPath + "/tombstones"), si)
       fs.delete(new Path(src), true)
     }
     // intent cleared LAST: anything before this point re-runs as a
@@ -3976,76 +3848,24 @@ object Similarity {
 
   /** [[mergeIvfIndexes]] for persisted PQ indexes: sources must carry
     * bit-identical quantized centroid tables, bit-identical quantized
-    * codebooks, AND identical meta (inDims/nSub/quantScale) — the codes
-    * are meaningless under any other geometry — then the merge is one
+    * codebooks, identical meta (inDims/nSub/quantScale/
+    * twoLevelThreshold) and the same payload columns — the codes are
+    * meaningless under any other geometry — then the merge is one
     * cell-partitioned union write of the codes plus a copy of the
     * shared centroids/codebook/meta. Same no-retrain fan-in contract. */
-  def mergeIvfPqIndexes(spark: org.apache.spark.sql.SparkSession,
+  def mergeIvfPqIndexes(spark: SparkSession,
       srcPaths: Seq[String], destPath: String): Unit =
-    mergeIvfPqIndexes(spark, srcPaths, destPath, consumeSources = false)
+    mergeIndexes(spark, PqKind, srcPaths, destPath, consumeSources = false)
 
   /** [[mergeIvfPqIndexes]] with the consuming file-move fast path —
     * same contract as the raw-index overload ([[mergeIvfIndexes]]):
     * `consumeSources = true` turns the merge into O(cells) renames
     * (centroids/codebook/meta from the first source, every source's
     * code cell dirs and tombstones moved, drained roots deleted). */
-  def mergeIvfPqIndexes(spark: org.apache.spark.sql.SparkSession,
+  def mergeIvfPqIndexes(spark: SparkSession,
       srcPaths: Seq[String], destPath: String,
-      consumeSources: Boolean): Unit = {
-    require(srcPaths.nonEmpty, "mergeIvfPqIndexes: no source indexes")
-    require(!srcPaths.contains(destPath),
-      s"mergeIvfPqIndexes: destPath $destPath must not be a source " +
-        "(the overwrite would race its own input)")
-    // same resume contract as mergeIvfIndexes: a matching intent marker
-    // means a prior invocation of THIS merge crashed mid-move
-    if (consumeSources &&
-        checkMergeIntent(spark, destPath, srcPaths, "mergeIvfPqIndexes")) {
-      withWriterLease(spark, destPath, "mergeIvfPqIndexes") {
-        verifyLease =>
-          verifyLease()
-          moveMergeRoots(spark, srcPaths, destPath, dataDir = "codes",
-            smallDirs = Seq("centroids", "codebook", "meta"),
-            op = "mergeIvfPqIndexes", resuming = true)
-      }
-      return
-    }
-    val idxs = srcPaths.map(p => p -> readIvfPqIndex(spark, p))
-    val (p0, first) = idxs.head
-    val (t0, _) = first.cellTable
-    val cb0 = first.codebookTable
-    idxs.tail.foreach { case (p, i) =>
-      require(i.inDims == first.inDims && i.nSub == first.nSub &&
-        i.quantScale == first.quantScale &&
-        i.twoLevelThreshold == first.twoLevelThreshold,
-        s"mergeIvfPqIndexes: $p meta (${i.inDims}, ${i.nSub}, " +
-          s"${i.quantScale}, ${i.twoLevelThreshold}) contradicts $p0 " +
-          s"(${first.inDims}, ${first.nSub}, ${first.quantScale}, " +
-          s"${first.twoLevelThreshold})")
-      val (t, _) = i.cellTable
-      require(t.length == t0.length &&
-        t.indices.forall(j => java.util.Arrays.equals(t(j), t0(j))),
-        s"mergeIvfPqIndexes: $p was built under DIFFERENT centroids " +
-          s"than $p0 — codes routed under different geometry cannot be " +
-          "merged")
-      require(i.codebookTable == cb0,
-        s"mergeIvfPqIndexes: $p was encoded under a DIFFERENT codebook " +
-          s"than $p0 — its codes index other reconstruction points and " +
-          "cannot be merged; re-encode one side under the shared " +
-          "codebook")
-    }
-    withWriterLease(spark, destPath, "mergeIvfPqIndexes") { verifyLease =>
-      verifyLease()
-      if (consumeSources)
-        moveMergeRoots(spark, srcPaths, destPath, dataDir = "codes",
-          smallDirs = Seq("centroids", "codebook", "meta"),
-          op = "mergeIvfPqIndexes", resuming = false)
-      else
-        writeIvfPqIndex(IvfPqIndexFrames(first.centroids, first.codebook,
-          idxs.map(_._2.codes).reduce(_ unionAll _),
-          first.inDims, first.nSub, first.quantScale,
-          first.twoLevelThreshold), destPath)
-    }
-  }
+      consumeSources: Boolean): Unit =
+    mergeIndexes(spark, PqKind, srcPaths, destPath, consumeSources)
 
   /** End-to-end recall audit of a PERSISTED index — the measurement read
     * alongside [[ivfIndexStats]] before trusting a probe budget: for each
@@ -4063,23 +3883,10 @@ object Similarity {
   def ivfRecallAudit(idx: IvfIndexFrames, corpus: DataFrame,
       corpusId: String, corpusVec: String, queries: DataFrame,
       queryId: String, queryVec: String, k: Int,
-      nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty, "ivfRecallAudit: nprobes must be non-empty")
-    require(nprobes.forall(_ >= 1),
-      s"ivfRecallAudit: every nprobe must be >= 1, got $nprobes")
-    val truth = bruteForceTopK(corpus, corpusId, corpusVec, queries,
-        queryId, queryVec, k)
-      .select(col("query_id").cast("long").as("query_id"),
-        col("corpus_id").cast("long").as("corpus_id"),
-        lit(1L).as("__t"))
-    val probed = nprobes.distinct.sorted.map { np =>
-      probeIvfIndex(idx, queries, queryId, queryVec, k, np)
-        .select(lit(np).cast("int").as("nprobe"),
-          col("query_id").cast("long").as("query_id"),
-          col("corpus_id").cast("long").as("corpus_id"))
-    }.reduce(_ unionAll _)
-    recallOverlap(probed, truth)
-  }
+      nprobes: Seq[Int]): DataFrame =
+    recallAudit("ivfRecallAudit", corpus, corpusId, corpusVec, queries,
+        queryId, queryVec, k, nprobes)(np =>
+      probeIvfIndex(idx, queries, queryId, queryVec, k, np))
 
   /** The recall audit for the PQ SERVING PAIR — measures what operators
     * actually deploy against the compressed index: per candidate
@@ -4093,35 +3900,40 @@ object Similarity {
       corpusId: String, corpusVec: String, queries: DataFrame,
       queryId: String, queryVec: String, k: Int, rerankK: Int,
       nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty, "ivfPqRecallAudit: nprobes must be non-empty")
-    require(nprobes.forall(_ >= 1),
-      s"ivfPqRecallAudit: every nprobe must be >= 1, got $nprobes")
     require(rerankK >= k,
       s"ivfPqRecallAudit: rerankK $rerankK must be >= k $k (the rerank " +
         "window can only narrow the candidate set)")
+    recallAudit("ivfPqRecallAudit", corpus, corpusId, corpusVec, queries,
+        queryId, queryVec, k, nprobes) { np =>
+      val cand = probeIvfPqIndex(idx, queries, queryId, queryVec,
+        rerankK, np).select(col("query_id"), col("corpus_id"))
+      rerankExactTopK(corpus, corpusId, corpusVec, queries, queryId,
+        queryVec, cand, k)
+    }
+  }
+
+  /** The shared body of the three recall audits: truth =
+    * [[bruteForceTopK]] over `corpus`, and per distinct `nprobe` the
+    * overlap of `probe(nprobe)`'s (query_id, corpus_id) rows with it, as
+    * exact floor-ppm recall. Broadcast joins only — probe rows are
+    * sample×k-sized. */
+  private def recallAudit(op: String, corpus: DataFrame,
+      corpusId: String, corpusVec: String, queries: DataFrame,
+      queryId: String, queryVec: String, k: Int, nprobes: Seq[Int])(
+      probe: Int => DataFrame): DataFrame = {
+    require(nprobes.nonEmpty, s"$op: nprobes must be non-empty")
+    require(nprobes.forall(_ >= 1),
+      s"$op: every nprobe must be >= 1, got $nprobes")
     val truth = bruteForceTopK(corpus, corpusId, corpusVec, queries,
         queryId, queryVec, k)
       .select(col("query_id").cast("long").as("query_id"),
         col("corpus_id").cast("long").as("corpus_id"),
         lit(1L).as("__t"))
-    val probed = nprobes.distinct.sorted.map { np =>
-      val cand = probeIvfPqIndex(idx, queries, queryId, queryVec,
-        rerankK, np).select(col("query_id"), col("corpus_id"))
-      rerankExactTopK(corpus, corpusId, corpusVec, queries, queryId,
-        queryVec, cand, k)
-        .select(lit(np).cast("int").as("nprobe"),
-          col("query_id").cast("long").as("query_id"),
-          col("corpus_id").cast("long").as("corpus_id"))
+    nprobes.distinct.sorted.map { np =>
+      probe(np).select(lit(np).cast("int").as("nprobe"),
+        col("query_id").cast("long").as("query_id"),
+        col("corpus_id").cast("long").as("corpus_id"))
     }.reduce(_ unionAll _)
-    recallOverlap(probed, truth)
-  }
-
-  /** Shared audit tail: overlap of (nprobe, query_id, corpus_id) probe
-    * rows against the `__t`-marked truth set, as exact floor-ppm recall
-    * per nprobe. Broadcast joins only — probe rows are sample×k-sized. */
-  private def recallOverlap(probed: DataFrame, truth: DataFrame)
-      : DataFrame =
-    probed
       .join(broadcast(truth), Seq("query_id", "corpus_id"), "left")
       .groupBy(col("nprobe"))
       .agg(count(lit(1)).as("n_probe_rows"),
@@ -4132,6 +3944,7 @@ object Similarity {
         when(col("n_truth") > 0,
           expr("n_hits * 1000000 div n_truth"))
           .otherwise(lit(0L)).as("recall_ppm"))
+  }
 
   /** Compact a persisted index's postings to ONE file per cell.
     * [[appendToIvfIndex]] adds a file set per delta, and probe cost at
@@ -4142,35 +3955,33 @@ object Similarity {
     * sibling directory and swapped in with two FS renames — readers that
     * opened the old file set keep their snapshot; a crash before the
     * swap leaves the live postings untouched. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    compactCellDirHooked(spark, path, "postings", () => ())
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    compactIndex(spark, IvfKind, path)
 
-  /** Compact a persisted PQ index's `codes` to ONE file per cell — the
-    * same maintenance [[compactIvfIndex]] gives the raw-vector index:
-    * [[appendToIvfPqIndex]] adds a file set per delta, and probe cost
-    * at scale tracks files opened. Same staged two-rename swap, crash
-    * recovery, and concurrent-append defense; single-writer contract. */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    compactCellDirHooked(spark, path, "codes", () => ())
+  /** [[compactIvfIndex]] for a persisted PQ index's `codes`: the same
+    * compaction, swap, crash recovery and single-writer contract. */
+  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
+    compactIndex(spark, PqKind, path)
+
+  /** Compaction of either kind's data dir (the maintenance streams call
+    * this). */
+  private[graft] def compactIndex(spark: SparkSession,
+      kind: IndexKind[_], path: String): Unit =
+    compactCellDirHooked(spark, path, kind.dataDir, () => ())
 
   /** The compaction kernel with a test seam: `afterStage` runs after the
     * staged rewrite completes, just before the defensive live-set
     * re-check — the window a concurrent append would land in. */
   private[ops] def compactCellDirHooked(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String, dirName: String, afterStage: () => Unit): Unit =
     withWriterLease(spark, path, "compactCellDir") { verifyLease =>
-    import org.apache.hadoop.fs.Path
     // restore a half-swapped root FIRST — the blind delete of a leftover
     // `<dir>_retired` would otherwise destroy the only full copy
     // after a mid-swap crash
     recoverIvfPostings(spark, path, dirName)
-    val live = new Path(path + "/" + dirName)
-    val staged = new Path(path + "/" + dirName + "_compacting")
-    val retired = new Path(path + "/" + dirName + "_retired")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (live, staged, retired) = swapDirs(path, dirName, "compacting")
+    val fs = fileSystem(spark, live)
     fs.delete(staged, true)
     fs.delete(retired, true)
     // a fresh/empty index has no posting files to compact: schema
@@ -4209,14 +4020,7 @@ object Similarity {
     // delete landing mid-compaction keeps filtering reads (its file is
     // not in this list) and is folded by the next compaction.
     recoverTombstones(spark, path)
-    val tombDir = new Path(path + "/tombstones")
-    val tombFiles: Seq[Path] =
-      if (fs.exists(tombDir))
-        fs.listStatus(tombDir).map(_.getPath).filter { p =>
-          val n = p.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }.toSeq
-      else Seq.empty
+    val tombFiles = parquetDataFiles(spark, new Path(path + "/tombstones"))
     val folded =
       if (tombFiles.isEmpty) input
       else input.join(

@@ -1065,10 +1065,10 @@ object Streams {
     * Spark job: meta, the quantized centroid table and the postings'
     * payload columns are read with plain parquet-hadoop on the first
     * batch and carried for the life of the stream. Before each batch a
-    * driver-side listing of `centroids/`, `codebook/` and `meta/`
-    * (names, sizes, mtimes) is compared with the one taken at the open;
-    * when it changed — another writer rebuilt the root — the root is
-    * reopened, so that batch already routes under the new centroids.
+    * driver-side listing of `centroids/` and `meta/` (names, sizes,
+    * mtimes) is compared with the one taken at the open; when it
+    * changed — another writer rebuilt the root — the root is reopened,
+    * so that batch already routes under the new centroids.
     * Everything else still runs per batch: the batch-id high-water-mark
     * check and record, the compaction-swap recovery, the lease verify
     * and tombstone resurrection. A non-compacting batch therefore runs
@@ -1094,55 +1094,45 @@ object Streams {
       vecCol: String, indexPath: String, checkpointPath: String,
       compactEvery: Int = 0,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    maintenanceStream(deltas, indexPath, checkpointPath, compactEvery,
-      trigger, "indexMaintenanceStream", pq = false) { (spark, df, id, v) =>
-      graft.ops.Similarity.appendToIvfIndexOnce(spark, indexPath, df,
-        idCol, vecCol, id, v)
-    }(graft.ops.Similarity.compactIvfIndex)
+    maintenanceStream(deltas, idCol, vecCol, indexPath, checkpointPath,
+      compactEvery, trigger, "indexMaintenanceStream",
+      graft.ops.Similarity.IvfKind)
 
-  /** [[indexMaintenanceStream]] for a persisted PQ index: each
-    * micro-batch PQ-encoded and appended under the FROZEN quantizer and
-    * codebook ([[graft.ops.Similarity.appendToIvfPqIndex]] — all
-    * parameters from the index's own meta), codes compacted back to one
-    * file per cell every `compactEvery` batches
-    * ([[graft.ops.Similarity.compactIvfPqIndex]]). The root — meta,
-    * centroid table, quantized codebook and the codes' payload columns —
-    * is opened once on the driver with no Spark job and carried across
-    * batches, reopened only when the listing of `centroids/`,
-    * `codebook/` and `meta/` changes, exactly as for the raw-vector
-    * stream. Same stream-held-lease, exactly-once-replay and
-    * single-writer properties as the raw-vector maintenance stream. */
+  /** [[indexMaintenanceStream]] for a persisted PQ index — the same
+    * stream over the PQ kind: each micro-batch PQ-encoded and appended
+    * under the FROZEN quantizer and codebook
+    * ([[graft.ops.Similarity.appendToIvfPqIndex]]), codes compacted
+    * back to one file per cell every `compactEvery` batches
+    * ([[graft.ops.Similarity.compactIvfPqIndex]]); the carried open
+    * also holds the quantized codebook, and `codebook/` joins the
+    * listing it is reopened on. */
   def pqIndexMaintenanceStream(deltas: DataFrame, idCol: String,
       vecCol: String, indexPath: String, checkpointPath: String,
       compactEvery: Int = 0,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    maintenanceStream(deltas, indexPath, checkpointPath, compactEvery,
-      trigger, "pqIndexMaintenanceStream", pq = true) { (spark, df, id, v) =>
-      graft.ops.Similarity.appendToIvfPqIndexOnce(spark, indexPath, df,
-        idCol, vecCol, id, v)
-    }(graft.ops.Similarity.compactIvfPqIndex)
+    maintenanceStream(deltas, idCol, vecCol, indexPath, checkpointPath,
+      compactEvery, trigger, "pqIndexMaintenanceStream",
+      graft.ops.Similarity.PqKind)
 
   /** The shared body of the two maintenance streams: under the held
-    * lease, each batch appends through `append` with the stream's one
-    * carried view of the root, then compacts every `compactEvery`-th
-    * batch. */
-  private def maintenanceStream(deltas: DataFrame, indexPath: String,
-      checkpointPath: String, compactEvery: Int, trigger: Trigger,
-      op: String, pq: Boolean)(
-      append: (org.apache.spark.sql.SparkSession, DataFrame, Long,
-        graft.ops.Similarity.RootView) => Boolean)(
-      compact: (org.apache.spark.sql.SparkSession, String) => Unit)
-      : StreamingQuery = {
-    val view = new graft.ops.Similarity.RootView(indexPath, pq)
+    * lease, each batch is appended exactly once to the `kind` root
+    * through the stream's one carried view of it, and the root is
+    * compacted after every `compactEvery`-th batch. */
+  private def maintenanceStream(deltas: DataFrame, idCol: String,
+      vecCol: String, indexPath: String, checkpointPath: String,
+      compactEvery: Int, trigger: Trigger, op: String,
+      kind: graft.ops.Similarity.IndexKind[_]): StreamingQuery = {
+    val view = new graft.ops.Similarity.RootView(indexPath, kind)
     startWithHeldLease(deltas.sparkSession, indexPath, op) {
       deltas.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            batchId: Long) =>
             val spark = batch.sparkSession
-            append(spark, batch.toDF(), batchId, view)
+            graft.ops.Similarity.appendOnce(spark, view, batch.toDF(),
+              idCol, vecCol, batchId)
             if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-              compact(spark, indexPath)
+              graft.ops.Similarity.compactIndex(spark, kind, indexPath)
         }
         .option("checkpointLocation", checkpointPath)
         .trigger(trigger)

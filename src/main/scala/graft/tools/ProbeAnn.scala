@@ -36,14 +36,7 @@ import graft.ops.Similarity
 object ProbeAnn {
 
   private def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

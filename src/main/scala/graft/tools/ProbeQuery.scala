@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc isolated query timing (not part of the driver contract):
   * `runMain graft.tools.ProbeQuery <queryName> [sfDir] [reps]` times one
@@ -11,13 +10,7 @@ object ProbeQuery {
       sys.error("usage: ProbeQuery <queryName> [sfDir] [reps]"))
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.localSession("32")
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
     // optional formatted-plan dump (opt r17 evidence artifacts):

@@ -1871,4 +1871,148 @@ class AnnIndexSpec extends SparkSuite {
         merged(Seq(pqProbe(rowsA), pqProbe(rowsB)), -1.0))
     }
   }
+
+  test("mergeIvfPqIndexes: merged halves carry the codes of one full " +
+    "build; different centroids, codebook or meta fail loudly; an " +
+    "interrupted consuming merge resumes to the same result") {
+    import org.apache.hadoop.fs.Path
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", 8)
+    val cbIds = 1L to 4L
+    // the codebook rows ride into both halves, so both encode under the
+    // same reconstruction points; each half keeps its own parity's codes
+    def half(m: Int, path: String, seedSet: DataFrame = seeds,
+        ids: Seq[Long] = cbIds, quantScale: Int = 10000): Unit = {
+      val idx = Similarity.buildIvfPqIndex(
+        corpus.where(pmod(col("vec_id"), lit(2)) === m ||
+          col("vec_id").isin(ids: _*)),
+        "vec_id", "embedding", seedSet, "sid", "svec", codebookIds = ids,
+        inDims = dims, nSub = 2, quantScale = quantScale)
+      Similarity.writeIvfPqIndex(idx.copy(codes =
+        idx.codes.where(pmod(col("corpus_id"), lit(2)) === m)), path)
+    }
+    def codeRows(codes: DataFrame): Seq[(Long, Int, Seq[Int])] =
+      codes.select("corpus_id", "cell", "codes").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSeq
+        .sortBy(_._1)
+    def codesAt(path: String) =
+      codeRows(Similarity.readIvfPqIndex(spark, path).codes)
+    val full = codeRows(Similarity.buildIvfPqIndex(corpus, "vec_id",
+      "embedding", seeds, "sid", "svec", codebookIds = cbIds,
+      inDims = dims, nSub = 2).codes)
+    assert(full.size === 200)
+    val root = tmpDir("pqmerge")
+    val (pa, pb, pm) = (s"$root/a", s"$root/b", s"$root/m")
+    half(0, pa)
+    half(1, pb)
+    Similarity.mergeIvfPqIndexes(spark, Seq(pa, pb), pm)
+    assert(codesAt(pm) === full)
+    val merged = Similarity.readIvfPqIndex(spark, pm)
+    assert((merged.inDims, merged.nSub, merged.quantScale,
+      merged.twoLevelThreshold) === ((dims, 2, 10000, 4096)))
+    // the merged root has the one-file-per-cell layout
+    val cellDirs = new java.io.File(pm + "/codes").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+    assert(cellDirs.nonEmpty)
+    cellDirs.foreach(d => assert(
+      d.listFiles().count(_.getName.endsWith(".parquet")) === 1))
+    // different centroids, codebook or meta → loud refusal
+    val (pc, pd, pe) = (s"$root/c", s"$root/d", s"$root/e")
+    half(1, pc, seedSet = Similarity.hashSeeds(
+      corpus.where(col("vec_id") >= 100), "vec_id", "embedding", 8))
+    half(1, pd, ids = 5L to 8L)
+    half(1, pe, quantScale = 5000)
+    for ((other, msg) <- Seq(pc -> "DIFFERENT centroids",
+        pd -> "DIFFERENT codebook", pe -> "meta")) {
+      val ex = intercept[IllegalArgumentException] {
+        Similarity.mergeIvfPqIndexes(spark, Seq(pa, other), s"$root/x")
+      }
+      assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
+    // dest must be a new root
+    intercept[IllegalArgumentException] {
+      Similarity.mergeIvfPqIndexes(spark, Seq(pa, pb), pa)
+    }
+    // a consuming merge that crashed after writing its intent marker and
+    // moving the first source's quantizer and one cell resumes to the
+    // result of the rewrite merge
+    val rootR = tmpDir("pqmergeresume")
+    val (ra, rb, rm) = (s"$rootR/a", s"$rootR/b", s"$rootR/m")
+    half(0, ra)
+    half(1, rb)
+    val fs = new Path(rm).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(rm))
+    val out = fs.create(new Path(rm + "/_merge_intent"), false)
+    try out.write(Seq(ra, rb).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    Seq("centroids", "codebook", "meta").foreach(d =>
+      assert(fs.rename(new Path(s"$ra/$d"), new Path(s"$rm/$d"))))
+    fs.mkdirs(new Path(rm + "/codes"))
+    val firstCell = fs.listStatus(new Path(ra + "/codes"))
+      .filter(_.isDirectory).head.getPath
+    assert(fs.rename(firstCell,
+      new Path(rm + "/codes/" + firstCell.getName)))
+    Similarity.mergeIvfPqIndexes(spark, Seq(ra, rb), rm,
+      consumeSources = true)
+    assert(!new java.io.File(ra).exists() && !new java.io.File(rb).exists())
+    assert(!fs.exists(new Path(rm + "/_merge_intent")))
+    assert(codesAt(rm) === full)
+  }
+
+  test("merges refuse sources whose payload columns differ in names or " +
+    "order, for both index kinds and both merge paths") {
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", 8)
+    val cbIds = 1L to 4L
+    val tagged = corpus
+      .withColumn("label",
+        concat(lit("l"), (col("vec_id") % 3).cast("string")))
+      .withColumn("lang",
+        when(col("vec_id") % 2 === 0, "en").otherwise("de"))
+    def ivf(path: String, m: Int, payload: Seq[String]): Unit =
+      Similarity.writeIvfIndex(Similarity.buildIvfIndex(
+        tagged.where(pmod(col("vec_id"), lit(2)) === m), "vec_id",
+        "embedding", seeds, "sid", "svec", payloadCols = payload), path)
+    def pq(path: String, m: Int, payload: Seq[String]): Unit = {
+      val idx = Similarity.buildIvfPqIndex(
+        tagged.where(pmod(col("vec_id"), lit(2)) === m ||
+          col("vec_id").isin(cbIds: _*)),
+        "vec_id", "embedding", seeds, "sid", "svec", codebookIds = cbIds,
+        inDims = dims, nSub = 2, payloadCols = payload)
+      Similarity.writeIvfPqIndex(idx.copy(codes =
+        idx.codes.where(pmod(col("corpus_id"), lit(2)) === m)), path)
+    }
+    val root = tmpDir("payloadmerge")
+    val kinds: Seq[(String, (String, Int, Seq[String]) => Unit,
+        (Seq[String], String, Boolean) => Unit)] = Seq(
+      ("ivf", ivf, Similarity.mergeIvfIndexes(spark, _, _, _)),
+      ("pq", pq, Similarity.mergeIvfPqIndexes(spark, _, _, _)))
+    for ((kind, build, merge) <- kinds;
+         (what, payA, payB) <- Seq(("names", Seq("label"), Seq("lang")),
+           ("order", Seq("label", "lang"), Seq("lang", "label")))) {
+      val (a, b) = (s"$root/$kind-$what-a", s"$root/$kind-$what-b")
+      build(a, 0, payA)
+      build(b, 1, payB)
+      for (consume <- Seq(false, true)) {
+        val dest = s"$root/$kind-$what-$consume"
+        val ex = intercept[IllegalArgumentException] {
+          merge(Seq(a, b), dest, consume)
+        }
+        assert(ex.getMessage.contains("payload columns"), ex.getMessage)
+        // refused before anything moved or was written
+        assert(new java.io.File(a).exists && new java.io.File(b).exists)
+        assert(!new java.io.File(dest).exists)
+      }
+    }
+    // the same payload columns merge, each value under its own name
+    val (sa, sb, sm) = (s"$root/sa", s"$root/sb", s"$root/sm")
+    ivf(sa, 0, Seq("label", "lang"))
+    ivf(sb, 1, Seq("label", "lang"))
+    Similarity.mergeIvfIndexes(spark, Seq(sa, sb), sm,
+      consumeSources = true)
+    def rows(df: DataFrame) = df.select("corpus_id", "label", "lang")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .toSeq.sortBy(_._1)
+    assert(rows(Similarity.readIvfIndex(spark, sm).postings) ===
+      rows(tagged.withColumn("corpus_id", col("vec_id"))))
+  }
 }

@@ -48,7 +48,7 @@ class IndexMaintenanceSpec extends SparkSuite {
   /** The Spark-side tables of the root at `root` (what a read-back
     * frames value collects) against its driver-side open. */
   private def assertIvfOpenExact(root: String, qs: Int): Unit = {
-    val opened = Similarity.openIvfRoot(spark, root)
+    val opened = Similarity.openRoot(spark, Similarity.IvfKind, root)
     assert(opened.quantScale === qs)
     assert(bits((opened.centTab, opened.cnTab)) === bits(
       Similarity.collectSeedTable(spark.read.parquet(root + "/centroids"),
@@ -61,7 +61,7 @@ class IndexMaintenanceSpec extends SparkSuite {
   }
 
   private def assertPqOpenExact(root: String, qs: Int): Unit = {
-    val opened = Similarity.openPqRoot(spark, root)
+    val opened = Similarity.openRoot(spark, Similarity.PqKind, root)
     assert(opened.quantScale === qs)
     assert(bits((opened.centTab, opened.cnTab)) === bits(
       Similarity.collectSeedTable(spark.read.parquet(root + "/centroids"),
@@ -100,7 +100,8 @@ class IndexMaintenanceSpec extends SparkSuite {
     writeMeta(doubleRoot, Seq((2, 4096))
       .toDF("quant_scale", "two_level_threshold"))
     assertIvfOpenExact(doubleRoot, 2)
-    val opened = Similarity.openIvfRoot(spark, doubleRoot)
+    val opened =
+      Similarity.openRoot(spark, Similarity.IvfKind, doubleRoot)
     assert(opened.centTab(12).toSeq ===
       Seq(1.0, 2.0, -1.0, -2.0, -3.0, 3.0, 5.0, -5.0))
     // a PQ root with the same tie values in its centroids and codebook
@@ -130,7 +131,8 @@ class IndexMaintenanceSpec extends SparkSuite {
       codebookIds = 0L until 16L, inDims = dims, nSub = 2), empty + "/pq")
     assertIvfOpenExact(empty + "/ivf", 10000)
     assertPqOpenExact(empty + "/pq", 10000)
-    assert(Similarity.openIvfRoot(spark, empty + "/ivf").centTab.isEmpty)
+    assert(Similarity.openRoot(spark, Similarity.IvfKind, empty + "/ivf")
+      .centTab.isEmpty)
     // a pre-meta root reopens under the historical (10000, 4096)
     val preMeta = tmpDir("premeta")
     Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, "vec_id",
@@ -138,7 +140,8 @@ class IndexMaintenanceSpec extends SparkSuite {
     new java.io.File(preMeta + "/meta").listFiles().foreach(_.delete())
     new java.io.File(preMeta + "/meta").delete()
     assertIvfOpenExact(preMeta, 10000)
-    assert(Similarity.openIvfRoot(spark, preMeta).twoLevelThreshold === 4096)
+    assert(Similarity.openRoot(spark, Similarity.IvfKind, preMeta)
+      .twoLevelThreshold === 4096)
     // payload columns, in the order the inferring read reports them
     val withLang = corpus.withColumn("lang",
         when(col("vec_id") % 2 === 0, "en").otherwise("de"))
@@ -153,11 +156,12 @@ class IndexMaintenanceSpec extends SparkSuite {
       payloadCols = Seq("lang", "src")), payload + "/pq")
     assertIvfOpenExact(payload + "/ivf", 5000)
     assertPqOpenExact(payload + "/pq", 10000)
-    assert(Similarity.openIvfRoot(spark, payload + "/ivf").payloadCols ===
+    assert(Similarity.openRoot(spark, Similarity.IvfKind, payload + "/ivf")
+      .payloadCols ===
       Seq("lang", "src"))
     // a root with no centroids at all is not an index: loud failure
     val ex = intercept[IllegalStateException] {
-      Similarity.openIvfRoot(spark, tmpDir("nothing"))
+      Similarity.openRoot(spark, Similarity.IvfKind, tmpDir("nothing"))
     }
     assert(ex.getMessage.contains("not an index root"))
   }
