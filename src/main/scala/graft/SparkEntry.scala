@@ -1457,7 +1457,7 @@ object SparkEntry {
     "q106_hierarchy_tables" -> ((s, dir) => {
       import s.implicits._
       s.sql(s"DROP TABLE IF EXISTS graft_q106.${Hierarchies.AncestorsTable}")
-      graft.terminology.TableWrites.reclaimOrphanLocation(
+      graft.terminology.CollectionKind.reclaimOrphanLocation(
         s, "graft_q106", Hierarchies.AncestorsTable)
       val elements = t(s, dir, "customer")
         .where(col("c_custkey") >= 1)
@@ -1618,7 +1618,7 @@ object SparkEntry {
       import s.implicits._
       Seq(ValueSets.ValuesTable, ValueSets.ValueSetsTable).foreach { tb =>
         s.sql(s"DROP TABLE IF EXISTS graft_q102.$tb")
-        graft.terminology.TableWrites.reclaimOrphanLocation(
+        graft.terminology.CollectionKind.reclaimOrphanLocation(
           s, "graft_q102", tb)
       }
       val meta = t(s, dir, "region").select(

@@ -32,114 +32,83 @@ import org.apache.spark.sql.functions._
   * Both are cycle-safe (`distinct` + self-loop drop reach a fixpoint) and
   * localCheckpoint() every round to truncate the growing lineage. The
   * fixpoint test carries the previous round's count forward, so each round
-  * runs exactly ONE counting job.
+  * runs exactly ONE counting job. One round loop ([[fixpoint]]) serves the
+  * full closure and the incremental [[addEdges]].
+  *
+  * The loop runs on long ids. The (system, value)-keyed [[closure]]
+  * encodes its codes to dense dictionary ids first — every round then
+  * shuffles 8-byte keys instead of system+code strings — and decodes the
+  * pairs with two joins at the end. The ids come from one checkpointed
+  * frame of the distinct codes, so two codes can never share an id and
+  * no collision check or fallback is needed.
   *
   * At 100 TB scale: equi-joins shuffle by key, `distinct` partially
-  * aggregates map-side, AQE rebalances; no driver materialization anywhere.
+  * aggregates map-side, AQE rebalances; the driver sees counts only (per
+  * round, and the dictionary's per-partition code counts).
   */
 object TransitiveClosure {
 
+  private val codeColumns = Seq("ancestorSystem", "ancestorValue",
+    "descendantSystem", "descendantValue")
+
   /** Closure over (ancestorSystem, ancestorValue, descendantSystem,
-    * descendantValue) edges; returns every transitive pair, paths >= 1. */
+    * descendantValue) edges; returns every transitive pair, paths >= 1, in
+    * those four columns. Edges with a null system or value are dropped.
+    * The codes are encoded to dense ids ([[dictionary]]), closed by
+    * [[closureLong]] and decoded. The loop width is `shufflePartitions` or,
+    * by default, scaled to the code count: max(8, min(session width,
+    * codes / 50k)) — a 30k-code hierarchy does not need the session's full
+    * width per round (narrower shuffles cut per-round overhead), a
+    * 100M-code one gets the session width back. The dictionary's
+    * checkpoint belongs to the result ([[graft.Lineage.retireDependents]]). */
   def closure(
       spark: SparkSession,
       edges: org.apache.spark.sql.Dataset[_],
       maxIterations: Int = 25,
       linear: Boolean = false,
-      shufflePartitions: Option[Int] = None): DataFrame =
-    shufflePartitions match {
-      case None =>
-        // derive the loop width from the edge count (r12 directive #8)
-        // and re-enter through the isolated-session branch; a 3-edge
-        // fixture then runs 1-task rounds while the session width stays
-        // the ceiling for big graphs (and the session conf untouched).
-        // Checkpoint-then-count (r13 advice): counting the raw caller
-        // plan would re-execute the (possibly expensive) edge pipeline
-        // a second time when closureImpl builds cleanEdges — the exact
-        // double-execution nearDupClusters/pageRankFixedPoint fixed
-        // (measured +27% on q47). The checkpoint is retired once the
-        // loop's own checkpoints carry the result.
-        val ck = edges.toDF().truncateLineage(eager = false)
-        val out = closure(spark, ck, maxIterations, linear,
-          Some(graft.ConfScope.autoLoopPartitions(ck.count(),
-            graft.ConfScope.sessionShuffleWidth(spark))))
-        graft.Lineage.retire(ck)
-        out
-      case Some(n) =>
-        // isolated child session: the width override can never be
-        // observed by a concurrent query on the caller's session
-        graft.ConfScope.withIsolatedSession(spark,
-          "spark.sql.shuffle.partitions" -> n.toString) { (iso, rebind) =>
-          closureImpl(iso, rebind(edges.toDF()), maxIterations, linear)
-        }
-    }
-
-  private def closureImpl(
-      spark: SparkSession,
-      edges: org.apache.spark.sql.Dataset[_],
-      maxIterations: Int,
-      linear: Boolean): DataFrame = {
-    val cols = Seq("ancestorSystem", "ancestorValue",
-      "descendantSystem", "descendantValue")
-    val cleanEdges = edges.toDF().select(cols.map(col): _*)
-      .where(cols.map(c => col(c).isNotNull).reduce(_ && _))
-      .distinct()
-      .truncateLineage(eager = false)
-    var current = cleanEdges
-    var prevCount = current.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val left = current.select(
-        col("ancestorSystem"), col("ancestorValue"),
-        col("descendantSystem").as("midSystem"),
-        col("descendantValue").as("midValue"))
-      // prefix doubling: closure ⋈ closure; linear: closure ⋈ edges
-      val rightSrc = if (linear) cleanEdges else current
-      val right = rightSrc.select(
-        col("ancestorSystem").as("midSystem"),
-        col("ancestorValue").as("midValue"),
-        col("descendantSystem"), col("descendantValue"))
-      val extended = left.join(right, Seq("midSystem", "midValue"))
-        .select(cols.map(col): _*)
-      // lazy checkpoint: the count() below is the materializing action, so
-      // each round runs exactly one job (checkpoint + fixpoint test fused)
-      val next = current.union(extended)
-        // drop self-loops introduced by cycles: a node is not its own ancestor
-        .where(!(col("ancestorSystem") === col("descendantSystem") &&
-          col("ancestorValue") === col("descendantValue")))
-        .distinct()
-        .truncateLineage(eager = false)
-      val nextCount = next.count()
-      // round k's frame is dead once round k+1 materialized (but the
-      // initial edge frame feeds EVERY round in linear mode — never it)
-      if (!(current eq cleanEdges)) graft.Lineage.retire(current)
-      current = next
-      converged = nextCount == prevCount
-      prevCount = nextCount
-      i += 1
-    }
-    requireConverged(converged, linear, maxIterations)
-    // the cleaned edge frame is dead once the final round checkpointed
-    // (it fed every round in linear mode; the result no longer reads
-    // it): retire its blocks so repeated closures on one session don't
-    // accumulate edge-frame checkpoints
-    if (!(current eq cleanEdges)) graft.Lineage.retire(cleanEdges)
-    current
+      shufflePartitions: Option[Int] = None): DataFrame = {
+    val clean = edges.toDF().select(codeColumns.map(col): _*)
+      .where(codeColumns.map(c => col(c).isNotNull).reduce(_ && _))
+    val (dict, codes) = dictionary(clean)
+    def role(name: String, id: String): DataFrame = dict.select(
+      col("system").as(s"${name}System"), col("value").as(s"${name}Value"),
+      col("id").as(id))
+    val ids = clean
+      .join(role("ancestor", "parent"), Seq("ancestorSystem", "ancestorValue"))
+      .join(role("descendant", "child"),
+        Seq("descendantSystem", "descendantValue"))
+      .select(col("parent"), col("child"))
+    val width = shufflePartitions.getOrElse(math.max(8L, math.min(
+      graft.ConfScope.sessionShuffleWidth(spark).toLong, codes / 50000L)).toInt)
+    closureLong(spark, ids, maxIterations, linear, Some(width))
+      .join(role("ancestor", "ancestor"), Seq("ancestor"))
+      .join(role("descendant", "descendant"), Seq("descendant"))
+      .select(codeColumns.map(col): _*)
   }
 
-  /** A truncated closure is silently-wrong data: in linear mode the depth
-    * budget is maxIterations+1 hops (realistic to exceed), so non-
-    * convergence must fail loudly instead of returning partial ancestors. */
-  private def requireConverged(converged: Boolean, linear: Boolean,
-      maxIterations: Int): Unit = {
-    if (!converged) {
-      val reach = if (linear) s"${maxIterations + 1} hops"
-        else s"2^$maxIterations hops"
-      throw new IllegalStateException(
-        s"Transitive closure did not converge within $maxIterations rounds " +
-          s"($reach); raise maxIterations for deeper graphs")
-    }
+  /** Dense dictionary of the distinct (system, value) endpoints of `edges`:
+    * ids 0 until n, assigned once to a checkpointed frame so a
+    * recomputation can never renumber a code. `monotonically_increasing_id`
+    * holds the partition in its upper 31 bits and the row within it in the
+    * lower 33; row r of partition p gets offset(p) + r. The job that counts
+    * the partitions also materializes the checkpoint. Returns (system,
+    * value, id) and n. */
+  private def dictionary(edges: DataFrame): (DataFrame, Long) = {
+    val codes = edges.select(col("ancestorSystem").as("system"),
+        col("ancestorValue").as("value"))
+      .union(edges.select(col("descendantSystem"), col("descendantValue")))
+      .distinct()
+      .withColumn("row", monotonically_increasing_id())
+      .truncateLineage(eager = false)
+    val part = shiftright(col("row"), 33)
+    val sizes = codes.groupBy(part).count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val offsets =
+      if (sizes.isEmpty) Array.empty[Long]
+      else (0 to sizes.keys.max).scanLeft(0L)(_ + sizes.getOrElse(_, 0L)).toArray
+    (codes.select(col("system"), col("value"),
+      (element_at(typedLit(offsets), part.cast("int") + 1) +
+        col("row").bitwiseAND((1L << 33) - 1)).as("id")), sizes.values.sum)
   }
 
   /** Closure over arbitrary (parent, child) long-keyed edges — used by the
@@ -153,7 +122,8 @@ object TransitiveClosure {
       shufflePartitions: Option[Int] = None): DataFrame =
     shufflePartitions match {
       case None =>
-        // checkpoint-then-count: same double-execution fix as [[closure]]
+        // checkpoint-then-count: counting the caller's plan and then
+        // closing it would execute that plan twice
         val ck = edges.truncateLineage(eager = false)
         val out = closureLong(spark, ck, maxIterations, linear,
           Some(graft.ConfScope.autoLoopPartitions(ck.count(),
@@ -162,51 +132,58 @@ object TransitiveClosure {
         out
       case Some(n) =>
         graft.ConfScope.withIsolatedSession(spark,
-          "spark.sql.shuffle.partitions" -> n.toString) { (iso, rebind) =>
-          closureLongImpl(iso, rebind(edges), maxIterations, linear)
+          "spark.sql.shuffle.partitions" -> n.toString) { (_, rebind) =>
+          val start = rebind(edges)
+            .select(col("parent").as("ancestor"), col("child").as("descendant"))
+            .where(col("parent").isNotNull && col("child").isNotNull)
+            .distinct()
+            .truncateLineage(eager = false)
+          fixpoint(start, start.count(), maxIterations, linear)
         }
     }
 
-  private def closureLongImpl(
-      spark: SparkSession,
-      edges: DataFrame,
-      maxIterations: Int,
-      linear: Boolean): DataFrame = {
-    val cleanEdges = edges
-      .select(col("parent").as("ancestor"), col("child").as("descendant"))
-      .where(col("parent").isNotNull && col("child").isNotNull)
-      .distinct()
-      .truncateLineage(eager = false)
-    var current = cleanEdges
-    var prevCount = current.count()
+  /** The pairs (a, c) with (a, b) in `l` and (b, c) in `r`. */
+  private def compose(l: DataFrame, r: DataFrame): DataFrame =
+    l.as("l").join(r.as("r"), col("l.descendant") === col("r.ancestor"))
+      .select(col("l.ancestor").as("ancestor"),
+        col("r.descendant").as("descendant"))
+
+  /** The round loop: from the checkpointed (ancestor, descendant) pairs
+    * `start` (`startCount` rows) to the fixpoint. Each round joins the
+    * closure with itself (prefix doubling) or with `start` (`linear`),
+    * drops self-pairs and lazily checkpoints the distinct union, so the
+    * round's count — the fixpoint test — is its one job. Round k's frame
+    * is retired once round k+1 has materialized, and `start` as soon as
+    * no round reads it any more (after the first round when doubling, at
+    * the end when linear), so repeated closures on one session do not
+    * accumulate checkpoints. */
+  private def fixpoint(start: DataFrame, startCount: Long,
+      maxIterations: Int, linear: Boolean): DataFrame = {
+    var current = start
+    var prevCount = startCount
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
-      val rightSrc = if (linear) cleanEdges else current
-      val extended = current.as("l")
-        .join(rightSrc.as("r"), col("l.descendant") === col("r.ancestor"))
-        .select(col("l.ancestor").as("ancestor"),
-          col("r.descendant").as("descendant"))
-      // lazy checkpoint: count() materializes it — one job per round
-      val next = current.union(extended)
+      val next = current
+        .union(compose(current, if (linear) start else current))
         .where(col("ancestor") =!= col("descendant"))
         .distinct()
         .truncateLineage(eager = false)
       val nextCount = next.count()
-      // round k's frame is dead once round k+1 materialized (but the
-      // initial edge frame feeds EVERY round in linear mode — never it)
-      if (!(current eq cleanEdges)) graft.Lineage.retire(current)
+      if (!linear || !(current eq start)) graft.Lineage.retire(current)
       current = next
       converged = nextCount == prevCount
       prevCount = nextCount
       i += 1
     }
-    requireConverged(converged, linear, maxIterations)
-    // the cleaned edge frame is dead once the final round checkpointed
-    // (it fed every round in linear mode; the result no longer reads
-    // it): retire its blocks so repeated closures on one session don't
-    // accumulate edge-frame checkpoints
-    if (!(current eq cleanEdges)) graft.Lineage.retire(cleanEdges)
+    // a truncated closure is silently-wrong data: fail loudly instead
+    if (!converged) {
+      val reach = if (linear) s"${maxIterations + 1}" else s"2^$maxIterations"
+      throw new IllegalStateException(s"Transitive closure did not " +
+        s"converge within $maxIterations rounds ($reach hops); raise " +
+        "maxIterations for deeper graphs")
+    }
+    if (linear && !(current eq start)) graft.Lineage.retire(start)
     current
   }
 
@@ -264,50 +241,21 @@ object TransitiveClosure {
         graft.ConfScope.autoLoopPartitions(math.max(c.count(), d.count()),
           sessW))
       iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
-      val cd = c.as("c").join(d.as("d"),
-          col("c.descendant") === col("d.ancestor"))
-        .select(col("c.ancestor").as("ancestor"),
-          col("d.descendant").as("descendant"))
-      val dc = d.as("d").join(c.as("c"),
-          col("d.descendant") === col("c.ancestor"))
-        .select(col("d.ancestor").as("ancestor"),
-          col("c.descendant").as("descendant"))
-      val cdc = cd.as("l").join(c.as("c2"),
-          col("l.descendant") === col("c2.ancestor"))
-        .select(col("l.ancestor").as("ancestor"),
-          col("c2.descendant").as("descendant"))
-      var m = d.unionAll(cd).unionAll(dc).unionAll(cdc)
+      val cd = compose(c, d)
+      val m = Seq(cd, compose(d, c), compose(cd, c)).foldLeft(d)(_ unionAll _)
         .where(col("ancestor") =!= col("descendant"))
         .distinct().truncateLineage(eager = false)
       // the seed's count materializes it AT the large-side width; the
       // loop then narrows to the seed's true size
-      var prevCount = m.count()
+      val seedCount = m.count()
       iso.conf.set("spark.sql.shuffle.partitions", fixedWidth.getOrElse(
-        graft.ConfScope.autoLoopPartitions(prevCount, sessW)).toString)
+        graft.ConfScope.autoLoopPartitions(seedCount, sessW)).toString)
       graft.Lineage.retire(d)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val ext = m.as("l").join(m.as("r"),
-            col("l.descendant") === col("r.ancestor"))
-          .select(col("l.ancestor").as("ancestor"),
-            col("r.descendant").as("descendant"))
-        val next = m.union(ext)
-          .where(col("ancestor") =!= col("descendant"))
-          .distinct()
-          .truncateLineage(eager = false)
-        val nextCount = next.count()
-        graft.Lineage.retire(m)
-        m = next
-        converged = nextCount == prevCount
-        prevCount = nextCount
-        i += 1
-      }
-      requireConverged(converged, linear = false, maxIterations)
+      val closed = fixpoint(m, seedCount, maxIterations, linear = false)
       // the final union reads the FULL closure again — restore the
       // large-side width before handing the lazy result to the caller
       // (its terminal action materializes under the session's width)
       iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
-      c.unionAll(m).distinct()
+      c.unionAll(closed).distinct()
   }
 }

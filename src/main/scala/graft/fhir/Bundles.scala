@@ -159,7 +159,7 @@ object Bundles {
       val table = s"$database.${r.toLowerCase}"
       // a managed-table location can outlive its catalog entry across
       // sessions; overwrite would fail with LOCATION_ALREADY_EXISTS
-      graft.terminology.TableWrites.reclaimOrphanLocation(spark, database,
+      graft.terminology.CollectionKind.reclaimOrphanLocation(spark, database,
         r.toLowerCase)
       extractEntry(spark, parsed, r, Nil, reg).write.mode("overwrite")
         .format("parquet")

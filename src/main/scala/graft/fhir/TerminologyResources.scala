@@ -1,10 +1,12 @@
 package graft.fhir
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.terminology.{BroadcastableConceptMap, ConceptMapDependencies, ConceptMaps, Mapping, Value, ValueSets}
+import graft.terminology.{BroadcastableConceptMap, CollectionKind,
+  ConceptMapDependencies, ConceptMapKind, ConceptMaps, Mapping, Value,
+  ValueSetKind, ValueSets}
 
 /** Import/export of FHIR ValueSet and ConceptMap *resources* (JSON) into the
   * flat terminology datasets, and reconstruction of the nested resource
@@ -26,101 +28,73 @@ import graft.terminology.{BroadcastableConceptMap, ConceptMapDependencies, Conce
   */
 object TerminologyResources {
 
+  // the metadata fields of both resources
+  private val header = "resourceType STRING, id STRING, url STRING, " +
+    "version STRING, name STRING, status STRING, experimental BOOLEAN, " +
+    "publisher STRING, `date` STRING, "
+
   /** Parse schema for a FHIR ValueSet resource (the subset the flat model
     * round-trips; FIXTURES.md §6). */
-  val valueSetSchema: StructType = StructType(Seq(
-    StructField("resourceType", StringType),
-    StructField("id", StringType),
-    StructField("url", StringType),
-    StructField("version", StringType),
-    StructField("name", StringType),
-    StructField("status", StringType),
-    StructField("experimental", BooleanType),
-    StructField("publisher", StringType),
-    StructField("date", StringType),
-    StructField("compose", StructType(Seq(
-      StructField("include", ArrayType(StructType(Seq(
-        StructField("system", StringType),
-        StructField("version", StringType),
-        StructField("concept", ArrayType(StructType(Seq(
-          StructField("code", StringType),
-          StructField("display", StringType))))))))))))))
+  val valueSetSchema: StructType = StructType.fromDDL(header +
+    "compose STRUCT<include: ARRAY<STRUCT<system: STRING, version: STRING, " +
+    "concept: ARRAY<STRUCT<code: STRING, display: STRING>>>>>")
 
   /** Parse schema for a FHIR ConceptMap resource. */
-  val conceptMapSchema: StructType = StructType(Seq(
-    StructField("resourceType", StringType),
-    StructField("id", StringType),
-    StructField("url", StringType),
-    StructField("version", StringType),
-    StructField("name", StringType),
-    StructField("status", StringType),
-    StructField("experimental", BooleanType),
-    StructField("publisher", StringType),
-    StructField("date", StringType),
-    StructField("sourceUri", StringType),
-    StructField("targetUri", StringType),
-    StructField("group", ArrayType(StructType(Seq(
-      StructField("source", StringType),
-      StructField("target", StringType),
-      StructField("unmapped", StructType(Seq(
-        StructField("mode", StringType),
-        StructField("url", StringType)))),
-      StructField("element", ArrayType(StructType(Seq(
-        StructField("code", StringType),
-        StructField("display", StringType),
-        StructField("target", ArrayType(StructType(Seq(
-          StructField("code", StringType),
-          StructField("display", StringType),
-          StructField("equivalence", StringType)))))))))))))))
+  val conceptMapSchema: StructType = StructType.fromDDL(header +
+    "sourceUri STRING, targetUri STRING, `group` ARRAY<STRUCT<" +
+    "source: STRING, target: STRING, unmapped: STRUCT<mode: STRING, " +
+    "url: STRING>, element: ARRAY<STRUCT<code: STRING, display: STRING, " +
+    "target: ARRAY<STRUCT<code: STRING, display: STRING, " +
+    "equivalence: STRING>>>>>>")
 
-  // FAIL-FAST on malformed XML: terminology directories are small curated
-  // inputs — a corrupt ValueSet/ConceptMap must abort the import (the
-  // reference's behavior), not silently vanish and skew every membership
-  // check or translation built from the collection. (The lenient
-  // null-on-parse-error policy is reserved for the Bundles bulk-ingest
-  // path.)
-  private val vsXmlUdf = udf((s: String) =>
-    if (s == null) null else FhirXml.resourceXmlToJson(s, valueSetSchema))
-  private val cmXmlUdf = udf((s: String) =>
-    if (s == null) null else FhirXml.resourceXmlToJson(s, conceptMapSchema))
+  /** Every `resourceType` resource in the files under `dir`, parsed
+    * against `schema` into one struct column `r`. `.xml` files are
+    * converted to JSON executor-side so one `from_json` handles both
+    * formats (reference parses either by extension,
+    * AbstractValueSets.java:427-448 ToValueSet.call).
+    *
+    * FAIL-FAST on malformed XML: terminology directories are small curated
+    * inputs — a corrupt ValueSet/ConceptMap must abort the import (the
+    * reference's behavior), not silently vanish and skew every membership
+    * check or translation built from the collection. (The lenient
+    * null-on-parse-error policy is reserved for the Bundles bulk-ingest
+    * path.) */
+  private def parse(spark: SparkSession, dir: String, schema: StructType,
+      resourceType: String): DataFrame = {
+    val xmlToJson = udf((s: String) =>
+      if (s == null) null else FhirXml.resourceXmlToJson(s, schema))
+    spark.read.option("wholetext", "true").text(dir)
+      .select(from_json(when(input_file_name().endsWith(".xml"),
+        xmlToJson(col("value"))).otherwise(col("value")), schema).as("r"))
+      .where(col("r.resourceType") === resourceType)
+  }
 
-  /** Read every file; `.xml` files are converted to JSON executor-side so
-    * one `from_json` handles both formats (reference parses either by
-    * extension, AbstractValueSets.java:427-448 ToValueSet.call). */
-  private def readDir(spark: SparkSession, path: String,
-      xmlUdf: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
-      .withColumn("source_file", input_file_name())
-      .select(when(col("source_file").endsWith(".xml"), xmlUdf(col("value")))
-        .otherwise(col("value")).as("resource_json"))
+  /** The metadata row of each parsed resource: the queryable scalar
+    * fields of the full resource the reference stores
+    * (AbstractValueSets.java:242-266), in the kind's metadata columns. A
+    * missing experimental flag reads as false. */
+  private def metadata(parsed: DataFrame, kind: CollectionKind): DataFrame =
+    parsed.select(kind.metaColumns.map {
+      case "experimental" =>
+        coalesce(col("r.experimental"), lit(false)).as("experimental")
+      case c @ ("source" | "target") => col(s"r.${c}Uri").as(c)
+      case c => col(s"r.$c").as(c)
+    }: _*)
 
   /** S7: directory of ValueSet JSON/XML files → (metadata DF, values DS). */
   def valueSetsFromDirectory(spark: SparkSession,
       path: String): (DataFrame, Dataset[Value]) = {
     import spark.implicits._
-    val parsed = readDir(spark, path, vsXmlUdf)
-      .select(from_json(col("resource_json"), valueSetSchema).as("vs"))
-      .where(col("vs.resourceType") === "ValueSet")
-    // full resource metadata row (AbstractValueSets stores the whole
-    // encoded resource, AbstractValueSets.java:242-266; we keep the
-    // queryable scalar fields)
-    val meta = parsed.select(
-      col("vs.url").as("url"), col("vs.version").as("version"),
-      col("vs.name").as("name"), col("vs.status").as("status"),
-      coalesce(col("vs.experimental"), lit(false)).as("experimental"),
-      col("vs.publisher").as("publisher"), col("vs.date").as("date"))
+    val parsed = parse(spark, path, valueSetSchema, "ValueSet")
     // expandValues (ValueSets.java:200-234): explode include → concept
-    val values = parsed.select(
-      col("vs.url").as("valueSetUri"),
-      col("vs.version").as("valueSetVersion"),
-      explode(col("vs.compose.include")).as("inc"))
+    val values = parsed.select(col("r.url").as("valueSetUri"),
+        col("r.version").as("valueSetVersion"),
+        explode(col("r.compose.include")).as("inc"))
       .select(col("valueSetUri"), col("valueSetVersion"),
         col("inc.system").as("system"), col("inc.version").as("version"),
-        explode(col("inc.concept")).as("c"))
-      .select(col("valueSetUri"), col("valueSetVersion"), col("system"),
-        col("version"), col("c.code").as("value"))
+        explode(col("inc.concept.code")).as("value"))
       .as[Value]
-    (meta, values)
+    (metadata(parsed, ValueSetKind), values)
   }
 
   /** Merge a directory of ValueSet resources into a collection (duplicates
@@ -142,36 +116,22 @@ object TerminologyResources {
   def conceptMapsFromDirectory(spark: SparkSession,
       path: String): (DataFrame, Dataset[Mapping]) = {
     import spark.implicits._
-    val parsed = readDir(spark, path, cmXmlUdf)
-      .select(from_json(col("resource_json"), conceptMapSchema).as("cm"))
-      .where(col("cm.resourceType") === "ConceptMap")
-    val meta = parsed.select(
-      col("cm.url").as("url"), col("cm.version").as("version"),
-      col("cm.name").as("name"), col("cm.status").as("status"),
-      col("cm.sourceUri").as("source"), col("cm.targetUri").as("target"),
-      coalesce(col("cm.experimental"), lit(false)).as("experimental"),
-      col("cm.publisher").as("publisher"), col("cm.date").as("date"))
+    val parsed = parse(spark, path, conceptMapSchema, "ConceptMap")
     // expandMappings (ConceptMaps.java:207-275)
-    val mappings = parsed.select(
-      col("cm.url").as("conceptMapUri"),
-      col("cm.version").as("conceptMapVersion"),
-      col("cm.sourceUri").as("sourceValueSet"),
-      col("cm.targetUri").as("targetValueSet"),
-      explode(col("cm.group")).as("g"))
-      .select(col("conceptMapUri"), col("conceptMapVersion"),
-        col("sourceValueSet"), col("targetValueSet"),
-        col("g.source").as("sourceSystem"), col("g.target").as("targetSystem"),
-        explode(col("g.element")).as("e"))
-      .select(col("conceptMapUri"), col("conceptMapVersion"),
-        col("sourceValueSet"), col("targetValueSet"), col("sourceSystem"),
-        col("e.code").as("sourceValue"), col("targetSystem"),
+    val mappings = parsed.select(col("r.url").as("conceptMapUri"),
+        col("r.version").as("conceptMapVersion"),
+        col("r.sourceUri").as("sourceValueSet"),
+        col("r.targetUri").as("targetValueSet"),
+        explode(col("r.group")).as("g"))
+      .select(col("*"), col("g.source").as("sourceSystem"),
+        col("g.target").as("targetSystem"), explode(col("g.element")).as("e"))
+      .select(col("*"), col("e.code").as("sourceValue"),
         explode(col("e.target")).as("t"))
-      .select(col("conceptMapUri"), col("conceptMapVersion"),
-        col("sourceValueSet"), col("targetValueSet"), col("sourceSystem"),
-        col("sourceValue"), col("targetSystem"),
-        col("t.code").as("targetValue"), col("t.equivalence").as("equivalence"))
+      .select(col("*"), col("t.code").as("targetValue"),
+        col("t.equivalence").as("equivalence"))
+      .select(Encoders.product[Mapping].schema.fieldNames.toSeq.map(col): _*)
       .as[Mapping]
-    (meta, mappings)
+    (metadata(parsed, ConceptMapKind), mappings)
   }
 
   /** ConceptMaps with every map found under `path` (JSON + XML) appended. */
@@ -183,37 +143,52 @@ object TerminologyResources {
 
   /** G2: other-map delegate urls per concept-map url, from the parsed
     * `group.unmapped{mode,url}` (ConceptMaps.getMapChildren,
-    * /root/reference/bunsen-spark-stu3/.../ConceptMaps.java:447-455). */
+    * bunsen-spark-stu3/.../ConceptMaps.java:447-455) of
+    * each url's latest version. */
   def conceptMapDelegates(spark: SparkSession,
-      path: String): Map[String, Seq[String]] = {
-    import spark.implicits._
-    readDir(spark, path, cmXmlUdf)
-      .select(from_json(col("resource_json"), conceptMapSchema).as("cm"))
-      .where(col("cm.resourceType") === "ConceptMap")
-      .select(col("cm.url").as("url"), explode(col("cm.group")).as("g"))
-      .where(col("g.unmapped.mode") === "other-map" &&
-        col("g.unmapped.url").isNotNull)
-      .select(col("url"), col("g.unmapped.url").as("delegate"))
-      .distinct().as[(String, String)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+      path: String): Map[String, Seq[String]] =
+    latestMaps(spark, path).map { case (url, (_, delegates)) =>
+      url -> delegates }.filter(_._2.nonEmpty)
+
+  /** url → (latest version, its other-map delegate urls). The latest
+    * version is the collection's rule with experimental maps included, as
+    * `BroadcastableValueSets.Builder.addReference` resolves value sets. */
+  private def latestMaps(spark: SparkSession,
+      path: String): Map[String, (String, Seq[String])] = {
+    val delegates = parse(spark, path, conceptMapSchema, "ConceptMap")
+      .select(col("r.url").as("url"), col("r.version").as("version"),
+        array_distinct(transform(filter(col("r.group"), g =>
+            g("unmapped")("mode") === "other-map" &&
+              g("unmapped")("url").isNotNull),
+          g => g("unmapped")("url"))).as("delegates"))
+    ConceptMapKind.latest(delegates, includeExperimental = true, "delegates")
+      .collect().map(r => r.getString(0) -> ((r.getString(1),
+        Option(r.getSeq[String](2)).getOrElse(Nil))))
+      .toMap
   }
 
   /** G2 end-to-end: load `uri` and its other-map delegation closure from a
     * directory, dependency-ordered (ConceptMaps.sortMapsToLoad :390-441),
     * and build the chained broadcastable lookup — unmapped source codes
-    * fall through to the delegate map at translate time. */
+    * fall through to the delegate map at translate time. Each url on the
+    * path binds its latest version only, and only those versions'
+    * mappings are collected. */
   def broadcastConceptMapFromDirectory(spark: SparkSession, path: String,
       uri: String): BroadcastableConceptMap = {
-    val children = conceptMapDelegates(spark, path)
-    val order = ConceptMapDependencies.sortMapsToLoad(Seq(uri),
-      u => children.getOrElse(u, Nil))
+    val latest = latestMaps(spark, path)
+    def children(u: String): Seq[String] = latest.get(u).toSeq.flatMap(_._2)
+    val order = ConceptMapDependencies.sortMapsToLoad(Seq(uri), children)
+    val onPath = order.flatMap(u => latest.get(u).map { case (v, _) =>
+      col("conceptMapUri") === u && col("conceptMapVersion") === v })
     val (_, mappings) = conceptMapsFromDirectory(spark, path)
     // small-by-contract driver collect (the reference collects every
-    // broadcast map the same way, ConceptMaps.broadcast :330-385)
-    val byUri = mappings.collect().toSeq.groupBy(_.conceptMapUri)
+    // broadcast map the same way, ConceptMaps.broadcast :330-385); a
+    // filter rather than the broadcast semi-join, which costs a job
+    val byUri = mappings.where(onPath.foldLeft(lit(false))(_ || _))
+      .collect().toSeq.groupBy(_.conceptMapUri)
     val built = order.foldLeft(
       Map.empty[String, BroadcastableConceptMap]) { (acc, u) =>
-      val delegate = children.getOrElse(u, Nil).headOption.flatMap(acc.get)
+      val delegate = children(u).headOption.flatMap(acc.get)
       acc + (u -> BroadcastableConceptMap(u,
         byUri.getOrElse(u, Nil), delegate))
     }

@@ -24,10 +24,10 @@ object Bucketing {
     * need none). Returns the qualified table name. */
   def writeBucketed(spark: SparkSession, df: DataFrame, database: String,
       table: String, key: String, buckets: Int): String = {
-    graft.terminology.TableWrites.validateName(database)
-    graft.terminology.TableWrites.validateName(table)
+    graft.terminology.CollectionKind.validateName(database)
+    graft.terminology.CollectionKind.validateName(table)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-    graft.terminology.TableWrites.reclaimOrphanLocation(spark, database,
+    graft.terminology.CollectionKind.reclaimOrphanLocation(spark, database,
       table)
     df.repartition(buckets, col(key))
       .write.mode("overwrite").format("parquet")

@@ -30,7 +30,7 @@ final case class BroadcastableValueSets(
           bySystem.get(system).exists(_.contains(code))
     }
 
-  /** Names of concept maps this mapping delegates to (reference resolution inputs). */
+  /** Reference names of the value sets this structure holds. */
   def getReferenceNames: Set[String] = valueSets.keySet
 }
 
@@ -45,7 +45,6 @@ object BroadcastableValueSets {
   final class Builder private[terminology] () {
     private var codes = Vector.empty[(String, String, String)] // (ref, system, code)
     private var references = Vector.empty[(String, String, String)] // (ref, uri, version)
-    private var ancestorValues = Vector.empty[(String, String, String, String)] // (ref, uri, version, system) -> value packed below
     private var ancestors = Vector.empty[(String, String, String, String, String)] // (ref, uri, version, system, value)
 
     /** Explicit (system, code) membership under a reference name. */
@@ -71,44 +70,42 @@ object BroadcastableValueSets {
     def build(spark: SparkSession, valueSets: ValueSets,
         hierarchies: Hierarchies): BroadcastableValueSets = {
       import spark.implicits._
+      // a null version binds the latest one (experimental included)
+      def pin(kind: String, latest: => Map[String, String])(
+          uri: String, version: String): String =
+        Option(version).orElse(latest.get(uri)).getOrElse(
+          throw new IllegalArgumentException(
+            s"Unknown $kind $uri (no version found)"))
 
       var resolved: Seq[(String, String, String)] = codes
 
       if (references.nonEmpty) {
-        val latest = valueSets.getLatestVersionsMap(includeExperimental = true)
+        lazy val latest =
+          valueSets.getLatestVersionsMap(includeExperimental = true)
         val want = references.map { case (ref, uri, v) =>
-          val version = Option(v).orElse(latest.get(uri)).getOrElse(
-            throw new IllegalArgumentException(
-              s"Unknown valueset $uri (no version found)"))
-          (ref, uri, version)
+          (ref, uri, pin("valueset", latest)(uri, v))
         }.toDF("referenceName", "valueSetUri", "valueSetVersion")
         // J2: values ⋈ references on uri+version, project, collect
         // (BroadcastableValueSets.java:267-287)
-        val rows = valueSets.getValues.toDF()
+        resolved ++= valueSets.getValues.toDF()
           .join(broadcast(want), Seq("valueSetUri", "valueSetVersion"))
           .select($"referenceName", $"system", $"value")
           .as[(String, String, String)].collect()
-        resolved ++= rows
       }
 
       if (ancestors.nonEmpty) {
-        val latest = hierarchies.getLatestVersions
+        lazy val latest = hierarchies.getLatestVersions
         val want = ancestors.map { case (ref, uri, v, system, value) =>
-          val version = Option(v).orElse(latest.get(uri)).getOrElse(
-            throw new IllegalArgumentException(
-              s"Unknown hierarchy $uri (no version found)"))
-          (ref, uri, version, system, value)
+          (ref, uri, pin("hierarchy", latest)(uri, v), system, value)
         }
-        val wantDf = want.toDF("referenceName", "uri", "version",
-          "ancestorSystem", "ancestorValue")
-        // J3: ancestors ⋈ ancestorValues 4-column equi-join
+        // J3: ancestors ⋈ wanted codes, 4-column equi-join
         // (BroadcastableValueSets.java:295-324)
-        val rows = hierarchies.getAncestors.toDF()
-          .join(broadcast(wantDf),
+        resolved ++= hierarchies.getAncestors.toDF()
+          .join(broadcast(want.toDF("referenceName", "uri", "version",
+            "ancestorSystem", "ancestorValue")),
             Seq("uri", "version", "ancestorSystem", "ancestorValue"))
           .select($"referenceName", $"descendantSystem", $"descendantValue")
           .as[(String, String, String)].collect()
-        resolved ++= rows
         // the ancestor includes itself (reference :316-323)
         resolved ++= want.map { case (ref, _, _, system, value) =>
           (ref, system, value)

@@ -1,7 +1,6 @@
 package graft.terminology
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 /** An immutable collection of FHIR-style ConceptMaps: metadata rows plus a
   * flattened dataset of [[Mapping]]s.
@@ -23,61 +22,39 @@ class ConceptMaps private (
   /** All mapping rows (system/value -> system/value pairs per map version). */
   def getMappings: Dataset[Mapping] = mappings
 
-  /** Mappings of one map version (partition-pruned when table-backed;
-    * AbstractConceptMaps.java:406-410). */
+  /** Mappings of one map version, partition-pruned when table-backed
+    * (AbstractConceptMaps.java:406-410). */
   def getMappings(uri: String, version: String): Dataset[Mapping] =
-    mappings.where($"conceptMapUri" === uri && $"conceptMapVersion" === version)
+    ConceptMapKind.rowsOf(mappings, uri, version)
 
-  /** Mappings for a uri→version map, as a broadcast semi-join
-    * (AbstractConceptMaps.java:418-430 P3, made Catalyst-visible). */
-  def getMappings(versions: Map[String, String]): Dataset[Mapping] = {
-    val wanted = versions.toSeq.toDF("conceptMapUri", "conceptMapVersion")
-    mappings.join(broadcast(wanted),
-      Seq("conceptMapUri", "conceptMapVersion"), "left_semi").as[Mapping]
-  }
+  /** Mappings for a uri→version map, as a Catalyst-visible broadcast
+    * semi-join (AbstractConceptMaps.java:418-430 P3). */
+  def getMappings(versions: Map[String, String]): Dataset[Mapping] =
+    ConceptMapKind.rowsFor(mappings, versions)
 
   /** Point lookup (AbstractConceptMaps.getConceptMap :350-375). */
   def getConceptMap(uri: String, version: String): Option[Row] =
-    conceptMaps.where($"url" === uri && $"version" === version)
-      .head(1).headOption
+    ConceptMapKind.metaRow(conceptMaps, uri, version)
 
   /** Distinct (url, version) pairs of the loaded concept maps. */
   def getUrlAndVersions: Dataset[UrlAndVersion] =
-    conceptMaps.select($"url", $"version").distinct().as[UrlAndVersion]
+    ConceptMapKind.members(conceptMaps)
 
-  /** Latest version per url; experimental rows kept only when included
-    * (AbstractConceptMaps.java:469-492). */
-  def getLatestVersions(includeExperimental: Boolean): Dataset[UrlAndVersion] = {
-    val filtered =
-      if (includeExperimental) conceptMaps
-      else conceptMaps.where(coalesce(!$"experimental", lit(true)))
-    filtered.groupBy($"url").agg(max($"version").as("version"))
-      .as[UrlAndVersion]
-  }
+  /** Latest version per url (string-compare max); experimental versions
+    * count only when included (AbstractConceptMaps.java:469-492). */
+  def getLatestVersions(includeExperimental: Boolean): Dataset[UrlAndVersion] =
+    ConceptMapKind.latest(conceptMaps, includeExperimental).as[UrlAndVersion]
 
-  /** url -> latest version (lexicographic max, experimental filtered per flag). */
+  /** url -> latest version, per [[getLatestVersions]]. */
   def getLatestVersionsMap(includeExperimental: Boolean): Map[String, String] =
-    getLatestVersions(includeExperimental).as[(String, String)].collect().toMap
+    ConceptMapKind.latestMap(conceptMaps, includeExperimental)
 
-  private def hasDuplicates(newMembers: Dataset[UrlAndVersion]): Boolean =
-    !TableWrites.knownEmpty(getUrlAndVersions) &&
-      !getUrlAndVersions.intersect(newMembers).isEmpty
-
-  /** Append new concept maps. Duplicates are an error
-    * (ConceptMaps.withConceptMaps :304-311). */
+  /** Append new concept maps. A (url, version) repeated in the batch or
+    * already present is an error (ConceptMaps.withConceptMaps :304-311). */
   def withConceptMaps(
       newMaps: DataFrame,
       newMappings: Dataset[Mapping]): ConceptMaps = {
-    val newMembers = newMaps.select($"url", $"version")
-      .distinct().as[UrlAndVersion]
-    if (newMaps.count() != newMembers.count()) {
-      throw new IllegalArgumentException(
-        "Cannot add multiple concept maps with the same url and version")
-    }
-    if (hasDuplicates(newMembers)) {
-      throw new IllegalArgumentException(
-        "Cannot add concept maps having duplicate url and version")
-    }
+    ConceptMapKind.requireNew(conceptMaps, newMaps, batchMayRepeat = true)
     new ConceptMaps(spark,
       conceptMaps.unionByName(newMaps, allowMissingColumns = true),
       mappings.union(newMappings))
@@ -104,51 +81,19 @@ class ConceptMaps private (
   def withDisjointConceptMaps(
       newMaps: DataFrame,
       newMappings: Dataset[Mapping]): ConceptMaps = {
-    val current = getUrlAndVersions.toDF()
-    val disjoint = newMaps
-      .join(broadcast(current), Seq("url", "version"), "left_anti")
-    val keep = disjoint.select($"url".as("conceptMapUri"),
-      $"version".as("conceptMapVersion")).distinct()
-    val keepMappings = newMappings
-      .join(broadcast(keep), Seq("conceptMapUri", "conceptMapVersion"),
-        "left_semi").as[Mapping]
+    val (meta, rows) = ConceptMapKind.disjoint(conceptMaps, newMaps, newMappings)
     new ConceptMaps(spark,
-      conceptMaps.unionByName(disjoint, allowMissingColumns = true),
-      mappings.union(keepMappings))
+      conceptMaps.unionByName(meta, allowMissingColumns = true),
+      mappings.union(rows))
   }
 
   /** Persist to `db.mappings` partitioned by (conceptMapUri,
     * conceptMapVersion) + timestamped `db.conceptmaps` metadata
-    * (AbstractConceptMaps.java:515-678). */
-  def writeToDatabase(database: String): Unit = {
-    TableWrites.validateName(database)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-    val mappingsTable = s"$database.${ConceptMaps.MappingsTable}"
-    val metaTable = s"$database.${ConceptMaps.ConceptMapsTable}"
-    if (spark.catalog.tableExists(mappingsTable)) {
-      val stored = spark.table(mappingsTable)
-        .select($"conceptMapUri".as("url"),
-          $"conceptMapVersion".as("version"))
-        .distinct().as[UrlAndVersion]
-      if (!stored.intersect(getUrlAndVersions).isEmpty) {
-        throw new IllegalArgumentException(
-          "Cannot write concept maps already present in the database")
-      }
-      TableWrites.appendAligned(spark, mappings.toDF(), mappingsTable)
-    } else {
-      mappings.toDF().write
-        .partitionBy("conceptMapUri", "conceptMapVersion")
-        .format("parquet").saveAsTable(mappingsTable)
-    }
-    val stamped = conceptMaps.withColumn("timestamp",
-      current_timestamp().cast("timestamp"))
-    if (spark.catalog.tableExists(metaTable)) {
-      TableWrites.appendAligned(spark, stamped, metaTable)
-    } else {
-      stamped.write.partitionBy("timestamp").format("parquet")
-        .saveAsTable(metaTable)
-    }
-  }
+    * (AbstractConceptMaps.java:515-678). A (url, version) already stored
+    * in either table is an error — a map that only delegates has no
+    * mapping rows. */
+  def writeToDatabase(database: String): Unit =
+    ConceptMapKind.write(spark, database, conceptMaps, mappings.toDF())
 }
 
 object ConceptMaps {
@@ -164,22 +109,16 @@ object ConceptMaps {
   /** An empty ConceptMaps container bound to the session. */
   def getEmpty(spark: SparkSession): ConceptMaps = {
     import spark.implicits._
-    val emptyMeta = Seq.empty[(String, String, String, String, String,
-        String, Boolean, String, String)]
-      .toDF(MetaColumns: _*)
-    new ConceptMaps(spark, emptyMeta, spark.emptyDataset[Mapping])
+    new ConceptMaps(spark, ConceptMapKind.emptyMeta(spark),
+      spark.emptyDataset[Mapping])
   }
 
-  /** Load concept maps persisted by [[writeToDatabase]] from the given database. */
+  /** Load concept maps persisted by [[writeToDatabase]] from the given
+    * database. Metadata tables persisted before the metadata widening load
+    * with nulls for the newer columns. */
   def getFromDatabase(spark: SparkSession, database: String): ConceptMaps = {
     import spark.implicits._
-    val mappings = spark.table(s"$database.$MappingsTable").as[Mapping]
-    // tolerant read: tables persisted before the metadata widening load
-    // with nulls for the newer columns
-    val meta = TableWrites.selectOrNull(
-      spark.table(s"$database.$ConceptMapsTable"),
-      MetaColumns.map(c => c -> (if (c == "experimental") "boolean"
-        else "string")))
-    new ConceptMaps(spark, meta, mappings)
+    val (meta, mappings) = ConceptMapKind.read(spark, database)
+    new ConceptMaps(spark, meta, mappings.as[Mapping])
   }
 }

@@ -1,6 +1,6 @@
 package graft.terminology
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.closure.TransitiveClosure
@@ -12,9 +12,9 @@ import graft.closure.TransitiveClosure
   * (members :88-101, latest versions :185-200, withHierarchyElements :211-230,
   * expandElements :314-391, writeToTables :420-466). The one deliberate
   * divergence (documented in SURVEY §2.7 G1): ancestor expansion is computed
-  * with a distributed prefix-doubling join (graft.closure.TransitiveClosure)
-  * instead of a driver-side DFS, so it scales with the cluster rather than
-  * driver memory.
+  * with a distributed prefix-doubling join over dense dictionary ids
+  * ([[graft.closure.TransitiveClosure.closure]]) instead of a driver-side
+  * DFS, so it scales with the cluster rather than driver memory.
   */
 class Hierarchies private (
     val spark: SparkSession,
@@ -32,110 +32,41 @@ class Hierarchies private (
   /** Ancestors of one hierarchy version (partition-prunable filter;
     * reference Hierarchies.getAncestors overloads). */
   def getAncestors(uri: String, version: String): Dataset[Ancestor] =
-    ancestors.where($"uri" === uri && $"version" === version)
+    HierarchyKind.rowsOf(ancestors, uri, version)
 
   /** Latest version per hierarchy uri, by string-compare max — the
     * reference's (lexicographic) semantics, preserved bit-for-bit
     * (AbstractConceptMaps.java:483-484 pattern). */
   def getLatestVersions: Map[String, String] =
-    members.groupBy($"url").agg(max($"version").as("version"))
-      .as[(String, String)].collect().toMap
-
-  private def hasDuplicates(newMembers: Dataset[UrlAndVersion]): Boolean =
-    !TableWrites.knownEmpty(members) &&
-      !members.intersect(newMembers).isEmpty
+    HierarchyKind.latestMap(members.toDF(), includeExperimental = true)
 
   /** Add a hierarchy given its direct parent-child elements; the transitive
-    * closure is computed here, distributed. Duplicate (uri, version) is an
-    * error, matching reference semantics (Hierarchies.java:216-222). */
+    * closure is computed here, distributed, by
+    * [[graft.closure.TransitiveClosure.closure]] (prefix doubling: real code
+    * hierarchies are 10-20 deep, so it converges in ⌈log₂ d⌉+1 ≈ 5 rounds;
+    * the round budget allows 2^64 depth and the closure throws rather than
+    * truncating). Duplicate (uri, version) is an error, matching reference
+    * semantics (Hierarchies.java:216-222). */
   def withHierarchyElements(
       uri: String,
       version: String,
       elements: Dataset[HierarchicalElement]): Hierarchies = {
     val newMember = Seq(UrlAndVersion(uri, version)).toDS()
-    if (hasDuplicates(newMember)) {
-      throw new IllegalArgumentException(
-        s"Hierarchy $uri version $version already exists")
-    }
-    // Prefix-doubling mode: real code hierarchies (LOINC/SNOMED) are
-    // 10-20 deep, so doubling converges in ⌈log₂ d⌉+1 ≈ 5 rounds where
-    // linear mode needs d ≈ 14-20. Each round is a full sequential
-    // barrier (shuffle + fixpoint count), so ROUND COUNT is the wall-time
-    // driver both locally and on a 1000-executor cluster — measured 1.6×
-    // faster than linear on the 14-deep q106 tree at sf0.1. The cost is
-    // the closure ⋈ closure join's hub skew (nodes under the root carry
-    // ~|subtree| rows per key), which AQE's runtime skew-split absorbs;
-    // per-key output is bounded by depth × subtree, the same order as the
-    // closure itself. The round budget allows 2^64 depth — convergence is
-    // detected early, and the closure throws rather than truncating.
-    //
-    // The d iterated joins run on a LONG dictionary encoding of the
-    // (system, value) codes, not the strings: every round shuffles 8-byte
-    // keys instead of system+code strings (~10× fewer key bytes), and the
-    // strings come back via two final decode joins. On the local fixture
-    // the wall time is round-count-dominated so this is a wash; at
-    // LOINC/SNOMED×cluster scale the per-round shuffle bytes are the
-    // cost, which is what this removes. Ids are xxhash64 of the code
-    // pair with a LOUD collision check (count distinct ids vs codes)
-    // falling back to the exact string-keyed closure — a silent
-    // collision would merge unrelated codes.
-    val elems = elements.toDF()
-    val codes = elems.select($"ancestorSystem".as("system"),
-        $"ancestorValue".as("value"))
-      .union(elems.select($"descendantSystem", $"descendantValue"))
-      .distinct()
-      .select($"system", $"value",
-        xxhash64($"system", $"value").as("id"))
-    val chk = codes.agg(count(lit(1)).as("n"),
-      count_distinct($"id").as("nd")).head()
-    // shuffle width scaled to the hierarchy's size (known from the
-    // collision check): a 30k-code hierarchy does not need the session's
-    // full width per round (narrower shuffles cut per-round overhead),
-    // while a 100M-code one gets the session default back
-    val width = Some(math.max(8L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toLong,
-      chk.getLong(0) / 50000L)).toInt)
-    val closed: Dataset[Ancestor] =
-      if (chk.getLong(0) != chk.getLong(1)) {
-        // hash collision (≈ n²/2⁶⁴ odds): exact string-keyed fallback
-        TransitiveClosure.closure(spark, elements,
-            maxIterations = 64, shufflePartitions = width)
-          .select(lit(uri).as("uri"), lit(version).as("version"),
-            $"descendantSystem", $"descendantValue",
-            $"ancestorSystem", $"ancestorValue")
-          .as[Ancestor]
-      } else {
-        val longEdges = elems
-          .join(codes.select($"system".as("ancestorSystem"),
-            $"value".as("ancestorValue"), $"id".as("parent")),
-            Seq("ancestorSystem", "ancestorValue"))
-          .join(codes.select($"system".as("descendantSystem"),
-            $"value".as("descendantValue"), $"id".as("child")),
-            Seq("descendantSystem", "descendantValue"))
-          .select($"parent", $"child")
-        TransitiveClosure.closureLong(spark, longEdges,
-            maxIterations = 64, shufflePartitions = width)
-          .join(codes.select($"id".as("ancestor"),
-            $"system".as("ancestorSystem"),
-            $"value".as("ancestorValue")), Seq("ancestor"))
-          .join(codes.select($"id".as("descendant"),
-            $"system".as("descendantSystem"),
-            $"value".as("descendantValue")), Seq("descendant"))
-          .select(lit(uri).as("uri"), lit(version).as("version"),
-            $"descendantSystem", $"descendantValue",
-            $"ancestorSystem", $"ancestorValue")
-          .as[Ancestor]
-      }
+    HierarchyKind.requireNew(members.toDF(), newMember.toDF(),
+      batchMayRepeat = false)
+    val closed = TransitiveClosure.closure(spark, elements, maxIterations = 64)
+      .select(lit(uri).as("uri"), lit(version).as("version"),
+        $"descendantSystem", $"descendantValue",
+        $"ancestorSystem", $"ancestorValue")
+      .as[Ancestor]
     new Hierarchies(spark, members.union(newMember).distinct(),
       ancestors.union(closed))
   }
 
   /** Merge pre-expanded hierarchies (reference withHierarchies :238-253). */
   def withHierarchies(other: Hierarchies): Hierarchies = {
-    if (hasDuplicates(other.members)) {
-      throw new IllegalArgumentException(
-        "Cannot add hierarchies having duplicate uri and version")
-    }
+    HierarchyKind.requireNew(members.toDF(), other.members.toDF(),
+      batchMayRepeat = false)
     new Hierarchies(spark, members.union(other.members).distinct(),
       ancestors.union(other.ancestors))
   }
@@ -144,24 +75,8 @@ class Hierarchies private (
     * (uri, version) so version lookups prune partitions
     * (reference DDL Hierarchies.java:475-517). Appends only new members;
     * duplicate (uri,version) against the stored table is an error. */
-  def writeToDatabase(database: String): Unit = {
-    TableWrites.validateName(database)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-    val table = s"$database.${Hierarchies.AncestorsTable}"
-    if (spark.catalog.tableExists(table)) {
-      val stored = spark.table(table)
-        .select($"uri".as("url"), $"version").distinct().as[UrlAndVersion]
-      if (!stored.intersect(members).isEmpty) {
-        throw new IllegalArgumentException(
-          "Cannot write hierarchies already present in the database")
-      }
-      TableWrites.appendAligned(spark, ancestors.toDF(), table)
-    } else {
-      ancestors.toDF().write
-        .partitionBy("uri", "version")
-        .format("parquet").saveAsTable(table)
-    }
-  }
+  def writeToDatabase(database: String): Unit =
+    HierarchyKind.write(spark, database, members.toDF(), ancestors.toDF())
 }
 
 object Hierarchies {
@@ -180,9 +95,7 @@ object Hierarchies {
     * members derived from the ancestors table with distinct (uri,version)). */
   def getFromDatabase(spark: SparkSession, database: String): Hierarchies = {
     import spark.implicits._
-    val ancestors = spark.table(s"$database.$AncestorsTable").as[Ancestor]
-    val members = ancestors.select($"uri".as("url"), $"version")
-      .distinct().as[UrlAndVersion]
-    new Hierarchies(spark, members, ancestors)
+    val (members, ancestors) = HierarchyKind.read(spark, database)
+    new Hierarchies(spark, members.as[UrlAndVersion], ancestors.as[Ancestor])
   }
 }

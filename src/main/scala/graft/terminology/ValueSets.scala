@@ -1,7 +1,6 @@
 package graft.terminology
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 /** An immutable collection of FHIR-style ValueSets: a dataset of valueset
   * metadata rows plus a flattened dataset of member [[Value]]s.
@@ -26,65 +25,39 @@ class ValueSets private (
   /** All value rows across the loaded value sets. */
   def getValues: Dataset[Value] = values
 
-  /** Values of one valueset version — prunes (valueSetUri, valueSetVersion)
-    * partitions when read from a table (AbstractValueSets.java:198-202). */
+  /** Values of one valueset version, partition-pruned when table-backed
+    * (AbstractValueSets.java:198-202). */
   def getValues(uri: String, version: String): Dataset[Value] =
-    values.where($"valueSetUri" === uri && $"valueSetVersion" === version)
+    ValueSetKind.rowsOf(values, uri, version)
 
-  /** Values for a uri→version map; implemented as a broadcast semi-join
-    * against a literal dataset rather than an opaque FilterFunction
-    * (AbstractValueSets.java:210-222) so Catalyst can see and prune it. */
-  def getValues(versions: Map[String, String]): Dataset[Value] = {
-    val wanted = versions.toSeq.toDF("valueSetUri", "valueSetVersion")
-    values.join(broadcast(wanted), Seq("valueSetUri", "valueSetVersion"),
-      "left_semi").as[Value]
-  }
+  /** Values for a uri→version map, as a Catalyst-visible broadcast
+    * semi-join (AbstractValueSets.java:210-222). */
+  def getValues(versions: Map[String, String]): Dataset[Value] =
+    ValueSetKind.rowsFor(values, versions)
 
   /** Point lookup (AbstractValueSets.getValueSet :242-266). */
   def getValueSet(uri: String, version: String): Option[Row] =
-    valueSets.where($"url" === uri && $"version" === version)
-      .head(1).headOption
+    ValueSetKind.metaRow(valueSets, uri, version)
 
   /** Distinct (url, version) pairs of the loaded value sets. */
   def getUrlAndVersions: Dataset[UrlAndVersion] =
-    valueSets.select($"url", $"version").distinct().as[UrlAndVersion]
+    ValueSetKind.members(valueSets)
 
-  /** Latest version per url, optionally including experimental valuesets.
-    * Experimental filter: keep when experimental is null or false
-    * (AbstractValueSets.java:146-147); string-compare max. */
-  def getLatestVersions(includeExperimental: Boolean): Dataset[UrlAndVersion] = {
-    val filtered =
-      if (includeExperimental) valueSets
-      else valueSets.where(coalesce(!$"experimental", lit(true)))
-    filtered.groupBy($"url").agg(max($"version").as("version"))
-      .as[UrlAndVersion]
-  }
+  /** Latest version per url (string-compare max); experimental versions
+    * count only when included (AbstractValueSets.java:146-147). */
+  def getLatestVersions(includeExperimental: Boolean): Dataset[UrlAndVersion] =
+    ValueSetKind.latest(valueSets, includeExperimental).as[UrlAndVersion]
 
-  /** url -> latest version (lexicographic max, experimental filtered per flag). */
+  /** url -> latest version, per [[getLatestVersions]]. */
   def getLatestVersionsMap(includeExperimental: Boolean): Map[String, String] =
-    getLatestVersions(includeExperimental)
-      .as[(String, String)].collect().toMap
+    ValueSetKind.latestMap(valueSets, includeExperimental)
 
-  private def hasDuplicates(newMembers: Dataset[UrlAndVersion]): Boolean =
-    !TableWrites.knownEmpty(getUrlAndVersions) &&
-      !getUrlAndVersions.intersect(newMembers).isEmpty
-
-  /** Append new valuesets (metadata + values). Duplicate (url, version) is an
-    * error (ValueSets.java:149-175). */
+  /** Append new valuesets (metadata + values). A (url, version) repeated
+    * in the batch or already present is an error (ValueSets.java:149-175). */
   def withValueSets(
       newValueSets: DataFrame,
       newValues: Dataset[Value]): ValueSets = {
-    val newMembers = newValueSets.select($"url", $"version")
-      .distinct().as[UrlAndVersion]
-    // count-based dup detection within the batch (ConceptMaps.java:304-311)
-    if (newValueSets.count() != newMembers.count()) {
-      throw new IllegalArgumentException(
-        "Cannot add multiple valuesets with the same url and version")
-    }
-    if (hasDuplicates(newMembers)) {
-      throw new IllegalArgumentException(
-        "Cannot add valuesets having duplicate url and version")
-    }
+    ValueSetKind.requireNew(valueSets, newValueSets, batchMayRepeat = true)
     new ValueSets(spark,
       valueSets.unionByName(newValueSets, allowMissingColumns = true),
       values.union(newValues))
@@ -109,49 +82,18 @@ class ValueSets private (
   def withDisjointValueSets(
       newValueSets: DataFrame,
       newValues: Dataset[Value]): ValueSets = {
-    val current = getUrlAndVersions.toDF()
-    val disjointVs = newValueSets
-      .join(broadcast(current), Seq("url", "version"), "left_anti")
-    val keep = disjointVs.select($"url".as("valueSetUri"),
-      $"version".as("valueSetVersion")).distinct()
-    val disjointValues = newValues
-      .join(broadcast(keep), Seq("valueSetUri", "valueSetVersion"),
-        "left_semi").as[Value]
+    val (meta, rows) = ValueSetKind.disjoint(valueSets, newValueSets, newValues)
     new ValueSets(spark,
-      valueSets.unionByName(disjointVs, allowMissingColumns = true),
-      values.union(disjointValues))
+      valueSets.unionByName(meta, allowMissingColumns = true),
+      values.union(rows))
   }
 
   /** Persist: `db.valuesets` metadata (timestamp-stamped) + `db.values`
     * partitioned by (valueSetUri, valueSetVersion)
-    * (AbstractValueSets.java:499-633, S11/S12). */
-  def writeToDatabase(database: String): Unit = {
-    TableWrites.validateName(database)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-    val valuesTable = s"$database.${ValueSets.ValuesTable}"
-    val metaTable = s"$database.${ValueSets.ValueSetsTable}"
-    if (spark.catalog.tableExists(valuesTable)) {
-      val stored = spark.table(valuesTable)
-        .select($"valueSetUri".as("url"), $"valueSetVersion".as("version"))
-        .distinct().as[UrlAndVersion]
-      if (!stored.intersect(getUrlAndVersions).isEmpty) {
-        throw new IllegalArgumentException(
-          "Cannot write valuesets already present in the database")
-      }
-      TableWrites.appendAligned(spark, values.toDF(), valuesTable)
-    } else {
-      values.toDF().write.partitionBy("valueSetUri", "valueSetVersion")
-        .format("parquet").saveAsTable(valuesTable)
-    }
-    val stamped = valueSets.withColumn("timestamp",
-      current_timestamp().cast("timestamp"))
-    if (spark.catalog.tableExists(metaTable)) {
-      TableWrites.appendAligned(spark, stamped, metaTable)
-    } else {
-      stamped.write.partitionBy("timestamp").format("parquet")
-        .saveAsTable(metaTable)
-    }
-  }
+    * (AbstractValueSets.java:499-633, S11/S12). A (url, version) already
+    * stored in either table is an error. */
+  def writeToDatabase(database: String): Unit =
+    ValueSetKind.write(spark, database, valueSets, values.toDF())
 }
 
 object ValueSets {
@@ -167,22 +109,16 @@ object ValueSets {
   /** An empty ValueSets container bound to the session. */
   def getEmpty(spark: SparkSession): ValueSets = {
     import spark.implicits._
-    val emptyMeta = Seq.empty[
-        (String, String, String, String, Boolean, String, String)]
-      .toDF(MetaColumns: _*)
-    new ValueSets(spark, emptyMeta, spark.emptyDataset[Value])
+    new ValueSets(spark, ValueSetKind.emptyMeta(spark),
+      spark.emptyDataset[Value])
   }
 
-  /** Load value sets persisted by [[writeToDatabase]] from the given database. */
+  /** Load value sets persisted by [[writeToDatabase]] from the given
+    * database. Metadata tables persisted before the metadata widening load
+    * with nulls for the newer columns. */
   def getFromDatabase(spark: SparkSession, database: String): ValueSets = {
     import spark.implicits._
-    val values = spark.table(s"$database.$ValuesTable").as[Value]
-    // tolerant read: tables persisted before the metadata widening load
-    // with nulls for the newer columns
-    val meta = TableWrites.selectOrNull(
-      spark.table(s"$database.$ValueSetsTable"),
-      MetaColumns.map(c => c -> (if (c == "experimental") "boolean"
-        else "string")))
-    new ValueSets(spark, meta, values)
+    val (meta, values) = ValueSetKind.read(spark, database)
+    new ValueSets(spark, meta, values.as[Value])
   }
 }

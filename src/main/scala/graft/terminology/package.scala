@@ -6,7 +6,8 @@ package graft
   *   - [[graft.terminology.ValueSets]] / [[graft.terminology.ConceptMaps]]
   *     / [[graft.terminology.Hierarchies]] — load, version, persist
   *     (partitioned tables + guarded inserts), latest-version
-  *     resolution, duplicate detection.
+  *     resolution, duplicate detection; each verb is written once over
+  *     the library-internal `CollectionKind`.
   *   - [[graft.terminology.ValueSetUdfs]] — `in_valueset` membership
   *     (UDF and Catalyst forms over broadcast sets, with the push/pop
   *     stack) and `translate` lookups.
@@ -16,7 +17,5 @@ package graft
   *     (topological chaining).
   *   - [[graft.terminology.Loinc]] / [[graft.terminology.Snomed]] —
   *     LOINC multiaxial CSV and SNOMED RF2 relationship readers.
-  *   - [[graft.terminology.TableWrites]] — partitioned DDL + guarded
-  *     insert sink with import metadata.
   */
 package object terminology

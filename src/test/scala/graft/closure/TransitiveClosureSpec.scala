@@ -70,6 +70,36 @@ class TransitiveClosureSpec extends SparkSuite {
     }
   }
 
+  test("property: string-keyed closure matches DFS oracle on random graphs " +
+      "(incl cycles, one value under two systems, null endpoints)") {
+    import spark.implicits._
+    // node n is the code (system n % 2, value n / 2): every value exists
+    // under two systems, and the two are different codes
+    def code(n: Int): (String, String) =
+      (if (n % 2 == 0) "urn:sys:a" else "urn:sys:b", (n / 2).toString)
+    (31 to 36).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(14)((rnd.nextInt(10), rnd.nextInt(10)))
+        .filter(e => e._1 != e._2).distinct
+      val typed = edges.map { case (p, c) =>
+        HierarchicalElement(code(p)._1, code(p)._2, code(c)._1, code(c)._2)
+      }
+      // edges with a null system or value are not part of the graph
+      val nulls = Seq(
+        HierarchicalElement(null, "0", "urn:sys:a", "1"),
+        HierarchicalElement("urn:sys:a", null, "urn:sys:b", "2"),
+        HierarchicalElement("urn:sys:b", "3", null, "4"),
+        HierarchicalElement("urn:sys:b", "3", "urn:sys:a", null))
+      val got = TransitiveClosure.closure(spark, (typed ++ nulls).toDS())
+        .as[HierarchicalElement].collect()
+      val want = dfsOracle(edges).toSeq.map { case (a, d) =>
+        HierarchicalElement(code(a)._1, code(a)._2, code(d)._1, code(d)._2)
+      }
+      assert(got.length === got.distinct.length, s"seed=$seed")
+      assert(got.toSet === want.toSet, s"seed=$seed edges=$edges")
+    }
+  }
+
   test("deep chain + hub fan: prefix doubling converges in O(log d) rounds") {
     import spark.implicits._
     // the skew case called out in TransitiveClosure.scala:21-24: a 64-deep

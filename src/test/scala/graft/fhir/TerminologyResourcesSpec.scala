@@ -107,6 +107,34 @@ class TerminologyResourcesSpec extends SparkSuite {
     assert(got.head.getString(0) === "Y-from-b")
   }
 
+  test("chained concept map from a directory binds each url's latest " +
+      "version only") {
+    def map(url: String, version: String, code: String, target: String,
+        delegate: Option[String], experimental: Boolean = false): String =
+      s"""{"resourceType":"ConceptMap","url":"$url","version":"$version",
+        "experimental":$experimental,
+        "group":[{"source":"s","target":"t",""" +
+        delegate.map(d =>
+          s""""unmapped":{"mode":"other-map","url":"$d"},""").getOrElse("") +
+        s""""element":[{"code":"$code","target":[{"code":"$target",
+          "equivalence":"equivalent"}]}]}]}"""
+    val dir = writeDir(
+      // v1 of A delegates to B, v2 (experimental: still the latest) to C
+      "a1.json" -> map("urn:cm:a", "1", "x", "X-a1", Some("urn:cm:b")),
+      "a2.json" -> map("urn:cm:a", "2", "x", "X-a2", Some("urn:cm:c"),
+        experimental = true),
+      "b1.json" -> map("urn:cm:b", "1", "y", "Y-b1", None),
+      "c1.json" -> map("urn:cm:c", "1", "y", "Y-c1", None),
+      "c2.json" -> map("urn:cm:c", "2", "y", "Y-c2", None))
+    assert(TerminologyResources.conceptMapDelegates(spark, dir) ===
+      Map("urn:cm:a" -> Seq("urn:cm:c")))
+    val cm = TerminologyResources.broadcastConceptMapFromDirectory(spark,
+      dir, "urn:cm:a")
+    assert(cm.getTarget("s", "x") === List(CodeValue("t", "X-a2")))
+    assert(cm.getTarget("s", "y") === List(CodeValue("t", "Y-c2")))
+    assert(cm.getTarget("s", "zzz") === Nil)
+  }
+
   test("concept map directory import keeps metadata + mappings") {
     val dir = writeDir(
       "m.json" ->

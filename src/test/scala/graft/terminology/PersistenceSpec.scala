@@ -115,4 +115,30 @@ class PersistenceSpec extends SparkSuite {
     intercept[IllegalArgumentException] { second.writeToDatabase(db) }
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
   }
+
+  test("a version with no rows cannot be written twice") {
+    import org.apache.spark.sql.functions.col
+    val db = "graft_test_norows"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    // a concept map that only delegates (unmapped: other-map) and a value
+    // set with no codes: the metadata row is the version's only trace
+    val cm = ConceptMaps.getEmpty(spark)
+      .withConceptMap("urn:cm:delegating", "1", Nil)
+    val vs = ValueSets.getEmpty(spark).withValueSet("urn:vs:none", "1", Nil)
+    cm.writeToDatabase(db)
+    vs.writeToDatabase(db)
+    intercept[IllegalArgumentException] { cm.writeToDatabase(db) }
+    intercept[IllegalArgumentException] { vs.writeToDatabase(db) }
+    assert(spark.table(s"$db.conceptmaps")
+      .where(col("url") === "urn:cm:delegating").count() === 1)
+    assert(spark.table(s"$db.valuesets")
+      .where(col("url") === "urn:vs:none").count() === 1)
+    // other versions of the same url still append
+    ConceptMaps.getEmpty(spark)
+      .withConceptMap("urn:cm:delegating", "2", Nil).writeToDatabase(db)
+    assert(ConceptMaps.getFromDatabase(spark, db)
+      .getLatestVersionsMap(includeExperimental = true) ===
+      Map("urn:cm:delegating" -> "2"))
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+  }
 }

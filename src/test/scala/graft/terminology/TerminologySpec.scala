@@ -74,6 +74,43 @@ class TerminologySpec extends SparkSuite {
     assert(cm.getMappings("urn:m:1", "2").collect().head.targetValue === "A2")
   }
 
+  test("conceptmaps: experimental filter excludes experimental versions") {
+    val cm = ConceptMaps.getEmpty(spark)
+      .withConceptMap("urn:m:e", "1", Seq(("s", "a", "t", "A", "equivalent")))
+      .withConceptMap("urn:m:e", "2", Seq(("s", "a", "t", "B", "equivalent")),
+        experimental = true)
+      .withConceptMap("urn:m:f", "1", Seq(("s", "b", "t", "C", "equivalent")),
+        experimental = true)
+    assert(cm.getLatestVersionsMap(includeExperimental = false) ===
+      Map("urn:m:e" -> "1"))
+    assert(cm.getLatestVersionsMap(includeExperimental = true) ===
+      Map("urn:m:e" -> "2", "urn:m:f" -> "1"))
+    assert(cm.getLatestVersions(includeExperimental = false).collect().toSet ===
+      Set(UrlAndVersion("urn:m:e", "1")))
+  }
+
+  test("conceptmaps: disjoint import keeps only new (url, version)") {
+    import spark.implicits._
+    val cm = ConceptMaps.getEmpty(spark)
+      .withConceptMap("urn:m:1", "1", Seq(("s", "a", "t", "A", "equivalent")))
+    val newMeta = Seq(("urn:m:1", "1", false), ("urn:m:2", "1", false))
+      .toDF("url", "version", "experimental")
+    val newMappings = Seq(
+      Mapping("urn:m:1", "1", null, null, "s", "a", "t", "dup-should-drop",
+        "equivalent"),
+      Mapping("urn:m:2", "1", null, null, "s", "b", "t", "kept",
+        "equivalent")).toDS()
+    val merged = cm.withDisjointConceptMaps(newMeta, newMappings)
+    assert(merged.getUrlAndVersions.collect().toSet === Set(
+      UrlAndVersion("urn:m:1", "1"), UrlAndVersion("urn:m:2", "1")))
+    assert(merged.conceptMaps.count() === 2)
+    assert(merged.getMappings("urn:m:2", "1").collect().map(_.targetValue)
+      .toSeq === Seq("kept"))
+    // urn:m:1 version 1 kept its ORIGINAL mappings (new ones dropped)
+    assert(merged.getMappings("urn:m:1", "1").collect().map(_.targetValue)
+      .toSeq === Seq("A"))
+  }
+
   test("conceptmap delegation topo-sort detects cycles and orders deps") {
     val order = ConceptMapDependencies.sortMapsToLoad(Seq("a"),
       Map("a" -> Seq("b"), "b" -> Seq("c"), "c" -> Nil).apply)
@@ -98,6 +135,36 @@ class TerminologySpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       h.withHierarchyElements("urn:h:1", "1",
         spark.emptyDataset[HierarchicalElement])
+    }
+  }
+
+  test("hierarchies: withHierarchies merges members and ancestors; " +
+      "a duplicate (uri, version) is refused") {
+    import spark.implicits._
+    val a = Hierarchies.getEmpty(spark)
+      .withHierarchyElements("urn:h:a", "1", Seq(
+        HierarchicalElement("s", "r", "s", "m"),
+        HierarchicalElement("s", "m", "s", "l")).toDS())
+    val b = Hierarchies.getEmpty(spark)
+      .withHierarchyElements("urn:h:b", "1", Seq(
+        HierarchicalElement("t", "p", "t", "c")).toDS())
+      .withHierarchyElements("urn:h:a", "2", Seq(
+        HierarchicalElement("s", "r", "s", "x")).toDS())
+    val merged = a.withHierarchies(b)
+    assert(merged.getMembers.collect().toSet === Set(
+      UrlAndVersion("urn:h:a", "1"), UrlAndVersion("urn:h:a", "2"),
+      UrlAndVersion("urn:h:b", "1")))
+    assert(merged.getLatestVersions ===
+      Map("urn:h:a" -> "2", "urn:h:b" -> "1"))
+    assert(merged.getAncestors("urn:h:a", "1").count() === 3)
+    assert(merged.getAncestors("urn:h:b", "1").collect().toSet ===
+      Set(Ancestor("urn:h:b", "1", "t", "c", "t", "p")))
+    assert(merged.getAncestors.count() === 5)
+    intercept[IllegalArgumentException] { merged.withHierarchies(a) }
+    intercept[IllegalArgumentException] {
+      a.withHierarchies(Hierarchies.getEmpty(spark)
+        .withHierarchyElements("urn:h:a", "1", Seq(
+          HierarchicalElement("s", "q", "s", "w")).toDS()))
     }
   }
 

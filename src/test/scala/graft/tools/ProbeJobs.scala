@@ -31,8 +31,23 @@ import graft.streaming.Streams
   * compaction every second batch) after one unmeasured warm-up round,
   * and writes `<outDir>/stream_<tag>.json` and `<outDir>/stream_<tag>.md`
   * — per batch: the Spark jobs it ran (each labelled by its result
-  * stage's operation scopes) and the stream's phase durations. Only public index and stream calls are
-  * used, so the same file measures any version of the library. */
+  * stage's operation scopes) and the stream's phase durations.
+  *
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> terminology"
+  *
+  * terminology build in the benchmark's `cohort_query` shape: directory
+  * imports of 16 value sets (10 to 10k codes, every third one in two
+  * versions, some XML) and of a three-map delegation chain, a 1.2k-code
+  * DAG to level 16 closed by `withHierarchyElements`, the three table
+  * writes, the read-back, a broadcast value-set build and the chained
+  * concept map — after one unmeasured warm-up round. Writes
+  * `<outDir>/terminology_<tag>.{json,md}`: per verb its Spark jobs, SQL
+  * executions and wall time, and the closure's rounds (the executions
+  * whose plan unions a checkpointed frame with a join: one per fixpoint
+  * round).
+  *
+  * Only public calls are used, so the same file measures any version of
+  * the library. */
 object ProbeJobs {
 
   private val spark = SparkSuite.spark
@@ -63,7 +78,9 @@ object ProbeJobs {
     args match {
       case Array(outDir, tag) => probes(outDir, tag)
       case Array(outDir, tag, "stream") => streams(outDir, tag)
-      case _ => sys.error("usage: ProbeJobs <outDir> <tag> [stream]")
+      case Array(outDir, tag, "terminology") => terminology(outDir, tag)
+      case _ =>
+        sys.error("usage: ProbeJobs <outDir> <tag> [stream|terminology]")
     }
     spark.stop()
   }
@@ -168,6 +185,181 @@ object ProbeJobs {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, s"stream_$tag.json"), json)
     Files.writeString(Paths.get(outDir, s"stream_$tag.md"),
+      md.mkString("", "\n", "\n"))
+    println(md.mkString("\n"))
+  }
+
+  // ===== terminology =====
+
+  private val dx = "http://snomed.info/sct"
+
+  /** Writes the terminology inputs under a fresh directory: `valuesets/`,
+    * `conceptmaps/` and `hierarchy/edges.csv`. Returns the directory. */
+  private def terminologyInputs(): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("probe_terminology")
+    def put(sub: String, name: String, text: String): Unit = {
+      Files.createDirectories(dir.resolve(sub))
+      Files.writeString(dir.resolve(sub).resolve(name), text)
+    }
+    val rnd = new scala.util.Random(6)
+    // DAG: level sizes grow by 2.2x to a plateau of 400, scaled to 1200
+    // codes over 16 levels below the root; parents skewed to early codes
+    // of the level above, 3% of codes with a second parent
+    val shape = (1 to 16).map(l => math.min(math.pow(2.2, l), 400.0))
+    val sizes = 1 +: shape.map(w => math.max(1, math.round(w * 1199 /
+      shape.sum).toInt))
+    val levels = sizes.scanLeft(0)(_ + _).sliding(2).map(p => p(0) until p(1))
+      .toVector
+    val edges = levels.indices.tail.flatMap { l =>
+      val up = levels(l - 1)
+      levels(l).flatMap { c =>
+        val p = up(math.min(up.size - 1,
+          (math.pow(rnd.nextDouble(), 3) * up.size).toInt))
+        val extra = if (l >= 3 && rnd.nextDouble() < 0.03)
+          Seq(levels(l - 2)(rnd.nextInt(levels(l - 2).size))) else Nil
+        (p +: extra).map(a => (a, c))
+      }
+    }
+    put("hierarchy", "edges.csv", edges.map { case (a, c) =>
+      f"$dx,D$a%06d,$dx,D$c%06d" }.mkString(
+      "ancestorSystem,ancestorValue,descendantSystem,descendantValue\n",
+      "\n", "\n"))
+    (0 until 16).foreach { i =>
+      val size = math.round(10 * math.pow(1000.0, i / 15.0)).toInt
+      val versions = if (i % 3 == 0) Seq("1", "2") else Seq("1")
+      versions.foreach { v =>
+        val codes = (0 until size).map(c => f"L${c * (v.toInt + 1)}%06d")
+        val url = s"http://probe.example/ValueSet/vs$i"
+        if (i % 4 == 1) put("valuesets", s"vs$i-$v.xml",
+          s"""<ValueSet xmlns="http://hl7.org/fhir"><url value="$url"/>""" +
+            s"""<version value="$v"/><name value="vs$i"/>""" +
+            """<status value="active"/><compose><include>""" +
+            """<system value="http://loinc.org"/>""" +
+            codes.map(c => s"""<concept><code value="$c"/></concept>""")
+              .mkString + "</include></compose></ValueSet>")
+        else put("valuesets", s"vs$i-$v.json",
+          s"""{"resourceType":"ValueSet","url":"$url","version":"$v",""" +
+            s""""name":"vs$i","status":"active","compose":{"include":[""" +
+            """{"system":"http://loinc.org","concept":[""" +
+            codes.map(c => s"""{"code":"$c"}""").mkString(",") + "]}]}}")
+      }
+    }
+    Seq("a", "b", "c").zipWithIndex.foreach { case (m, i) =>
+      val url = s"http://probe.example/ConceptMap/rx-$m"
+      val next = Seq("b", "c").lift(i)
+        .map(n => s"http://probe.example/ConceptMap/rx-$n")
+      val rows = (i * 130 until i * 130 + 130).map(c => f"R$c%06d")
+      if (m == "b") put("conceptmaps", s"rx-$m.xml",
+        s"""<ConceptMap xmlns="http://hl7.org/fhir"><url value="$url"/>""" +
+          """<version value="1"/><status value="active"/><group>""" +
+          """<source value="rx"/><target value="ing"/>""" +
+          rows.map(r => s"""<element><code value="$r"/><target>""" +
+            s"""<code value="I$r"/><equivalence value="equivalent"/>""" +
+            "</target></element>").mkString +
+          next.map(n => """<unmapped><mode value="other-map"/>""" +
+            s"""<url value="$n"/></unmapped>""").getOrElse("") +
+          "</group></ConceptMap>")
+      else put("conceptmaps", s"rx-$m.json",
+        s"""{"resourceType":"ConceptMap","url":"$url","version":"1",""" +
+          """"status":"active","group":[{"source":"rx","target":"ing",""" +
+          next.map(n =>
+            s""""unmapped":{"mode":"other-map","url":"$n"},""")
+            .getOrElse("") +
+          """"element":[""" + rows.map(r =>
+            s"""{"code":"$r","target":[{"code":"I$r",""" +
+              """"equivalence":"equivalent"}]}""").mkString(",") + "]}]}")
+    }
+    dir
+  }
+
+  /** One terminology build: per verb (name, jobs, SQL plans, seconds). */
+  private def terminologyRound(): Seq[(String, Int, Seq[String], Double)] = {
+    import graft.fhir.TerminologyResources
+    import graft.terminology._
+    import spark.implicits._
+    val dir = terminologyInputs()
+    val db = "probe_terminology"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    val out = scala.collection.mutable.ArrayBuffer.empty[
+      (String, Int, Seq[String], Double)]
+    def verb[A](name: String)(body: => A): A = {
+      var result: Option[A] = None
+      val t0 = System.nanoTime()
+      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
+        result = Some(body)
+      }
+      out += ((name, n, plans, (System.nanoTime() - t0) / 1e9))
+      result.get
+    }
+    val vs = verb("import_valuesets") {
+      TerminologyResources.withValueSetsFromDirectory(spark,
+        ValueSets.getEmpty(spark), dir.resolve("valuesets").toString)
+    }
+    val cms = verb("import_conceptmaps") {
+      TerminologyResources.withConceptMapsFromDirectory(spark,
+        ConceptMaps.getEmpty(spark), dir.resolve("conceptmaps").toString)
+    }
+    val h = verb("closure") {
+      Hierarchies.getEmpty(spark).withHierarchyElements(
+        "urn:graft:hierarchy:probe-dx", "2024",
+        spark.read.option("header", "true")
+          .csv(dir.resolve("hierarchy/edges.csv").toString)
+          .as[HierarchicalElement])
+    }
+    verb("write_valuesets") { vs.writeToDatabase(db) }
+    verb("write_conceptmaps") { cms.writeToDatabase(db) }
+    verb("write_hierarchies") { h.writeToDatabase(db) }
+    val (vs2, h2) = verb("read_back") {
+      ConceptMaps.getFromDatabase(spark, db)
+      (ValueSets.getFromDatabase(spark, db),
+        Hierarchies.getFromDatabase(spark, db))
+    }
+    verb("broadcast_valuesets") {
+      val b = BroadcastableValueSets.newBuilder()
+      (0 until 16).foreach(i =>
+        b.addReference(s"vs$i", s"http://probe.example/ValueSet/vs$i"))
+      Seq(1, 2, 5).foreach(c =>
+        b.addDescendantsOf(s"desc$c", dx, f"D$c%06d",
+          "urn:graft:hierarchy:probe-dx"))
+      b.build(spark, vs2, h2)
+    }
+    val cm = verb("chained_conceptmap") {
+      TerminologyResources.broadcastConceptMapFromDirectory(spark,
+        dir.resolve("conceptmaps").toString,
+        "http://probe.example/ConceptMap/rx-a")
+    }
+    // the build must be the one described above
+    val stored = spark.sql(s"SELECT (SELECT count(*) FROM $db.values), " +
+      s"(SELECT count(*) FROM $db.mappings), " +
+      s"(SELECT count(*) FROM $db.ancestors)").head()
+    require(stored.getLong(0) > 0 && stored.getLong(1) == 390 &&
+      stored.getLong(2) > 1200, s"unexpected terminology tables: $stored")
+    require(cm.getTarget("rx", "R000300") == List(
+      graft.terminology.CodeValue("ing", "IR000300")), "chain broken")
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    out.toSeq
+  }
+
+  private def terminology(outDir: String, tag: String): Unit = {
+    terminologyRound() // warm-up: JIT and first-plan compilation
+    val measured = terminologyRound()
+    // a fixpoint round unions the checkpointed closure with its join
+    def rounds(plans: Seq[String]): Int = plans.count(p =>
+      p.contains("Union") && p.contains("Join") && p.contains("ExistingRDD"))
+    val json = measured.map { case (name, n, plans, s) =>
+      f""""$name": {"jobs": $n, "sql_executions": ${plans.size}, """ +
+        (if (name == "closure") s""""rounds": ${rounds(plans)}, """
+          else "") + f""""seconds": $s%.3f}"""
+    }.mkString("{", ",\n ", "}\n")
+    val md = Seq("| verb | jobs | SQL executions | rounds | seconds |",
+      "|---|---|---|---|---|") ++ measured.map { case (name, n, plans, s) =>
+      f"| $name | $n | ${plans.size} | " +
+        (if (name == "closure") rounds(plans).toString else "") +
+        f" | $s%.2f |"
+    }
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"terminology_$tag.json"), json)
+    Files.writeString(Paths.get(outDir, s"terminology_$tag.md"),
       md.mkString("", "\n", "\n"))
     println(md.mkString("\n"))
   }
