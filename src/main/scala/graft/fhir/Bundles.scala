@@ -2,6 +2,7 @@ package graft.fhir
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** FHIR bundle ingestion: directories or columns of bundle JSON documents →
   * per-resource-type DataFrames → saved tables.
@@ -37,64 +38,67 @@ object Bundles {
     }
   }
 
-  /** S2: bundles from a DataFrame column of JSON strings. With a custom
-    * registry (user-compiled StructureDefinition profiles), the envelope is
-    * merged over `resourceNames` (default: every registry resource). */
-  def fromJson(df: DataFrame, column: String): DataFrame =
-    df.withColumn("bundle",
-      from_json(col(column), FhirSchemas.bundleEnvelopeSchema))
+  /** The one envelope rule every entry point parses against: the merge
+    * over `resourceNames` when the caller names the types it will
+    * extract, else over every resource of `reg` (the default registry's
+    * envelope is compiled once). Naming the types is the ingest-throughput
+    * knob: `from_json` parses every row against every field of the
+    * envelope, so a one-resource extraction against the full-registry
+    * merge pays ~10x the struct width for fields it immediately drops
+    * (measured 67s → 8s on the q83 round trip at sf0.1). */
+  private def envelope(reg: FhirSchemas.FRegistry,
+      resourceNames: Seq[String]): StructType =
+    if (resourceNames.nonEmpty)
+      FhirSchemas.bundleEnvelopeSchemaFor(resourceNames.distinct, reg)
+    else if (reg eq FhirSchemas.defaultRegistry)
+      FhirSchemas.bundleEnvelopeSchema
+    else FhirSchemas.bundleEnvelopeSchemaFor(
+      reg.resources.keys.toSeq.sorted, reg)
 
-  /** Bundles from a JSON string column, default registry and all known resource types. */
+  /** S2: bundles from a DataFrame column of JSON strings, parsed against
+    * the envelope of `reg` (user-compiled StructureDefinition profiles
+    * plug in here) merged over `resourceNames` (default: every registry
+    * resource). */
   def fromJson(df: DataFrame, column: String,
-      reg: FhirSchemas.FRegistry,
-      resourceNames: Seq[String] = Nil): DataFrame = {
-    // When the caller declares which resource types it will extract, the
-    // envelope merges over exactly those — the ingest-throughput knob:
-    // `from_json` parses every row against every field of the envelope,
-    // so a one-resource extraction against the full-registry merge pays
-    // ~10x the struct width for fields it immediately drops (measured
-    // 67s → 8s on the q83 round trip at sf0.1).
-    val envelope =
-      if (resourceNames.nonEmpty)
-        FhirSchemas.bundleEnvelopeSchemaFor(resourceNames.distinct, reg)
-      else if (reg eq FhirSchemas.defaultRegistry)
-        FhirSchemas.bundleEnvelopeSchema
-      else FhirSchemas.bundleEnvelopeSchemaFor(
-        reg.resources.keys.toSeq.sorted, reg)
-    df.withColumn("bundle", from_json(col(column), envelope))
-  }
+      reg: FhirSchemas.FRegistry = FhirSchemas.defaultRegistry,
+      resourceNames: Seq[String] = Nil): DataFrame =
+    df.withColumn("bundle",
+      from_json(col(column), envelope(reg, resourceNames)))
+
+  /** Bundles from raw text: a `bundle` column is taken as already parsed,
+    * else `bundle_json` is parsed against the envelope over `names`. */
+  private def parsed(bundles: DataFrame, reg: FhirSchemas.FRegistry,
+      names: Seq[String]): DataFrame =
+    if (bundles.columns.contains("bundle")) bundles
+    else fromJson(bundles, "bundle_json", reg, names)
 
   // malformed XML → null row (dropped downstream), matching from_json's
   // PERMISSIVE behavior on malformed JSON — one bad document must not
   // fail a 100 TB ingest task. The catch is NARROW (parse-level failures
   // only): a systematic converter defect still fails loudly instead of
-  // silently emptying the ingest.
-  private val xmlToJsonUdf = udf((s: String) =>
+  // silently emptying the ingest. The conversion is guided by the same
+  // envelope the JSON is then parsed against, so XML keeps every field
+  // the caller's registry declares.
+  private def xmlToJson(envelope: StructType) = udf((s: String) =>
     if (s == null) null
-    else try FhirXml.bundleXmlToJson(s)
+    else try FhirXml.resourceXmlToJson(s, envelope)
     catch {
       case _: javax.xml.stream.XMLStreamException => null
       case _: IllegalArgumentException => null // empty document require
     })
 
   /** S3: bundles from a DataFrame column of FHIR XML strings — converted
-    * to JSON executor-side (FhirXml), then the same `from_json` path as S2,
-    * so XML and JSON ingestion produce identical rows
-    * (Bundles.fromXml, reference Bundles.java:160-175). */
-  def fromXml(df: DataFrame, column: String): DataFrame =
-    fromJson(df.withColumn("bundle_json", xmlToJsonUdf(col(column))),
-      "bundle_json")
-
-  /** S3 with a restricted envelope: when the resource types to extract are
-    * known up front, parsing against the merged-over-`resourceNames`
-    * envelope instead of the full registry merge keeps the per-row
-    * `from_json` struct narrow — the ingest-throughput knob (a full-merge
-    * envelope parses every row against every registered resource's
-    * fields). */
-  def fromXml(df: DataFrame, column: String, reg: FhirSchemas.FRegistry,
-      resourceNames: Seq[String]): DataFrame =
-    fromJson(df.withColumn("bundle_json", xmlToJsonUdf(col(column))),
-      "bundle_json", reg, resourceNames)
+    * to JSON executor-side (FhirXml) against the envelope [[fromJson]]
+    * would parse with for the same `reg` and `resourceNames`, then the
+    * same `from_json` path, so XML and JSON ingestion produce identical
+    * rows (Bundles.fromXml, reference Bundles.java:160-175). */
+  def fromXml(df: DataFrame, column: String,
+      reg: FhirSchemas.FRegistry = FhirSchemas.defaultRegistry,
+      resourceNames: Seq[String] = Nil): DataFrame = {
+    val env = envelope(reg, resourceNames)
+    df.withColumn("bundle_json", xmlToJson(env)(col(column)))
+      .withColumn("bundle", from_json(col("bundle_json"), env))
+  }
 
   /** S1 end-to-end: load a directory of bundle files, parsing each by
     * extension (.xml → XML, anything else → JSON), matching the
@@ -104,31 +108,24 @@ object Bundles {
     val raw = loadFromDirectory(spark, path, minPartitions)
     fromJson(raw.withColumn("bundle_json",
       when(col("source_file").endsWith(".xml"),
-        xmlToJsonUdf(col("bundle_json")))
+        xmlToJson(envelope(FhirSchemas.defaultRegistry, Nil))(
+          col("bundle_json")))
         .otherwise(col("bundle_json"))), "bundle_json")
   }
 
-  /** S4: extract all resources of one type from a bundle DataFrame produced
-    * by [[loadFromDirectory]] or [[fromJson]]; returns a DataFrame with the
-    * compiled schema for that resource (incl. synthetic reference ids,
-    * code "?"→null scrubbing, and hoisted profile extensions). */
-  def extractEntry(spark: SparkSession, bundles: DataFrame,
-      resourceName: String): DataFrame =
-    extractEntry(spark, bundles, resourceName, Nil)
-
-  /** S5: extraction with statically-declared contained resource types —
-    * adds a `contained` column: array of one-field-per-declared-type
-    * structs (Bundles.extractEntry(…, containedUrls),
-    * /root/reference/bunsen-spark/.../Bundles.java:262-279).
+  /** S4/S5: extract all resources of one type from a bundle DataFrame
+    * produced by [[loadFromDirectory]] or [[fromJson]]; returns a DataFrame
+    * with the compiled schema for that resource (incl. synthetic reference
+    * ids, code "?"→null scrubbing, and hoisted profile extensions). With
+    * statically-declared `containedTypes` it adds a `contained` column:
+    * array of one-field-per-declared-type structs (Bundles.extractEntry(…,
+    * containedUrls), /root/reference/bunsen-spark/.../Bundles.java:262-279).
     * `reg` plugs in user-compiled profiles: unparsed bundle text is then
     * parsed with an envelope merged over exactly the types requested. */
   def extractEntry(spark: SparkSession, bundles: DataFrame,
-      resourceName: String, containedTypes: Seq[String],
+      resourceName: String, containedTypes: Seq[String] = Nil,
       reg: FhirSchemas.FRegistry = FhirSchemas.defaultRegistry): DataFrame = {
-    val withParsed =
-      if (bundles.columns.contains("bundle")) bundles
-      else fromJson(bundles, "bundle_json", reg,
-        resourceName +: containedTypes)
+    val withParsed = parsed(bundles, reg, resourceName +: containedTypes)
     val entries = withParsed
       .select(explode(col("bundle.entry")).as("entry"))
       .select(col("entry.resource").as("resource"))
@@ -152,42 +149,28 @@ object Bundles {
       database: String, resourceNames: Seq[String],
       reg: FhirSchemas.FRegistry = FhirSchemas.defaultRegistry): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-    val parsed =
-      if (bundles.columns.contains("bundle")) bundles
-      else fromJson(bundles, "bundle_json", reg, resourceNames)
+    val all = parsed(bundles, reg, resourceNames)
     resourceNames.foreach { r =>
       val table = s"$database.${r.toLowerCase}"
       // a managed-table location can outlive its catalog entry across
       // sessions; overwrite would fail with LOCATION_ALREADY_EXISTS
       graft.terminology.CollectionKind.reclaimOrphanLocation(spark, database,
         r.toLowerCase)
-      extractEntry(spark, parsed, r, Nil, reg).write.mode("overwrite")
+      extractEntry(spark, all, r, Nil, reg).write.mode("overwrite")
         .format("parquet")
         .saveAsTable(table)
     }
   }
 
-  /** U5: serialize resource rows back to spec-shaped FHIR JSON strings
-    * (decode path): resourceType first, hoisted extension fields folded
-    * back into the generic `extension` list (inverse of ingestion), null
-    * fields dropped. The output re-ingests through [[fromJson]] to
-    * identical rows. */
-  private val containedFixupUdf =
-    udf((s: String) => if (s == null) null else FhirJson.fixupContained(s))
-
   /** One contained element (a one-field-per-declared-type struct) rendered
     * as spec JSON (`{"resourceType":"T",...fields}`) entirely in Catalyst:
     * the matching type's sub-struct is serialized with `to_json` and the
-    * discriminator spliced in front — same bytes [[FhirJson.fixupContained]]
-    * produces, with no per-row document parse. */
+    * discriminator spliced in front, with no per-row document parse. */
   private def containedElemJson(x: Column,
       typeFields: Seq[String]): Column = {
     // candidates in REVERSE declaration order: [[extractEntry]] output
-    // has exactly one non-null type slot, but a caller-built frame with
-    // two must serialize the same on this path as on the jackson
-    // fallback, whose [[FhirJson.fixupContained]] keeps the LAST
-    // object-valued field — coalesce over the reversed slots realizes
-    // that rule
+    // has exactly one non-null type slot; a caller-built frame with two
+    // keeps the LAST one
     val candidates = typeFields.reverse.map { fn =>
       val rt = fn.substring(0, 1).toUpperCase + fn.substring(1)
       val inner = to_json(x.getField(fn), Map("ignoreNullFields" -> "true"))
@@ -196,52 +179,41 @@ object Bundles {
           .otherwise(concat(lit(s"""{"resourceType":"$rt","""),
             inner.substr(lit(2), length(inner) - 1))))
     }
-    // element of an undeclared type (all type slots null) → "{}", matching
-    // the fixup's pass-through of an object with no type field
+    // element of an undeclared type (all type slots null) → "{}"
     coalesce((candidates :+ when(x.isNotNull, lit("{}"))): _*)
   }
 
-  /** Serialize extracted resource rows back to FHIR JSON strings (U5).
+  /** U5: serialize resource rows back to spec-shaped FHIR JSON strings
+    * (decode path): resourceType first, hoisted extension fields folded
+    * back into the generic `extension` list (inverse of ingestion), null
+    * fields dropped. The output re-ingests through [[fromJson]] to
+    * identical rows.
     *
-    * The contained reshape (one-field-per-type structs → inline
-    * resourceType form) runs as a Catalyst string splice whenever
-    * `contained` is the resource's LAST serialized field — the only shape
-    * [[extractEntry]] produces — so the whole decode stays inside
-    * whole-stage codegen and materializes ONE string per row. The old
-    * jackson path (parse the full document, reshape, re-serialize — a
-    * per-row tree allocation burst that dominated the q97 round trip under
-    * shared-JVM pressure) survives only as the fallback for caller-built
-    * frames where `contained` sits mid-row. */
+    * One path, all Catalyst: the main struct (resourceType, the plain
+    * fields, then the rebuilt `extension` list) is serialized with
+    * `to_json`, and a `contained` column, wherever it sits in the frame,
+    * is reshaped to the spec's inline resourceType form and spliced in
+    * LAST — so the decode stays inside whole-stage codegen and
+    * materializes ONE string per row. */
   def toJson(df: DataFrame, resourceName: String,
       reg: FhirSchemas.FRegistry = FhirSchemas.defaultRegistry): DataFrame = {
     val extNames = FhirSchemas.extensionFieldNames(resourceName, reg).toSet
-    val plainNames = df.columns.filterNot(extNames.contains).toSeq
-    val plain = plainNames.map(col)
-    val cols = lit(resourceName).as("resourceType") +: plain
-    val withExt = FhirSchemas.decodeExtensions(resourceName, reg) match {
-      case Some(ext) if df.columns.exists(extNames.contains) =>
-        Some(ext.as("extension"))
-      case _ => None
-    }
-    val hasContained = df.columns.contains("contained")
-    val containedLast =
-      hasContained && plainNames.lastOption.contains("contained") &&
-        withExt.isEmpty
-    if (containedLast) {
+    val ext = FhirSchemas.decodeExtensions(resourceName, reg)
+      .filter(_ => df.columns.exists(extNames.contains))
+    val mainCols = (lit(resourceName).as("resourceType") +: df.columns.toSeq
+      .filterNot(n => extNames.contains(n) || n == "contained").map(col)) ++
+      ext.map(_.as("extension"))
+    val mainJson = to_json(struct(mainCols: _*),
+      Map("ignoreNullFields" -> "true"))
+    if (!df.columns.contains("contained")) df.select(mainJson.as("json"))
+    else {
       val typeFields = df.schema("contained").dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-            s: org.apache.spark.sql.types.StructType, _) =>
-          s.fields.map(_.name).toSeq
+        case ArrayType(s: StructType, _) => s.fields.map(_.name).toSeq
         case other => throw new IllegalArgumentException(
           s"toJson: contained column must be array<struct>, got $other")
       }
-      val mainCols = lit(resourceName).as("resourceType") +:
-        plainNames.filterNot(_ == "contained").map(col)
-      // main doc always holds at least resourceType, so it ends "...}" and
-      // the contained array splices in before the final brace — key order
-      // identical to serializing the full struct and reshaping in place
-      val mainJson = to_json(struct(mainCols: _*),
-        Map("ignoreNullFields" -> "true"))
+      // the main doc always holds at least resourceType, so it ends
+      // "...}" and the contained array splices in before the final brace
       val arrJson = concat(lit("\"contained\":["),
         array_join(transform(col("contained"),
           containedElemJson(_, typeFields)), ",", "null"),
@@ -249,18 +221,6 @@ object Bundles {
       df.select(when(col("contained").isNull, mainJson)
         .otherwise(concat(mainJson.substr(lit(1), length(mainJson) - 1),
           lit(","), arrJson, lit("}"))).as("json"))
-    } else {
-      val all = withExt match {
-        case Some(ext) => cols :+ ext
-        case None => cols
-      }
-      val raw = df.select(to_json(struct(all: _*),
-        Map("ignoreNullFields" -> "true")).as("json"))
-      // contained decodes as one-field-per-type structs; reshape to the
-      // spec's inline resourceType form so the output re-ingests
-      if (hasContained)
-        raw.select(containedFixupUdf(col("json")).as("json"))
-      else raw
     }
   }
 

@@ -16,18 +16,21 @@ import scala.jdk.CollectionConverters._
 import graft.fhir.FhirSchemas._
 
 /** Avro backend of the schema compiler — the reference's `bunsen-avro`
-  * surface (DefinitionToAvroVisitor.java:41-722, AvroConverter.java:24-206)
-  * re-expressed over the shared [[FhirSchemas.FDefinition]] IR: the same
-  * definitions that compile to Spark `StructType`s also compile to Avro
-  * record schemas, and rows convert to/from Avro both as a binary column
-  * (exchange payloads) and as Avro container files (export/import).
+  * surface (DefinitionToAvroVisitor.java:41-722, AvroConverter.java:24-206),
+  * which there is a second client of the same visitor. Here it is a leaf
+  * mapping over the one definition walk, [[FhirSchemas.walk]]: type
+  * resolution, choice flattening, hoisted-extension unwrapping and the
+  * recursion budget are the walk's, so the Avro record and the Spark
+  * `StructType` of a definition have the same fields in the same order.
+  * Rows convert to/from Avro both as a binary column (exchange payloads)
+  * and as Avro container files (export/import).
   *
-  * Mapping (mirroring the reference's visitor):
+  * Leaf mapping (mirroring the reference's visitor):
   *  - every field is a nullable union `["null", T]` with null default;
   *  - FHIR decimal → Avro `bytes` with the `decimal(12,4)` logical type;
   *  - dates/instants stay lexical strings (like the Spark backend);
-  *  - choice types flatten to one field per alternative — identical field
-  *    names to the Spark schema, so the two backends are column-compatible;
+  *  - references are records of (reference, display) plus one synthetic
+  *    `<type>Id` per target, as in the Spark schema;
   *  - nested records are named by their path (`Observation_code`), which
   *    keeps Avro's unique-fullname rule satisfied without a global registry
   *    (the reference hashes structure definitions for the same reason).
@@ -43,11 +46,8 @@ object FhirAvro {
 
   /** Compile a named resource/complex type to an Avro record schema. */
   def avroSchemaFor(name: String,
-      reg: FRegistry = defaultRegistry): Schema = {
-    val d = reg.complexTypes.getOrElse(name,
-      reg.extensionDefinitions.getOrElse(name, reg.resources(name)))
-    compileRecord(d, name.replace('.', '_'), Map(name -> 1), reg)
-  }
+      reg: FRegistry = defaultRegistry): Schema =
+    record(name.replace('.', '_'), rootWalk(name, reg), reg)
 
   /** Canonical 64-bit schema fingerprint (Avro `SchemaNormalization`
     * parsing form). Record fullnames are deterministic path-derived
@@ -74,47 +74,31 @@ object FhirAvro {
     new Schema.Field(name, nullable(s), null,
       Schema.Field.NULL_DEFAULT_VALUE)
 
-  private def compileRecord(d: FDefinition, recName: String,
-      seen: Map[String, Int], reg: FRegistry): Schema = {
-    val fields = d.fields.flatMap(f => compileField(f, recName, seen, reg))
+  /** One record over a walked definition; nested records and reference
+    * records are named by their path under `recName`. */
+  private def record(recName: String, steps: Seq[Step],
+      reg: FRegistry): Schema = {
     val rec = Schema.createRecord(recName, null, Namespace, false)
-    rec.setFields(fields.asJava)
+    rec.setFields(steps.map { s =>
+      val f = s.field
+      val t = (f.tpe: @unchecked) match {
+        case FString | FCode | FDate => Schema.create(Schema.Type.STRING)
+        case FDecimal => decimalSchema
+        case FInt => Schema.create(Schema.Type.INT)
+        case FBool => Schema.create(Schema.Type.BOOLEAN)
+        case FReference(targets) =>
+          val ref = Schema.createRecord(s"${recName}_${f.name}_Reference",
+            null, Namespace, false)
+          ref.setFields((Seq("reference", "display") ++
+            targets.map(t => lowerFirst(t) + "Id"))
+            .map(n => field(n, Schema.create(Schema.Type.STRING))).asJava)
+          ref
+        case FComplex(n) =>
+          record(s"${recName}_${f.name}", walk(n, s.stack, reg), reg)
+      }
+      field(f.name, if (f.multi) Schema.createArray(nullable(t)) else t)
+    }.asJava)
     rec
-  }
-
-  private def compileField(f: FField, parent: String,
-      seen: Map[String, Int], reg: FRegistry): Seq[Schema.Field] = {
-    def wrap(s: Schema): Seq[Schema.Field] =
-      Seq(field(f.name,
-        if (f.multi) Schema.createArray(nullable(s)) else s))
-    f.tpe match {
-      case FString | FCode | FDate => wrap(Schema.create(Schema.Type.STRING))
-      case FDecimal => wrap(decimalSchema)
-      case FInt => wrap(Schema.create(Schema.Type.INT))
-      case FBool => wrap(Schema.create(Schema.Type.BOOLEAN))
-      case FReference(targets) =>
-        val rec = Schema.createRecord(s"${parent}_${f.name}_Reference", null,
-          Namespace, false)
-        rec.setFields((Seq("reference", "display") ++
-          targets.map(t => lowerFirst(t) + "Id"))
-          .map(n => field(n, Schema.create(Schema.Type.STRING))).asJava)
-        wrap(rec)
-      case FChoice(_, alternatives) =>
-        alternatives.flatMap { case (suffix, tpe) =>
-          compileField(FField(f.name + suffix, tpe), parent, seen, reg)
-        }
-      case FExtension(_, tpe) =>
-        compileField(FField(f.name, tpe, f.multi), parent, seen, reg)
-      case FComplex(name) =>
-        val count = seen.getOrElse(name, 0)
-        if (count >= MaxDepth && seen.contains(name)) Nil
-        else {
-          val d = reg.complexTypes.getOrElse(name,
-            reg.extensionDefinitions.getOrElse(name, reg.resources(name)))
-          wrap(compileRecord(d, s"${parent}_${f.name}",
-            seen.updated(name, count + 1), reg))
-        }
-    }
   }
 
   // ---- value conversion ---------------------------------------------------

@@ -7,11 +7,14 @@ import graft.fhir.FhirSchemas._
   * (`AvroConverter.generateClasses` + `testCompile`,
   * /root/reference/bunsen-avro/.../AvroConverter.java:24-206): where the
   * reference emits Java source from Avro schemas at build time, this
-  * emits Scala case-class source from the SAME `FDefinition` IR the
-  * schema compiler lowers — including JSON-compiled profiles, so a user
-  * can run `FhirCodegen.caseClassSource("CarePlan", profiles.registry)`
-  * and get a typed `Dataset[T]` surface for a resource the hand-written
-  * [[model]] does not cover. The generated source follows the exact
+  * emits Scala case-class source as a leaf mapping over the same
+  * definition walk the schema compiler maps ([[FhirSchemas.walk]]: one
+  * type resolution, choice flattening and extension unwrapping, so field
+  * names and order match the Spark schema) — including JSON-compiled
+  * profiles, so a user can run
+  * `FhirCodegen.caseClassSource("CarePlan", profiles.registry)` and get
+  * a typed `Dataset[T]` surface for a resource the hand-written [[model]]
+  * does not cover. The generated source follows the exact
   * conventions of [[model]] (String leaves, Option[Int]/Option[Boolean]
   * primitives, java.math.BigDecimal decimals, Seq[_] for multi fields,
   * one synthetic `<type>Id` per reference target, flattened choice
@@ -19,9 +22,11 @@ import graft.fhir.FhirSchemas._
   * schema compiler's DataFrames.
   *
   * Recursive profiles (contentReference cycles, e.g. Questionnaire.item)
-  * are rejected loudly: a finite, non-recursive case-class graph cannot
-  * represent them (the reference's generated specific records have the
-  * same limitation — recursion is cut at the SCHEMA level).
+  * are rejected loudly: the walk runs with an empty traversal stack at
+  * every level, so the recursion budget never cuts and a cycle is seen;
+  * a finite, non-recursive case-class graph cannot represent it (the
+  * reference's generated specific records have the same limitation —
+  * recursion is cut at the SCHEMA level).
   */
 object FhirCodegen {
 
@@ -43,37 +48,22 @@ object FhirCodegen {
     val emitted = scala.collection.mutable.LinkedHashMap[String, String]()
     val inProgress = scala.collection.mutable.Set[String]()
 
-    def lookup(name: String): FDefinition =
-      reg.complexTypes.getOrElse(name,
-        reg.extensionDefinitions.getOrElse(name,
-          reg.resources.getOrElse(name, throw new IllegalArgumentException(
-            s"Unknown FHIR type: $name"))))
-
-    def scalarType(t: FhirType): String = t match {
-      case FString | FCode | FDate => "String"
-      case FDecimal => "java.math.BigDecimal"
-      case FInt => "Option[Int]"
-      case FBool => "Option[Boolean]"
-      case FComplex(n) => emitFor(n)
-      case FReference(targets) => emitRef(targets)
-      case FExtension(_, tpe) => scalarType(tpe)
-      case c: FChoice => throw new IllegalStateException(
-        s"choice ${c.base} must be flattened by the caller")
-    }
-
-    def fieldDecl(f: FField): Seq[String] = f.tpe match {
-      case FChoice(base, alternatives) =>
-        alternatives.map { case (suffix, tpe) =>
-          s"${base}${suffix}: ${scalarType(tpe)}"
-        }
-      case _ =>
-        val base = scalarType(f.tpe)
-        // Seq of Option is never what an encoder-facing surface wants —
-        // multi primitives use the unboxed element type like model does
-        val elem = if (f.multi && base == "Option[Int]") "Int"
-          else if (f.multi && base == "Option[Boolean]") "Boolean"
-          else base
-        Seq(s"${f.name}: " + (if (f.multi) s"Seq[$elem]" else elem))
+    def fieldDecl(s: Step): String = {
+      val f = s.field
+      val base = (f.tpe: @unchecked) match {
+        case FString | FCode | FDate => "String"
+        case FDecimal => "java.math.BigDecimal"
+        case FInt => "Option[Int]"
+        case FBool => "Option[Boolean]"
+        case FComplex(n) => emitFor(n)
+        case FReference(targets) => emitRef(targets)
+      }
+      // Seq of Option is never what an encoder-facing surface wants —
+      // multi primitives use the unboxed element type like model does
+      val elem = if (f.multi && base == "Option[Int]") "Int"
+        else if (f.multi && base == "Option[Boolean]") "Boolean"
+        else base
+      s"${f.name}: " + (if (f.multi) s"Seq[$elem]" else elem)
     }
 
     def emitRef(targets: Seq[String]): String = {
@@ -96,8 +86,9 @@ object FhirCodegen {
       if (!emitted.contains(cn)) {
         inProgress += name
         emitted(cn) = null // reserve ordering slot
-        val d = lookup(name)
-        val decls = d.fields.flatMap(fieldDecl)
+        // an empty stack at every level: the budget never cuts, so a
+        // cycle reaches the inProgress check above
+        val decls = walk(name, Map.empty, reg).map(fieldDecl)
         emitted(cn) =
           s"final case class $cn(\n    ${decls.mkString(",\n    ")})"
         inProgress -= name

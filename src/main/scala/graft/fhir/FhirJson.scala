@@ -1,57 +1,16 @@
 package graft.fhir
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
-/** JSON-side decode helpers (executor-safe, jackson ships with Spark):
-  * reshaping our columnar decode output into spec FHIR JSON, and FHIR JSON →
-  * FHIR XML serialization (U6, reference Functions.resourceToXml
+/** JSON-side decode helper (executor-safe, jackson ships with Spark):
+  * FHIR JSON → FHIR XML serialization (U6, reference Functions.resourceToXml
   * /root/reference/bunsen-spark-stu3/.../python/Functions.java:120-138 —
   * HAPI there, a direct structural emit here; FHIR XML mirrors JSON
   * one-to-one with primitives as value attributes). */
 object FhirJson {
 
   private val mapper = new ObjectMapper()
-
-  /** The contained column decodes as one-field-per-type structs
-    * ({"contained":[{"medication":{...}}]}); spec FHIR JSON inlines the
-    * resource with a resourceType discriminator
-    * ({"contained":[{"resourceType":"Medication",...}]}). */
-  def fixupContained(json: String): String = {
-    val root = mapper.readTree(json)
-    root match {
-      case obj: ObjectNode if obj.has("contained") =>
-        obj.get("contained") match {
-          case arr: ArrayNode =>
-            val out = mapper.createArrayNode()
-            arr.forEach { el =>
-              el match {
-                case o: ObjectNode =>
-                  val it = o.fields()
-                  var replaced: JsonNode = o
-                  while (it.hasNext) {
-                    val e = it.next()
-                    if (e.getValue.isObject) {
-                      val inner = e.getValue.asInstanceOf[ObjectNode]
-                      val shaped = mapper.createObjectNode()
-                      shaped.put("resourceType",
-                        e.getKey.substring(0, 1).toUpperCase +
-                          e.getKey.substring(1))
-                      shaped.setAll[JsonNode](inner)
-                      replaced = shaped
-                    }
-                  }
-                  out.add(replaced)
-                case other => out.add(other)
-              }
-            }
-            obj.set[JsonNode]("contained", out)
-          case _ => ()
-        }
-        mapper.writeValueAsString(obj)
-      case _ => json
-    }
-  }
 
   private def escapeXml(s: String): String = {
     val sb = new StringBuilder

@@ -10,24 +10,32 @@ import org.apache.spark.sql.types._
   * DefinitionToSparkVisitor, /root/reference/bunsen-core-stu3/.../
   * Stu3StructureDefinitions.java:260-434 + bunsen-spark/.../
   * DefinitionToSparkVisitor.java:400-641) with a pure-Scala compiler over
-  * hand-authored definitions, because the build is offline (no HAPI).
-  * Semantics preserved:
+  * hand-authored or JSON-compiled definitions, because the build is
+  * offline (no HAPI).
+  *
+  * Like the reference's one visitor framework, every backend maps ONE
+  * walk over the definition IR ([[walk]]): it resolves type names,
+  * flattens each choice `value[x]` into one field per alternative (named
+  * base + TypeName, as the fields appear in FHIR JSON, so `from_json`
+  * needs no reshaping; DefinitionToSparkVisitor.java:580-636), unwraps
+  * each hoisted profile extension to its value type keeping its url, and
+  * cuts recursion with a per-(type, path) occurrence budget of
+  * [[MaxDepth]] (Stu3StructureDefinitions.java:88-114). The leaf
+  * mappings over it are the Spark schema ([[schemaFor]]), the parse
+  * schema ([[parseSchemaFor]]), the post-parse column transform
+  * ([[postParseTransform]], [[containedTransform]]), the extension decode
+  * ([[decodeExtensions]]), the Avro schema ([[FhirAvro]]) and case-class
+  * source ([[FhirCodegen]]). Leaf semantics preserved:
   *
   *  - primitive mapping incl. `decimal → DecimalType(12,4)` and FHIR
   *    dates/instants kept as lexical strings (DefinitionToSparkVisitor
   *    .java:400-419);
   *  - multi-valued elements → `ArrayType` (`max != "1"`,
   *    Stu3StructureDefinitions.java:287-289);
-  *  - choice `value[x]` → struct of one lower-cased field per allowed type,
-  *    at most one non-null (DefinitionToSparkVisitor.java:580-636) — which in
-  *    FHIR JSON is exactly how the fields appear, so `from_json` needs no
-  *    reshaping;
   *  - `Reference` → (reference, display) plus synthetic per-target-type
   *    relative-id fields (`patientId`, …) computed by stripping the type
   *    prefix (DefinitionToSparkVisitor.java:342-378,476-519) — applied as a
-  *    column transform post-parse;
-  *  - recursion cut by a per-(type, path) occurrence budget of 1
-  *    (Stu3StructureDefinitions.java:88-114).
+  *    column transform post-parse.
   */
 object FhirSchemas {
 
@@ -321,10 +329,56 @@ object FhirSchemas {
   def lowerFirst(s: String): String =
     if (s.isEmpty) s else s.substring(0, 1).toLowerCase + s.substring(1)
 
-  private def lookupDef(name: String, reg: FRegistry): FDefinition =
-    reg.complexTypes.getOrElse(name, reg.extensionDefinitions.getOrElse(name,
-      reg.resources.getOrElse(name,
+  // ---- the definition walk -----------------------------------------------
+
+  /** One field of a walked definition. `field` is flattened: its type is
+    * never an [[FChoice]] (each alternative is its own field, named base +
+    * TypeName) nor an [[FExtension]] (a hoisted extension carries its value
+    * type, and `url` keeps the extension's url). `stack` is the traversal
+    * stack to walk the field's own type with. */
+  private[fhir] final case class Step(field: FField, url: Option[String],
+      stack: Map[String, Int])
+
+  /** The one walk over the definition IR that every backend maps: resolves
+    * `name` (complex types, then extension definitions, then resources),
+    * flattens choices, unwraps hoisted extensions, and drops each complex
+    * field whose type already sits on the traversal `stack` [[MaxDepth]]
+    * times — so a recursive definition (Questionnaire.item →
+    * #Questionnaire.item) truncates identically in the Spark schema, the
+    * parse schema, the post-parse transform and the Avro schema. A root
+    * walk's stack holds the root once; an empty stack at every level never
+    * cuts. */
+  private[fhir] def walk(name: String, stack: Map[String, Int],
+      reg: FRegistry): Seq[Step] = {
+    def steps(f: FField, url: Option[String]): Seq[Step] = f.tpe match {
+      case FChoice(_, alternatives) => alternatives.flatMap {
+        case (suffix, tpe) => steps(FField(f.name + suffix, tpe, f.multi), url)
+      }
+      case FExtension(u, tpe) => steps(FField(f.name, tpe, f.multi), Some(u))
+      case FComplex(n) =>
+        val seen = stack.getOrElse(n, 0)
+        if (seen >= MaxDepth) Nil
+        else Seq(Step(f, url, stack.updated(n, seen + 1)))
+      case _ => Seq(Step(f, url, stack))
+    }
+    val d = reg.complexTypes.getOrElse(name, reg.extensionDefinitions
+      .getOrElse(name, reg.resources.getOrElse(name,
         throw new IllegalArgumentException(s"Unknown FHIR type: $name"))))
+    d.fields.flatMap(steps(_, None))
+  }
+
+  private[fhir] def rootWalk(name: String, reg: FRegistry): Seq[Step] =
+    walk(name, Map(name -> 1), reg)
+
+  /** The sub-extensions of a hoisted parent extension (one whose value
+    * type holds only extensions, DefinitionToSparkVisitor.java:522-562);
+    * None for a leaf extension or a plain field. */
+  private def subExtensions(s: Step, reg: FRegistry): Option[Seq[Step]] =
+    (s.url, s.field.tpe) match {
+      case (Some(_), FComplex(n)) =>
+        Some(walk(n, s.stack, reg)).filter(_.forall(_.url.isDefined))
+      case _ => None
+    }
 
   /** FHIR JSON field carrying an extension's value: value + capitalized
     * type name (valueCode, valueCoding, valueString, ...). */
@@ -353,110 +407,53 @@ object FhirSchemas {
     StructField("valueBoolean", BooleanType),
     StructField("valueCoding", parseSchemaFor("Coding")))
 
+  /** A nested (sub-)extension element: the leaf slots only. */
+  private lazy val innerExtType = StructType(extensionLeafFields)
+
   /** Generic `extension` element as it appears in FHIR JSON: leaf value
     * slots plus ONE nested level of sub-extensions (parent extensions),
     * matching the reference's one-level extension tests. */
   lazy val extensionParseStruct: StructType =
     StructType(extensionLeafFields :+
-      StructField("extension", ArrayType(StructType(extensionLeafFields))))
+      StructField("extension", ArrayType(innerExtType)))
 
   /** Compile a named resource/complex type to its Spark schema. */
   def schemaFor(name: String,
-      reg: FRegistry = defaultRegistry): StructType = {
-    val d = lookupDef(name, reg)
-    compileComposite(d, Map(name -> 1), reg).asInstanceOf[StructType]
-  }
+      reg: FRegistry = defaultRegistry): StructType =
+    sparkStruct(rootWalk(name, reg), reg, parse = false)
 
-  private def compileComposite(d: FDefinition,
-      seen: Map[String, Int], reg: FRegistry): DataType = {
-    val fields = d.fields.flatMap(f => compileField(f, seen, reg))
-    StructType(fields)
-  }
-
-  private def compileField(f: FField,
-      seen: Map[String, Int], reg: FRegistry): Seq[StructField] = {
-    def wrap(dt: DataType): Seq[StructField] = {
-      val t = if (f.multi) ArrayType(dt, containsNull = true) else dt
-      Seq(StructField(f.name, t, nullable = true))
-    }
-    f.tpe match {
-      case FString | FCode | FDate => wrap(StringType)
-      case FDecimal => wrap(DecimalType(12, 4))
-      case FInt => wrap(IntegerType)
-      case FBool => wrap(BooleanType)
-      case FReference(targets) =>
-        // (reference, display) + synthetic <type>Id columns
-        val base = Seq(
-          StructField("reference", StringType),
-          StructField("display", StringType)) ++
-          targets.map(t => StructField(lowerFirst(t) + "Id", StringType))
-        wrap(StructType(base))
-      case FChoice(_, alternatives) =>
-        // one field per alternative, named base + TypeName (FHIR JSON style)
-        alternatives.flatMap { case (suffix, tpe) =>
-          compileField(FField(f.name + suffix, tpe), seen, reg)
-        }
-      case FExtension(_, tpe) =>
-        // hoisted: the named field carries the extension VALUE type directly
-        compileField(FField(f.name, tpe, f.multi), seen, reg)
-      case FComplex(name) =>
-        // recursion budget: drop the field once the type already appears on
-        // the traversal stack MaxDepth times (Stu3StructureDefinitions:88-114)
-        if (!budgetSurvives(f.tpe, seen)) Nil
-        else {
-          val d = lookupDef(name, reg)
-          wrap(compileComposite(d,
-            seen.updated(name, seen.getOrElse(name, 0) + 1), reg))
-        }
-    }
-  }
-
-  /** Parse-time schema (no synthetic reference-id fields — those are filled
-    * by [[postParseTransform]]). */
+  /** Parse-time schema: references without the synthetic id fields (those
+    * are filled by [[postParseTransform]]), and hoisted extensions parsed
+    * from the generic `extension` list instead of their named fields. */
   def parseSchemaFor(name: String,
-      reg: FRegistry = defaultRegistry): StructType = {
-    val d = reg.resources.getOrElse(name, reg.complexTypes(name))
-    StructType(parseFields(d, Map(name -> 1), reg))
-  }
+      reg: FRegistry = defaultRegistry): StructType =
+    sparkStruct(rootWalk(name, reg), reg, parse = true)
 
-  private def parseFields(d: FDefinition,
-      seen: Map[String, Int], reg: FRegistry): Seq[StructField] = {
-    val base = d.fields.flatMap(f => parseField(f, seen, reg))
-    // declared extensions parse from the GENERIC extension list; hoisting to
-    // the named fields happens in postParseTransform
-    if (d.fields.exists(_.tpe.isInstanceOf[FExtension]))
-      base :+ StructField("extension", ArrayType(extensionParseStruct))
-    else base
-  }
-
-  private def parseField(f: FField,
-      seen: Map[String, Int], reg: FRegistry): Seq[StructField] = {
-    def wrap(dt: DataType): Seq[StructField] = {
-      val t = if (f.multi) ArrayType(dt, containsNull = true) else dt
-      Seq(StructField(f.name, t, nullable = true))
+  private def sparkStruct(steps: Seq[Step], reg: FRegistry,
+      parse: Boolean): StructType = {
+    val fields = steps.filterNot(parse && _.url.isDefined).map { s =>
+      val dt = (s.field.tpe: @unchecked) match {
+        case FString | FCode | FDate => StringType
+        case FDecimal => DecimalType(12, 4)
+        case FInt => IntegerType
+        case FBool => BooleanType
+        case FReference(targets) =>
+          StructType(Seq(
+            StructField("reference", StringType),
+            StructField("display", StringType)) ++
+            (if (parse) Nil
+             else targets.map(t =>
+               StructField(lowerFirst(t) + "Id", StringType))))
+        case FComplex(n) => sparkStruct(walk(n, s.stack, reg), reg, parse)
+      }
+      StructField(s.field.name,
+        if (s.field.multi) ArrayType(dt, containsNull = true) else dt,
+        nullable = true)
     }
-    f.tpe match {
-      case FString | FCode | FDate => wrap(StringType)
-      case FDecimal => wrap(DecimalType(12, 4))
-      case FInt => wrap(IntegerType)
-      case FBool => wrap(BooleanType)
-      case FReference(_) =>
-        wrap(StructType(Seq(
-          StructField("reference", StringType),
-          StructField("display", StringType))))
-      case FChoice(_, alternatives) =>
-        alternatives.flatMap { case (suffix, tpe) =>
-          parseField(FField(f.name + suffix, tpe), seen, reg)
-        }
-      case FExtension(_, _) => Nil // parsed via the generic extension list
-      case FComplex(name) =>
-        if (!budgetSurvives(f.tpe, seen)) Nil
-        else {
-          val d = lookupDef(name, reg)
-          wrap(StructType(parseFields(d,
-            seen.updated(name, seen.getOrElse(name, 0) + 1), reg)))
-        }
-    }
+    if (parse && steps.exists(_.url.isDefined))
+      StructType(fields :+ StructField("extension",
+        ArrayType(extensionParseStruct)))
+    else StructType(fields)
   }
 
   /** Bundle-envelope parse schema: `entry.resource` is the *merged* schema of
@@ -495,19 +492,18 @@ object FhirSchemas {
   /** Merged schema + a `contained` array of the same (one level deep —
     * the reference's recursion budget cuts contained-in-contained too). */
   lazy val mergedResourceParseSchemaWithContained: StructType =
-    StructType(mergedResourceParseSchema.fields :+
-      StructField("contained", ArrayType(mergedResourceParseSchema)))
+    withContained(mergedResourceParseSchema)
 
   lazy val bundleEnvelopeSchema: StructType =
     bundleEnvelopeFrom(mergedResourceParseSchemaWithContained)
 
   /** Bundle envelope over a chosen resource subset/registry. */
   def bundleEnvelopeSchemaFor(names: Seq[String],
-      reg: FRegistry = defaultRegistry): StructType = {
-    val merged = mergedResourceParseSchemaFor(names, reg)
-    bundleEnvelopeFrom(StructType(merged.fields :+
-      StructField("contained", ArrayType(merged))))
-  }
+      reg: FRegistry = defaultRegistry): StructType =
+    bundleEnvelopeFrom(withContained(mergedResourceParseSchemaFor(names, reg)))
+
+  private def withContained(merged: StructType): StructType =
+    StructType(merged.fields :+ StructField("contained", ArrayType(merged)))
 
   private def bundleEnvelopeFrom(resourceSchema: StructType): StructType =
     StructType(Seq(
@@ -525,18 +521,7 @@ object FhirSchemas {
     * hoist declared extensions out of the generic extension list. */
   def postParseTransform(resourceName: String, c: Column,
       reg: FRegistry = defaultRegistry): Column =
-    transformFor(reg.resources(resourceName), resourceName, c, reg)
-
-  /** Fields of `d` that survive the recursion budget given the traversal
-    * stack `seen` — the single truncation rule shared by schema compile,
-    * parse schema, and post-parse transform, so a recursive definition
-    * (Questionnaire.item → #Questionnaire.item) truncates IDENTICALLY in
-    * all three and the transform never references a parse-dropped field. */
-  private def budgetSurvives(tpe: FhirType, seen: Map[String, Int]): Boolean =
-    tpe match {
-      case FComplex(n) => seen.getOrElse(n, 0) < MaxDepth
-      case _ => true
-    }
+    transformStruct(rootWalk(resourceName, reg), c, reg)
 
   /** S5: shape a parsed `contained` array (merged-schema elements) into the
     * reference's one-field-per-declared-type struct
@@ -547,39 +532,25 @@ object FhirSchemas {
     transform(resourceCol.getField("contained"), x =>
       struct(containedTypes.map { n =>
         when(x.getField("resourceType") === n,
-          transformFor(reg.resources(n), n, x, reg)).as(lowerFirst(n))
+          postParseTransform(n, x, reg)).as(lowerFirst(n))
       }: _*))
 
-  private[fhir] def transformFor(d: FDefinition, name: String,
-      c: Column, reg: FRegistry = defaultRegistry,
-      seen: Map[String, Int] = null): Column = {
-    // default traversal stack: the root type counts as one occurrence,
-    // mirroring schemaFor/parseSchemaFor
-    val seen1 = if (seen == null) Map(name -> 1) else seen
-    val cols = d.fields.flatMap { f =>
-      f.tpe match {
-        case FChoice(_, alternatives) =>
-          alternatives.flatMap { case (suffix, tpe) =>
-            val n = f.name + suffix
-            transformLeaf(FField(n, tpe, f.multi), c, reg, seen1)
-          }
-        case _ => transformLeaf(f, c, reg, seen1)
-      }
-    }
-    when(c.isNotNull, struct(cols: _*))
-  }
+  private def transformStruct(steps: Seq[Step], c: Column,
+      reg: FRegistry): Column =
+    when(c.isNotNull, struct(steps.map { s =>
+      transformField(s, c, reg).as(s.field.name)
+    }: _*))
 
-  private def transformLeaf(f: FField, parent: Column,
-      reg: FRegistry, seen: Map[String, Int]): Seq[Column] = {
-    // recursion budget: drop exactly the fields parseField dropped, so the
-    // transform never does getField on a field the parse schema truncated
-    if (!budgetSurvives(f.tpe, seen)) return Nil
+  private def transformField(s: Step, parent: Column,
+      reg: FRegistry): Column = {
+    val f = s.field
     val child = parent.getField(f.name)
-    val out: Column = f.tpe match {
-      case FCode =>
-        if (f.multi) transform(child, x => when(x === "?", null).otherwise(x))
-        else when(child === "?", lit(null)).otherwise(child)
-      case FReference(targets) =>
+    (s.url, f.tpe) match {
+      case (Some(url), _) =>
+        extensionValue(parent.getField("extension"), url, s, reg)
+      case (_, FCode) =>
+        if (f.multi) transform(child, scrub(_)) else scrub(child)
+      case (_, FReference(targets)) =>
         def refStruct(x: Column): Column = when(x.isNotNull, struct(
           (Seq(x.getField("reference").as("reference"),
             x.getField("display").as("display")) ++
@@ -587,127 +558,93 @@ object FhirSchemas {
               val prefix = t + "/"
               val r = x.getField("reference")
               when(r.startsWith(prefix),
-                expr_substring_after(r, prefix)).as(lowerFirst(t) + "Id")
+                substring(r, prefix.length + 1, Int.MaxValue))
+                .as(lowerFirst(t) + "Id")
             }): _*))
         if (f.multi) transform(child, refStruct(_)) else refStruct(child)
-      case FExtension(url, tpe) =>
-        extensionValue(parent.getField("extension"), url, tpe, f.multi, reg)
-      case FComplex(n) =>
-        val d = reg.complexTypes.getOrElse(n, reg.resources.get(n).orNull)
-        val deeper = seen.updated(n, seen.getOrElse(n, 0) + 1)
-        if (d == null) child
-        else if (f.multi)
-          transform(child, x => transformFor(d, n, x, reg, deeper))
-        else transformFor(d, n, child, reg, deeper)
+      case (_, FComplex(n)) =>
+        val inner = walk(n, s.stack, reg)
+        if (f.multi) transform(child, transformStruct(inner, _, reg))
+        else transformStruct(inner, child, reg)
       case _ => child
     }
-    Seq(out.as(f.name))
   }
+
+  private def scrub(c: Column): Column = when(c === "?", lit(null)).otherwise(c)
 
   /** Hoist one declared extension from a generic extension array: select
     * elements matching `url`, then read the typed value slot (leaf) or
     * assemble the nested sub-extension struct (parent). */
-  private def extensionValue(extArray: Column, url: String, tpe: FhirType,
-      multi: Boolean, reg: FRegistry): Column = {
+  private def extensionValue(extArray: Column, url: String, s: Step,
+      reg: FRegistry): Column = {
     val matching = filter(extArray, e => e.getField("url") === lit(url))
-    def leaf(e: Column): Column = tpe match {
-      case FCode =>
-        val v = e.getField(valueFieldName(tpe))
-        when(v === "?", lit(null)).otherwise(v)
-      case FComplex(n) if reg.extensionDefinitions.contains(n) =>
+    val tpe = s.field.tpe
+    def leaf(e: Column): Column = (tpe, subExtensions(s, reg)) match {
+      case (_, Some(children)) =>
         // parent extension: children parse from the element's own
         // (one-level) extension list
-        val d = reg.extensionDefinitions(n)
-        when(e.isNotNull, struct(d.fields.map { cf =>
-          cf.tpe match {
-            case FExtension(curl, ctpe) =>
-              extensionValue(e.getField("extension"), curl, ctpe, cf.multi,
-                reg).as(cf.name)
-            case other => throw new IllegalArgumentException(
-              s"Parent extension ${d.name} may only contain FExtension " +
-                s"fields, found $other")
-          }
+        when(e.isNotNull, struct(children.map { c =>
+          extensionValue(e.getField("extension"), c.url.get, c, reg)
+            .as(c.field.name)
         }: _*))
-      case FComplex(n) =>
-        val cd = reg.complexTypes(n)
-        transformFor(cd, n, e.getField(valueFieldName(tpe)), reg)
+      case (FCode, _) => scrub(e.getField(valueFieldName(tpe)))
+      case (FComplex(n), _) =>
+        transformStruct(walk(n, s.stack, reg),
+          e.getField(valueFieldName(tpe)), reg)
       case _ => e.getField(valueFieldName(tpe))
     }
-    if (multi) transform(matching, leaf(_))
+    if (s.field.multi) transform(matching, leaf(_))
     else leaf(try_element_at(matching, lit(1)))
   }
-
-  private def expr_substring_after(c: Column, prefix: String): Column =
-    substring(c, prefix.length + 1, Int.MaxValue)
 
   // ---- decode path: rebuild the generic extension list from hoisted
   // fields (inverse of extensionValue), so toJson/toBundle emit spec-shaped
   // FHIR JSON that re-ingests identically --------------------------------
 
-  private lazy val innerExtType = StructType(extensionLeafFields)
-
-  /** Inner (nested) extension element: url + exactly one populated value
-    * slot, all other slots null. */
-  private def innerElem(url: String, slot: String, v: Column): Column =
-    struct(extensionLeafFields.map { sf =>
+  /** An extension element's leaf slots: the url, `value` in its slot,
+    * every other slot null. */
+  private def leafSlots(url: String,
+      value: Option[(String, Column)]): Seq[Column] =
+    extensionLeafFields.map { sf =>
       (if (sf.name == "url") lit(url)
-       else if (sf.name == slot) v
-       else lit(null).cast(sf.dataType)).as(sf.name)
-    }: _*)
-
-  /** Outer extension element: leaf slots + a nested extension array. */
-  private def outerElem(url: String, slot: Option[(String, Column)],
-      children: Option[Column]): Column =
-    struct((extensionLeafFields.map { sf =>
-      (if (sf.name == "url") lit(url)
-       else slot.collect { case (n, v) if n == sf.name => v }
+       else value.collect { case (n, v) if n == sf.name => v }
          .getOrElse(lit(null).cast(sf.dataType))).as(sf.name)
-    } :+ children.getOrElse(lit(null).cast(ArrayType(innerExtType)))
-      .as("extension")): _*)
+    }
 
   /** Rebuild the generic `extension` array for a resource's hoisted
     * extension fields; None when the resource declares none. The result
     * column is null when no extension is populated. */
   def decodeExtensions(resourceName: String,
       reg: FRegistry = defaultRegistry): Option[Column] = {
-    val d = reg.resources(resourceName)
-    val extFields = d.fields.filter(_.tpe.isInstanceOf[FExtension])
+    val extFields = rootWalk(resourceName, reg).filter(_.url.isDefined)
     if (extFields.isEmpty) return None
     // every per-field array is coalesced to empty before concat: a null
     // multi-field array (transform over null) would otherwise null the
     // whole concat and silently drop every SIBLING extension
     def orEmpty(c: Column, et: DataType): Column =
       coalesce(c, array().cast(ArrayType(et)))
-    val arrays: Seq[Column] = extFields.map { f =>
-      val FExtension(url, tpe) = f.tpe: @unchecked
-      val src = col(f.name)
-      tpe match {
-        case FComplex(n) if reg.extensionDefinitions.contains(n) =>
-          val dd = reg.extensionDefinitions(n)
-          val childArrays: Seq[Column] = dd.fields.map { cf =>
-            val FExtension(curl, ctpe) = cf.tpe: @unchecked
-            val cslot = valueFieldName(ctpe)
-            val csrc = src.getField(cf.name)
-            val arr =
-              if (cf.multi) transform(csrc, x => innerElem(curl, cslot, x))
-              else array(when(csrc.isNotNull, innerElem(curl, cslot, csrc)))
-            orEmpty(arr, innerExtType)
-          }
-          val children = filter(concat(childArrays: _*), _.isNotNull)
-          array(when(src.isNotNull,
-            outerElem(url, None, Some(children))))
-        case leafTpe =>
-          val slot = valueFieldName(leafTpe)
-          if (f.multi)
-            transform(src, x => outerElem(url, Some(slot -> x), None))
-          else array(when(src.isNotNull,
-            outerElem(url, Some(slot -> src), None)))
+    // one element per value of a multi field, one for a set single field
+    def elems(src: Column, multi: Boolean)(elem: Column => Column): Column =
+      if (multi) transform(src, elem) else array(when(src.isNotNull, elem(src)))
+    def slot(s: Step, v: Column) = Some(valueFieldName(s.field.tpe) -> v)
+    val arrays: Seq[Column] = extFields.map { s =>
+      val src = col(s.field.name)
+      subExtensions(s, reg) match {
+        case Some(children) =>
+          val nested = filter(concat(children.map { c =>
+            orEmpty(elems(src.getField(c.field.name), c.field.multi)(v =>
+              struct(leafSlots(c.url.get, slot(c, v)): _*)), innerExtType)
+          }: _*), _.isNotNull)
+          elems(src, multi = false)(_ =>
+            struct(leafSlots(s.url.get, None) :+ nested.as("extension"): _*))
+        case None =>
+          elems(src, s.field.multi)(v => struct(leafSlots(s.url.get,
+            slot(s, v)) :+ lit(null).cast(ArrayType(innerExtType))
+            .as("extension"): _*))
       }
     }
-    val outerType = StructType(extensionLeafFields :+
-      StructField("extension", ArrayType(innerExtType)))
-    val all = filter(concat(arrays.map(orEmpty(_, outerType)): _*),
-      _.isNotNull)
+    val all = filter(
+      concat(arrays.map(orEmpty(_, extensionParseStruct)): _*), _.isNotNull)
     Some(when(size(all) > 0, all))
   }
 
@@ -715,6 +652,5 @@ object FhirSchemas {
     * the plain-column JSON emit). */
   def extensionFieldNames(resourceName: String,
       reg: FRegistry = defaultRegistry): Seq[String] =
-    reg.resources(resourceName).fields
-      .filter(_.tpe.isInstanceOf[FExtension]).map(_.name)
+    rootWalk(resourceName, reg).filter(_.url.isDefined).map(_.field.name)
 }

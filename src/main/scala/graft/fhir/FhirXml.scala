@@ -134,14 +134,9 @@ object FhirXml {
       node.attrs.get("value").map(primitive(_, leaf))
   }
 
-  /** Convert one FHIR XML bundle document to its JSON equivalent. */
-  def bundleXmlToJson(xml: String): String =
-    emit(parse(xml), FhirSchemas.bundleEnvelopeSchema)
-      .getOrElse("{}")
-
-  /** Convert one standalone FHIR XML resource to JSON against the merged
-    * resource schema (used for ValueSet/ConceptMap-style directory imports
-    * and tests). */
+  /** Convert one FHIR XML document — a bundle against its envelope, or a
+    * standalone resource (ValueSet/ConceptMap-style directory imports)
+    * against its parse schema — to the JSON that schema parses. */
   def resourceXmlToJson(xml: String, schema: StructType): String =
     emit(parse(xml), schema).getOrElse("{}")
 }

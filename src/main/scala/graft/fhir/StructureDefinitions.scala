@@ -372,14 +372,11 @@ object StructureDefinitions {
         Map[String, FDefinition]],
       skipped: scala.collection.mutable.Builder[String, Seq[String]])
       : Option[FhirType] = {
-    primitiveTypes.get(code) match {
-      case Some(p) => Some(p)
-      case None if code == "Reference" =>
+    code match {
+      case "Reference" =>
         Some(FReference(Option(t).toSeq
           .flatMap(x => text(x, "targetProfile")).map(refTarget)))
-      case None if defaultRegistry.complexTypes.contains(code) =>
-        Some(FComplex(code))
-      case None if code == "BackboneElement" || code == "Element" =>
+      case "BackboneElement" | "Element" =>
         // inline composite: compile from the element's own children under a
         // synthetic path-derived name
         val (fields, innerMinted) = compileChildren(path, children,
@@ -390,9 +387,15 @@ object StructureDefinitions {
           minted += path -> FDefinition(path, fields)
           Some(FComplex(path))
         }
-      case None => None
+      case _ => typeOf(code)
     }
   }
+
+  /** The one type-code → FhirType mapping: a primitive, or a datatype the
+    * default registry defines. */
+  private def typeOf(code: String): Option[FhirType] =
+    primitiveTypes.get(code).orElse(
+      Option.when(defaultRegistry.complexTypes.contains(code))(FComplex(code)))
 
   // ---- extension definitions ---------------------------------------------
 
@@ -415,9 +418,7 @@ object StructureDefinitions {
         (p.startsWith("Extension.value") && !isRemoved(e))
       }
       .flatMap { e =>
-        typeEntries(e).flatMap(t => text(t, "code"))
-          .flatMap(c => primitiveTypes.get(c).orElse(
-            Option.when(defaultRegistry.complexTypes.contains(c))(FComplex(c))))
+        typeEntries(e).flatMap(t => text(t, "code")).flatMap(typeOf)
           .headOption
       }.toSeq.headOption
     leaf match {
@@ -452,9 +453,7 @@ object StructureDefinitions {
           } else if (p.startsWith("Extension.extension.value") &&
               !isRemoved(e) && sliceTpe.isEmpty) {
             sliceTpe = typeEntries(e).flatMap(t => text(t, "code"))
-              .flatMap(c => primitiveTypes.get(c).orElse(
-                Option.when(defaultRegistry.complexTypes.contains(c))(
-                  FComplex(c)))).headOption
+              .flatMap(typeOf).headOption
           }
         }
         flush()

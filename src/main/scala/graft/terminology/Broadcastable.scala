@@ -1,7 +1,6 @@
 package graft.terminology
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Driver-built, executor-shipped lookup structures for valueset membership
   * and concept-map translation.
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * BroadcastableValueSets.java:26-371 and BroadcastableConceptMap.java:22-125.
   * The nested-map layout (reference name → system → set of codes) is kept so
   * per-row membership checks are O(1) hash lookups executor-side; the builder
-  * joins run on the cluster and only the final (small) lookup rows are
+  * filters run on the cluster and only the final (small) lookup rows are
   * collected.
   */
 final case class BroadcastableValueSets(
@@ -79,36 +78,44 @@ object BroadcastableValueSets {
 
       var resolved: Seq[(String, String, String)] = codes
 
+      // the wanted rows are read by predicates on the partition columns
+      // and collected once per key; reference names sharing a key are
+      // attached here, on the driver
       if (references.nonEmpty) {
         lazy val latest =
           valueSets.getLatestVersionsMap(includeExperimental = true)
-        val want = references.map { case (ref, uri, v) =>
-          (ref, uri, pin("valueset", latest)(uri, v))
-        }.toDF("referenceName", "valueSetUri", "valueSetVersion")
-        // J2: values ⋈ references on uri+version, project, collect
+        val want = references.groupMap { case (_, uri, v) =>
+          (uri, pin("valueset", latest)(uri, v)) }(_._1)
+        // J2: values of the wanted versions
         // (BroadcastableValueSets.java:267-287)
         resolved ++= valueSets.getValues.toDF()
-          .join(broadcast(want), Seq("valueSetUri", "valueSetVersion"))
-          .select($"referenceName", $"system", $"value")
-          .as[(String, String, String)].collect()
+          .where(ValueSetKind.versionsIn(want.keys))
+          .select($"valueSetUri", $"valueSetVersion", $"system", $"value")
+          .as[(String, String, String, String)].collect()
+          .flatMap { case (uri, v, system, value) =>
+            want((uri, v)).map((_, system, value))
+          }
       }
 
       if (ancestors.nonEmpty) {
         lazy val latest = hierarchies.getLatestVersions
-        val want = ancestors.map { case (ref, uri, v, system, value) =>
-          (ref, uri, pin("hierarchy", latest)(uri, v), system, value)
-        }
-        // J3: ancestors ⋈ wanted codes, 4-column equi-join
+        val want = ancestors.groupMap { case (_, uri, v, system, value) =>
+          (uri, pin("hierarchy", latest)(uri, v), system, value) }(_._1)
+        // J3: descendants of the wanted codes
         // (BroadcastableValueSets.java:295-324)
         resolved ++= hierarchies.getAncestors.toDF()
-          .join(broadcast(want.toDF("referenceName", "uri", "version",
-            "ancestorSystem", "ancestorValue")),
-            Seq("uri", "version", "ancestorSystem", "ancestorValue"))
-          .select($"referenceName", $"descendantSystem", $"descendantValue")
-          .as[(String, String, String)].collect()
+          .where(HierarchyKind.versionsIn(want.keys.map(k => (k._1, k._2))) &&
+            CollectionKind.pairIn(want.keys.map(k => (k._3, k._4)),
+              $"ancestorSystem", $"ancestorValue"))
+          .select($"uri", $"version", $"ancestorSystem", $"ancestorValue",
+            $"descendantSystem", $"descendantValue")
+          .as[(String, String, String, String, String, String)].collect()
+          .flatMap { case (uri, v, as, av, system, value) =>
+            want.getOrElse((uri, v, as, av), Nil).map((_, system, value))
+          }
         // the ancestor includes itself (reference :316-323)
-        resolved ++= want.map { case (ref, _, _, system, value) =>
-          (ref, system, value)
+        resolved ++= want.toSeq.flatMap { case ((_, _, system, value), refs) =>
+          refs.map((_, system, value))
         }
       }
 

@@ -1,6 +1,6 @@
 package graft.terminology
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** What tells the three terminology collections apart. ValueSets,
@@ -27,14 +27,14 @@ private[graft] sealed abstract class CollectionKind(val rowsTable: String,
   def rowsOf[T](rows: Dataset[T], uri: String, version: String): Dataset[T] =
     rows.where(col(uriCol) === uri && col(versionCol) === version)
 
-  /** Rows for a uri → version map: a broadcast semi-join against a literal
-    * frame, which Catalyst can see and prune with. */
-  def rowsFor[T](rows: Dataset[T], versions: Map[String, String]): Dataset[T] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.join(broadcast(versions.toSeq.toDF(uriCol, versionCol)),
-      Seq(uriCol, versionCol), "left_semi").as[T](rows.encoder)
-  }
+  /** Rows for a uri → version map: a predicate on the partition columns,
+    * so a persisted collection prunes to those versions and no job runs. */
+  def rowsFor[T](rows: Dataset[T], versions: Map[String, String]): Dataset[T] =
+    rows.where(versionsIn(versions))
+
+  /** `(uri, version)` is one of `pairs`. */
+  def versionsIn(pairs: Iterable[(String, String)]): Column =
+    pairIn(pairs, col(uriCol), col(versionCol))
 
   def metaRow(meta: DataFrame, uri: String, version: String): Option[Row] =
     meta.where(col("url") === uri && col("version") === version)
@@ -154,6 +154,14 @@ private[graft] sealed abstract class CollectionKind(val rowsTable: String,
 private[graft] object CollectionKind {
 
   private val urlAndVersion = Encoders.product[UrlAndVersion]
+
+  /** `(key, value)` is one of `pairs`: a lookup in a map literal key →
+    * values, which stays one expression however many pairs there are (an
+    * `OR` chain of equalities grows with them). */
+  def pairIn(pairs: Iterable[(String, String)], key: Column,
+      value: Column): Column =
+    array_contains(try_element_at(typedLit(pairs.groupMap(_._1)(_._2)
+      .map { case (k, vs) => k -> vs.toSeq.distinct }), key), value)
 
   /** Database/table-name guard before SQL interpolation (the reference's
     * TABLE_NAME_PATTERN, AbstractValueSets.createValuesTable :569-610). */

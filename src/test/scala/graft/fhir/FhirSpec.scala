@@ -414,7 +414,7 @@ class FhirSpec extends SparkSuite {
         struct(lit("MedicationRequest").as("resourceType") +:
           mr.columns.toSeq.map(col): _*),
         Map("ignoreNullFields" -> "true")).as("json"))
-      .collect().map(r => FhirJson.fixupContained(r.getString(0)))
+      .collect().map(r => JacksonFixup.fixupContained(r.getString(0)))
     assert(fast.collect().map(_.getString(0)).toSeq === legacy.toSeq)
     assert(!fast.queryExecution.executedPlan.toString.contains("UDF"),
       "contained toJson fast path must not fall back to the jackson UDF")
@@ -464,5 +464,90 @@ class FhirSpec extends SparkSuite {
     val rows = df.collect()
     assert(rows.length === 2)
     assert(rows.map(_.getAs[String]("patient_id")).sorted === Array("p1", "p2"))
+  }
+
+  test("xml bundles parse against the caller's envelope: a profile-only " +
+    "field comes back from XML as from JSON") {
+    import spark.implicits._
+    // us-core-patient declares telecom; the default Patient does not
+    val reg = StructureDefinitions.shipped.registryFor(
+      "http://hl7.org/fhir/us/core/StructureDefinition/us-core-patient")
+    val json = Seq(
+      """{"resourceType":"Bundle","type":"collection","entry":[
+        {"resource":{"resourceType":"Patient","id":"pt","gender":"female",
+          "telecom":[{"system":"phone","value":"555","use":"home"}]}}]}""")
+    val xml = Seq(
+      """<Bundle xmlns="http://hl7.org/fhir"><type value="collection"/>
+        |<entry><resource><Patient><id value="pt"/>
+        |  <gender value="female"/>
+        |  <telecom><system value="phone"/><value value="555"/>
+        |    <use value="home"/></telecom>
+        |</Patient></resource></entry></Bundle>""".stripMargin)
+    val viaJson = Bundles.extractEntry(spark,
+      Bundles.fromJson(json.toDF("j"), "j", reg, Seq("Patient")), "Patient",
+      Nil, reg).collect()
+    val viaXml = Bundles.extractEntry(spark,
+      Bundles.fromXml(xml.toDF("x"), "x", reg, Seq("Patient")), "Patient",
+      Nil, reg).collect()
+    assert(viaJson.head.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](
+      "telecom").head.getAs[String]("value") === "555")
+    assert(viaXml.toSeq === viaJson.toSeq)
+  }
+
+  test("toJson splices contained last: a Patient with extensions plus " +
+    "contained, and a frame with contained mid-row") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def bundles(resources: String*) = resources.map(r =>
+      s"""{"resourceType":"Bundle","type":"collection","entry":[""" +
+        s"""{"resource":$r}]}""").toDF("bundle_json")
+    val patients = Bundles.extractEntry(spark, bundles(
+      s"""{"resourceType":"Patient","id":"px","gender":"female",
+        "extension":[
+          {"url":"${FhirSchemas.BirthSexExtensionUrl}","valueCode":"F"},
+          {"url":"${FhirSchemas.RaceExtensionUrl}","extension":[
+            {"url":"ombCategory","valueCoding":{"system":"urn:oid:2.16.840.1.113883.6.238","code":"2106-3"}},
+            {"url":"text","valueString":"Mixed"}]}],
+        "contained":[{"resourceType":"Observation","id":"o9",
+          "status":"final"}]}""",
+      """{"resourceType":"Patient","id":"py","gender":"male"}"""),
+      "Patient", Seq("Observation"))
+    val orders = Bundles.extractEntry(spark, bundles(
+      """{"resourceType":"MedicationRequest","id":"mrA","status":"active",
+        "intent":"order","medicationReference":{"reference":"#mA"},
+        "contained":[{"resourceType":"Medication","id":"mA",
+          "status":"active"}]}""",
+      """{"resourceType":"MedicationRequest","id":"mrB",
+        "status":"completed"}"""),
+      "MedicationRequest", Seq("Medication"))
+    val midRow = orders.select(col("id") +: col("contained") +:
+      orders.columns.toSeq.filterNot(Set("id", "contained")).map(col): _*)
+    // the document-level path: the row serialized in place with the
+    // rebuilt extension list last, then the jackson reshape
+    def reference(df: DataFrame, rt: String): Seq[String] = {
+      val ext = FhirSchemas.extensionFieldNames(rt).toSet
+      val cols = lit(rt).as("resourceType") +:
+        df.columns.toSeq.filterNot(ext).map(col)
+      val all = FhirSchemas.decodeExtensions(rt) match {
+        case Some(e) if df.columns.exists(ext) => cols :+ e.as("extension")
+        case _ => cols
+      }
+      df.select(to_json(struct(all: _*), Map("ignoreNullFields" -> "true")))
+        .collect().map(r => JacksonFixup.fixupContained(r.getString(0)))
+        .toSeq
+    }
+    Seq((patients, "Patient", "Observation"),
+        (midRow, "MedicationRequest", "Medication")).foreach {
+      case (df, rt, containedType) =>
+        val out = Bundles.toJson(df, rt).as[String].collect().toSeq
+        assert(out.map(mapper.readTree) === reference(df, rt)
+          .map(mapper.readTree))
+        val back = Bundles.extractEntry(spark, bundles(out: _*), rt,
+          Seq(containedType)).select(df.columns.toSeq.map(col): _*)
+        assert(back.orderBy("id").collect().toSeq ===
+          df.orderBy("id").collect().toSeq)
+    }
   }
 }

@@ -203,22 +203,7 @@ class StructureDefinitionsSpec extends SparkSuite {
   // The reference cuts this with a per-(type, path) depth budget of 1
   // (Stu3StructureDefinitions.java:88-114); ours must compile, truncate
   // identically in schema/parse/transform, and round-trip.
-  private val questionnaireJson =
-    """{"resourceType":"StructureDefinition",
-       "url":"http://example.org/StructureDefinition/Questionnaire",
-       "kind":"resource","type":"Questionnaire",
-       "snapshot":{"element":[
-         {"path":"Questionnaire","max":"1"},
-         {"path":"Questionnaire.id","max":"1","type":[{"code":"id"}]},
-         {"path":"Questionnaire.status","max":"1","type":[{"code":"code"}]},
-         {"path":"Questionnaire.item","max":"*",
-          "type":[{"code":"BackboneElement"}]},
-         {"path":"Questionnaire.item.linkId","max":"1",
-          "type":[{"code":"string"}]},
-         {"path":"Questionnaire.item.prefix","max":"1",
-          "type":[{"code":"string"}]},
-         {"path":"Questionnaire.item.item","max":"*",
-          "contentReference":"#Questionnaire.item"}]}}"""
+  private val questionnaireJson = StructureDefinitionsSpec.questionnaireJson
 
   test("recursive contentReference compiles and truncates at the depth " +
     "budget in schema, parse schema, and transform alike") {
@@ -334,4 +319,25 @@ class StructureDefinitionsSpec extends SparkSuite {
       s"expected a SampledData skip, got: ${cp.skipped}")
     assert(cp.resources("Widget").fields.map(_.name) === Seq("id"))
   }
+}
+
+object StructureDefinitionsSpec {
+  /** Recursive Questionnaire: item.item is a contentReference back to
+    * #Questionnaire.item. */
+  val questionnaireJson =
+    """{"resourceType":"StructureDefinition",
+       "url":"http://example.org/StructureDefinition/Questionnaire",
+       "kind":"resource","type":"Questionnaire",
+       "snapshot":{"element":[
+         {"path":"Questionnaire","max":"1"},
+         {"path":"Questionnaire.id","max":"1","type":[{"code":"id"}]},
+         {"path":"Questionnaire.status","max":"1","type":[{"code":"code"}]},
+         {"path":"Questionnaire.item","max":"*",
+          "type":[{"code":"BackboneElement"}]},
+         {"path":"Questionnaire.item.linkId","max":"1",
+          "type":[{"code":"string"}]},
+         {"path":"Questionnaire.item.prefix","max":"1",
+          "type":[{"code":"string"}]},
+         {"path":"Questionnaire.item.item","max":"*",
+          "contentReference":"#Questionnaire.item"}]}}"""
 }

@@ -141,4 +141,23 @@ class PersistenceSpec extends SparkSuite {
       Map("urn:cm:delegating" -> "2"))
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
   }
+
+  test("a version map reads only the stored partitions of those versions") {
+    val db = "graft_test_vs_prune"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    ValueSets.getEmpty(spark)
+      .withValueSet("urn:vs:q1", "1", Seq(("s", "a")))
+      .withValueSet("urn:vs:q1", "2", Seq(("s", "b")))
+      .withValueSet("urn:vs:q2", "1", Seq(("s", "c")))
+      .writeToDatabase(db)
+    val picked = ValueSets.getFromDatabase(spark, db)
+      .getValues(Map("urn:vs:q1" -> "2", "urn:vs:q2" -> "1"))
+    assert(picked.collect().map(_.value).sorted === Array("b", "c"))
+    val scans = picked.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size === 1 && scans.head.partitionFilters.nonEmpty)
+    assert(scans.head.metrics("numPartitions").value === 2)
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+  }
 }

@@ -315,4 +315,33 @@ class TerminologySpec extends SparkSuite {
     assert(!merged.getValues("urn:vs:a", "1").collect()
       .exists(_.value == "dup-should-drop"))
   }
+
+  test("broadcast valuesets: references sharing one version, a latest " +
+    "reference and a descendants-of request") {
+    import spark.implicits._
+    val hierarchies = Hierarchies.getEmpty(spark)
+      .withHierarchyElements("urn:h:codes", "1", Seq(
+        HierarchicalElement("s", "parent", "s", "child1"),
+        HierarchicalElement("s", "child1", "s", "grandchild"),
+        HierarchicalElement("s", "other", "s", "child2")).toDS())
+      .withHierarchyElements("urn:h:more", "1", Seq(
+        HierarchicalElement("s", "parent", "s", "elsewhere")).toDS())
+    val b = BroadcastableValueSets.newBuilder()
+      .addReference("a1", "urn:vs:a", "1")
+      .addReference("a1_again", "urn:vs:a", "1")
+      .addReference("a_latest", "urn:vs:a") // latest → version 2
+      .addReference("b1", "urn:vs:b", "1")
+      .addDescendantsOf("family", "s", "parent", "urn:h:codes", "1")
+      .build(spark, vs, hierarchies)
+    val membership = b.valueSets.map { case (ref, bySystem) =>
+      ref -> bySystem.toSeq.flatMap { case (s, codes) => codes.map(s -> _) }
+        .sorted
+    }
+    assert(membership === Map(
+      "a1" -> Seq("sys1" -> "c1", "sys1" -> "c2"),
+      "a1_again" -> Seq("sys1" -> "c1", "sys1" -> "c2"),
+      "a_latest" -> Seq("sys1" -> "c1"),
+      "b1" -> Seq("sys2" -> "x"),
+      "family" -> Seq("s" -> "child1", "s" -> "grandchild", "s" -> "parent")))
+  }
 }

@@ -46,6 +46,19 @@ import graft.streaming.Streams
   * whose plan unions a checkpointed frame with a join: one per fixpoint
   * round).
   *
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> fhir"
+  *
+  * FHIR ingest in the benchmark's `cohort_query` shape: 48 patient
+  * bundles (a Patient with race and birth-sex extensions and a telecom,
+  * observations, a condition, an encounter and a medication request with
+  * a contained medication), one in six of them as FHIR XML. Verbs:
+  * `fromXml` plus a count, `fromJson` plus `saveAsDatabase` of the five
+  * tables (JSON and XML together), a US-Core profile `extractEntry` plus
+  * a write, and a contained `toJson` round trip — after one unmeasured
+  * warm-up round. Writes `<outDir>/fhir_<tag>.{json,md}`: per verb its
+  * Spark jobs, SQL executions, input files read (the scans' "number of
+  * files read") and wall time.
+  *
   * Only public calls are used, so the same file measures any version of
   * the library. */
 object ProbeJobs {
@@ -79,8 +92,9 @@ object ProbeJobs {
       case Array(outDir, tag) => probes(outDir, tag)
       case Array(outDir, tag, "stream") => streams(outDir, tag)
       case Array(outDir, tag, "terminology") => terminology(outDir, tag)
+      case Array(outDir, tag, "fhir") => fhir(outDir, tag)
       case _ =>
-        sys.error("usage: ProbeJobs <outDir> <tag> [stream|terminology]")
+        sys.error("usage: ProbeJobs <outDir> <tag> [stream|terminology|fhir]")
     }
     spark.stop()
   }
@@ -360,6 +374,158 @@ object ProbeJobs {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, s"terminology_$tag.json"), json)
     Files.writeString(Paths.get(outDir, s"terminology_$tag.md"),
+      md.mkString("", "\n", "\n"))
+    println(md.mkString("\n"))
+  }
+
+  // ===== fhir =====
+
+  private val fhirTables =
+    Seq("Patient", "Observation", "Condition", "Encounter", "MedicationRequest")
+
+  /** One patient bundle as FHIR JSON and as FHIR XML. */
+  private def patientBundle(i: Int): (String, String) = {
+    import graft.fhir.FhirSchemas.{BirthSexExtensionUrl, RaceExtensionUrl}
+    val p = f"p$i%04d"
+    val obs = (0 until 3).map { k =>
+      (s"""{"resourceType":"Observation","id":"$p-o$k","status":"final",""" +
+        s""""code":{"coding":[{"system":"http://loinc.org","code":"8867-$k"}]},""" +
+        s""""subject":{"reference":"Patient/$p"},""" +
+        s""""valueQuantity":{"value":${60 + (i * 7 + k) % 40}.5,"unit":"bpm"}}""",
+       s"""<Observation><id value="$p-o$k"/><status value="final"/>""" +
+        s"""<code><coding><system value="http://loinc.org"/>""" +
+        s"""<code value="8867-$k"/></coding></code>""" +
+        s"""<subject><reference value="Patient/$p"/></subject>""" +
+        s"""<valueQuantity><value value="${60 + (i * 7 + k) % 40}.5"/>""" +
+        """<unit value="bpm"/></valueQuantity></Observation>""")
+    }
+    val json = Seq(
+      s"""{"resourceType":"Patient","id":"$p","gender":"female",""" +
+        s""""birthDate":"19${50 + i % 50}-01-02",""" +
+        s""""telecom":[{"system":"phone","value":"555-$i"}],""" +
+        s""""extension":[{"url":"$BirthSexExtensionUrl","valueCode":"F"},""" +
+        s"""{"url":"$RaceExtensionUrl","extension":[{"url":"ombCategory",""" +
+        """"valueCoding":{"system":"urn:oid:2.16.840.1.113883.6.238",""" +
+        """"code":"2106-3"}},{"url":"text","valueString":"White"}]}]}""") ++
+      obs.map(_._1) ++ Seq(
+      s"""{"resourceType":"Condition","id":"$p-c","subject":{"reference":"Patient/$p"},""" +
+        """"code":{"coding":[{"system":"http://snomed.info/sct","code":"44054006"}]}}""",
+      s"""{"resourceType":"Encounter","id":"$p-e","status":"finished",""" +
+        s""""subject":{"reference":"Patient/$p"}}""",
+      s"""{"resourceType":"MedicationRequest","id":"$p-m","status":"active",""" +
+        s""""intent":"order","subject":{"reference":"Patient/$p"},""" +
+        s""""medicationReference":{"reference":"#$p-med"},""" +
+        s""""contained":[{"resourceType":"Medication","id":"$p-med",""" +
+        """"status":"active"}]}""")
+    val xml = Seq(
+      s"""<Patient><id value="$p"/>""" +
+        s"""<extension url="$BirthSexExtensionUrl"><valueCode value="F"/></extension>""" +
+        s"""<extension url="$RaceExtensionUrl"><extension url="ombCategory">""" +
+        """<valueCoding><system value="urn:oid:2.16.840.1.113883.6.238"/>""" +
+        """<code value="2106-3"/></valueCoding></extension>""" +
+        """<extension url="text"><valueString value="White"/></extension>""" +
+        s"""</extension><telecom><system value="phone"/><value value="555-$i"/>""" +
+        s"""</telecom><gender value="female"/>""" +
+        s"""<birthDate value="19${50 + i % 50}-01-02"/></Patient>""") ++
+      obs.map(_._2) ++ Seq(
+      s"""<Condition><id value="$p-c"/><code><coding>""" +
+        """<system value="http://snomed.info/sct"/><code value="44054006"/>""" +
+        s"""</coding></code><subject><reference value="Patient/$p"/></subject></Condition>""",
+      s"""<Encounter><id value="$p-e"/><status value="finished"/>""" +
+        s"""<subject><reference value="Patient/$p"/></subject></Encounter>""",
+      s"""<MedicationRequest><id value="$p-m"/><contained><Medication>""" +
+        s"""<id value="$p-med"/><status value="active"/></Medication></contained>""" +
+        """<status value="active"/><intent value="order"/>""" +
+        s"""<medicationReference><reference value="#$p-med"/></medicationReference>""" +
+        s"""<subject><reference value="Patient/$p"/></subject></MedicationRequest>""")
+    (json.map(r => s"""{"resource":$r}""").mkString(
+      """{"resourceType":"Bundle","type":"collection","entry":[""", ",", "]}"),
+     xml.map(r => s"<entry><resource>$r</resource></entry>").mkString(
+      """<Bundle xmlns="http://hl7.org/fhir"><type value="collection"/>""",
+      "", "</Bundle>"))
+  }
+
+  /** One ingest: per verb (name, jobs, SQL executions, files read, s). */
+  private def fhirRound(): Seq[(String, Int, Int, Long, Double)] = {
+    import graft.fhir.{Bundles, FhirSchemas, StructureDefinitions}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("probe_fhir")
+    Files.createDirectories(dir.resolve("json"))
+    Files.createDirectories(dir.resolve("xml"))
+    (0 until 48).foreach { i =>
+      val (json, xml) = patientBundle(i)
+      if (i % 6 == 5) Files.writeString(dir.resolve(f"xml/b$i%03d.xml"), xml)
+      else Files.writeString(dir.resolve(f"json/b$i%03d.json"), json)
+    }
+    val db = "probe_fhir"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    val out = scala.collection.mutable.ArrayBuffer.empty[
+      (String, Int, Int, Long, Double)]
+    def verb[A](name: String)(body: => A): A = {
+      var result: Option[A] = None
+      val t0 = System.nanoTime()
+      val (n, plans, files) = org.apache.spark.TestJobs.withFiles(spark) {
+        result = Some(body)
+      }
+      out += ((name, n, plans.size, files, (System.nanoTime() - t0) / 1e9))
+      result.get
+    }
+    val jsonDir = dir.resolve("json").toString
+    val reg = StructureDefinitions.shipped.registryFor(
+      "http://hl7.org/fhir/us/core/StructureDefinition/us-core-patient")
+    val xml = Bundles.fromXml(
+      Bundles.loadFromDirectory(spark, dir.resolve("xml").toString),
+      "bundle_json", FhirSchemas.defaultRegistry, fhirTables)
+    val xmlEntries = verb("xml_ingest") {
+      xml.select(sum(size(col("bundle.entry")))).head().getLong(0)
+    }
+    verb("extract_write") {
+      val json = Bundles.fromJson(Bundles.loadFromDirectory(spark, jsonDir),
+        "bundle_json", FhirSchemas.defaultRegistry, fhirTables)
+      Bundles.saveAsDatabase(spark, json.unionByName(xml), db, fhirTables)
+    }
+    verb("profile_extract") {
+      Bundles.extractEntry(spark, Bundles.loadFromDirectory(spark, jsonDir),
+        "Patient", Nil, reg).write.saveAsTable(s"$db.patient_uscore")
+    }
+    val roundTrip = verb("contained_tojson") {
+      val orders = Bundles.extractEntry(spark,
+        Bundles.loadFromDirectory(spark, jsonDir), "MedicationRequest",
+        Seq("Medication"))
+      val rebundled = Bundles.toJson(orders, "MedicationRequest")
+        .select(concat(lit("""{"resourceType":"Bundle","type":"collection",""" +
+          """"entry":[{"resource":"""), col("json"), lit("}]}"))
+          .as("bundle_json"))
+      Bundles.extractEntry(spark, rebundled, "MedicationRequest",
+        Seq("Medication")).where(size(col("contained")) === 1).count()
+    }
+    // the ingest must be the one described above
+    val counts = fhirTables.map(t =>
+      spark.table(s"$db.${t.toLowerCase}").count())
+    require(xmlEntries == 8 * 7 && counts == Seq(48, 144, 48, 48, 48) &&
+      roundTrip == 40 && spark.table(s"$db.patient_uscore")
+        .where(size(col("telecom")) === 1).count() == 40,
+      s"unexpected ingest: xml $xmlEntries, tables $counts, " +
+        s"round trip $roundTrip")
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    out.toSeq
+  }
+
+  private def fhir(outDir: String, tag: String): Unit = {
+    fhirRound() // warm-up: JIT and first-plan compilation
+    val measured = fhirRound()
+    val json = measured.map { case (name, n, execs, files, s) =>
+      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
+        f""""files_read": $files, "seconds": $s%.3f}"""
+    }.mkString("{", ",\n ", "}\n")
+    val md = Seq("| verb | jobs | SQL executions | files read | seconds |",
+      "|---|---|---|---|---|") ++ measured.map {
+      case (name, n, execs, files, s) =>
+        f"| $name | $n | $execs | $files | $s%.2f |"
+    }
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"fhir_$tag.json"), json)
+    Files.writeString(Paths.get(outDir, s"fhir_$tag.md"),
       md.mkString("", "\n", "\n"))
     println(md.mkString("\n"))
   }

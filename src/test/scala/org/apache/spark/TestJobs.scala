@@ -17,6 +17,14 @@ object TestJobs {
     * number of jobs it started, with the physical plan description of
     * each SQL execution those jobs belong to. */
   def of(spark: SparkSession)(body: => Unit): (Int, Seq[String]) = {
+    val (n, plans, _) = withFiles(spark)(body)
+    (n, plans)
+  }
+
+  /** [[of]] plus the files the scans of those SQL executions read: the
+    * sum of their "number of files read" metrics. */
+  def withFiles(spark: SparkSession)(body: => Unit)
+      : (Int, Seq[String], Long) = {
     val sc = spark.sparkContext
     val group = s"test-jobs-${java.util.UUID.randomUUID()}"
     val execIds = new ConcurrentLinkedQueue[String]()
@@ -42,8 +50,18 @@ object TestJobs {
       sc.removeSparkListener(listener)
     }
     val ids = execIds.asScala.toSeq
-    (ids.size, ids.distinct.flatMap(id =>
-      id.toLongOption.flatMap(x => Option(plans.get(x)))))
+    val execs = ids.distinct.flatMap(_.toLongOption)
+    val store = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.statusStore
+    val files = execs.flatMap { id =>
+      val values = store.executionMetrics(id)
+      // adaptive re-plans list a scan's metric once per plan version
+      store.execution(id).toSeq.flatMap(_.metrics)
+        .filter(_.name == "number of files read").map(_.accumulatorId)
+        .distinct.flatMap(values.get)
+        .map(_.replace(",", "").trim.toLong)
+    }.sum
+    (ids.size, execs.flatMap(x => Option(plans.get(x))), files)
   }
 
   /** Runs `body` under a fresh job group on this thread and returns, for
