@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Lineage._
+
 /** Temporarily override a session conf around a block, always restoring.
   *
   * Iterative fixpoint loops and stateful streaming queries materialize with
@@ -30,31 +32,27 @@ private[graft] object ConfScope {
       (rows + rowsPerPartition - 1L) / rowsPerPartition)).toInt
   }
 
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
   /** The session's current shuffle width as an Int. */
   def sessionShuffleWidth(spark: SparkSession): Int =
-    spark.conf.get("spark.sql.shuffle.partitions").toInt
+    spark.conf.get(ShufflePartitions).toInt
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily overridden (None = no-op); always restores. */
   def withShuffleWidth[T](spark: SparkSession,
       partitions: Option[Int])(body: => T): T = partitions match {
     case None => body
     case Some(n) =>
-      val key = "spark.sql.shuffle.partitions"
-      val previous = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      try body finally spark.conf.set(key, previous)
+      val previous = spark.conf.get(ShufflePartitions)
+      spark.conf.set(ShufflePartitions, n.toString)
+      try body finally spark.conf.set(ShufflePartitions, previous)
   }
 
-  /** Generic scoped conf override (save/set/restore). Used by the
-    * iterative fixpoint family to pin `spark.sql.adaptive.enabled=false`
-    * for the loop: a checkpointed round's `LogicalRDD` only CAPTURES its
-    * physical outputPartitioning when the plan is not wrapped in
-    * `AdaptiveSparkPlan` (AQE reports unknown partitioning at checkpoint
-    * time), and that captured partitioning is what makes the next round's
-    * state join exchange-free. The loop plans are small and fixed-shape —
-    * partial aggregation already absorbs key skew map-side — so giving up
-    * AQE inside the loop costs nothing and saves one O(N) state shuffle
-    * per round. */
+  /** Generic scoped conf override (save/set/restore) on the caller's
+    * session — only safe single-threaded, since a concurrent query on the
+    * same session observes the override. The fixpoint loops therefore do
+    * not use it: they pin their confs on an isolated child session
+    * ([[withIsolatedSession]] through [[loopEntry]]). */
   def withConf[T](spark: SparkSession, key: String, value: String)(
       body: => T): T = {
     val previous = spark.conf.getOption(key)
@@ -63,6 +61,82 @@ private[graft] object ConfScope {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** The one entry of the fixpoint loops (closureLong, nearDupClusters,
+    * kCore and both PageRanks): runs `body` on an isolated child session
+    * ([[withIsolatedSession]], with `confs`) and hands it the caller's
+    * `input`. With a `width`, the loop runs at that width and `input` goes
+    * in as it is. Otherwise `input` is checkpointed and counted first —
+    * counting the caller's plan and then looping over it would execute
+    * that plan twice — and the loop width is [[autoLoopPartitions]] of
+    * the count. The entry checkpoint is retired when `body` returns or
+    * fails, or earlier through [[LoopEntry.superseded]].
+    *
+    * The graph loops pass `spark.sql.adaptive.enabled=false`: a
+    * checkpointed round's `LogicalRDD` only CAPTURES its physical
+    * outputPartitioning when the plan is not wrapped in
+    * `AdaptiveSparkPlan`, and that captured partitioning is what makes
+    * the next round's state join exchange-free. Their plans are small and
+    * fixed-shape — partial aggregation already absorbs key skew map-side
+    * — so giving up AQE inside the loop saves one O(N) state shuffle per
+    * round. */
+  def loopEntry[T](spark: SparkSession, input: DataFrame,
+      width: Option[Int], confs: (String, String)*)(
+      body: LoopEntry => T): T =
+    withIsolatedSession(spark, confs: _*) { (iso, rebind) =>
+      width match {
+        case Some(n) =>
+          iso.conf.set(ShufflePartitions, n.toString)
+          body(new LoopEntry(rebind(input), -1L, n))
+        case None =>
+          val ck = rebind(input).truncateLineage(eager = false)
+          try {
+            val rows = ck.count()
+            val n = autoLoopPartitions(rows, sessionShuffleWidth(iso))
+            iso.conf.set(ShufflePartitions, n.toString)
+            body(new LoopEntry(ck, rows, n))
+          } finally Lineage.retire(ck)
+      }
+    }
+
+  /** A fixpoint loop's input as [[loopEntry]] hands it over: the entry
+    * `frame`, its `rows` (-1 when the width was given) and the loop
+    * `width`. */
+  final class LoopEntry private[ConfScope] (val frame: DataFrame,
+      val rows: Long, val width: Int) {
+    /** Called once the loop's own frames hold everything read from the
+      * entry checkpoint. In local mode the checkpoint is retired at once
+      * (a lost block means a lost JVM anyway); in reliable mode its files
+      * are the only recompute source of the loop's persisted frames after
+      * an executor loss, so they stay until the loop ends. */
+    def superseded(): Unit =
+      if (!Lineage.isReliable(frame.sparkSession)) Lineage.retire(frame)
+  }
+
+  /** The two-width rule of the incremental loops (addEdges,
+    * addToClusters): the loop iterates a DELTA-sized seed and is sized by
+    * it, but the joins that build the seed and the caller's action on the
+    * result touch the FULL existing relation — sizing those by a handful
+    * of delta rows would run one reducer over all of it. `seed` is built,
+    * checkpointed and counted at the width for `largeRows`; `loop` gets
+    * the seed and its count and runs at the seed's width; the seed is
+    * retired after it, and the large width is restored for the lazy
+    * result. A given `width` pins both. */
+  def withTwoWidths[T](iso: SparkSession, width: Option[Int],
+      largeRows: Long)(seed: => DataFrame)(loop: (DataFrame, Long) => T): T = {
+    val sessW = sessionShuffleWidth(iso)
+    def sizeFor(rows: Long): Unit = iso.conf.set(ShufflePartitions,
+      width.getOrElse(autoLoopPartitions(rows, sessW)).toString)
+    sizeFor(largeRows)
+    val s = seed.truncateLineage(eager = false)
+    try {
+      val n = s.count()
+      sizeFor(n)
+      val out = loop(s, n)
+      sizeFor(largeRows)
+      out
+    } finally Lineage.retire(s)
   }
 
   /** Run an iterative fixpoint loop on an ISOLATED child session — same

@@ -24,13 +24,15 @@ import org.apache.spark.storage.StorageLevel
   * drift between call sites.
   *
   * Storage hygiene (the r10 advice's "unbounded checkpoint growth"):
-  * every per-round loop in this library retires the superseded round's
-  * frame via [[Lineage.retire]] as soon as the next round has
-  * materialized — deleting its reliable checkpoint files and dropping
-  * its localCheckpoint blocks — so a long fixpoint job holds O(1)
+  * every per-round loop in this library runs on one round driver,
+  * [[Lineage.fixpoint]], which retires the superseded round's frame via
+  * [[Lineage.retire]] as soon as the next round has materialized —
+  * deleting its reliable checkpoint files and dropping its
+  * localCheckpoint blocks — so a long fixpoint job holds O(1)
   * round-states on storage, not O(rounds) (the PeriodicCheckpointer
-  * pattern). The LAST round's checkpoint intentionally survives (the
-  * caller consumes it); on a cluster, set
+  * pattern), and releases every round it holds when it fails. The LAST
+  * round's checkpoint intentionally survives (the caller consumes it);
+  * on a cluster, set
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` in the
   * SparkConf so the ContextCleaner removes those final files once the
   * result frame is garbage-collected.
@@ -123,6 +125,54 @@ object Lineage {
         case _ => ()
       }
     } catch { case _: Throwable => () }
+
+  /** The one round driver of the fixpoint family (transitive closure,
+    * near-dup clustering, DAG depth, k-core peeling, PageRank): from the
+    * checkpointed round 0 `start`, round k+1 is `step` of round k,
+    * checkpointed — lazily when it is measured, so the measuring job is
+    * the one that materializes it, eagerly otherwise. Round k is retired
+    * once round k+1 has materialized. With a `measure` (round 0's value
+    * and the function taking one scalar job, a count or a sum), the loop
+    * stops when the measure repeats and throws IllegalStateException
+    * with `failure` if that has not happened within `rounds` rounds — a
+    * truncated fixpoint is silently wrong data. Without one it runs
+    * exactly `rounds` rounds. The driver owns `start` and every round;
+    * on failure it retires all it still holds. The `releasing` frames —
+    * checkpoints and persisted frames only the rounds read — are
+    * released when the loop ends, whatever the exit. */
+  private[graft] def fixpoint[M](start: DataFrame, rounds: Int,
+      measure: Option[(M, DataFrame => M)], failure: => String = "",
+      releasing: Seq[DataFrame] = Nil)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var current = start
+    var next: DataFrame = null
+    var last = measure.map(_._1)
+    var settled = false
+    var round = 0
+    try {
+      while (!settled && round < rounds) {
+        next = step(current).truncateLineage(eager = measure.isEmpty)
+        val m = measure.map(_._2(next))
+        retire(current)
+        current = next
+        next = null
+        settled = m.isDefined && m == last
+        last = m
+        round += 1
+      }
+      if (measure.isDefined && !settled)
+        throw new IllegalStateException(failure)
+      current
+    } catch {
+      case e: Throwable =>
+        retire(current)
+        if (next != null) retire(next)
+        throw e
+    } finally releasing.foreach { df =>
+      retire(df)
+      try df.unpersist() catch { case _: Throwable => () }
+    }
+  }
 
   private def retireRdd(spark: org.apache.spark.sql.SparkSession,
       l: org.apache.spark.sql.execution.LogicalRDD): Unit =

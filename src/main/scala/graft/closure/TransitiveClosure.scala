@@ -13,27 +13,16 @@ import org.apache.spark.sql.functions._
   * driver-memory-bound and cannot scale past a few million edges.
   *
   * This implementation keeps the computation on the cluster as an iterative
-  * self-join, with two strategies:
-  *
-  *  - **Prefix doubling** (default): after round i, `closure` holds every
-  *    path of length <= 2^i, so the round count is O(log d) for depth d.
-  *    Each round joins closure ⋈ closure — whose build side keyed on
-  *    `ancestor` is skewed at hub nodes (a root is the ancestor of every
-  *    descendant), which AQE skew-splitting must absorb. Right choice for
-  *    DEEP graphs (chains, DAG closures) where d is large.
-  *  - **Linear** (`linear = true`): each round extends paths by ONE edge:
-  *    closure ⋈ edges on closure.descendant == edge.parent. The probe side
-  *    is keyed by descendant (≤ d rows per key — no hub skew), the build
-  *    side is the original edge list (often broadcastable), and rounds = d.
-  *    Right choice for SHALLOW hierarchies — real code systems (LOINC,
-  *    SNOMED) are 10–20 deep, so d rounds of a skew-free join beat log₂(d)
-  *    rounds of a skewed one.
-  *
-  * Both are cycle-safe (`distinct` + self-loop drop reach a fixpoint) and
-  * localCheckpoint() every round to truncate the growing lineage. The
-  * fixpoint test carries the previous round's count forward, so each round
-  * runs exactly ONE counting job. One round loop ([[fixpoint]]) serves the
-  * full closure and the incremental [[addEdges]].
+  * self-join by **prefix doubling**: after round i, `closure` holds every
+  * path of length <= 2^i, so the round count is O(log d) for depth d. Each
+  * round joins closure ⋈ closure — whose build side keyed on `ancestor` is
+  * skewed at hub nodes (a root is the ancestor of every descendant), which
+  * AQE skew-splitting absorbs. It is cycle-safe (`distinct` + self-loop
+  * drop reach a fixpoint). The rounds run on the library's one round
+  * driver, [[graft.Lineage.fixpoint]]: each round is checkpointed, its
+  * count — the fixpoint test — is its one measuring job, and the
+  * superseded round is retired. The full closure and the incremental
+  * [[addEdges]] share one round ([[fixpoint]]).
   *
   * The loop runs on long ids. The (system, value)-keyed [[closure]]
   * encodes its codes to dense dictionary ids first — every round then
@@ -65,7 +54,6 @@ object TransitiveClosure {
       spark: SparkSession,
       edges: org.apache.spark.sql.Dataset[_],
       maxIterations: Int = 25,
-      linear: Boolean = false,
       shufflePartitions: Option[Int] = None): DataFrame = {
     val clean = edges.toDF().select(codeColumns.map(col): _*)
       .where(codeColumns.map(c => col(c).isNotNull).reduce(_ && _))
@@ -80,7 +68,7 @@ object TransitiveClosure {
       .select(col("parent"), col("child"))
     val width = shufflePartitions.getOrElse(math.max(8L, math.min(
       graft.ConfScope.sessionShuffleWidth(spark).toLong, codes / 50000L)).toInt)
-    closureLong(spark, ids, maxIterations, linear, Some(width))
+    closureLong(spark, ids, maxIterations, Some(width))
       .join(role("ancestor", "ancestor"), Seq("ancestor"))
       .join(role("descendant", "descendant"), Seq("descendant"))
       .select(codeColumns.map(col): _*)
@@ -113,33 +101,20 @@ object TransitiveClosure {
 
   /** Closure over arbitrary (parent, child) long-keyed edges — used by the
     * relational-analog correctness queries. Output columns (ancestor,
-    * descendant). */
+    * descendant). The loop width is `shufflePartitions` or, by default,
+    * sized to the edge count ([[graft.ConfScope.loopEntry]]). */
   def closureLong(
       spark: SparkSession,
       edges: DataFrame, // columns: parent, child
       maxIterations: Int = 25,
-      linear: Boolean = false,
       shufflePartitions: Option[Int] = None): DataFrame =
-    shufflePartitions match {
-      case None =>
-        // checkpoint-then-count: counting the caller's plan and then
-        // closing it would execute that plan twice
-        val ck = edges.truncateLineage(eager = false)
-        val out = closureLong(spark, ck, maxIterations, linear,
-          Some(graft.ConfScope.autoLoopPartitions(ck.count(),
-            graft.ConfScope.sessionShuffleWidth(spark))))
-        graft.Lineage.retire(ck)
-        out
-      case Some(n) =>
-        graft.ConfScope.withIsolatedSession(spark,
-          "spark.sql.shuffle.partitions" -> n.toString) { (_, rebind) =>
-          val start = rebind(edges)
-            .select(col("parent").as("ancestor"), col("child").as("descendant"))
-            .where(col("parent").isNotNull && col("child").isNotNull)
-            .distinct()
-            .truncateLineage(eager = false)
-          fixpoint(start, start.count(), maxIterations, linear)
-        }
+    graft.ConfScope.loopEntry(spark, edges, shufflePartitions) { entry =>
+      val start = entry.frame
+        .select(col("parent").as("ancestor"), col("child").as("descendant"))
+        .where(col("parent").isNotNull && col("child").isNotNull)
+        .distinct()
+        .truncateLineage(eager = false)
+      fixpoint(start, start.count(), maxIterations)
     }
 
   /** The pairs (a, c) with (a, b) in `l` and (b, c) in `r`. */
@@ -148,44 +123,20 @@ object TransitiveClosure {
       .select(col("l.ancestor").as("ancestor"),
         col("r.descendant").as("descendant"))
 
-  /** The round loop: from the checkpointed (ancestor, descendant) pairs
-    * `start` (`startCount` rows) to the fixpoint. Each round joins the
-    * closure with itself (prefix doubling) or with `start` (`linear`),
-    * drops self-pairs and lazily checkpoints the distinct union, so the
-    * round's count — the fixpoint test — is its one job. Round k's frame
-    * is retired once round k+1 has materialized, and `start` as soon as
-    * no round reads it any more (after the first round when doubling, at
-    * the end when linear), so repeated closures on one session do not
-    * accumulate checkpoints. */
+  /** Prefix doubling from the checkpointed (ancestor, descendant) pairs
+    * `start` (`startCount` rows) to the fixpoint: each round joins the
+    * closure with itself, drops self-pairs and takes the distinct union;
+    * its count is the fixpoint test. */
   private def fixpoint(start: DataFrame, startCount: Long,
-      maxIterations: Int, linear: Boolean): DataFrame = {
-    var current = start
-    var prevCount = startCount
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val next = current
-        .union(compose(current, if (linear) start else current))
+      maxIterations: Int): DataFrame =
+    graft.Lineage.fixpoint(start, maxIterations,
+      Some(startCount -> ((_: DataFrame).count())),
+      s"Transitive closure did not converge within $maxIterations rounds " +
+        s"(2^$maxIterations hops); raise maxIterations for deeper graphs") {
+      current => current.union(compose(current, current))
         .where(col("ancestor") =!= col("descendant"))
         .distinct()
-        .truncateLineage(eager = false)
-      val nextCount = next.count()
-      if (!linear || !(current eq start)) graft.Lineage.retire(current)
-      current = next
-      converged = nextCount == prevCount
-      prevCount = nextCount
-      i += 1
     }
-    // a truncated closure is silently-wrong data: fail loudly instead
-    if (!converged) {
-      val reach = if (linear) s"${maxIterations + 1}" else s"2^$maxIterations"
-      throw new IllegalStateException(s"Transitive closure did not " +
-        s"converge within $maxIterations rounds ($reach hops); raise " +
-        "maxIterations for deeper graphs")
-    }
-    if (linear && !(current eq start)) graft.Lineage.retire(start)
-    current
-  }
 
   /** Incremental closure maintenance: given an already-CLOSED relation
     * `closure` (ancestor, descendant) and a batch of NEW edges `delta`
@@ -214,48 +165,33 @@ object TransitiveClosure {
         shufflePartitions)
     }
 
-  /** TWO shuffle widths (r13 advice): the prefix-doubling loop iterates
-    * a DELTA-sized frame and is sized by it, but the semi-naive seed
-    * joins (cd/dc/cdc) and the final union each touch the FULL closure —
-    * sizing those by a handful of delta edges would run one reducer
-    * over the entire closure. Seed joins and the final union run at the
-    * large-side width; only the loop rounds narrow to the seed's actual
-    * row count. An explicit `fixedWidth` pins both (caller knows best). */
+  /** Seed joins at the full closure's width, prefix doubling at the
+    * seed's ([[graft.ConfScope.withTwoWidths]]); an explicit `fixedWidth`
+    * pins both. */
   private def addEdgesImpl(
       iso: SparkSession,
       closure: DataFrame,
       delta: DataFrame,
       maxIterations: Int,
       fixedWidth: Option[Int]): DataFrame = {
-      val sessW = graft.ConfScope.sessionShuffleWidth(iso)
-      val c = closure.select(col("ancestor"), col("descendant"))
-        .distinct().truncateLineage(eager = false)
-      // the delta feeds FOUR plan branches (d, cd, dc, m's union) — the
-      // checkpoint also stops 4x re-execution of the caller's delta plan
-      val d = delta
-        .select(col("parent").as("ancestor"),
-          col("child").as("descendant"))
-        .where(col("parent").isNotNull && col("child").isNotNull)
-        .distinct().truncateLineage(eager = false)
-      val joinW = fixedWidth.getOrElse(
-        graft.ConfScope.autoLoopPartitions(math.max(c.count(), d.count()),
-          sessW))
-      iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
+    val c = closure.select(col("ancestor"), col("descendant"))
+      .distinct().truncateLineage(eager = false)
+    // the delta feeds FOUR plan branches (d, cd, dc, m's union) — the
+    // checkpoint also stops 4x re-execution of the caller's delta plan
+    val d = delta
+      .select(col("parent").as("ancestor"), col("child").as("descendant"))
+      .where(col("parent").isNotNull && col("child").isNotNull)
+      .distinct().truncateLineage(eager = false)
+    val closed = graft.ConfScope.withTwoWidths(iso, fixedWidth,
+        math.max(c.count(), d.count())) {
       val cd = compose(c, d)
-      val m = Seq(cd, compose(d, c), compose(cd, c)).foldLeft(d)(_ unionAll _)
+      Seq(cd, compose(d, c), compose(cd, c)).foldLeft(d)(_ unionAll _)
         .where(col("ancestor") =!= col("descendant"))
-        .distinct().truncateLineage(eager = false)
-      // the seed's count materializes it AT the large-side width; the
-      // loop then narrows to the seed's true size
-      val seedCount = m.count()
-      iso.conf.set("spark.sql.shuffle.partitions", fixedWidth.getOrElse(
-        graft.ConfScope.autoLoopPartitions(seedCount, sessW)).toString)
+        .distinct()
+    } { (m, seedCount) =>
       graft.Lineage.retire(d)
-      val closed = fixpoint(m, seedCount, maxIterations, linear = false)
-      // the final union reads the FULL closure again — restore the
-      // large-side width before handing the lazy result to the caller
-      // (its terminal action materializes under the session's width)
-      iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
-      c.unionAll(closed).distinct()
+      fixpoint(m, seedCount, maxIterations)
+    }
+    c.unionAll(closed).distinct()
   }
 }

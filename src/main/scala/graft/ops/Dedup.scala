@@ -712,27 +712,12 @@ object Dedup {
     * closure; no driver materialization. */
   def nearDupClusters(pairs: DataFrame, maxIterations: Int = 20,
       shufflePartitions: Option[Int] = None): DataFrame =
-    shufflePartitions match {
-      case None =>
-        // loop width from the pair count (r12 directive #8); applied on
-        // the isolated-session branch so the caller conf never changes.
-        // Checkpoint-then-count: the pair frame is usually an expensive
-        // LSH pipeline — counting its raw plan would re-execute it
-        // (measured +27% on q47); the checkpoint is retired once the
-        // loop's own checkpoints carry the result
-        val ck = pairs.truncateLineage(eager = false)
-        val out = nearDupClusters(ck, maxIterations,
-          Some(graft.ConfScope.autoLoopPartitions(ck.count(),
-            graft.ConfScope.sessionShuffleWidth(pairs.sparkSession))))
-        graft.Lineage.retire(ck)
-        out
-      case Some(n) =>
-        // isolated child session: the width override can never be
-        // observed by a concurrent query on the caller's session
-        graft.ConfScope.withIsolatedSession(pairs.sparkSession,
-          "spark.sql.shuffle.partitions" -> n.toString) { (_, rebind) =>
-          nearDupClustersImpl(rebind(pairs), maxIterations)
-        }
+    // the pair frame is usually an expensive LSH pipeline: the entry
+    // checkpoint keeps the width count from re-executing it (measured
+    // +27% on q47)
+    graft.ConfScope.loopEntry(pairs.sparkSession, pairs,
+      shufflePartitions) { entry =>
+      nearDupClustersImpl(entry.frame, maxIterations)
     }
 
   /** Incremental near-dup cluster maintenance (r11 directive #5 — the
@@ -765,47 +750,34 @@ object Dedup {
           maxIterations, shufflePartitions)
     }
 
-  /** TWO shuffle widths (r13 advice, mirroring
-    * [[graft.closure.TransitiveClosure.addEdges]]): the label-propagation
-    * loop runs on the CONTRACTED delta graph and is sized by it, but the
-    * endpoint→root contraction joins and the final relabel join each
-    * touch the FULL `existing` table — sizing those by a handful of new
-    * pairs would run one reducer over the whole corpus assignment. */
+  /** Contraction joins at the full `existing` table's width, label
+    * propagation at the contracted graph's
+    * ([[graft.ConfScope.withTwoWidths]]); an explicit `fixedWidth` pins
+    * both. */
   private def addToClustersImpl(iso: org.apache.spark.sql.SparkSession,
       existing: DataFrame, newPairs: DataFrame,
       maxIterations: Int, fixedWidth: Option[Int]): DataFrame = {
-    val sessW = graft.ConfScope.sessionShuffleWidth(iso)
     val ex = existing.select(col("id"), col("cluster_id"))
       .truncateLineage(eager = false)
     val np = newPairs.select(col("id_a"), col("id_b"))
       .truncateLineage(eager = false)
-    val joinW = fixedWidth.getOrElse(
-      graft.ConfScope.autoLoopPartitions(math.max(ex.count(), np.count()),
-        sessW))
-    iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
-    // endpoint -> old root (or itself when the endpoint is a new doc);
-    // checkpointed at the large-side width, so the loop below never
-    // re-executes the existing-table joins
-    val contractedPairs = np
-      .join(ex.select(col("id").as("id_a"), col("cluster_id").as("ra")),
-        Seq("id_a"), "left")
-      .join(ex.select(col("id").as("id_b"), col("cluster_id").as("rb")),
-        Seq("id_b"), "left")
-      .select(coalesce(col("ra"), col("id_a")).as("id_a"),
-        coalesce(col("rb"), col("id_b")).as("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-      .truncateLineage(eager = false)
-    val nContracted = contractedPairs.count()
-    graft.Lineage.retire(np)
-    // the propagation loop narrows to the contracted graph's true size
-    iso.conf.set("spark.sql.shuffle.partitions", fixedWidth.getOrElse(
-      graft.ConfScope.autoLoopPartitions(nContracted, sessW)).toString)
-    val contracted = nearDupClustersImpl(contractedPairs, maxIterations)
-      .truncateLineage(eager = false)
-    graft.Lineage.retire(contractedPairs)
-    // relabel joins the full existing table — large-side width again for
-    // the caller's terminal action on the lazy result
-    iso.conf.set("spark.sql.shuffle.partitions", joinW.toString)
+    val contracted = graft.ConfScope.withTwoWidths(iso, fixedWidth,
+        math.max(ex.count(), np.count())) {
+      // endpoint -> old root (or itself when the endpoint is a new doc);
+      // checkpointed at the large-side width, so the loop below never
+      // re-executes the existing-table joins
+      np.join(ex.select(col("id").as("id_a"), col("cluster_id").as("ra")),
+          Seq("id_a"), "left")
+        .join(ex.select(col("id").as("id_b"), col("cluster_id").as("rb")),
+          Seq("id_b"), "left")
+        .select(coalesce(col("ra"), col("id_a")).as("id_a"),
+          coalesce(col("rb"), col("id_b")).as("id_b"))
+        .where(col("id_a") =!= col("id_b"))
+    } { (contractedPairs, _) =>
+      graft.Lineage.retire(np)
+      nearDupClustersImpl(contractedPairs, maxIterations)
+        .truncateLineage(eager = false)
+    }
     val relabel = contracted
       .select(col("id").as("root"), col("cluster_id").as("newlab"))
     // old members follow their root's new label (untouched roots keep
@@ -853,7 +825,7 @@ object Dedup {
       .truncateLineage(eager = false)
     // lazy checkpoints: the plan is a leaf either way (the labelSum action
     // below materializes it), so each round runs a single job
-    var labels = und.select(col("a").as("id")).distinct()
+    val start = und.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
       .truncateLineage(eager = false)
     // labels only decrease, so the label sum is a monotone convergence
@@ -861,14 +833,17 @@ object Dedup {
     // be hash-derived values spanning the full 64-bit range, where a long
     // sum overflows (ANSI mode: ArithmeticException mid-loop). coalesce
     // covers the empty-pair-graph case (sum of zero rows is null).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head()
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
+    def labelSum(df: DataFrame): BigDecimal =
+      BigDecimal(df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0))
+    // the undirected edge frame is released when the loop ends: without
+    // that a long-lived session leaks 2x|pairs| rows of checkpoint blocks
+    // PER CALL (measured: two 20M-pair runs OOMed an 8g driver that a
+    // single run fits in comfortably)
+    graft.Lineage.fixpoint(start, maxIterations,
+      Some(labelSum(start) -> labelSum _),
+      s"Label propagation did not converge within $maxIterations rounds",
+      releasing = Seq(und)) { labels =>
       // the explicit .as aliases mint fresh attribute ids on every union
       // branch — `labels` feeds both branches and the jump join below, and
       // shared attrs across a union + self-referencing join break
@@ -882,29 +857,12 @@ object Dedup {
       // pointer jump: follow the label's own (previous-round) label —
       // every label IS a node id, so the join is total; chain components
       // converge in O(log diameter) rounds instead of O(diameter)
-      val next = step1.as("x")
+      step1.as("x")
         .join(labels.select(col("id").as("lid"), col("label").as("llabel")),
           col("x.label") === col("lid"))
         .select(col("x.id").as("id"),
           least(col("x.label"), col("llabel")).as("label"))
-        .truncateLineage(eager = false)
-      val nextSum = labelSum(next)
-      graft.Lineage.retire(labels)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      i += 1
-    }
-    if (!converged) {
-      throw new IllegalStateException(
-        s"Label propagation did not converge within $maxIterations rounds")
-    }
-    // the undirected edge frame is dead once the final labels
-    // checkpointed: without this a long-lived session leaks 2x|pairs|
-    // rows of checkpoint blocks PER CALL (measured: two 20M-pair runs
-    // OOMed an 8g driver that a single run fits in comfortably)
-    graft.Lineage.retire(und)
-    labels.select(col("id"), col("label").as("cluster_id"))
+    }.select(col("id"), col("label").as("cluster_id"))
   }
 
   /** SimHash near-dup pairs: LSH on 4 x 16-bit chunks (signatures within

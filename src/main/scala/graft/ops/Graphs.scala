@@ -42,85 +42,62 @@ object Graphs {
     * both sides pre-partition on the node key. */
   def pageRankFixedPoint(spark: SparkSession, edges: DataFrame,
       iterations: Int, scale: Long = 1000000000000L): DataFrame =
-    // AQE off for the loop: checkpoints only capture outputPartitioning
-    // without the AdaptiveSparkPlan wrapper, and that capture is what
-    // keeps the per-round state join exchange-free (see ConfScope doc).
-    // The override lives on an ISOLATED child session (same
-    // SparkContext, own SQL conf), so a concurrent query on the
-    // caller's session never observes it — ConcurrentConfSpec pins
-    // that isolation with a two-thread race.
-    graft.ConfScope.withIsolatedSession(spark,
-      "spark.sql.adaptive.enabled" -> "false") { (iso, rebind) =>
+    pageRank(spark, edges, iterations) { deg =>
+      // one-row N attaches by broadcast; base rank and teleport term are
+      // integral divisions evaluated per node row (an empty graph has no
+      // node rows, so the n=0 division never evaluates)
+      deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n"))))
+        .select(col("src").as("node"), col("deg"),
+          expr(s"$scale div n").as("rank"),
+          expr(s"(15 * $scale) div (100 * n)").as("base"))
+    }
+
+  /** The power iteration of both PageRanks, from the initial state
+    * `init` builds out of the (src, deg) out-degree frame: (node, deg,
+    * rank, base) rows.
+    *
+    * The state frame is hash-partitioned by `node` ONCE, up front, with
+    * the same partitioning the edge list has on `src`: each round's
+    * e.join(state) is then exchange-free on BOTH sides (checkpoint
+    * captures the physical outputPartitioning into the LogicalRDD, and
+    * the left-outer update join keeps the left side's partitioning), so
+    * the only per-round shuffle left is the inherent src→dst
+    * contribution regroup. */
+  private def pageRank(spark: SparkSession, edges: DataFrame,
+      iterations: Int)(init: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // checkpoint the raw edge frame FIRST: the width count, the
-    // hot-source scan, and the partitioned persist below all read it,
-    // and without the checkpoint each re-executes the caller's (possibly
-    // expensive) edge pipeline — measured +23% on q117 when the count
-    // ran against the raw distinct-join plan
-    // null src/dst rows (e.g. non-numeric ids nulled by the cast) are
-    // dropped EXPLICITLY here so the hub-split and unsplit paths see the
-    // same graph: splitHotSources' !isin() predicate is null-rejecting,
-    // and without this filter a dirty input's node set would differ
-    // depending on whether a hub happened to trigger the split.
-    val ckRaw = rebind(edges).select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .truncateLineage(eager = false)
-    // loop width derived from the edge count (r12 directive #8): a tiny
-    // fixture must not pay 200-task scheduling every round; the session
-    // width stays the ceiling. Set on the ISOLATED session only, before
-    // the edge repartition so the whole loop shares one width.
-    val m = ckRaw.count()
-    val width = graft.ConfScope.autoLoopPartitions(m,
-      graft.ConfScope.sessionShuffleWidth(iso))
-    iso.conf.set("spark.sql.shuffle.partitions", width.toString)
-    val (e, hot) = splitHotSources(ckRaw, m, width)
-    // materialize the persisted loop frames from the checkpoint blocks.
-    // In LOCAL mode retire the checkpoint now — it is dead once the
-    // splits landed (an evicted persisted partition can only be lost
-    // with the whole JVM). In RELIABLE mode the checkpoint files are the
-    // only recompute source for the persisted loop frames after an
-    // executor loss, so they are retired AFTER the loop instead.
-    e.count(); hot.foreach(_._1.count())
-    val deferCkRetire = graft.Lineage.isReliable(iso)
-    if (!deferCkRetire) graft.Lineage.retire(ckRaw)
-    val deg = hot match {
-      case None => e.groupBy("src").agg(count(lit(1)).as("deg"))
-      case Some((hotE, _)) => e.groupBy("src")
-        .agg(count(lit(1)).as("deg"))
-        .unionAll(hotE.groupBy("src").agg(count(lit(1)).as("deg")))
+    graphLoop(spark, edges) { entry =>
+      val (e, hot) = splitHotSources(entry.frame, entry.rows, entry.width)
+      val loopEdges = e +: hot.map(_._1).toSeq
+      loopEdges.foreach(_.count())
+      entry.superseded()
+      val deg = loopEdges.map(_.groupBy("src").agg(count(lit(1)).as("deg")))
+        .reduce(_ unionAll _)
+      graft.Lineage.fixpoint(
+        init(deg).repartition(col("node")).truncateLineage(), iterations,
+        None, releasing = loopEdges) {
+        state => pageRankRound(e, state, hot)
+      }
     }
-    val n = deg.agg(count(lit(1)).as("n"))
-    // One-row N attaches by broadcast; base rank and teleport term are
-    // integral divisions evaluated per node row (an empty graph has no
-    // node rows, so the n=0 division never evaluates).
-    //
-    // The state frame is hash-partitioned by `node` ONCE, up front, with
-    // the same partitioning the edge list has on `src`: each round's
-    // e.join(state) is then exchange-free on BOTH sides (checkpoint
-    // captures the physical outputPartitioning into the LogicalRDD, and
-    // the left-outer update join keeps the left side's partitioning), so
-    // the only per-round shuffle left is the inherent src→dst contribution
-    // regroup. Without this, the O(N) rank frame re-shuffled every round.
-    var state = deg.crossJoin(broadcast(n))
-      .select(col("src").as("node"), col("deg"),
-        expr(s"$scale div n").as("rank"),
-        expr(s"(15 * $scale) div (100 * n)").as("base"))
-      .repartition(col("node"))
-      .truncateLineage()
-    for (_ <- 1 to iterations) {
-      val next = pageRankRound(e, state, hot).truncateLineage()
-      // round k's state is dead once round k+1's eager checkpoint landed:
-      // drop its blocks / reliable files so a long run keeps O(1) round
-      // states, not O(rounds) (storage growth + local block pressure)
-      graft.Lineage.retire(state)
-      state = next
-    }
-    e.unpersist()
-    hot.foreach(_._1.unpersist())
-    if (deferCkRetire) graft.Lineage.retire(ckRaw)
-    state
   }
+
+  /** The entry of the graph loops (both PageRanks, [[kCore]]): the
+    * (src, dst) edges as bigints on an isolated session with AQE off
+    * ([[graft.ConfScope.loopEntry]]: checkpoints only capture
+    * outputPartitioning without the AdaptiveSparkPlan wrapper, and that
+    * capture is what keeps the per-round state join exchange-free;
+    * ConcurrentConfSpec pins that a concurrent query on the caller's
+    * session never observes the override), at a width from the edge
+    * count. Null src/dst rows (e.g. non-numeric ids nulled by the cast)
+    * are dropped EXPLICITLY so the hub-split and unsplit paths see the
+    * same graph: splitHotSources' !isin() predicate is null-rejecting. */
+  private def graphLoop[T](spark: SparkSession, edges: DataFrame)(
+      body: graft.ConfScope.LoopEntry => T): T =
+    graft.ConfScope.loopEntry(spark,
+      edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull),
+      None, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Hub-source skew split for the PageRank family (r12 directive #4,
     * measured: one src owning 10% of a 20M-edge list made each round's
@@ -174,50 +151,17 @@ object Graphs {
     * oracle's recomputation). */
   def personalizedPageRank(spark: SparkSession, edges: DataFrame,
       seeds: Seq[Long], iterations: Int,
-      scale: Long = 1000000000000L): DataFrame =
-    graft.ConfScope.withIsolatedSession(spark,
-      "spark.sql.adaptive.enabled" -> "false") { (iso, rebind) =>
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+      scale: Long = 1000000000000L): DataFrame = {
     require(seeds.nonEmpty, "seed set must be non-empty")
-    // explicit null-row drop + local-vs-reliable retire timing: same
-    // rationale as [[pageRankFixedPoint]]
-    val ckRaw = rebind(edges).select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .truncateLineage(eager = false)
-    val m = ckRaw.count()
-    val width = graft.ConfScope.autoLoopPartitions(m,
-      graft.ConfScope.sessionShuffleWidth(iso))
-    iso.conf.set("spark.sql.shuffle.partitions", width.toString)
-    val (e, hot) = splitHotSources(ckRaw, m, width)
-    e.count(); hot.foreach(_._1.count())
-    val deferCkRetire = graft.Lineage.isReliable(iso)
-    if (!deferCkRetire) graft.Lineage.retire(ckRaw)
-    val deg = hot match {
-      case None => e.groupBy("src").agg(count(lit(1)).as("deg"))
-      case Some((hotE, _)) => e.groupBy("src")
-        .agg(count(lit(1)).as("deg"))
-        .unionAll(hotE.groupBy("src").agg(count(lit(1)).as("deg")))
-    }
     val isSeed = col("src").isin(seeds: _*)
     val nS = seeds.size
-    var state = deg
-      .select(col("src").as("node"), col("deg"),
+    pageRank(spark, edges, iterations) { deg =>
+      deg.select(col("src").as("node"), col("deg"),
         when(isSeed, expr(s"$scale div $nS")).otherwise(lit(0L))
           .as("rank"),
         when(isSeed, expr(s"(15 * $scale) div (100 * $nS)"))
           .otherwise(lit(0L)).as("base"))
-      .repartition(col("node"))
-      .truncateLineage()
-    for (_ <- 1 to iterations) {
-      val next = pageRankRound(e, state, hot).truncateLineage()
-      graft.Lineage.retire(state)
-      state = next
     }
-    e.unpersist()
-    hot.foreach(_._1.unpersist())
-    if (deferCkRetire) graft.Lineage.retire(ckRaw)
-    state
   }
 
   /** One power-iteration round — factored out so PlanSpec can pin its
@@ -361,33 +305,22 @@ object Graphs {
       .repartition(col("parent")).persist()
     val nodes = e.select(col("parent").as("node"))
       .unionAll(e.select(col("child").as("node"))).distinct()
-    var state = nodes.select(col("node"), lit(0L).as("depth"))
-      .truncateLineage()
-    var round = 0
     // depths only ever grow, so convergence is "the depth SUM stopped
-    // moving" — one scalar aggregate over the just-checkpointed frame
-    // per round instead of a join-against-previous diff
-    var prevSum = -1L
-    var curSum = 0L
-    while (curSum != prevSum) {
-      round += 1
-      if (round > maxIterations)
-        throw new IllegalStateException(
-          s"dagDepth did not converge in $maxIterations rounds — " +
-            "cycle in the edge list?")
+    // moving" — one scalar aggregate over the round's checkpoint instead
+    // of a join-against-previous diff; round 0's sum is 0
+    graft.Lineage.fixpoint(
+      nodes.select(col("node"), lit(0L).as("depth")).truncateLineage(),
+      maxIterations,
+      Some(0L -> ((df: DataFrame) =>
+        df.agg(coalesce(sum(col("depth")), lit(0L))).head().getLong(0))),
+      s"dagDepth did not converge in $maxIterations rounds — " +
+        "cycle in the edge list?",
+      releasing = Seq(e)) { state =>
       val viaParent = e.join(state, e("parent") === state("node"))
         .select(col("child").as("node"), (col("depth") + 1).as("depth"))
-      val next = state.unionAll(viaParent)
+      state.unionAll(viaParent)
         .groupBy(col("node")).agg(max(col("depth")).as("depth"))
-        .truncateLineage()
-      prevSum = curSum
-      curSum = next.agg(coalesce(sum(col("depth")), lit(0L)))
-        .head().getLong(0)
-      graft.Lineage.retire(state)
-      state = next
     }
-    e.unpersist()
-    state
   }
 
   /** Item-item top-k neighbor lists from a weighted co-occurrence edge
@@ -619,53 +552,26 @@ object Graphs {
     *
     * Returns surviving (node, core_deg) — core_deg is the degree inside
     * the final core. */
-  def kCore(spark: SparkSession, edges: DataFrame, k: Int): DataFrame =
-    graft.ConfScope.withIsolatedSession(spark,
-      "spark.sql.adaptive.enabled" -> "false") { (iso, rebind) =>
+  def kCore(spark: SparkSession, edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // checkpoint-then-count so the width probe does not re-execute the
-    // caller's edge pipeline (see pageRankFixedPoint); null rows dropped
-    // explicitly for symmetry with the PageRank family
-    val ckRaw = rebind(edges).select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .truncateLineage(eager = false)
-    // loop width from the edge count (r12 directive #8), isolated-only
-    iso.conf.set("spark.sql.shuffle.partitions",
-      graft.ConfScope.autoLoopPartitions(ckRaw.count(),
-        graft.ConfScope.sessionShuffleWidth(iso)).toString)
-    val e = ckRaw.repartition(col("src")).persist()
-    e.count()
-    // reliable mode: the checkpoint is the recompute source for evicted
-    // persisted edge partitions after executor loss — retire after the
-    // peel completes instead (see pageRankFixedPoint)
-    val deferCkRetire = graft.Lineage.isReliable(iso)
-    if (!deferCkRetire) graft.Lineage.retire(ckRaw)
-    var surv = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .where(col("deg") >= k)
-      .select(col("src").as("node"), col("deg"))
-      .repartition(col("node"))
-      .truncateLineage()
-    var n = surv.count()
-    var converged = n == 0
-    while (!converged) {
-      val next = e
-        .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("src").as("node"), col("deg"))
-        .repartition(col("node"))
-        .truncateLineage()
-      val m = next.count()
-      graft.Lineage.retire(surv)
-      converged = m == n || m == 0
-      surv = next
-      n = m
+    graphLoop(spark, edges) { entry =>
+      val e = entry.frame.repartition(col("src")).persist()
+      e.count()
+      entry.superseded()
+      def survivors(live: DataFrame): DataFrame =
+        live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+          .where(col("deg") >= k)
+          .select(col("src").as("node"), col("deg"))
+          .repartition(col("node"))
+      val start = survivors(e).truncateLineage(eager = false)
+      graft.Lineage.fixpoint(start, Int.MaxValue,
+        Some(start.count() -> ((_: DataFrame).count())),
+        releasing = Seq(e)) { surv =>
+        survivors(e
+          .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      }.select(col("node"), col("deg").as("core_deg"))
     }
-    e.unpersist()
-    if (deferCkRetire) graft.Lineage.retire(ckRaw)
-    surv.select(col("node"), col("deg").as("core_deg"))
   }
 
   /** Deterministic negative sampling for link prediction — the

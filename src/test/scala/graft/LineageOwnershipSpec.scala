@@ -139,6 +139,27 @@ class LineageOwnershipSpec extends SparkSuite {
     assert(left.isEmpty, s"leaked persistent RDDs: $left")
   }
 
+  test("a loop that fails at its round budget releases what it persisted, " +
+    "outside any scope") {
+    import spark.implicits._
+    val before = persistedIds
+    intercept[IllegalStateException] {
+      Graphs.dagDepth(spark, Seq((1L, 2L), (2L, 3L), (3L, 1L))
+        .toDF("parent", "child"), maxIterations = 4)
+    }
+    intercept[IllegalStateException] {
+      TransitiveClosure.closureLong(spark,
+        (1L until 32L).map(i => (i, i + 1)).toDF("parent", "child"),
+        maxIterations = 2)
+    }
+    intercept[IllegalStateException] {
+      Dedup.nearDupClusters((0 until 40).map(i => (i.toLong, i + 1L))
+        .toDF("id_a", "id_b"), maxIterations = 1)
+    }
+    val left = persistedIds -- before
+    assert(left.isEmpty, s"leaked persistent RDDs: $left")
+  }
+
   test("scoped releases on failure too") {
     val before = persistedIds
     intercept[RuntimeException] {

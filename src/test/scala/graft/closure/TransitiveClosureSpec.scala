@@ -23,11 +23,10 @@ class TransitiveClosureSpec extends SparkSuite {
     }.toSet
   }
 
-  private def run(edges: Seq[(Int, Int)],
-      linear: Boolean = false): Set[(Int, Int)] = {
+  private def run(edges: Seq[(Int, Int)]): Set[(Int, Int)] = {
     import spark.implicits._
     val df = edges.toDF("parent", "child")
-    TransitiveClosure.closureLong(spark, df, linear = linear)
+    TransitiveClosure.closureLong(spark, df)
       .as[(Long, Long)].collect().map { case (a, d) => (a.toInt, d.toInt) }
       .toSet
   }
@@ -118,21 +117,21 @@ class TransitiveClosureSpec extends SparkSuite {
       edges.toDF("parent", "child"), maxIterations = 8,
       shufflePartitions = Some(8))
     assert(got.count() === expected)
-    // linear mode needs depth rounds — at the same budget it must refuse
-    // loudly rather than return a truncated closure
+    // one round short of that budget it must refuse loudly rather than
+    // return a truncated closure
     assertThrows[IllegalStateException] {
       TransitiveClosure.closureLong(spark, edges.toDF("parent", "child"),
-        maxIterations = 8, linear = true, shufflePartitions = Some(8))
+        maxIterations = 7, shufflePartitions = Some(8))
     }
   }
 
   test("AQE skew-split absorbs the hub-key straggler in the closure join") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    // star graph: 150 sources → hub → 1000 leaves. In linear mode the
-    // build side is the raw edge list keyed by parent, so the hub key
-    // holds 1000 of 1214 edge rows in ONE shuffle partition — the
-    // input-byte skew AQE's OptimizeSkewedJoin is built to split. The
+    // star graph: 150 sources → hub → 1000 leaves. The doubling join's
+    // build side is keyed by ancestor, so the hub key holds 1000 of 1150
+    // edge rows in ONE shuffle partition — the input-byte skew AQE's
+    // OptimizeSkewedJoin is built to split. The
     // measurement is join-output share: without skew handling one task
     // emits ~all of the 150k src×leaf pairs; with it the hub partition is
     // split into advisory-sized chunks, none dominating.
@@ -176,7 +175,7 @@ class TransitiveClosureSpec extends SparkSuite {
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
         val got = TransitiveClosure.closureLong(spark,
-          edges.toDF("parent", "child"), maxIterations = 3, linear = true,
+          edges.toDF("parent", "child"), maxIterations = 3,
           shufflePartitions = Some(8))
         assert(got.count() === expected)
       } finally {
@@ -245,18 +244,5 @@ class TransitiveClosureSpec extends SparkSuite {
       .as[(Long, Long)].collect()
       .map { case (a, d) => (a.toInt, d.toInt) }.toSet
     assert(got === dfsOracle(base ++ delta))
-  }
-
-  test("linear mode produces the same closure as prefix doubling") {
-    (10 to 13).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val edges = Seq.fill(14)((rnd.nextInt(9), rnd.nextInt(9)))
-        .filter(e => e._1 != e._2).distinct
-      assert(run(edges, linear = true) === dfsOracle(edges),
-        s"seed=$seed edges=$edges")
-    }
-    // deep chain exercises many linear rounds
-    val chain = (1 until 12).map(i => i -> (i + 1))
-    assert(run(chain, linear = true) === dfsOracle(chain))
   }
 }

@@ -59,6 +59,22 @@ import graft.streaming.Streams
   * Spark jobs, SQL executions, input files read (the scans' "number of
   * files read") and wall time.
   *
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> loops"
+  *
+  * the fixpoint loops on fixed fixtures, after one unmeasured warm-up
+  * round: `closureLong` and `dagDepth` on the terminology DAG (as long
+  * ids), `addEdges` of every tenth edge into the closure of the rest,
+  * `nearDupClusters` on 40 chains of 50 ids, `addToClusters` of 40
+  * pairs joining those chains, and `kCore` (k = 2), both PageRanks (5
+  * iterations) on a 200-node ring with chords and 6-node pendant paths.
+  * Each verb ends in one action (row count and an xxhash64 checksum of
+  * the result rows). Writes `<outDir>/loops_<tag>.{json,md}`: per verb
+  * its Spark jobs, SQL executions, rounds (the executions whose plan
+  * joins over a checkpoint: one per fixpoint round, plus one for the
+  * joined seed of `addEdges`/`addToClusters`, PageRank's initial state
+  * and `addToClusters`' relabelling action), wall time, rows and
+  * checksum.
+  *
   * Only public calls are used, so the same file measures any version of
   * the library. */
 object ProbeJobs {
@@ -93,8 +109,9 @@ object ProbeJobs {
       case Array(outDir, tag, "stream") => streams(outDir, tag)
       case Array(outDir, tag, "terminology") => terminology(outDir, tag)
       case Array(outDir, tag, "fhir") => fhir(outDir, tag)
-      case _ =>
-        sys.error("usage: ProbeJobs <outDir> <tag> [stream|terminology|fhir]")
+      case Array(outDir, tag, "loops") => loops(outDir, tag)
+      case _ => sys.error(
+        "usage: ProbeJobs <outDir> <tag> [stream|terminology|fhir|loops]")
     }
     spark.stop()
   }
@@ -207,24 +224,18 @@ object ProbeJobs {
 
   private val dx = "http://snomed.info/sct"
 
-  /** Writes the terminology inputs under a fresh directory: `valuesets/`,
-    * `conceptmaps/` and `hierarchy/edges.csv`. Returns the directory. */
-  private def terminologyInputs(): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("probe_terminology")
-    def put(sub: String, name: String, text: String): Unit = {
-      Files.createDirectories(dir.resolve(sub))
-      Files.writeString(dir.resolve(sub).resolve(name), text)
-    }
+  /** The benchmark's hierarchy as (parent, child) node numbers: level
+    * sizes grow by 2.2x to a plateau of 400, scaled to 1200 codes over 16
+    * levels below the root; parents skewed to early codes of the level
+    * above, 3% of codes with a second parent. */
+  private lazy val dagEdges: Seq[(Int, Int)] = {
     val rnd = new scala.util.Random(6)
-    // DAG: level sizes grow by 2.2x to a plateau of 400, scaled to 1200
-    // codes over 16 levels below the root; parents skewed to early codes
-    // of the level above, 3% of codes with a second parent
     val shape = (1 to 16).map(l => math.min(math.pow(2.2, l), 400.0))
     val sizes = 1 +: shape.map(w => math.max(1, math.round(w * 1199 /
       shape.sum).toInt))
     val levels = sizes.scanLeft(0)(_ + _).sliding(2).map(p => p(0) until p(1))
       .toVector
-    val edges = levels.indices.tail.flatMap { l =>
+    levels.indices.tail.flatMap { l =>
       val up = levels(l - 1)
       levels(l).flatMap { c =>
         val p = up(math.min(up.size - 1,
@@ -234,7 +245,17 @@ object ProbeJobs {
         (p +: extra).map(a => (a, c))
       }
     }
-    put("hierarchy", "edges.csv", edges.map { case (a, c) =>
+  }
+
+  /** Writes the terminology inputs under a fresh directory: `valuesets/`,
+    * `conceptmaps/` and `hierarchy/edges.csv`. Returns the directory. */
+  private def terminologyInputs(): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("probe_terminology")
+    def put(sub: String, name: String, text: String): Unit = {
+      Files.createDirectories(dir.resolve(sub))
+      Files.writeString(dir.resolve(sub).resolve(name), text)
+    }
+    put("hierarchy", "edges.csv", dagEdges.map { case (a, c) =>
       f"$dx,D$a%06d,$dx,D$c%06d" }.mkString(
       "ancestorSystem,ancestorValue,descendantSystem,descendantValue\n",
       "\n", "\n"))
@@ -526,6 +547,95 @@ object ProbeJobs {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, s"fhir_$tag.json"), json)
     Files.writeString(Paths.get(outDir, s"fhir_$tag.md"),
+      md.mkString("", "\n", "\n"))
+    println(md.mkString("\n"))
+  }
+
+  // ===== loops =====
+
+  /** One pass over the loops: per verb (name, jobs, SQL executions,
+    * rounds, seconds, rows, checksum). */
+  private def loopsRound()
+      : Seq[(String, Int, Int, Int, Double, Long, java.math.BigDecimal)] = {
+    import graft.closure.TransitiveClosure
+    import graft.ops.{Dedup, Graphs}
+    import spark.implicits._
+    val out = scala.collection.mutable.ArrayBuffer.empty[
+      (String, Int, Int, Int, Double, Long, java.math.BigDecimal)]
+    def verb(name: String)(result: => DataFrame): Unit = {
+      var row: org.apache.spark.sql.Row = null
+      val t0 = System.nanoTime()
+      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
+        val df = result
+        row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
+            df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO))).head()
+      }
+      out += ((name, n, plans.size, loopRounds(plans),
+        (System.nanoTime() - t0) / 1e9, row.getLong(0), row.getDecimal(1)))
+    }
+    val dag = dagEdges.map { case (a, c) => (a.toLong, c.toLong) }
+    val (delta, base) = dag.partition { case (_, c) => c % 10 == 0 }
+    verb("closureLong") {
+      TransitiveClosure.closureLong(spark, dag.toDF("parent", "child"))
+    }
+    val closed = TransitiveClosure.closureLong(spark,
+      base.toDF("parent", "child")).persist()
+    closed.count()
+    verb("addEdges") {
+      TransitiveClosure.addEdges(spark, closed, delta.toDF("parent", "child"))
+    }
+    closed.unpersist()
+    val chains = (0L until 2000L).filter(_ % 50 != 49).map(i => (i, i + 1))
+    verb("nearDupClusters") {
+      Dedup.nearDupClusters(chains.toDF("id_a", "id_b"))
+    }
+    val existing = Dedup.nearDupClusters(chains.toDF("id_a", "id_b"))
+      .persist()
+    existing.count()
+    verb("addToClusters") {
+      Dedup.addToClusters(existing,
+        (0L until 40L).map(c => (c * 50 + 49, c * 50 + 50)).toDF("id_a", "id_b"))
+    }
+    existing.unpersist()
+    verb("dagDepth") { Graphs.dagDepth(spark, dag.toDF("parent", "child")) }
+    val ring = (0L until 200L).flatMap(i =>
+      Seq((i, (i + 1) % 200), (i, (i + 17) % 200)))
+    val pendant = (0L until 20L).flatMap(p => (0L until 6L).map(j =>
+      (if (j == 0) p * 10 else 1000 + p * 6 + j - 1, 1000 + p * 6 + j)))
+    val undirected = ring ++ pendant
+    val sym = (undirected ++ undirected.map(_.swap)).toDF("src", "dst")
+    verb("kCore") { Graphs.kCore(spark, sym, k = 2) }
+    verb("pageRankFixedPoint") {
+      Graphs.pageRankFixedPoint(spark, sym, iterations = 5)
+    }
+    verb("personalizedPageRank") {
+      Graphs.personalizedPageRank(spark, sym, Seq(0L, 1005L), iterations = 5)
+    }
+    out.toSeq
+  }
+
+  /** The executions whose plan joins over a checkpoint. */
+  private[graft] def loopRounds(plans: Seq[String]): Int =
+    plans.count(p => p.contains("Join") && p.contains("ExistingRDD"))
+
+  private def loops(outDir: String, tag: String): Unit = {
+    loopsRound() // warm-up: JIT and first-plan compilation
+    val measured = loopsRound()
+    val json = measured.map { case (name, n, execs, rounds, s, rows, sum) =>
+      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
+        f""""rounds": $rounds, "seconds": $s%.3f, "rows": $rows, """ +
+        f""""checksum": "$sum"}"""
+    }.mkString("{", ",\n ", "}\n")
+    val md = Seq("| verb | jobs | SQL executions | rounds | seconds | rows | " +
+        "checksum |",
+      "|---|---|---|---|---|---|---|") ++ measured.map {
+      case (name, n, execs, rounds, s, rows, sum) =>
+        f"| $name | $n | $execs | $rounds | $s%.2f | $rows | $sum |"
+    }
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"loops_$tag.json"), json)
+    Files.writeString(Paths.get(outDir, s"loops_$tag.md"),
       md.mkString("", "\n", "\n"))
     println(md.mkString("\n"))
   }
