@@ -568,68 +568,10 @@ private[functions] object PqRowMath {
   }
 }
 
-/** Native PQ encode: quantized vector → nSub code indices (per
-  * subspace, the argmin-d2 codebook entry, ties to the LOWEST code
-  * index). One codegen'd call per row. */
-case class PqEncodeCodes(child: Expression,
-    cbBlock: Array[Array[Array[Double]]], csq: Array[Array[Double]])
-    extends UnaryExpression {
-  require(cbBlock.nonEmpty && cbBlock.length == csq.length,
-    "need at least one subspace with matching Σx² tables")
-  override def dataType: DataType = ArrayType(IntegerType, false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_encode_codes"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_encode_codes expects array<double>, got ${t.sql}")
-  }
-
-  def encode(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val d2 = PqRowMath.blockD2(a, cbBlock, csq)
-    if (d2 == null) return null
-    val out = new Array[Int](d2.length)
-    var s = 0
-    while (s < d2.length) {
-      val row = d2(s)
-      var best = 0
-      var ci = 1
-      while (ci < row.length) {
-        if (row(ci) < row(best)) best = ci
-        ci += 1
-      }
-      out(s) = best
-      s += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    encode(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncoder", this,
-      classOf[PqEncodeCodes].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("codesRes")
-      s"""
-      org.apache.spark.sql.catalyst.util.GenericArrayData $tmp =
-        $ref.encode($c);
-      if ($tmp == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = $tmp;
-      }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): PqEncodeCodes = copy(child = newChild)
-}
-
 /** Native PQ encode WITH reconstruction error: quantized vector →
-  * struct(codes array<int>, err2 double) where err2 = Σ_s min d² =
+  * struct(codes array<int>, err2 double) where codes(s) is subspace
+  * s's argmin-d² codebook entry (ties to the LOWEST code index) and
+  * err2 = Σ_s min d² =
   * ‖x − x̂‖² in the quantized-integer domain (every term an
   * integer-valued double, so it is exact and engine-replayable). The
   * per-posting distortion is the ADC-prefilter margin of the lossless
@@ -930,11 +872,6 @@ object GraftFunctions {
   def ivfTopCells(qv: Column, cents: Array[Array[Double]],
       cn: Array[Double], nprobe: Int): Column =
     col(IvfTopCells(expr(qv), cents, cn, nprobe))
-  /** Native PQ encode: quantized vector → nSub code indices (see
-    * [[PqEncodeCodes]]). */
-  def pqEncodeCodes(qv: Column, cbBlock: Array[Array[Array[Double]]],
-      csq: Array[Array[Double]]): Column =
-    col(PqEncodeCodes(expr(qv), cbBlock, csq))
   /** Native PQ query LUT: quantized vector → nSub×nCodes d² table (see
     * [[PqQueryLut]]). */
   def pqQueryLut(qv: Column, cbBlock: Array[Array[Array[Double]]],

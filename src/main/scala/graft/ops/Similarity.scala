@@ -190,72 +190,32 @@ object Similarity {
     topKReduce(scored, k)
   }
 
-  /** IVF with EXTERNALLY SUPPLIED centroid rows ("seeded" IVF) — the
-    * cell-join/top-k shape of [[ivfTopK]], but the coarse quantizer is
-    * a set of designated seed vectors instead of fitted k-means centers,
-    * and cell assignment runs on QUANTIZED integers (exact in double
-    * arithmetic), so the cell partition and probe sets are bit-reproducible
-    * on any engine — the oracle-verified variant (q38). At scale the seeds
-    * are the persisted centroids of a prior clustering job; here they are
-    * small by contract and collected to a driver-side literal exactly like
-    * the k-means `clusterCenters`.
+  /** IVF with EXTERNALLY SUPPLIED centroid rows ("seeded" IVF, q38):
+    * the coarse quantizer is a set of designated seed vectors instead of
+    * fitted k-means centers, and cell assignment runs on QUANTIZED
+    * integers (exact in double arithmetic), so the cell partition and
+    * probe sets are bit-reproducible on any engine. At scale the seeds
+    * are the persisted centroids of a prior clustering job; here they
+    * are small by contract.
     *
-    * Cell ids are indices into the seed rows in ascending `seedId` order;
-    * assignment argmax and probe ranking both break score ties by lowest
-    * cell id (matching `row_number() OVER (ORDER BY score DESC, cell ASC)`
-    * in an external engine). Each query row is routed to its own
-    * top-`nprobe` cells by one native kernel call ([[routeToCells]]) and
-    * probed through the plan the persisted index shares ([[ivfProbe]]). */
+    * One call is [[buildIvfIndex]] (flat assignment at every cell
+    * count) followed by [[probeIvfIndex]] over the unpersisted frames,
+    * so it returns exactly the rows a persisted build → probe returns,
+    * including the index's one-float32-rounding rule: seeds and corpus
+    * vectors are cast to `array<float>` before quantizing (a double
+    * component such as 0.00005 at quantScale 10⁴ quantizes to 0, as
+    * from the float32 the index stores, not to 1), and `corpus_id` is a
+    * BIGINT. Cell ids are indices into the seed rows in ascending
+    * `seedId` order; assignment argmax and probe ranking both break
+    * score ties by lowest cell id (matching `row_number() OVER (ORDER BY
+    * score DESC, cell ASC)` in an external engine). */
   def ivfTopKSeeded(corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String,
       seeds: DataFrame, seedId: String, seedVec: String,
-      k: Int, nprobe: Int = 4, quantScale: Int = 10000): DataFrame = {
-    val (centTab, cnTab) = collectSeedTable(seeds, seedId, seedVec,
-      quantScale)
-    val quant = (v: Column) =>
-      transform(v, x => round(x.cast("double") * quantScale))
-    // corpus assignment through the NATIVE argmax kernel (flat mode) —
-    // same ties-to-lowest-cell semantics as the interpreted
-    // transform+array_position form, one codegen'd call per row; the
-    // quantized vector still binds in its own projection first. Empty
-    // seed set keeps the old all-null-cells (empty-result) behavior.
-    val assignCell: Column =
-      if (centTab.isEmpty) lit(null).cast("int")
-      else GraftFunctions.ivfArgmaxCell(col("__qn"), centTab, cnTab,
-        null, null, null)
-    val assigned = widenForCompute(corpus)
-      .select(col(corpusId).as("corpus_id"),
-        col(corpusVec).as("cvec"), norm(col(corpusVec)).as("cnorm"),
-        quant(col(corpusVec)).as("__qn"))
-      .select(col("corpus_id"), col("cvec"), col("cnorm"),
-        assignCell.as("cell"))
-    ivfProbe(assigned, centTab, cnTab, quantScale, queries, queryId,
-      queryVec, k, nprobe)
-  }
-
-  /** The probe plan shared by [[ivfTopKSeeded]] and the persisted-index
-    * probes: each query row is routed to its top-`nprobe` cells
-    * ([[routeToCells]]), the (cell, corpus_id, cvec, cnorm) `postings`
-    * are equi-joined on `cell` against that BROADCAST probe set, and a
-    * bounded cosine top-`k` per query id closes it. When `postings` is a
-    * cell-partitioned parquet read the cell join triggers dynamic
-    * partition pruning, so only probed cells' files are scanned. */
-  private def ivfProbe(postings: DataFrame, centTab: Array[Array[Double]],
-      cnTab: Array[Double], quantScale: Int, queries: DataFrame,
-      queryId: String, queryVec: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val q0 = queries.select(col(queryId).as("query_id"),
-      col(queryVec).as("qvec"), norm(col(queryVec)).as("qnorm"),
-      transform(col(queryVec), x => round(x.cast("double") * quantScale))
-        .as("__qn"))
-    val probes = routeToCells(q0, col("__qn"), centTab, cnTab, nprobe)
-      .drop("__qn")
-    val scored = postings.join(broadcast(probes), Seq("cell"))
-      .select(col("query_id"), col("corpus_id"),
-        cosinePre(dot(col("cvec"), col("qvec")), col("cnorm"), col("qnorm"))
-          .as("score"))
-    topKReduce(scored, k)
-  }
+      k: Int, nprobe: Int = 4, quantScale: Int = 10000): DataFrame =
+    probeIvfIndex(buildIvfIndex(corpus, corpusId, corpusVec, seeds, seedId,
+        seedVec, quantScale, twoLevelThreshold = Int.MaxValue),
+      queries, queryId, queryVec, k, nprobe)
 
   /** Per-row probe routing — the one cell-ranking implementation of
     * every IVF and IVF-PQ probe: each row of `rows` is repeated once per
@@ -1200,17 +1160,20 @@ object Similarity {
     * the ratio grows with dims.
     *
     * Query path: cells are ranked exactly as q38 (integer quantized
-    * scores, ties to the lowest cell id) by the native routing kernel
-    * ([[routeToCells]]); each query row probes its own `nProbe` best
-    * cells carrying a lookup table LUT[s][ci] = ‖q_s − c_{ci,s}‖² built
-    * once per row from the codebook tables, so a candidate costs nSub
-    * array probes — no dot products at scan time ([[pqAdcScore]]). This
-    * is the NON-RESIDUAL ADC variant (codes quantize the vector itself,
-    * not the cell residual): the codebook is one global table — the
-    * same one q248 audits — and every distance is an exact integer
-    * after quantization, replayable by any engine. All magnitudes stay under 2^53, so the double-typed
-    * aggregate scores are still exact integers.
+    * scores, ties to the lowest cell id); each query row probes its own
+    * `nProbe` best cells carrying a lookup table LUT[s][ci] =
+    * ‖q_s − c_{ci,s}‖², so a candidate costs nSub array probes — no dot
+    * products at scan time. This is the NON-RESIDUAL ADC variant (codes
+    * quantize the vector itself, not the cell residual): the codebook is
+    * one global table — the same one q248 audits — and every distance is
+    * an exact integer after quantization, replayable by any engine (all
+    * magnitudes stay under 2^53).
     *
+    * One call is [[buildIvfPqIndex]] (flat assignment at every cell
+    * count) followed by [[probeIvfPqIndex]] over the unpersisted frames,
+    * so it returns exactly the rows a persisted build → probe returns —
+    * with the index's one-float32-rounding rule: seeds, codebook rows
+    * and corpus vectors are cast to `array<float>` before quantizing.
     * Output: (query_id, corpus_id, approx_d2, rank), ranked by
     * approx_d2 asc with ties broken by corpus_id asc (`row_number()`
     * parity). Recall@k vs the exact [[bruteForceTopK]] kernel is pinned
@@ -1220,67 +1183,12 @@ object Similarity {
       seeds: DataFrame, seedId: String, seedVec: String,
       codebookIds: Seq[Long], inDims: Int, nSub: Int, k: Int,
       nProbe: Int = 4, quantScale: Int = 10000): DataFrame = {
-    require(nSub >= 1 && inDims % nSub == 0,
-      s"inDims $inDims must divide into nSub $nSub")
     require(codebookIds.nonEmpty, "need at least one codebook row")
-    val quantD = (v: Column) =>
-      transform(v, x => round(x.cast("double") * quantScale))
-    val cb = collectCodebook(corpus, corpusId, corpusVec, codebookIds,
-      inDims, quantScale)
-    if (cb.isEmpty) {
-      // seedless/empty input: an empty result, not an error (the
-      // every-query-completes-on-empty-tables contract)
-      return queries.limit(0).select(lit(0L).as("query_id"),
-        lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
-        lit(0L).as("rank"))
-    }
-    val (centTab, cnTab) = collectSeedTable(seeds, seedId, seedVec,
-      quantScale)
-    // corpus assignment: (corpus_id, qv, cell) in ONE pass through the
-    // NATIVE argmax kernel (flat mode — identical ties-to-lowest-index
-    // semantics as the transform+array_position form it replaces, but
-    // one codegen'd call per row instead of an interpreted per-cell
-    // lambda; at 448 N-scaled cells / 200k rows the interpreted form
-    // spent ~20 s where the kernel spends ~2 s). Empty seed set keeps
-    // the old all-null-cells behavior (empty result), not an error.
-    // widenForCompute: a small-file corpus scans as ONE partition, and
-    // the per-row cell scoring (O(cells·dims)) then runs
-    // single-threaded — the whole encode serializes (measured 62 s → 9 s
-    // at q281's sf1 run). At real corpus scale the scan is already wide
-    // and this is a no-op.
-    val assignCell: Column =
-      if (centTab.isEmpty) lit(null).cast("int")
-      else GraftFunctions.ivfArgmaxCell(col("qv"), centTab, cnTab,
-        null, null, null)
-    val base = widenForCompute(corpus)
-      .select(col(corpusId).cast("long").as("corpus_id"),
-        quantD(col(corpusVec)).as("qv"))
-      .where(col("qv").isNotNull && size(col("qv")) === inDims)
-      .select(col("corpus_id"), col("qv"), assignCell.as("cell"))
-    // query side: probe cells exactly as q38 — ranked integer scores,
-    // ties to the lowest cell id
-    val q0 = queries.select(col(queryId).cast("long").as("query_id"),
-        quantD(col(queryVec)).as("qv"))
-      .where(col("qv").isNotNull && size(col("qv")) === inDims)
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
-    pqAdcScore(pqEncode(base, cbBlock, csq), q0, centTab, cnTab, nProbe,
-      cbBlock, csq, k)
+    probeIvfPqIndex(buildIvfPqIndex(corpus, corpusId, corpusVec, seeds,
+        seedId, seedVec, codebookIds, inDims, nSub, quantScale,
+        twoLevelThreshold = Int.MaxValue),
+      queries, queryId, queryVec, k, nProbe)
   }
-
-  /** PQ codebook rows collected from the corpus (small by contract —
-    * the persisted per-subspace k-means centers at scale); code index
-    * ci = position in ascending id order, so distance ties broken by
-    * lowest ci == lowest code id. */
-  private def collectCodebook(corpus: DataFrame, corpusId: String,
-      corpusVec: String, codebookIds: Seq[Long], inDims: Int,
-      quantScale: Int): Seq[Seq[Long]] =
-    corpus.select(col(corpusId).cast("long").as("id"),
-        transform(col(corpusVec),
-          x => round(x.cast("double") * quantScale).cast("long")).as("qv"))
-      .where(col("id").isin(codebookIds: _*) &&
-        col("qv").isNotNull && size(col("qv")) === inDims)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
-      .sortBy(_._1).map(_._2).toSeq
 
   /** The PQ kernel tables derived from the (quantized) codebook alone:
     * `cbBlock(s)(ci)` = code ci's slice for subspace s, `csq(s)(ci)`
@@ -1305,28 +1213,16 @@ object Similarity {
   }
 
   /** One-pass PQ encode of a coarse-assigned corpus (corpus_id, qv
-    * quantized, cell) → (corpus_id, cell, codes nSub×int), one native
-    * [[graft.functions.PqEncodeCodes]] call per row, barriered.
-    * The PLAN BARRIER matters: without it Catalyst fuses the encode
-    * into and around the candidate join (measured 50 s vs 3 s at q281's
-    * sf1 run in the staged-column era). The checkpoint is also the
-    * honest shape: (corpus_id, cell, codes) IS the index artifact a
-    * real pipeline persists ([[buildIvfPqIndex]] writes exactly this
-    * frame). */
-  private def pqEncode(base: DataFrame,
-      cbBlock: Array[Array[Array[Double]]],
-      csq: Array[Array[Double]]): DataFrame =
-    base.select(col("corpus_id"), col("cell"),
-        GraftFunctions.pqEncodeCodes(col("qv"), cbBlock, csq).as("codes"))
-      .truncateLineage(eager = false)
-
-  /** [[pqEncode]] plus the two per-posting margin columns the PERSISTED
-    * index carries: `nb2` = ‖x‖² and `e2` = ‖x − x̂‖², both exact
-    * integers in the quantized domain (the encode kernel's own argmin
-    * distances, one pass — [[graft.functions.PqEncodeWithErr]]). The
+    * quantized, cell) → (cell, corpus_id, codes nSub×int, e2, nb2), one
+    * native [[graft.functions.PqEncodeWithErr]] call per row, barriered.
+    * `nb2` = ‖x‖² and `e2` = ‖x − x̂‖² are exact integers in the
+    * quantized domain (the encode kernel's own argmin distances); the
     * stored distortion is what makes [[annNearDupPairsPq]]'s ADC
-    * prefilter provably lossless; the in-query paths keep the leaner
-    * [[pqEncode]]. */
+    * prefilter provably lossless. The PLAN BARRIER matters: without it
+    * Catalyst fuses the encode into and around the candidate join
+    * (measured 50 s vs 3 s at q281's sf1 run in the staged-column era).
+    * The checkpoint is also the honest shape: this frame IS the codes
+    * artifact [[writeIvfPqIndex]] persists. */
   private def pqEncodeIndexed(base: DataFrame,
       cbBlock: Array[Array[Array[Double]]], csq: Array[Array[Double]],
       payloadCols: Seq[String] = Nil): DataFrame = {
@@ -1339,43 +1235,6 @@ object Similarity {
         col("enc").getField("codes").as("codes") +:
         col("enc").getField("err2").as("e2") +: col("nb2") +: pl: _*)
       .truncateLineage(eager = false)
-  }
-
-  /** The shared ADC probe tail of the IVF-PQ family, over pre-encoded
-    * (cell, corpus_id, codes) rows — however the coarse quantizer chose
-    * each row's cell ([[ivfPqTopK]]'s exact argmax, [[ivfPqTopKTwoLevel]]'s
-    * two-level route, or a persisted index's codes). `q0` holds the
-    * quantized queries (query_id, qv). One native
-    * [[graft.functions.PqQueryLut]] call per query row builds its
-    * per-(subspace, code) LUT, the row is routed to its top-`nprobe`
-    * cells ([[routeToCells]]) carrying that LUT, and candidates in
-    * probed cells sum nSub LUT lookups each into a bounded top-k. */
-  private def pqAdcScore(coded: DataFrame, q0: DataFrame,
-      centTab: Array[Array[Double]], cnTab: Array[Double], nprobe: Int,
-      cbBlock: Array[Array[Array[Double]]], csq: Array[Array[Double]],
-      k: Int): DataFrame = {
-    val probes = routeToCells(
-      q0.select(col("query_id"), col("qv"),
-        GraftFunctions.pqQueryLut(col("qv"), cbBlock, csq).as("lut")),
-      col("qv"), centTab, cnTab, nprobe).drop("qv")
-    // ADC scoring: nSub LUT probes per candidate; negated distance so
-    // the bounded top-k aggregate's (max score, ties id asc) semantics
-    // realize (min distance, ties corpus_id asc)
-    val approxD2 = cbBlock.indices.map { s =>
-      element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1) + 1)
-    }.reduce(_ + _)
-    val scored = coded.join(broadcast(probes), Seq("cell"))
-      .select(col("query_id"), col("corpus_id"), (-approxD2).as("score"))
-    // the result plan references the coded checkpoint (lazy barrier), so
-    // its blocks live exactly as long as the caller's frame — reaped by
-    // the ContextCleaner once the result is dropped (or deterministically
-    // by Lineage.scoped/retireDependents), unlike the loop-internal
-    // checkpoints the iterative family retires explicitly
-    topKReduce(scored, k)
-      .select(col("query_id"), col("corpus_id"),
-        (-col("score")).cast("long").as("approx_d2"),
-        col("rank").cast("long").as("rank"))
   }
 
   /** √N default for the IVF cell count and its probe default — exposed
@@ -1426,14 +1285,13 @@ object Similarity {
     * the whole index is engine-portable integer arithmetic (the
     * oracle-verified q281 variant).
     *
-    * Everything downstream is [[ivfPqTopK]] verbatim: one-pass encode to
-    * (corpus_id, cell, nSub codes), per-query ADC LUTs, O(codes) index
-    * traffic. Honest scale note: seeds fold into the plan as literals
-    * (cells × dims doubles) and every row scores all cells at assign
-    * time — O(N·√N·dims) assignment work and a √N-sized plan literal
-    * are the standard flat-IVF costs; beyond ~10⁵ cells a real
-    * deployment assigns via a second-level index over the centroids
-    * (out of scope here, the layout is unchanged by it). */
+    * Everything downstream is [[ivfPqTopK]]: one [[buildIvfPqIndex]]
+    * with flat assignment, then [[probeIvfPqIndex]] over the unpersisted
+    * frames. Like every seed source, the k-means centers are rounded to
+    * float32 before they are quantized (the index's one-float32-rounding
+    * rule). Flat assignment scores every corpus row against every cell
+    * — O(N·√N·dims), the standard flat-IVF cost; [[ivfPqTopKTwoLevel]]
+    * is the same call with the two-level route. */
   def ivfPqTopKScaled(corpus: DataFrame, corpusId: String,
       corpusVec: String, queries: DataFrame, queryId: String,
       queryVec: String, codebookIds: Seq[Long], inDims: Int, nSub: Int,
@@ -1442,177 +1300,103 @@ object Similarity {
       seed: Long = 42, maxTrainRows: Int = 65536): DataFrame = {
     require(trainer == "kmeans" || trainer == "hash",
       s"trainer must be 'kmeans' or 'hash', got $trainer")
-    val valid = corpus.select(col(corpusId).cast("long").as("__id"),
-        col(corpusVec).as("__v"))
-      .where(col("__v").isNotNull && size(col("__v")) === inDims)
-    val n = valid.count()
-    if (n == 0L) {
-      return queries.limit(0).select(lit(0L).as("query_id"),
-        lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
-        lit(0L).as("rank"))
+    ivfPqTopKN(corpus, corpusId, corpusVec, queries, queryId, queryVec,
+        codebookIds, inDims, nSub, k, numCells, nProbe, quantScale,
+        twoLevelThreshold = Int.MaxValue) { (valid, n, cells) =>
+      if (trainer == "hash") hashSeeds(valid, "__id", "__v", cells)
+      else kmeansSeeds(valid, n, cells, seed, maxTrainRows)
     }
-    val cells = numCells.getOrElse(defaultIvfCells(n))
-    val probe = nProbe.getOrElse(defaultIvfProbes(cells))
-    val seeds = trainer match {
-      case "hash" =>
-        hashSeeds(valid, "__id", "__v", cells)
-      case _ =>
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        // deterministic hash-capped training sample: the fit must never
-        // scan the full corpus at scale, and the same rows are kept on
-        // every run/engine restart (no rand())
-        val keepPpm = math.min(1000000L,
-          maxTrainRows.toLong * 1000000L / n)
-        val train = valid
-          .where(pmod(xxhash64(lit("ivf-train"), col("__id")),
-            lit(1000000L)) < lit(keepPpm))
-          .withColumn("features",
-            array_to_vector(col("__v").cast("array<double>")))
-          .truncateLineage(eager = false)
-        // loud guard (r13 advice): k-means needs >= k training rows.
-        // The ppm hash cap keeps ~maxTrainRows of them, so a caller-
-        // supplied numCells above the sample — or cells = ceil(sqrt(N))
-        // outgrowing maxTrainRows^2 corpora — must fail with the fix
-        // spelled out, not as a KMeans internals error at fit time.
-        val trainN = train.count()
-        require(trainN >= cells,
-          s"IVF k-means trainer: $cells cells requested but the hash-" +
-            s"capped training sample holds only $trainN rows (cap " +
-            s"maxTrainRows=$maxTrainRows); raise maxTrainRows above the " +
-            "cell count or lower numCells")
-        val model = new KMeans().setK(cells).setSeed(seed)
-          .setMaxIter(20).fit(train)
-        // the training sample's checkpoint fed the guard count + the fit
-        // iterations; dead once the centers are driver-side
-        graft.Lineage.retire(train)
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        model.clusterCenters.map(_.toArray.toSeq).zipWithIndex
-          .map { case (c, i) => (i, c) }.toSeq
-          .toDF("sid", "svec")
-    }
-    ivfPqTopK(corpus, corpusId, corpusVec, queries, queryId, queryVec,
-      seeds, "sid", "svec", codebookIds, inDims, nSub, k, probe,
-      quantScale)
   }
 
   /** IVF-PQ with a TWO-LEVEL coarse quantizer (r13 directive #3): the
-    * flat N-scaled form ([[ivfPqTopKScaled]]) folds all ⌈√N⌉ centroids
-    * into the plan as literals and scores every corpus row against every
-    * centroid — O(N·√N·dims) assignment work and a √N-sized plan
-    * literal, the standard flat-IVF ceiling (~10⁵ cells). Here the
-    * centroids themselves are indexed by a second-level IVF: ⌈√cells⌉
-    * SUPER-cells are hash-drawn from the centroid list (same
+    * hash-trained [[ivfPqTopKScaled]] with the corpus assigned through
+    * the q284 two-level route at every cell count ([[argmaxCell]]):
+    * ⌈√cells⌉ SUPER-cells are hash-drawn from the centroid list (same
     * (md5, id)-order rule as [[hashSeeds]], salt "ivf2", over cell
-    * indices), each centroid assigns to its argmax super-cell
-    * driver-side, and a corpus row (a) scores only the ∜N super-cells —
-    * the ONLY plan literal — then (b) scores only its super-cell's
-    * centroids, delivered as a BROADCAST relation of (g, members), not
-    * plan literals. Assignment work drops to O(N·∜N·dims) and the plan
-    * carries ∜N literals; the √N centroid table rides the broadcast
-    * path built for dimension tables.
-    *
-    * The two-level route is itself part of the quantizer definition
-    * (the nearest centroid may live outside the chosen super-cell —
-    * standard hierarchical-IVF semantics), and every score is exact
-    * integer arithmetic in doubles with ties to the lowest index, so an
-    * external engine replays the identical assignment (the q284
-    * oracle). QUERIES still rank all cells exactly for their probe sets
-    * (queries are small by contract — a query batch, not the corpus —
-    * and the native routing kernel keeps even that free of √N
-    * literals). Everything downstream is the shared [[pqAdcScore]]
-    * tail. */
+    * indices), each centroid groups under its argmax super-cell
+    * driver-side, and a corpus row scores the super-cells, then only its
+    * super-cell's centroids — O(N·∜N·dims) assignment instead of
+    * O(N·√N·dims). The route is part of the quantizer definition (the
+    * nearest centroid may live outside the chosen super-cell — standard
+    * hierarchical-IVF semantics), and every score is exact integer
+    * arithmetic with ties to the lowest index, so an external engine
+    * replays the identical assignment (the q284 oracle). QUERIES still
+    * rank all cells exactly for their probe sets. Like
+    * [[ivfPqTopKScaled]], one call is a [[buildIvfPqIndex]] (here with
+    * `twoLevelThreshold` 0) and a [[probeIvfPqIndex]] over the
+    * unpersisted frames, under the same one-float32-rounding rule. */
   def ivfPqTopKTwoLevel(corpus: DataFrame, corpusId: String,
       corpusVec: String, queries: DataFrame, queryId: String,
       queryVec: String, codebookIds: Seq[Long], inDims: Int, nSub: Int,
       k: Int, numCells: Option[Int] = None, nProbe: Option[Int] = None,
-      quantScale: Int = 10000): DataFrame = {
-    require(nSub >= 1 && inDims % nSub == 0,
-      s"inDims $inDims must divide into nSub $nSub")
-    require(codebookIds.nonEmpty, "need at least one codebook row")
-    val quantD = (v: Column) =>
-      transform(v, x => round(x.cast("double") * quantScale))
+      quantScale: Int = 10000): DataFrame =
+    ivfPqTopKN(corpus, corpusId, corpusVec, queries, queryId, queryVec,
+        codebookIds, inDims, nSub, k, numCells, nProbe, quantScale,
+        twoLevelThreshold = 0) { (valid, _, cells) =>
+      hashSeeds(valid, "__id", "__v", cells)
+    }
+
+  /** The N-scaled body of [[ivfPqTopKScaled]] and [[ivfPqTopKTwoLevel]]:
+    * N = the valid corpus rows (`__id`, `__v` of `inDims` entries),
+    * ⌈√N⌉ cells and ⌈√cells⌋ probes unless given, seeds from
+    * `seedsOf(valid, N, cells)`, then [[ivfPqTopK]]'s build → probe
+    * under `twoLevelThreshold`. An empty valid corpus is an empty
+    * result. */
+  private def ivfPqTopKN(corpus: DataFrame, corpusId: String,
+      corpusVec: String, queries: DataFrame, queryId: String,
+      queryVec: String, codebookIds: Seq[Long], inDims: Int, nSub: Int,
+      k: Int, numCells: Option[Int], nProbe: Option[Int], quantScale: Int,
+      twoLevelThreshold: Int)(
+      seedsOf: (DataFrame, Long, Int) => DataFrame): DataFrame = {
     val valid = corpus.select(col(corpusId).cast("long").as("__id"),
         col(corpusVec).as("__v"))
       .where(col("__v").isNotNull && size(col("__v")) === inDims)
     val n = valid.count()
-    val cb = collectCodebook(corpus, corpusId, corpusVec, codebookIds,
-      inDims, quantScale)
-    if (n == 0L || cb.isEmpty) {
-      return queries.limit(0).select(lit(0L).as("query_id"),
-        lit(0L).as("corpus_id"), lit(0L).as("approx_d2"),
-        lit(0L).as("rank"))
-    }
+    if (n == 0L) return noPqHits(queries, queryId)
+    require(codebookIds.nonEmpty, "need at least one codebook row")
     val cells = numCells.getOrElse(defaultIvfCells(n))
     val probe = nProbe.getOrElse(defaultIvfProbes(cells))
-    // centroids: the hashSeeds rows in ascending sid order (cell index =
-    // position), quantized to exact integers. Collected driver-side to
-    // group them under the super-quantizer — √N rows of dims doubles
-    // (16 MB at 10⁹ vectors), the same driver contract as the k-means
-    // clusterCenters; they return to the executors inside the kernels'
-    // reference objects.
-    val seedRows = hashSeeds(valid, "__id", "__v", cells)
-      .select(transform(col("svec"),
-        x => round(x.cast("double") * quantScale)).as("cv"))
-      .collect()
-    val cents: IndexedSeq[Seq[Double]] =
-      seedRows.map(_.getSeq[Double](0)).toIndexedSeq
-    val cn: IndexedSeq[Double] = cents.map(v => v.map(x => x * x).sum)
-    val nCells = cents.size
-    // super-seeds: the ⌈√cells⌉ cell INDICES with the smallest
-    // (md5("ivf2:" + cell), cell) — the hashSeeds rule one level up,
-    // replayable by any engine with md5
-    val superCount = math.max(1,
-      math.ceil(math.sqrt(nCells.toDouble)).toInt)
-    val superIdx: IndexedSeq[Int] = (0 until nCells)
-      .sortBy(ci => (md5hex15(s"ivf2:$ci"), ci)).take(superCount)
-      .toIndexedSeq
-    val superCents: Seq[Seq[Double]] = superIdx.map(cents)
-    val superCn: Seq[Double] = superIdx.map(cn)
-    // centroid -> super group, driver-side exact integer argmax
-    // (O(cells·√cells·dims) = O(N^¾·dims) flops — trivial beside one
-    // corpus pass); ties to the lowest super index
-    def superOf(v: Seq[Double]): Int =
-      (0 until superCount).maxBy { j =>
-        val s = superCents(j)
-        var d = 0.0; var i = 0
-        while (i < v.length) { d += v(i) * s(i); i += 1 }
-        (2.0 * d - superCn(j), -j)
-      }
-    val cellToSuper: IndexedSeq[Int] = cents.map(superOf)
-    // the assignment kernel's tables as primitive arrays — they ride
-    // the TASK CLOSURE as one opaque reference object (the two rejected
-    // shapes, both measured slower at 448 cells / 200k rows: √N plan
-    // literals, and a broadcast join copying each group's member arrays
-    // into every corpus row's join output)
-    val centsArr: Array[Array[Double]] = cents.map(_.toArray).toArray
-    val cnArr: Array[Double] = cn.toArray
-    val superCentsArr: Array[Array[Double]] =
-      superIdx.map(ci => centsArr(ci)).toArray
-    val superCnArr: Array[Double] = superIdx.map(ci => cnArr(ci)).toArray
-    val membersByG: Map[Int, IndexedSeq[Int]] =
-      (0 until nCells).groupBy(cellToSuper)
-    val memberCells: Array[Array[Int]] = Array.tabulate(superCount)(g =>
-      membersByG.getOrElse(g, IndexedSeq.empty).sorted.toArray)
-    // corpus assignment: one native codegen'd call per row (super argmax
-    // then member argmax, ties to the lowest index at both levels —
-    // exactly the oracle's two row_number ranks)
-    val base = widenForCompute(corpus)
-      .select(col(corpusId).cast("long").as("corpus_id"),
-        quantD(col(corpusVec)).as("qv"))
-      .where(col("qv").isNotNull && size(col("qv")) === inDims)
-      .select(col("corpus_id"), col("qv"),
-        GraftFunctions.ivfArgmaxCell(col("qv"), superCentsArr, superCnArr,
-          memberCells, centsArr, cnArr).as("cell"))
-    // query probes: exact ranking over ALL cells (queries are small by
-    // contract), ties to the lowest cell
-    val q0 = queries.select(col(queryId).cast("long").as("query_id"),
-        quantD(col(queryVec)).as("qv"))
-      .where(col("qv").isNotNull && size(col("qv")) === inDims)
-    val (cbBlock, csq) = pqTables(cb, inDims, nSub)
-    pqAdcScore(pqEncode(base, cbBlock, csq), q0, centsArr, cnArr, probe,
-      cbBlock, csq, k)
+    probeIvfPqIndex(buildIvfPqIndex(corpus, corpusId, corpusVec,
+        seedsOf(valid, n, cells), "sid", "svec", codebookIds, inDims, nSub,
+        quantScale, twoLevelThreshold),
+      queries, queryId, queryVec, k, probe)
+  }
+
+  /** k-means seeds for [[ivfPqTopKScaled]]: (sid, svec) = the `cells`
+    * centers of a fit on a deterministic hash-capped sample of `valid`
+    * (≤ `maxTrainRows` rows, the same rows on every run). */
+  private def kmeansSeeds(valid: DataFrame, n: Long, cells: Int, seed: Long,
+      maxTrainRows: Int): DataFrame = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    // the fit must never scan the full corpus at scale (no rand())
+    val keepPpm = math.min(1000000L, maxTrainRows.toLong * 1000000L / n)
+    val train = valid
+      .where(pmod(xxhash64(lit("ivf-train"), col("__id")),
+        lit(1000000L)) < lit(keepPpm))
+      .withColumn("features",
+        array_to_vector(col("__v").cast("array<double>")))
+      .truncateLineage(eager = false)
+    // loud guard (r13 advice): k-means needs >= k training rows. The ppm
+    // hash cap keeps ~maxTrainRows of them, so a caller-supplied
+    // numCells above the sample — or cells = ceil(sqrt(N)) outgrowing
+    // maxTrainRows^2 corpora — must fail with the fix spelled out, not
+    // as a KMeans internals error at fit time.
+    val trainN = train.count()
+    require(trainN >= cells,
+      s"IVF k-means trainer: $cells cells requested but the hash-" +
+        s"capped training sample holds only $trainN rows (cap " +
+        s"maxTrainRows=$maxTrainRows); raise maxTrainRows above the " +
+        "cell count or lower numCells")
+    val model = new KMeans().setK(cells).setSeed(seed).setMaxIter(20)
+      .fit(train)
+    // the training sample's checkpoint fed the guard count + the fit
+    // iterations; dead once the centers are driver-side
+    graft.Lineage.retire(train)
+    val spark = valid.sparkSession
+    import spark.implicits._
+    model.clusterCenters.toSeq.zipWithIndex
+      .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("sid", "svec")
   }
 
   private def md5hex15(s: String): String =
@@ -1701,14 +1485,18 @@ object Similarity {
     * silently diverge from the build's rounding or routing.
     *
     * The driver-side quantizer table (quantized centroids in cell order
-    * and their ‖c‖²) is collected once per frames value, on first use,
-    * and reused by every probe, audit and dedup pass over it. A frames
-    * value is a snapshot: re-open the index with [[readIvfIndex]] after
-    * a rebuild overwrites its root. */
+    * and their ‖c‖²) is the one [[buildIvfIndex]] computed, or else
+    * collected once per frames value, on first use, and reused by every
+    * probe, audit and dedup pass over it. A frames value is a snapshot:
+    * re-open the index with [[readIvfIndex]] after a rebuild overwrites
+    * its root. */
   final case class IvfIndexFrames(centroids: DataFrame, postings: DataFrame,
       quantScale: Int = 10000, twoLevelThreshold: Int = 4096) {
+    @volatile private[ops] var builtCellTable
+        : (Array[Array[Double]], Array[Double]) = null
     private[ops] lazy val cellTable: (Array[Array[Double]], Array[Double]) =
-      collectSeedTable(centroids, "cell", "cvec", quantScale)
+      Option(builtCellTable).getOrElse(
+        collectSeedTable(centroids, "cell", "cvec", quantScale))
   }
 
   /** Build the index frames for a seed set (e.g. [[hashSeeds]] output or
@@ -1731,7 +1519,7 @@ object Similarity {
       payloadCols: Seq[String] = Nil): IvfIndexFrames = {
     val (centroids, centTab, cnTab) =
       seedCentroids(seeds, seedId, seedVec, quantScale)
-    IvfIndexFrames(centroids,
+    val idx = IvfIndexFrames(centroids,
       if (centTab.isEmpty)
         // empty corpus → empty seed draw → a typed empty index (the
         // 100 TB empty-partition contract: complete, don't throw)
@@ -1743,6 +1531,8 @@ object Similarity {
       else assignPostings(corpus, corpusId, corpusVec, centTab, cnTab,
         quantScale, twoLevelThreshold, payloadCols),
       quantScale, twoLevelThreshold)
+    idx.builtCellTable = (centTab, cnTab)
+    idx
   }
 
   /** A build's centroids frame (cell = position in ascending `seedId`
@@ -1771,7 +1561,7 @@ object Similarity {
     * Deterministic from the table ALONE, so [[buildIvfIndex]] and
     * [[appendToIvfIndex]] re-derive identical routing from the persisted
     * centroids — no extra state to store. */
-  private def twoLevelTables(centTab: Array[Array[Double]],
+  private[graft] def twoLevelTables(centTab: Array[Array[Double]],
       cnTab: Array[Double])
       : (Array[Array[Double]], Array[Double], Array[Array[Int]]) = {
     val nCells = centTab.length
@@ -2162,18 +1952,24 @@ object Similarity {
   private def payloadColumns(spark: SparkSession,
       dir: String, core: Set[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val d = new Path(dir)
-    val fs = fileSystem(spark, d)
-    if (!fs.exists(d)) return Nil
-    fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .sortBy(_.getName).iterator
+    cellDirs(spark, dir).iterator
       .flatMap(parquetDataFiles(spark, _)).nextOption() match {
       case None => Nil
       case Some(f) => withFooter(spark, f)(_.getFooter.getFileMetaData
         .getSchema.getFields.asScala.map(_.getName).toSeq
         .filterNot(core))
     }
+  }
+
+  /** The cell partition dirs of the cell-partitioned `dir` (postings or
+    * codes), by name; none when it is absent. */
+  private def cellDirs(spark: SparkSession, dir: String): Seq[Path] = {
+    val d = new Path(dir)
+    val fs = fileSystem(spark, d)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
   }
 
   /** Rows of the parquet data files directly under `dir`, from their
@@ -2747,13 +2543,16 @@ object Similarity {
     }
   }
 
-  /** Probe a (persisted or in-memory) index: [[ivfTopKSeeded]]'s exact
-    * probe plan — each query row routed to its top-`nprobe` cells by one
-    * native kernel call over the index's quantizer table (collected once
-    * per frames value), then an equi-join of postings against the
-    * broadcast probe set and a bounded cosine top-`k` per query id. Each
+  /** Probe a (persisted or in-memory) index — also the probe half of
+    * [[ivfTopKSeeded]]: each query row routed to its top-`nprobe` cells
+    * by one native kernel call over the index's quantizer table (the
+    * build's, or collected once per frames value), then an equi-join of
+    * postings against the broadcast probe set and a bounded cosine
+    * top-`k` per query id. Each
     * row probes its own cells, so an id carried by several rows gets the
-    * best `k` over all of its rows' candidates. When `idx` came from
+    * best `k` over all of its rows' candidates. A query vector of any
+    * numeric element type is routed as given and scored as float32, the
+    * postings' type. When `idx` came from
     * [[readIvfIndex]] the cell join triggers dynamic partition pruning
     * on the postings scan (the probe side is broadcast, the join key is
     * the disk-partition column), so only the probed cells' files are
@@ -2774,8 +2573,20 @@ object Similarity {
     val (centTab, cnTab) = idx.cellTable
     // empty index: every probe finds nothing (complete, don't throw)
     if (centTab.isEmpty) return noIvfHits(queries, queryId)
-    ivfProbe(postings, centTab, cnTab, idx.quantScale, queries, queryId,
-      queryVec, k, nprobe)
+    // scored as float32 against the float32 postings (vector_dot takes
+    // one element type), routed from the vector as given
+    val qvec = col(queryVec).cast("array<float>")
+    val q0 = queries.select(col(queryId).as("query_id"), qvec.as("qvec"),
+      norm(qvec).as("qnorm"),
+      transform(col(queryVec),
+        x => round(x.cast("double") * idx.quantScale)).as("__qn"))
+    val probes = routeToCells(q0, col("__qn"), centTab, cnTab, nprobe)
+      .drop("__qn")
+    val scored = postings.join(broadcast(probes), Seq("cell"))
+      .select(col("query_id"), col("corpus_id"),
+        cosinePre(dot(col("cvec"), col("qvec")), col("cnorm"), col("qnorm"))
+          .as("score"))
+    topKReduce(scored, k)
   }
 
   /** The empty result of an IVF probe: query_id keeps its original type
@@ -3199,15 +3010,13 @@ object Similarity {
     * cell ≥ [[adcPrefilterRouteMinPostingsPerCell]]. Driver-side
     * estimate from parquet metadata counts (footer row counts — no
     * corpus scan; the pending-tombstone overcount is noise at routing
-    * granularity); a fresh index (no posting files) routes raw. */
+    * granularity; no Spark job); a fresh index (no posting files)
+    * routes raw. */
   def annNearDupRoutesToPq(spark: SparkSession,
       rawIndexPath: String): Boolean = {
-    val n =
-      try spark.read.parquet(rawIndexPath + "/postings").count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-    val cells =
-      try spark.read.parquet(rawIndexPath + "/centroids").count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    val n = cellDirs(spark, rawIndexPath + "/postings")
+      .map(d => footerRowCount(spark, d.toString)).sum
+    val cells = footerRowCount(spark, rawIndexPath + "/centroids")
     cells > 0 &&
       n.toDouble / cells >= adcPrefilterRouteMinPostingsPerCell
   }
@@ -3271,7 +3080,7 @@ object Similarity {
     // the exact pass's own kernel) and a caller-supplied lineage (a
     // synthetic generator, an expensive upstream transform) would
     // otherwise re-evaluate per reference — batch-scale blocks, reaped
-    // with the result frame (the pqEncode ownership contract)
+    // with the result frame (the pqEncodeIndexed ownership contract)
     val q0 = newRows.select(col(idCol).cast("long").as("id_new"),
         quant(col(vecCol)).as("__qn"))
       .where(col("__qn").isNotNull && size(col("__qn")) === pq.inDims)
@@ -3407,14 +3216,20 @@ object Similarity {
     *
     * As for [[IvfIndexFrames]], the driver-side quantizer tables — the
     * centroid table, the quantized codebook and its PQ kernel tables —
-    * are collected once per frames value, on first use. */
+    * are the ones [[buildIvfPqIndex]] computed, or else collected once
+    * per frames value, on first use. */
   final case class IvfPqIndexFrames(centroids: DataFrame,
       codebook: DataFrame, codes: DataFrame, inDims: Int, nSub: Int,
       quantScale: Int, twoLevelThreshold: Int = 4096) {
+    @volatile private[ops] var builtCellTable
+        : (Array[Array[Double]], Array[Double]) = null
+    @volatile private[ops] var builtCodebook: Seq[Seq[Long]] = null
     private[ops] lazy val cellTable: (Array[Array[Double]], Array[Double]) =
-      collectSeedTable(centroids, "cell", "cvec", quantScale)
+      Option(builtCellTable).getOrElse(
+        collectSeedTable(centroids, "cell", "cvec", quantScale))
     private[ops] lazy val codebookTable: Seq[Seq[Long]] =
-      collectCodebookFrame(codebook, quantScale)
+      Option(builtCodebook).getOrElse(
+        collectCodebookFrame(codebook, quantScale))
     private[ops] lazy val pqKernelTables
         : (Array[Array[Array[Double]]], Array[Array[Double]]) =
       pqTables(codebookTable, inDims, nSub)
@@ -3492,15 +3307,18 @@ object Similarity {
             payloadCols.map(col): _*),
         inDims, nSub, quantScale, twoLevelThreshold)
     }
-    val codebookFrame = cbRows.toDF("ci", "cv")
-    val (cbBlock, csq) = pqTables(
-      collectCodebookFrame(codebookFrame, quantScale), inDims, nSub)
+    val codebook = codebookRows(
+      cbRows.map(_._2.map(_.toDouble).toArray), quantScale)
+    val (cbBlock, csq) = pqTables(codebook, inDims, nSub)
     val base = coarseAssignQuantized(corpus, corpusId, corpusVec,
       centTab, cnTab, quantScale, twoLevelThreshold, inDims,
       payloadCols)
-    IvfPqIndexFrames(centroids, codebookFrame,
+    val idx = IvfPqIndexFrames(centroids, cbRows.toDF("ci", "cv"),
       pqEncodeIndexed(base, cbBlock, csq, payloadCols),
       inDims, nSub, quantScale, twoLevelThreshold)
+    idx.builtCellTable = (centTab, cnTab)
+    idx.builtCodebook = codebook
+    idx
   }
 
   /** Persist the PQ index: tiny `centroids`/`codebook`/`meta` files plus
@@ -3586,12 +3404,32 @@ object Similarity {
     val (centTab, cnTab) = idx.cellTable
     if (centTab.isEmpty || idx.codebookTable.isEmpty)
       return noPqHits(queries, queryId)
-    val q0 = queries.select(col(queryId).cast("long").as("query_id"),
-        transform(col(queryVec),
-          x => round(x.cast("double") * idx.quantScale)).as("qv"))
-      .where(col("qv").isNotNull && size(col("qv")) === idx.inDims)
     val (cbBlock, csq) = idx.pqKernelTables
-    pqAdcScore(codes, q0, centTab, cnTab, nprobe, cbBlock, csq, k)
+    val probes = routeToCells(
+      queries.select(col(queryId).cast("long").as("query_id"),
+          transform(col(queryVec),
+            x => round(x.cast("double") * idx.quantScale)).as("qv"))
+        .where(col("qv").isNotNull && size(col("qv")) === idx.inDims)
+        .withColumn("lut",
+          GraftFunctions.pqQueryLut(col("qv"), cbBlock, csq)),
+      col("qv"), centTab, cnTab, nprobe).drop("qv")
+    // ADC scoring: nSub LUT probes per candidate; negated distance so
+    // the bounded top-k aggregate's (max score, ties id asc) semantics
+    // realize (min distance, ties corpus_id asc)
+    val approxD2 = cbBlock.indices.map { s =>
+      element_at(element_at(col("lut"), s + 1),
+        element_at(col("codes"), s + 1) + 1)
+    }.reduce(_ + _)
+    val scored = codes.join(broadcast(probes), Seq("cell"))
+      .select(col("query_id"), col("corpus_id"), (-approxD2).as("score"))
+    // the result plan references the codes' lazy checkpoint when they
+    // come from a build, so its blocks live exactly as long as the
+    // caller's frame — reaped by the ContextCleaner once the result is
+    // dropped (or deterministically by Lineage.scoped/retireDependents)
+    topKReduce(scored, k)
+      .select(col("query_id"), col("corpus_id"),
+        (-col("score")).cast("long").as("approx_d2"),
+        col("rank").cast("long").as("rank"))
   }
 
   /** The empty result of a PQ probe. */

@@ -606,26 +606,9 @@ object ProbeAnn {
             col("qv"), seedTab, cn, null, null, null).as("cell"))
           .agg(count(col("cell"))).head(); n
       }
-      val superCount = math.max(1,
-        math.ceil(math.sqrt(seedTab.length.toDouble)).toInt)
-      def md5hex15(s: String): String =
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          .substring(0, 15)
-      val superIdx = seedTab.indices
-        .sortBy(ci => (md5hex15(s"ivf2:$ci"), ci)).take(superCount)
-      val superCents = superIdx.map(seedTab).toArray
-      val superCn = superIdx.map(cn).toArray
-      def superOf(v: Array[Double]): Int =
-        (0 until superCount).maxBy { j =>
-          val s = superCents(j)
-          var d = 0.0; var i = 0
-          while (i < v.length) { d += v(i) * s(i); i += 1 }
-          (2.0 * d - superCn(j), -j)
-        }
-      val c2g = seedTab.map(superOf)
-      val memberCells = Array.tabulate(superCount)(g =>
-        seedTab.indices.filter(ci => c2g(ci) == g).toArray)
+      val (superCents, superCn, memberCells) =
+        Similarity.twoLevelTables(seedTab, cn)
+      val superCount = superCents.length
       val (nativeTwoSec, _) = timeRows {
         valid.select(graft.functions.GraftFunctions.ivfArgmaxCell(
             col("qv"), superCents, superCn, memberCells, seedTab, cn)

@@ -46,7 +46,11 @@ class AnnIndexSpec extends SparkSuite {
     val direct = probeRows(Similarity.ivfTopKSeeded(corpus, "vec_id",
       "embedding", queries, "vec_id", "embedding",
       seeds, "sid", "svec", k = 5, nprobe = 3))
+    val reference = probeRows(InQueryIvfReference.ivfTopKSeeded(corpus,
+      "vec_id", "embedding", queries, "vec_id", "embedding",
+      seeds, "sid", "svec", k = 5, nprobe = 3))
     assert(viaIndex === direct)
+    assert(direct === reference)
     assert(viaIndex.nonEmpty)
   }
 
@@ -345,7 +349,11 @@ class AnnIndexSpec extends SparkSuite {
     val direct = pqRows(Similarity.ivfPqTopK(corpus, "vec_id",
       "embedding", queries, "vec_id", "embedding", seeds, "sid", "svec",
       cbIds, inDims = dims, nSub = 2, k = 5, nProbe = 3))
+    val reference = pqRows(InQueryIvfReference.ivfPqTopK(corpus, "vec_id",
+      "embedding", queries, "vec_id", "embedding", seeds, "sid", "svec",
+      cbIds, inDims = dims, nSub = 2, k = 5, nProbe = 3))
     assert(persisted === direct)
+    assert(direct === reference)
     assert(persisted.nonEmpty)
     // the probe's codes scan dynamically prunes unprobed cells
     val probe = Similarity.probeIvfPqIndex(back,
@@ -1581,6 +1589,17 @@ class AnnIndexSpec extends SparkSuite {
     Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, "vec_id",
       "embedding", seeds, "sid", "svec"), sparsePath)
     assert(!Similarity.annNearDupRoutesToPq(spark, sparsePath))
+    // a fresh root (quantizer written, no postings) routes raw
+    val freshPath = tmpDir("routefresh")
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(
+      dense.where(lit(false)), "vec_id", "embedding", dseeds, "sid",
+      "svec"), freshPath)
+    assert(!Similarity.annNearDupRoutesToPq(spark, freshPath))
+    // the decision reads parquet footers on the driver: no Spark job
+    Seq(densePath, sparsePath, freshPath).foreach { p =>
+      assert(org.apache.spark.TestJobs.of(spark)(
+        Similarity.annNearDupRoutesToPq(spark, p))._1 === 0, p)
+    }
     // the wrapper emits the raw kernel's exact pairs on BOTH routes
     val densePqPath = tmpDir("routedensepq")
     Similarity.writeIvfPqIndex(Similarity.buildIvfPqIndex(dense,

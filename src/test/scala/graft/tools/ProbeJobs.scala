@@ -75,6 +75,16 @@ import graft.streaming.Streams
   * and `addToClusters`' relabelling action), wall time, rows and
   * checksum.
   *
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> ann-inquery"
+  *
+  * the in-query IVF and IVF-PQ top-k calls over the 2000-vector corpus
+  * in the shapes of q38 (`ivfTopKSeeded`, 16 seeds), q263 (`ivfPqTopK`),
+  * q281 (`ivfPqTopKScaled`, hash trainer), q284 (`ivfPqTopKTwoLevel`)
+  * and q290 (q281 at k = 30 re-ranked by `rerankExactTopK`), five
+  * queries, after one unmeasured warm-up round. Writes
+  * `<outDir>/ann_inquery_<tag>.{json,md}`: per call its Spark jobs, SQL
+  * executions, wall time, rows and checksum.
+  *
   * Only public calls are used, so the same file measures any version of
   * the library. */
 object ProbeJobs {
@@ -110,8 +120,9 @@ object ProbeJobs {
       case Array(outDir, tag, "terminology") => terminology(outDir, tag)
       case Array(outDir, tag, "fhir") => fhir(outDir, tag)
       case Array(outDir, tag, "loops") => loops(outDir, tag)
-      case _ => sys.error(
-        "usage: ProbeJobs <outDir> <tag> [stream|terminology|fhir|loops]")
+      case Array(outDir, tag, "ann-inquery") => annInQuery(outDir, tag)
+      case _ => sys.error("usage: ProbeJobs <outDir> <tag> " +
+        "[stream|terminology|fhir|loops|ann-inquery]")
     }
     spark.stop()
   }
@@ -562,17 +573,9 @@ object ProbeJobs {
     import spark.implicits._
     val out = scala.collection.mutable.ArrayBuffer.empty[
       (String, Int, Int, Int, Double, Long, java.math.BigDecimal)]
-    def verb(name: String)(result: => DataFrame): Unit = {
-      var row: org.apache.spark.sql.Row = null
-      val t0 = System.nanoTime()
-      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
-        val df = result
-        row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
-            df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head()
-      }
-      out += ((name, n, plans.size, loopRounds(plans),
-        (System.nanoTime() - t0) / 1e9, row.getLong(0), row.getDecimal(1)))
+    def verb(name: String)(result: => DataFrame): Unit = out += {
+      val (n, plans, s, rows, sum) = checksummed(result)
+      (name, n, plans.size, loopRounds(plans), s, rows, sum)
     }
     val dag = dagEdges.map { case (a, c) => (a.toLong, c.toLong) }
     val (delta, base) = dag.partition { case (_, c) => c % 10 == 0 }
@@ -615,6 +618,24 @@ object ProbeJobs {
     out.toSeq
   }
 
+  /** Builds `result` and reduces it to one row: the Spark jobs and SQL
+    * execution plans of both, the seconds, the result's row count and
+    * the decimal sum of its rows' `xxhash64` (equal sums: the same
+    * rows). */
+  private def checksummed(result: => DataFrame)
+      : (Int, Seq[String], Double, Long, java.math.BigDecimal) = {
+    var row: org.apache.spark.sql.Row = null
+    val t0 = System.nanoTime()
+    val (n, plans) = org.apache.spark.TestJobs.of(spark) {
+      val df = result
+      row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
+          df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO))).head()
+    }
+    (n, plans, (System.nanoTime() - t0) / 1e9, row.getLong(0),
+      row.getDecimal(1))
+  }
+
   /** The executions whose plan joins over a checkpoint. */
   private[graft] def loopRounds(plans: Seq[String]): Int =
     plans.count(p => p.contains("Join") && p.contains("ExistingRDD"))
@@ -636,6 +657,67 @@ object ProbeJobs {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, s"loops_$tag.json"), json)
     Files.writeString(Paths.get(outDir, s"loops_$tag.md"),
+      md.mkString("", "\n", "\n"))
+    println(md.mkString("\n"))
+  }
+
+  // ===== in-query ANN =====
+
+  /** One pass over the in-query IVF / IVF-PQ calls: per call (name, jobs,
+    * SQL executions, seconds, rows, checksum). */
+  private def annInQueryRound()
+      : Seq[(String, Int, Int, Double, Long, java.math.BigDecimal)] = {
+    val q = corpus.where(col("vec_id") < 5)
+    val seeds = corpus.where(col("vec_id") < 16)
+    def call(name: String)(result: => DataFrame) = {
+      val (n, plans, s, rows, sum) = checksummed(result)
+      (name, n, plans.size, s, rows, sum)
+    }
+    Seq(
+      call("q38 ivfTopKSeeded") {
+        Similarity.ivfTopKSeeded(corpus, "vec_id", "embedding", q, "vec_id",
+          "embedding", seeds, "vec_id", "embedding", k = 10, nprobe = 4)
+      },
+      call("q263 ivfPqTopK") {
+        Similarity.ivfPqTopK(corpus, "vec_id", "embedding", q, "vec_id",
+          "embedding", seeds, "vec_id", "embedding",
+          codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 10,
+          nProbe = 4)
+      },
+      call("q281 ivfPqTopKScaled") {
+        Similarity.ivfPqTopKScaled(corpus, "vec_id", "embedding", q,
+          "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
+          nSub = 8, k = 10, trainer = "hash")
+      },
+      call("q284 ivfPqTopKTwoLevel") {
+        Similarity.ivfPqTopKTwoLevel(corpus, "vec_id", "embedding", q,
+          "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
+          nSub = 8, k = 10)
+      },
+      call("q290 ivfPqTopKScaled + rerank") {
+        Similarity.rerankExactTopK(corpus, "vec_id", "embedding", q,
+          "vec_id", "embedding", Similarity.ivfPqTopKScaled(corpus,
+            "vec_id", "embedding", q, "vec_id", "embedding",
+            codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 30,
+            trainer = "hash"), k = 10)
+      })
+  }
+
+  private def annInQuery(outDir: String, tag: String): Unit = {
+    annInQueryRound() // warm-up: JIT and first-plan compilation
+    val measured = annInQueryRound()
+    val json = measured.map { case (name, n, execs, s, rows, sum) =>
+      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
+        f""""seconds": $s%.3f, "rows": $rows, "checksum": "$sum"}"""
+    }.mkString("{", ",\n ", "}\n")
+    val md = Seq("| call | jobs | SQL executions | seconds | rows | checksum |",
+      "|---|---|---|---|---|---|") ++ measured.map {
+      case (name, n, execs, s, rows, sum) =>
+        f"| $name | $n | $execs | $s%.2f | $rows | $sum |"
+    }
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.json"), json)
+    Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.md"),
       md.mkString("", "\n", "\n"))
     println(md.mkString("\n"))
   }
