@@ -81,8 +81,9 @@ object Graphs {
     }
   }
 
-  /** The entry of the graph loops (both PageRanks, [[kCore]]): the
-    * (src, dst) edges as bigints on an isolated session with AQE off
+  /** The entry of the graph loops (both PageRanks, [[kCore]],
+    * [[dagDepth]]): the (src, dst) edges as bigints on an isolated
+    * session with AQE off
     * ([[graft.ConfScope.loopEntry]]: checkpoints only capture
     * outputPartitioning without the AdaptiveSparkPlan wrapper, and that
     * capture is what keeps the per-round state join exchange-free;
@@ -290,38 +291,36 @@ object Graphs {
     * the deepest-specialization rank a flat closure cannot express).
     * depth(n) = 0 for roots, else 1 + max over parents.
     *
-    * Max-propagation fixpoint in the transitive-closure family's shape:
-    * each round is one keyed join (state × edges, shuffles only the
-    * O(N) depth frame — the edge list is partitioned once and reused)
-    * + one groupBy max + a changed-row count fused with the
-    * localCheckpoint that truncates lineage. Rounds = graph depth.
+    * Max-propagation fixpoint entered like the other graph loops
+    * ([[graphLoop]], parent → src, child → dst): each round is one keyed
+    * join of the checkpointed edges against the depth state + one
+    * groupBy max. Self-loops are ignored. Rounds = graph depth.
     * Throws after `maxIterations` (a cycle never converges — failing
     * loudly beats silently wrong depths). */
   def dagDepth(spark: SparkSession, edges: DataFrame,
-      maxIterations: Int = 64): DataFrame = {
-    val e = edges.select(col("parent").cast("long").as("parent"),
-        col("child").cast("long").as("child"))
-      .where(col("parent") =!= col("child")).distinct()
-      .repartition(col("parent")).persist()
-    val nodes = e.select(col("parent").as("node"))
-      .unionAll(e.select(col("child").as("node"))).distinct()
-    // depths only ever grow, so convergence is "the depth SUM stopped
-    // moving" — one scalar aggregate over the round's checkpoint instead
-    // of a join-against-previous diff; round 0's sum is 0
-    graft.Lineage.fixpoint(
-      nodes.select(col("node"), lit(0L).as("depth")).truncateLineage(),
-      maxIterations,
-      Some(0L -> ((df: DataFrame) =>
-        df.agg(coalesce(sum(col("depth")), lit(0L))).head().getLong(0))),
-      s"dagDepth did not converge in $maxIterations rounds — " +
-        "cycle in the edge list?",
-      releasing = Seq(e)) { state =>
-      val viaParent = e.join(state, e("parent") === state("node"))
-        .select(col("child").as("node"), (col("depth") + 1).as("depth"))
-      state.unionAll(viaParent)
-        .groupBy(col("node")).agg(max(col("depth")).as("depth"))
+      maxIterations: Int = 64): DataFrame =
+    graphLoop(spark,
+        edges.select(col("parent").as("src"), col("child").as("dst"))) {
+        entry =>
+      val e = entry.frame.where(col("src") =!= col("dst"))
+      val nodes = e.select(col("src").as("node"))
+        .unionAll(e.select(col("dst").as("node"))).distinct()
+      // depths only ever grow, so convergence is "the depth SUM stopped
+      // moving" — one scalar aggregate over the round's checkpoint
+      // instead of a join-against-previous diff; round 0's sum is 0
+      graft.Lineage.fixpoint(
+        nodes.select(col("node"), lit(0L).as("depth")).truncateLineage(),
+        maxIterations,
+        Some(0L -> ((df: DataFrame) =>
+          df.agg(coalesce(sum(col("depth")), lit(0L))).head().getLong(0))),
+        s"dagDepth did not converge in $maxIterations rounds — " +
+          "cycle in the edge list?") { state =>
+        val viaParent = e.join(state, e("src") === state("node"))
+          .select(col("dst").as("node"), (col("depth") + 1).as("depth"))
+        state.unionAll(viaParent)
+          .groupBy(col("node")).agg(max(col("depth")).as("depth"))
+      }
     }
-  }
 
   /** Item-item top-k neighbor lists from a weighted co-occurrence edge
     * list — the classic collaborative-filtering building block ("parts

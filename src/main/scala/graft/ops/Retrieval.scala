@@ -148,7 +148,7 @@ object Retrieval {
     val contrib = lex.unionByName(vec)
     // fused is referenced twice (top-N aggregate + detail join-back);
     // without a lineage barrier BOTH retrieval kernels would re-scan
-    // the corpus for each reference (the annNearDupScored lesson). The
+    // the corpus for each reference (the near-dup kernel's lesson). The
     // frame is bounded (|queries| × 2·perListK rows), so the barrier
     // is O(results), not O(corpus).
     val fused = contrib.groupBy(col("query_id"), col("doc_id"))

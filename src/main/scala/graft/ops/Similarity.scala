@@ -1750,6 +1750,8 @@ object Similarity {
     def data(idx: F): DataFrame
     def frames(tables: Seq[DataFrame], data: DataFrame,
         meta: Map[String, Int]): F
+    /** `idx` with `root`'s quantizer tables as its driver-side tables. */
+    def carrying(idx: F, root: OpenedRoot): F
   }
 
   /** The raw-vector IVF index: postings carry the float32 vector and its
@@ -1772,6 +1774,10 @@ object Similarity {
         meta: Map[String, Int]): IvfIndexFrames =
       IvfIndexFrames(tables.head, data, meta("quant_scale"),
         meta("two_level_threshold"))
+    def carrying(idx: IvfIndexFrames, root: OpenedRoot): IvfIndexFrames = {
+      idx.builtCellTable = (root.centTab, root.cnTab)
+      idx
+    }
   }
 
   /** The IVF-PQ index: codes carry the PQ code array and the two margin
@@ -1802,6 +1808,11 @@ object Similarity {
         meta: Map[String, Int]): IvfPqIndexFrames =
       IvfPqIndexFrames(tables(0), tables(1), data, meta("in_dims"),
         meta("n_sub"), meta("quant_scale"), meta("two_level_threshold"))
+    def carrying(idx: IvfPqIndexFrames, root: OpenedRoot): IvfPqIndexFrames = {
+      idx.builtCellTable = (root.centTab, root.cnTab)
+      idx.builtCodebook = root.codebook
+      idx
+    }
   }
 
   // ===== Driver-side open of a persisted root (no Spark job) =====
@@ -1821,24 +1832,37 @@ object Similarity {
       pqTables(codebook, meta("in_dims"), meta("n_sub"))
   }
 
-  /** The open of one root carried across calls — a maintenance stream
-    * keeps one for its lifetime. [[current]] lists the kind's quantizer
-    * dirs on the driver (names, sizes, mtimes; no Spark job) and reopens
-    * the root only when that listing changed, so a rebuild of the root
-    * by another writer is routed under from the next call on. The stamp
-    * is taken before the open: a change racing the open shows up as a
-    * changed stamp on the next call. */
-  private[graft] final class RootView(val path: String,
-      val kind: IndexKind[_]) {
+  /** The open of one root carried across calls — the index-reading
+    * streams keep one per root for their lifetime. [[current]] lists
+    * the kind's quantizer dirs on the driver (names, sizes, mtimes; no
+    * Spark job) and reopens the root only when that listing changed, so
+    * a rebuild of the root by another writer is routed under from the
+    * next call on. The stamp is taken before the open: a change racing
+    * the open shows up as a changed stamp on the next call. [[read]]
+    * reads the root's rows as [[readIndex]] does and takes the meta and
+    * quantizer tables from the open, so no table is collected through
+    * Spark; the table frames are read once per open. */
+  private[graft] final class RootView[F](val path: String,
+      val kind: IndexKind[F]) {
     private var stamp: Seq[(String, Long, Long)] = null
     private var opened: OpenedRoot = null
+    private var tables: Seq[DataFrame] = null
     def current(spark: SparkSession): OpenedRoot = synchronized {
       val now = quantizerStamp(spark)
       if (opened == null || now != stamp) {
         opened = openRoot(spark, kind, path)
         stamp = now
+        tables = null
       }
       opened
+    }
+
+    def read(spark: SparkSession): F = synchronized {
+      val rows = readRows(spark, kind, path)
+      val root = current(spark)
+      if (tables == null)
+        tables = kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}"))
+      kind.carrying(kind.frames(tables, rows, root.meta), root)
     }
 
     private def quantizerStamp(spark: SparkSession)
@@ -2265,9 +2289,10 @@ object Similarity {
       batchId)
 
   /** The exactly-once append of either kind, routing under `view` — the
-    * maintenance streams carry one view for their lifetime. */
+    * index-appending streams carry one view per root for their
+    * lifetime. */
   private[graft] def appendOnce(spark: SparkSession,
-      view: RootView, delta: DataFrame, idCol: String, vecCol: String,
+      view: RootView[_], delta: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Boolean = {
     if (readAppendHwm(spark, view.path) >= batchId) return false
     appendIndex(spark, view.kind, view.path, delta, idCol, vecCol,
@@ -2325,16 +2350,17 @@ object Similarity {
     catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
 
-  /** Apply the pending tombstones (if any) to a postings/codes frame —
-    * broadcast anti-join on corpus_id, map-side only. */
+  /** Apply the pending tombstones (if any) to a postings/codes frame. */
   private def applyTombstones(spark: SparkSession,
       path: String, rows: DataFrame): DataFrame =
-    readTombstones(spark, path) match {
-      case Some(tomb) => rows.join(
-        broadcast(tomb.select(col("corpus_id"))), Seq("corpus_id"),
-        "left_anti")
-      case None => rows
-    }
+    readTombstones(spark, path).fold(rows)(withoutIds(rows, _))
+
+  /** `rows` without the corpus ids in `ids`' first column (tombstones,
+    * a dedup exclude list): a broadcast anti join, map-side only. */
+  private def withoutIds(rows: DataFrame, ids: DataFrame): DataFrame =
+    rows.join(broadcast(ids.select(
+        col(ids.columns.head).cast("long").as("corpus_id"))),
+      Seq("corpus_id"), "left_anti")
 
   /** Crash recovery for the tombstone-rewrite swap (resurrection path):
     * write staged → retire live → promote staged → drop retired. A
@@ -2397,7 +2423,7 @@ object Similarity {
         .isEmpty) return
     val (live, staged, retired) = swapDirs(path, "tombstones", "staged")
     val fs = fileSystem(spark, live)
-    tomb.join(broadcast(delta), Seq("corpus_id"), "left_anti")
+    withoutIds(tomb, delta)
       .coalesce(1).write.mode("overwrite").parquet(staged.toString)
     require(fs.rename(live, retired),
       s"resurrectTombstones: could not retire $live")
@@ -2453,10 +2479,18 @@ object Similarity {
     * map-side only, until the next compaction removes them physically. */
   private def readIndex[F](spark: SparkSession,
       kind: IndexKind[F], path: String): F = {
-    val op = s"read${kind.label}Index"
+    val rows = readRows(spark, kind, path)
+    val meta = readMeta(spark, kind, path, s"read${kind.label}Index")
+    kind.frames(kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}")),
+      rows, meta)
+  }
+
+  /** [[readIndex]]'s data rows: recovered, tombstoned, empty if fresh. */
+  private def readRows(spark: SparkSession, kind: IndexKind[_],
+      path: String): DataFrame = {
     if (recoverIvfPostings(spark, path, kind.dataDir))
-      throw damagedRoot(op, path, kind, "serve an empty index")
-    val meta = readMeta(spark, kind, path, op)
+      throw damagedRoot(s"read${kind.label}Index", path, kind,
+        "serve an empty index")
     val data =
       try spark.read.parquet(s"$path/${kind.dataDir}")
       catch {
@@ -2465,8 +2499,7 @@ object Similarity {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             kind.coreSchema)
       }
-    kind.frames(kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}")),
-      applyTombstones(spark, path, data), meta)
+    applyTombstones(spark, path, data)
   }
 
   /** Append a delta of new vectors to a persisted index WITHOUT
@@ -2679,20 +2712,17 @@ object Similarity {
     * probe set (batch × nprobe rows, each carrying its quantized
     * vector) is BROADCAST, so `newRows` is micro-batch-sized by
     * contract — the indexed corpus side streams through map-side only
-    * and is never shuffled. */
+    * and is never shuffled. A row whose vector is null or not of the
+    * index's length pairs with nothing. */
   def annNearDupPairs(idx: IvfIndexFrames, newRows: DataFrame,
       idCol: String, vecCol: String, thresholdPpm: Long,
       nprobe: Int = 4, maxPairsPerNew: Int = 0,
-      excludeIds: DataFrame = null): DataFrame = {
-    val scored = annNearDupScored(idx, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-    if (maxPairsPerNew <= 0)
-      scored.select(col("id_new"), col("id_existing"))
-    else cappedPairsFromScored(scored, maxPairsPerNew)
-  }
+      excludeIds: DataFrame = null): DataFrame =
+    pairsFromScored(nearDupPasses(idx, None, newRows, idCol, vecCol,
+      thresholdPpm, nprobe, excludeIds)._1, maxPairsPerNew)
 
-  /** The cap tail of [[annNearDupPairs]] over a pre-scored frame:
-    * keep the top-`maxPairsPerNew` partners per new row by
+  /** The pair tail of every dedup route over a scored frame: all pairs,
+    * or under a `maxPairsPerNew` cap the top partners per new row by
     * quantized-cosine order. Rank key = dotq² div nb2 — exact integer
     * (≤ nq2 < 2⁵³ by Cauchy–Schwarz, so also exact in the aggregate's
     * double score), same id_new ⇒ same nq2, so the key orders like
@@ -2701,9 +2731,10 @@ object Similarity {
     * engine-replayable. Bounded O(c) partial buffers, map-side
     * combined; account for what the cap drops with
     * [[annNearDupDropReport]] (the q279 no-silent-caps pattern). */
-  private def cappedPairsFromScored(scored: DataFrame,
+  private def pairsFromScored(scored: DataFrame,
       maxPairsPerNew: Int): DataFrame =
-    scored
+    if (maxPairsPerNew <= 0) scored.select(col("id_new"), col("id_existing"))
+    else scored
       .withColumn("__key", expr(
         "cast((cast(dotq as decimal(19,0)) * cast(dotq as " +
           "decimal(19,0))) div cast(nb2 as decimal(19,0)) as double)"))
@@ -2727,11 +2758,11 @@ object Similarity {
       excludeIds: DataFrame = null): DataFrame = {
     require(maxPairsPerNew > 0,
       s"maxPairsPerNew must be > 0, got $maxPairsPerNew")
-    dropReportFromScored(annNearDupScored(idx, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds), maxPairsPerNew)
+    dropReportFromScored(nearDupPasses(idx, None, newRows, idCol, vecCol,
+      thresholdPpm, nprobe, excludeIds)._1, maxPairsPerNew)
   }
 
-  /** The accounting tail of [[annNearDupDropReport]] over a pre-scored
+  /** The accounting tail of [[annNearDupDropReport]] over a scored
     * frame. */
   private def dropReportFromScored(scored: DataFrame,
       maxPairsPerNew: Int): DataFrame =
@@ -2761,101 +2792,127 @@ object Similarity {
       newRows: DataFrame, idCol: String, vecCol: String,
       thresholdPpm: Long, maxPairsPerNew: Int, nprobe: Int = 4,
       excludeIds: DataFrame = null)(
-      emit: (DataFrame, DataFrame) => Unit): Unit = {
+      emit: (DataFrame, DataFrame) => Unit): Unit =
+    emitPairsAndDropReport(nearDupPasses(idx, None, newRows, idCol, vecCol,
+      thresholdPpm, nprobe, excludeIds)._1, maxPairsPerNew)(emit)
+
+  /** The persist → emit → unpersist body of both `…AndDropReport` calls
+    * and the dedup stream: `scored` is built after the cap is checked,
+    * persisted once, and released when `emit` returns or fails. */
+  private def emitPairsAndDropReport(scored: => DataFrame,
+      maxPairsPerNew: Int)(emit: (DataFrame, DataFrame) => Unit): Unit = {
     require(maxPairsPerNew > 0,
       s"maxPairsPerNew must be > 0, got $maxPairsPerNew")
-    val scored = annNearDupScored(idx, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try emit(cappedPairsFromScored(scored, maxPairsPerNew),
-      dropReportFromScored(scored, maxPairsPerNew))
-    finally { scored.unpersist(); () }
+    val cached =
+      scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try emit(pairsFromScored(cached, maxPairsPerNew),
+      dropReportFromScored(cached, maxPairsPerNew))
+    finally { cached.unpersist(); () }
   }
 
-  /** The shared probe-and-threshold kernel of [[annNearDupPairs]] /
-    * [[annNearDupDropReport]]: (id_new, id_existing, dotq, nq2, nb2)
-    * rows surviving the exact quantized-integer cosine rule
-    * dotq ≥ 0 ∧ dotq²·10¹² ≥ τ²·‖q‖²·‖b‖². The comparison is evaluated
-    * in an overflow-free split — ‖b‖² = bh·10⁶ + bl, then
-    * (dotq²·10⁶ − τ²‖q‖²·bh)·10⁶ ≥ τ²‖q‖²·bl with an early sign/magnitude
-    * branch — so every intermediate fits decimal(38,0) across the whole
-    * documented <2⁵³ exact-double domain (a dotq ≥ ~10¹³ would overflow
-    * the naive dotq²·10¹² form and silently drop true pairs). */
-  private def annNearDupScored(idx: IvfIndexFrames, newRows: DataFrame,
-      idCol: String, vecCol: String, thresholdPpm: Long,
-      nprobe: Int, excludeIds: DataFrame = null): DataFrame = {
+  /** The near-dup kernel of every dedup entry point. One probe set:
+    * the batch quantized once (rows whose vector is null or not of the
+    * centroids' length dropped) with ‖q‖² per row, and each id_new's
+    * `nprobe` best cells ranked over the id's pooled rows. One scorer:
+    * the exact [[ppmRuleFilter]] rule over the raw postings of the
+    * probed cells minus `excludeIds` — on the `pq` route only those the
+    * ADC pass ([[adcPrefilter]], over the codes minus `excludeIds`)
+    * could not refute. Returns the surviving (id_new, id_existing,
+    * dotq, nq2, nb2) rows and, on the `pq` route, the ADC (candidates,
+    * survivors). The quantized batch rides a lazy plan barrier: the
+    * cell ranking, the dot-LUTs, the exact probe join and the DPP
+    * subquery Spark clones from it all read it, and a caller lineage
+    * would otherwise re-evaluate per reference. `excludeIds` keeps an
+    * at-least-once replay that already appended its batch from pairing
+    * with (or spending cap slots on) its own postings. */
+  private def nearDupPasses(raw: IvfIndexFrames,
+      pq: Option[IvfPqIndexFrames], newRows: DataFrame, idCol: String,
+      vecCol: String, thresholdPpm: Long, nprobe: Int,
+      excludeIds: DataFrame): (DataFrame, Option[(DataFrame, DataFrame)]) = {
     require(thresholdPpm >= 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm must be in [0, 1000000], got $thresholdPpm")
-    val quantScale = idx.quantScale
-    val (centTab, cnTab) = idx.cellTable
-    if (centTab.isEmpty) {
-      return newRows.limit(0)
+    val (centTab, cnTab) = raw.cellTable
+    pq.foreach { p =>
+      require(p.codes.columns.contains("e2") &&
+        p.codes.columns.contains("nb2"),
+        "annNearDupPairsPq: the PQ codes carry no e2/nb2 margin columns " +
+          "— the index predates the stored-distortion format; rebuild " +
+          "it (buildIvfPqIndex + writeIvfPqIndex) to use the ADC " +
+          "prefilter")
+      require(p.quantScale == raw.quantScale,
+        s"annNearDupPairsPq: the PQ index (quantScale ${p.quantScale}) " +
+          s"and the raw index (${raw.quantScale}) were quantized under " +
+          "different scales — their cells do not correspond")
+      require(sameTable(centTab, p.cellTable._1),
+        "annNearDupPairsPq: the PQ and raw indexes carry DIFFERENT " +
+          "quantized centroids — their cells do not correspond and the " +
+          "survivor semi-join would match wrong postings; build both " +
+          "under one shared quantizer")
+    }
+    if (centTab.isEmpty || pq.exists(_.codebookTable.isEmpty)) {
+      // each frame ONE projection over the empty input: a stacked
+      // literal projection is constant-folded into the cap key's
+      // division by nb2 = 0 before the empty relation is propagated
+      val pairs = newRows.limit(0)
+        .select(col(idCol).cast("long").as("id_new"),
+          lit(0L).as("id_existing"), lit(0).cast("int").as("cell"))
+      return (newRows.limit(0)
         .select(col(idCol).cast("long").as("id_new"),
           lit(0L).as("id_existing"), lit(0.0).as("dotq"),
-          lit(0.0).as("nq2"), lit(0.0).as("nb2"))
+          lit(0.0).as("nq2"), lit(0.0).as("nb2")),
+        pq.map(_ => (pairs, pairs)))
     }
-    val cellScores = scorerFromTable(centTab, cnTab)
     val quant = (v: Column) =>
-      transform(v, x => round(x.cast("double") * quantScale))
-    // norms bound per ROW on each side before the join — the pair loop
-    // below does ONE dot product per pair, not three. The quantized
-    // batch rides a lazy plan barrier: it feeds the probe-cell ranking,
-    // the probe join AND the DPP pruning subquery Spark clones from it,
-    // and an expensive caller lineage (a generator, an upstream
-    // transform chain) would otherwise re-evaluate per reference —
-    // micro-batch-scale blocks, reaped with the result frame.
+      transform(v, x => round(x.cast("double") * raw.quantScale))
     val q0 = newRows.select(col(idCol).cast("long").as("id_new"),
         quant(col(vecCol)).as("__qn"))
-      .where(col("__qn").isNotNull)
+      .where(col("__qn").isNotNull &&
+        size(col("__qn")) === centTab.head.length)
       .withColumn("nq2", dot(col("__qn"), col("__qn")))
       .truncateLineage(eager = false)
-    // cells are ranked per id_new, not per row ([[routeToCells]]): a
-    // micro-batch may repeat an id, and its pairs are defined over the
-    // id's pooled cell ranking
-    val probes = q0
-      .withColumn("scores", cellScores(col("__qn")))
+    val cells = q0
+      .withColumn("scores", scorerFromTable(centTab, cnTab)(col("__qn")))
       .select(col("id_new"), posexplode(col("scores")))
       .groupBy(col("id_new"))
       .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
         nprobe).as("cells"))
       .select(col("id_new"), explode(col("cells.id")).as("cell"))
       .select(col("id_new"), col("cell").cast("int").as("cell"))
-      .join(q0, Seq("id_new"))
+    def excluded(rows: DataFrame): DataFrame =
+      if (excludeIds == null) rows else withoutIds(rows, excludeIds)
     val tSq = thresholdPpm * thresholdPpm // ≤ 10¹², exact in Long
-    // retry-safety hook (`excludeIds`): postings whose corpus_id is in
-    // the excluded set are pruned BEFORE any dot product or cap slot —
-    // an at-least-once replay that already appended this batch must not
-    // pair the batch with its own postings (or spend cap slots on them).
-    // Broadcast-hash anti join: the corpus side stays map-side only.
-    val postingsIn =
-      if (excludeIds == null) idx.postings
-      else idx.postings.join(
-        broadcast(excludeIds.select(
-          col(excludeIds.columns.head).cast("long").as("corpus_id"))),
-        Seq("corpus_id"), "left_anti")
-    postingsIn
+    val adc = pq.map(p => adcPrefilter(p, q0, cells, excluded(p.codes), tSq))
+    // survivor IDS are near-duplicate-scale, not cell-scale: broadcast
+    val postings = adc.fold(excluded(raw.postings)) { case (_, surv) =>
+      raw.postings.join(broadcast(surv.select(col("cell"),
+          col("id_existing").as("corpus_id")).distinct()),
+        Seq("cell", "corpus_id"), "left_semi")
+    }
+    // norms bound per ROW on each side before the join — the pair loop
+    // does ONE dot product per pair, not three
+    val scored = postings
       .select(col("cell"), col("corpus_id").as("id_existing"),
         quant(col("cvec")).as("__bn"))
       .withColumn("nb2", dot(col("__bn"), col("__bn")))
-      .join(broadcast(probes), Seq("cell"))
+      .join(broadcast(cells.join(q0, Seq("id_new"))), Seq("cell"))
       .select(col("id_new"), col("id_existing"),
-        dot(col("__qn"), col("__bn")).as("dotq"),
-        col("nq2"), col("nb2"))
-      // zero-norm vectors have cosine 0 by convention (cosinePre): the
-      // nq2/nb2 > 0 guards keep them out — without them 0 ≥ 0 would
-      // pair a zero vector with everything in its probed cells
+        dot(col("__qn"), col("__bn")).as("dotq"), col("nq2"), col("nb2"))
       .transform(ppmRuleFilter(_, "dotq", tSq))
-      .select(col("id_new"), col("id_existing"), col("dotq"),
-        col("nq2"), col("nb2"))
+    (scored, adc)
   }
 
-  /** The exact ppm-threshold membership rule shared by the raw dedup
-    * kernel and the ADC prefilter: keep rows where dot ≥ 0 ∧ nq2 > 0 ∧
+  /** The exact ppm-threshold membership rule of every dedup route (the
+    * ADC prefilter in front of it applies its own conservative
+    * pure-double bound): keep rows where dot ≥ 0 ∧ nq2 > 0 ∧
     * nb2 > 0 ∧ dot²·10¹² ≥ tSq·nq2·nb2, evaluated in an overflow-free
     * split — ‖b‖² = bh·10⁶ + bl, then (dot²·10⁶ − tSq·‖q‖²·bh)·10⁶ ≥
     * tSq·‖q‖²·bl with an early sign/magnitude branch — so every
     * intermediate fits decimal(38,0) across the whole documented <2⁵³
-    * exact-double domain. `dotName`/`nq2`/`nb2` must hold
+    * exact-double domain (a dot ≥ ~10¹³ would overflow the naive
+    * dot²·10¹² form and silently drop true pairs). Zero-norm vectors
+    * have cosine 0 by convention (cosinePre): the nq2/nb2 > 0 guards
+    * keep them out — without them 0 ≥ 0 would pair a zero vector with
+    * everything in its probed cells. `dotName`/`nq2`/`nb2` must hold
     * integer-valued numerics; helper columns are dropped. */
   private def ppmRuleFilter(df: DataFrame, dotName: String,
       tSq: Long): DataFrame =
@@ -2909,16 +2966,16 @@ object Similarity {
     *      the PROVABLE upper bound ub = ⟨q,x̂⟩ + margin can still pass
     *      the membership rule, margin ≥ ‖q‖·‖x−x̂‖ by Cauchy–Schwarz
     *      (per-posting distortion `e2` is stored at encode time;
-    *      margin = (⌊√nq2⌋+2)·(⌊√e2⌋+2) in exact decimal — the +2
-    *      absorbs the ≤0.5-ulp IEEE sqrt rounding, so ub ≥ ⟨q,x⟩
-    *      ALWAYS and the prefilter can only drop provably-failing
-    *      pairs: lossless by construction).
+    *      margin = (⌊√nq2⌋+2)·(⌊√e2⌋+2) — the +2 absorbs the
+    *      ≤0.5-ulp IEEE sqrt rounding, so ub ≥ ⟨q,x⟩ ALWAYS and the
+    *      prefilter can only drop provably-failing pairs: lossless by
+    *      construction).
     *   2. Exact: the raw postings semi-joined to the distinct
     *      surviving (cell, corpus_id) set (broadcast — survivor IDS
-    *      are near-duplicate-scale, not cell-scale), then the standard
-    *      exact quantized-integer kernel decides membership and the
-    *      cap. Identity with [[annNearDupPairs]] follows because the
-    *      exact rule re-tests every surviving pair.
+    *      are near-duplicate-scale, not cell-scale), then the same
+    *      exact quantized-integer rule and cap as the raw route, over
+    *      the same probe set. Identity with [[annNearDupPairs]]
+    *      follows because the exact rule re-tests every surviving pair.
     *
     * `pq` and `raw` must be the SAME corpus under the SAME frozen
     * quantizer (bit-identical quantized centroids, same quantScale) —
@@ -2930,13 +2987,9 @@ object Similarity {
   def annNearDupPairsPq(pq: IvfPqIndexFrames, raw: IvfIndexFrames,
       newRows: DataFrame, idCol: String, vecCol: String,
       thresholdPpm: Long, nprobe: Int = 4, maxPairsPerNew: Int = 0,
-      excludeIds: DataFrame = null): DataFrame = {
-    val scored = annNearDupScoredPq(pq, raw, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-    if (maxPairsPerNew <= 0)
-      scored.select(col("id_new"), col("id_existing"))
-    else cappedPairsFromScored(scored, maxPairsPerNew)
-  }
+      excludeIds: DataFrame = null): DataFrame =
+    pairsFromScored(nearDupPasses(raw, Some(pq), newRows, idCol, vecCol,
+      thresholdPpm, nprobe, excludeIds)._1, maxPairsPerNew)
 
   /** [[annNearDupPairsAndDropReport]] through the COMPRESSED path: one
     * evaluation of the prefiltered exact kernel feeds both the capped
@@ -2947,16 +3000,9 @@ object Similarity {
       raw: IvfIndexFrames, newRows: DataFrame, idCol: String,
       vecCol: String, thresholdPpm: Long, maxPairsPerNew: Int,
       nprobe: Int = 4, excludeIds: DataFrame = null)(
-      emit: (DataFrame, DataFrame) => Unit): Unit = {
-    require(maxPairsPerNew > 0,
-      s"maxPairsPerNew must be > 0, got $maxPairsPerNew")
-    val scored = annNearDupScoredPq(pq, raw, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try emit(cappedPairsFromScored(scored, maxPairsPerNew),
-      dropReportFromScored(scored, maxPairsPerNew))
-    finally { scored.unpersist(); () }
-  }
+      emit: (DataFrame, DataFrame) => Unit): Unit =
+    emitPairsAndDropReport(nearDupPasses(raw, Some(pq), newRows, idCol,
+      vecCol, thresholdPpm, nprobe, excludeIds)._1, maxPairsPerNew)(emit)
 
   /** Work accounting for [[annNearDupPairsPq]]'s prefilter — ONE exact
     * row of (n_candidates, n_prefilter_kept, n_pairs,
@@ -2968,19 +3014,17 @@ object Similarity {
     * n_prefilter_kept IS the measured saving, and n_prefilter_kept ≥
     * n_pairs always (the prefilter is lossless). Every count is
     * integer arithmetic over the same quantized domain, so the row is
-    * engine-replayable end to end — including the margin bound. */
+    * engine-replayable end to end — including the margin bound. The
+    * three counts come from one ADC pass. */
   def annNearDupAdcPrefilterReport(pq: IvfPqIndexFrames,
       raw: IvfIndexFrames, newRows: DataFrame, idCol: String,
       vecCol: String, thresholdPpm: Long, nprobe: Int = 4,
       excludeIds: DataFrame = null): DataFrame = {
-    val (cand, surv) = adcPrefilterPairs(pq, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-    val nCand = cand.agg(count(lit(1)).as("n_candidates"))
-    val nKept = surv.agg(count(lit(1)).as("n_prefilter_kept"))
-    val nPairs = annNearDupScoredPq(pq, raw, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-      .agg(count(lit(1)).as("n_pairs"))
-    nCand.crossJoin(broadcast(nKept)).crossJoin(broadcast(nPairs))
+    val (scored, Some((cand, surv))) = nearDupPasses(raw, Some(pq),
+      newRows, idCol, vecCol, thresholdPpm, nprobe, excludeIds)
+    cand.agg(count(lit(1)).as("n_candidates"))
+      .crossJoin(broadcast(surv.agg(count(lit(1)).as("n_prefilter_kept"))))
+      .crossJoin(broadcast(scored.agg(count(lit(1)).as("n_pairs"))))
       .select(col("n_candidates"), col("n_prefilter_kept"),
         col("n_pairs"),
         when(col("n_candidates") > 0,
@@ -3027,99 +3071,78 @@ object Similarity {
     * [[annNearDupPairs]], logging the choice. Output is identical on
     * either route (the prefilter is lossless), so callers need no
     * awareness of which ran — the routing rule the r16 verdict asked
-    * the caller to stop having to know. */
+    * the caller to stop having to know. The roots are opened on the
+    * driver ([[RootView]]): no quantizer table is collected. */
   def annNearDupPairsAuto(spark: SparkSession,
       rawIndexPath: String, pqIndexPath: String, newRows: DataFrame,
       idCol: String, vecCol: String, thresholdPpm: Long,
       nprobe: Int = 4, maxPairsPerNew: Int = 0,
-      excludeIds: DataFrame = null): DataFrame = {
-    val raw = readIvfIndex(spark, rawIndexPath)
-    val usePq = pqIndexPath != null &&
-      annNearDupRoutesToPq(spark, rawIndexPath)
-    org.slf4j.LoggerFactory.getLogger("graft.ops.Similarity").info(
-      s"annNearDupPairsAuto: routing ${if (usePq) "PQ-prefiltered"
-        else "raw"} for $rawIndexPath")
-    if (usePq)
-      annNearDupPairsPq(readIvfPqIndex(spark, pqIndexPath), raw,
-        newRows, idCol, vecCol, thresholdPpm, nprobe, maxPairsPerNew,
-        excludeIds)
-    else
-      annNearDupPairs(raw, newRows, idCol, vecCol, thresholdPpm,
-        nprobe, maxPairsPerNew, excludeIds)
+      excludeIds: DataFrame = null): DataFrame =
+    pairsFromScored(routedScored(spark, new RootView(rawIndexPath, IvfKind),
+      Option(pqIndexPath).map(new RootView(_, PqKind)), newRows, idCol,
+      vecCol, thresholdPpm, nprobe, excludeIds, "annNearDupPairsAuto"),
+      maxPairsPerNew)
+
+  /** One batch of [[graft.streaming.Streams.incrementalAnnDedupStream]]:
+    * its pairs minus its own ids, with the cap's drop report from the
+    * same evaluation when `report` is set, handed to `emit`. */
+  private[graft] def annNearDupBatch(spark: SparkSession,
+      raw: RootView[IvfIndexFrames], pq: Option[RootView[IvfPqIndexFrames]],
+      batch: DataFrame, idCol: String, vecCol: String, thresholdPpm: Long,
+      nprobe: Int, maxPairsPerNew: Int, report: Boolean, op: String)(
+      emit: (DataFrame, Option[DataFrame]) => Unit): Unit = {
+    def scored = routedScored(spark, raw, pq, batch, idCol, vecCol,
+      thresholdPpm, nprobe, batch.select(col(idCol).cast("long")), op)
+    if (report)
+      emitPairsAndDropReport(scored, maxPairsPerNew)((p, d) => emit(p, Some(d)))
+    else emit(pairsFromScored(scored, maxPairsPerNew), None)
   }
 
-  /** The shared ADC pass of the prefiltered dedup: (candidates,
-    * survivors) where candidates = (id_new, id_existing, cell) pairs in
-    * probed cells (post exclude-anti-join) and survivors = the subset
-    * whose upper-bounded quantized dot can still pass the membership
-    * rule. Geometry and margin-column preconditions checked here. */
-  private def adcPrefilterPairs(pq: IvfPqIndexFrames,
-      newRows: DataFrame, idCol: String, vecCol: String,
-      thresholdPpm: Long, nprobe: Int,
-      excludeIds: DataFrame): (DataFrame, DataFrame) = {
-    require(thresholdPpm >= 0 && thresholdPpm <= 1000000L,
-      s"thresholdPpm must be in [0, 1000000], got $thresholdPpm")
-    require(pq.codes.columns.contains("e2") &&
-      pq.codes.columns.contains("nb2"),
-      "annNearDupPairsPq: the PQ codes carry no e2/nb2 margin columns " +
-        "— the index predates the stored-distortion format; rebuild it " +
-        "(buildIvfPqIndex + writeIvfPqIndex) to use the ADC prefilter")
-    val quantScale = pq.quantScale
-    val (centTab, cnTab) = pq.cellTable
-    val emptyPairs = newRows.limit(0)
-      .select(col(idCol).cast("long").as("id_new"),
-        lit(0L).as("id_existing"), lit(0).cast("int").as("cell"))
-    if (centTab.isEmpty || pq.codebookTable.isEmpty)
-      return (emptyPairs, emptyPairs)
+  /** The raw-or-PQ route of auto and the stream: the batch scored
+    * against `raw`'s root, through `pq`'s codes when one is given and
+    * the raw root is dense enough ([[annNearDupRoutesToPq]]), the choice
+    * logged under `op`. */
+  private def routedScored(spark: SparkSession,
+      raw: RootView[IvfIndexFrames], pq: Option[RootView[IvfPqIndexFrames]],
+      newRows: DataFrame, idCol: String, vecCol: String, thresholdPpm: Long,
+      nprobe: Int, excludeIds: DataFrame, op: String): DataFrame = {
+    val rawIdx = raw.read(spark)
+    val viaPq = pq.filter(_ => annNearDupRoutesToPq(spark, raw.path))
+    org.slf4j.LoggerFactory.getLogger("graft.ops.Similarity").info(
+      s"$op: routing ${if (viaPq.isDefined) "PQ-prefiltered" else "raw"} " +
+        s"for ${raw.path}")
+    nearDupPasses(rawIdx, viaPq.map(_.read(spark)), newRows, idCol,
+      vecCol, thresholdPpm, nprobe, excludeIds)._1
+  }
+
+  /** The ADC pass of the PQ route over the probe set (`q0`: id_new,
+    * __qn, nq2; `cells`: id_new, cell): (candidates, survivors) where
+    * candidates = the (id_new, id_existing, cell) pairs of `codes` in
+    * probed cells and survivors = the subset whose upper-bounded
+    * quantized dot can still pass the membership rule. */
+  private def adcPrefilter(pq: IvfPqIndexFrames, q0: DataFrame,
+      cells: DataFrame, codes: DataFrame, tSq: Long)
+      : (DataFrame, DataFrame) = {
     val (cbBlock, _) = pq.pqKernelTables
-    val cellScores = scorerFromTable(centTab, cnTab)
-    val quant = (v: Column) =>
-      transform(v, x => round(x.cast("double") * quantScale))
-    // the quantized batch rides a lazy plan barrier: it is referenced
-    // by THREE subgraphs (probe-cell ranking, the dot-LUT table, and
-    // the exact pass's own kernel) and a caller-supplied lineage (a
-    // synthetic generator, an expensive upstream transform) would
-    // otherwise re-evaluate per reference — batch-scale blocks, reaped
-    // with the result frame (the pqEncodeIndexed ownership contract)
-    val q0 = newRows.select(col(idCol).cast("long").as("id_new"),
-        quant(col(vecCol)).as("__qn"))
-      .where(col("__qn").isNotNull && size(col("__qn")) === pq.inDims)
-      .withColumn("nq2", dot(col("__qn"), col("__qn")))
-      .truncateLineage(eager = false)
     // probe set kept NARROW (id_new, cell) for the broadcast cell join
     // — the per-query dot-LUT (nSub×nCodes doubles, ~16 KB at a
     // 256-code book) is attached ONCE PER QUERY by a second broadcast
     // join on id_new AFTER the cell join. Riding the lut on the probe
     // rows instead multiplies it by nprobe in the broadcast (measured
     // 640 MB at a 10k batch — the whole pass went memory-bound)
-    val probes = q0
-      .withColumn("scores", cellScores(col("__qn")))
-      .select(col("id_new"), posexplode(col("scores")))
-      .groupBy(col("id_new"))
-      .agg(GraftFunctions.topKByScore(col("col"), col("pos").cast("long"),
-        nprobe).as("cells"))
-      .select(col("id_new"), explode(col("cells.id")).as("cell"))
-      .select(col("id_new"), col("cell").cast("int").as("cell"))
     val qlut = q0.select(col("id_new"), col("nq2"),
       GraftFunctions.pqQueryDotLut(col("__qn"), cbBlock).as("dlut"))
-    val codesIn =
-      if (excludeIds == null) pq.codes
-      else pq.codes.join(
-        broadcast(excludeIds.select(
-          col(excludeIds.columns.head).cast("long").as("corpus_id"))),
-        Seq("corpus_id"), "left_anti")
     // ONE native call per candidate (nSub primitive reads) — the
     // nested element_at form cost 3·nSub expression nodes + nSub array
     // wrappers per candidate, which at 10⁷ candidates exceeded the
     // exact dots the prefilter avoids
     val adot = GraftFunctions.pqAdcDotFlat(col("dlut"), col("codes"),
       pq.codebookTable.length)
-    val cand = codesIn
+    val cand = codes
       .select(col("cell"), col("corpus_id").as("id_existing"),
         col("codes"), col("e2"), col("nb2"))
-      .join(broadcast(probes), Seq("cell"))
+      .join(broadcast(cells), Seq("cell"))
       .join(broadcast(qlut), Seq("id_new"))
-    val tSq = thresholdPpm * thresholdPpm // ≤ 10¹², exact in Long
     // PURE-DOUBLE conservative prefilter — the exactness budget belongs
     // to the exact pass (which re-decides every survivor); the
     // prefilter only has to never refute a true pair, so every
@@ -3143,35 +3166,6 @@ object Similarity {
           lit(tSq.toDouble) * (col("nq2") * col("nb2")))
     (cand.select(col("id_new"), col("id_existing"), col("cell")),
       surv.select(col("id_new"), col("id_existing"), col("cell")))
-  }
-
-  /** The exact pass of [[annNearDupPairsPq]]: raw postings semi-joined
-    * to the distinct ADC survivors, then the standard exact kernel. */
-  private def annNearDupScoredPq(pq: IvfPqIndexFrames,
-      raw: IvfIndexFrames, newRows: DataFrame, idCol: String,
-      vecCol: String, thresholdPpm: Long, nprobe: Int,
-      excludeIds: DataFrame): DataFrame = {
-    require(pq.quantScale == raw.quantScale,
-      s"annNearDupPairsPq: the PQ index (quantScale ${pq.quantScale}) " +
-        s"and the raw index (${raw.quantScale}) were quantized under " +
-        "different scales — their cells do not correspond")
-    val (rawTab, _) = raw.cellTable
-    val (pqTab, _) = pq.cellTable
-    require(sameTable(rawTab, pqTab),
-      "annNearDupPairsPq: the PQ and raw indexes carry DIFFERENT " +
-        "quantized centroids — their cells do not correspond and the " +
-        "survivor semi-join would match wrong postings; build both " +
-        "under one shared quantizer")
-    val (_, surv) = adcPrefilterPairs(pq, newRows, idCol, vecCol,
-      thresholdPpm, nprobe, excludeIds)
-    val survivorIds = surv
-      .select(col("cell"), col("id_existing").as("corpus_id")).distinct()
-    val filteredRaw = IvfIndexFrames(raw.centroids,
-      raw.postings.join(broadcast(survivorIds),
-        Seq("cell", "corpus_id"), "left_semi"),
-      raw.quantScale, raw.twoLevelThreshold)
-    annNearDupScored(filteredRaw, newRows, idCol, vecCol, thresholdPpm,
-      nprobe, excludeIds)
   }
 
   /** Exact cosine re-rank of an APPROXIMATE candidate set — the serving
@@ -3861,10 +3855,8 @@ object Similarity {
     val tombFiles = parquetDataFiles(spark, new Path(path + "/tombstones"))
     val folded =
       if (tombFiles.isEmpty) input
-      else input.join(
-        broadcast(spark.read.parquet(tombFiles.map(_.toString): _*)
-          .select(col("corpus_id"))),
-        Seq("corpus_id"), "left_anti")
+      else withoutIds(input,
+        spark.read.parquet(tombFiles.map(_.toString): _*))
     writeCells(folded, footerRowCount(spark, path + "/centroids").toInt,
       "overwrite", staged.toString)
     afterStage()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.fhir.{Bundles, FhirSchemas}
+import graft.ops.Similarity
 
 /** Structured Streaming surface — beyond reference parity (the reference has
   * no streaming at all, SURVEY §2.10): streaming bundle ingestion reusing
@@ -248,30 +249,49 @@ object Streams {
       indexPath: String, pairsPath: String, checkpointPath: String,
       shingleSize: Int = 3, numHashes: Int = 16, bands: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    bandIndexStream(docs, indexPath, pairsPath, checkpointPath, trigger)(
+      graft.ops.Dedup.minhashBandBuckets(_, idCol, textCol, shingleSize,
+        numHashes, bands))(
+      graft.ops.Dedup.incrementalMinhashCandidates(_, _))
+
+  /** Starts `stream` with `body` run on each micro-batch and its id —
+    * the foreachBatch start of every stream here that writes its own
+    * sinks, under `checkpointPath` and `trigger`. */
+  private def eachBatch(stream: DataFrame, checkpointPath: String,
+      trigger: Trigger)(body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val spark = batch.sparkSession
-          val buckets = graft.ops.Dedup.minhashBandBuckets(batch.toDF(),
-            idCol, textCol, shingleSize, numHashes, bands).persist()
-          try {
-            val ip = new org.apache.hadoop.fs.Path(indexPath)
-            val exists = ip.getFileSystem(
-              spark.sparkContext.hadoopConfiguration).exists(ip)
-            val index =
-              if (exists) spark.read.parquet(indexPath)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                buckets.schema)
-            graft.ops.Dedup.incrementalMinhashCandidates(index, buckets)
-              .write.mode("append").parquet(pairsPath)
-            buckets.write.mode("append").parquet(indexPath)
-          } finally { buckets.unpersist(); () }
+         batchId: Long) => body(batch, batchId)
       }
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .start()
+
+  /** The body of the band-index dedup streams: each micro-batch's
+    * `buckets` (persisted for the batch) are probed against the index at
+    * `indexPath` — read, or typed-empty before the first batch lands —
+    * by `candidates`, the pairs appended to `pairsPath`, then the
+    * buckets appended to the index. */
+  private def bandIndexStream(stream: DataFrame, indexPath: String,
+      pairsPath: String, checkpointPath: String, trigger: Trigger)(
+      buckets: DataFrame => DataFrame)(
+      candidates: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    eachBatch(stream, checkpointPath, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      val b = buckets(batch).persist()
+      try {
+        val ip = new org.apache.hadoop.fs.Path(indexPath)
+        val index =
+          if (ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(ip)) spark.read.parquet(indexPath)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            b.schema)
+        candidates(index, b).write.mode("append").parquet(pairsPath)
+        b.write.mode("append").parquet(indexPath)
+      } finally { b.unpersist(); () }
+    }
 
   /** Incremental MEDIA near-dedup against a persisted perceptual-hash
     * band index — the steady-state shape for a growing 100 TB image
@@ -291,10 +311,8 @@ object Streams {
       checkpointPath, maxHamming, trigger,
       toSigs = (spark, batch) =>
         graft.ops.Multimodal.perceptualHashes(spark, batch)
-          .where(org.apache.spark.sql.functions.col("phash").isNotNull)
-          .select(
-            org.apache.spark.sql.functions.col("asset_id").as("id"),
-            org.apache.spark.sql.functions.col("phash").as("sig")))
+          .where(col("phash").isNotNull)
+          .select(col("asset_id").as("id"), col("phash").as("sig")))
 
   /** Incremental SIGNATURE near-dedup against a persisted band index —
     * the kernel-independent core of [[incrementalMediaDedupStream]]:
@@ -312,30 +330,10 @@ object Streams {
       trigger: Trigger = Trigger.AvailableNow(),
       toSigs: (SparkSession, DataFrame) => DataFrame =
         (_, b) => b): StreamingQuery =
-    stream.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val spark = batch.sparkSession
-          val buckets = graft.ops.Dedup.simhashBandBuckets(
-            toSigs(spark, batch.toDF())).persist()
-          try {
-            val ip = new org.apache.hadoop.fs.Path(indexPath)
-            val exists = ip.getFileSystem(
-              spark.sparkContext.hadoopConfiguration).exists(ip)
-            val index =
-              if (exists) spark.read.parquet(indexPath)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                buckets.schema)
-            graft.ops.Dedup.incrementalSimhashCandidates(index, buckets,
-              maxHamming).write.mode("append").parquet(pairsPath)
-            buckets.write.mode("append").parquet(indexPath)
-          } finally { buckets.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+    bandIndexStream(stream, indexPath, pairsPath, checkpointPath, trigger)(
+      batch => graft.ops.Dedup.simhashBandBuckets(
+        toSigs(batch.sparkSession, batch)))(
+      graft.ops.Dedup.incrementalSimhashCandidates(_, _, maxHamming))
 
   /** Late-data audit: one row per micro-batch recording how much of the
     * batch arrived behind the stream's event-time frontier — the
@@ -354,56 +352,49 @@ object Streams {
   def lateDataAudit(events: DataFrame, tsCol: String, delaySeconds: Long,
       auditPath: String, checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.functions._
-          val ap = new org.apache.hadoop.fs.Path(auditPath)
-          val exists = ap.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(ap)
-          val frontier: Option[Long] =
-            if (!exists) None
-            else {
-              val r = spark.read.parquet(auditPath)
-                .agg(max(col("max_ts_us"))).head()
-              if (r.isNullAt(0)) None else Some(r.getLong(0))
-            }
-          val cutoff = frontier.map(_ - delaySeconds * 1000000L)
-          val r = batch.toDF()
-            .select(unix_micros(col(tsCol)).as("ts_us"))
-            .agg(count(lit(1)).as("n_rows"),
-              min(col("ts_us")).as("min_ts_us"),
-              max(col("ts_us")).as("max_ts_us"),
-              sum(when(col("ts_us") <
-                lit(cutoff.getOrElse(Long.MinValue)), 1L).otherwise(0L))
-                .as("n_late")).head()
-          if (r.getLong(0) > 0) {
-            // min/max are null when every event timestamp in the batch is
-            // null — malformed data degrades to a null-bounded audit row,
-            // it never kills the query (same discipline as the ingest
-            // paths). Boxed Longs + an explicit nullable schema keep the
-            // parquet append well-typed.
-            import org.apache.spark.sql.Row
-            import org.apache.spark.sql.types.{LongType, StructField, StructType}
-            val auditSchema = StructType(Seq(
-              StructField("batch_id", LongType, nullable = false),
-              StructField("n_rows", LongType, nullable = false),
-              StructField("n_late", LongType, nullable = false),
-              StructField("min_ts_us", LongType, nullable = true),
-              StructField("max_ts_us", LongType, nullable = true)))
-            val row = Row(batchId, r.getLong(0), r.getLong(3),
-              r.getAs[java.lang.Long]("min_ts_us"),
-              r.getAs[java.lang.Long]("max_ts_us"))
-            spark.createDataFrame(
-                java.util.Collections.singletonList(row), auditSchema)
-              .write.mode("append").parquet(auditPath)
-          }
+    eachBatch(events, checkpointPath, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val ap = new org.apache.hadoop.fs.Path(auditPath)
+      val exists = ap.getFileSystem(
+        spark.sparkContext.hadoopConfiguration).exists(ap)
+      val frontier: Option[Long] =
+        if (!exists) None
+        else {
+          val r = spark.read.parquet(auditPath)
+            .agg(max(col("max_ts_us"))).head()
+          if (r.isNullAt(0)) None else Some(r.getLong(0))
+        }
+      val cutoff = frontier.map(_ - delaySeconds * 1000000L)
+      val r = batch
+        .select(unix_micros(col(tsCol)).as("ts_us"))
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("ts_us")).as("min_ts_us"),
+          max(col("ts_us")).as("max_ts_us"),
+          sum(when(col("ts_us") <
+            lit(cutoff.getOrElse(Long.MinValue)), 1L).otherwise(0L))
+            .as("n_late")).head()
+      if (r.getLong(0) > 0) {
+        // min/max are null when every event timestamp in the batch is
+        // null — malformed data degrades to a null-bounded audit row,
+        // it never kills the query (same discipline as the ingest
+        // paths). Boxed Longs + an explicit nullable schema keep the
+        // parquet append well-typed.
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        val auditSchema = StructType(Seq(
+          StructField("batch_id", LongType, nullable = false),
+          StructField("n_rows", LongType, nullable = false),
+          StructField("n_late", LongType, nullable = false),
+          StructField("min_ts_us", LongType, nullable = true),
+          StructField("max_ts_us", LongType, nullable = true)))
+        val row = Row(batchId, r.getLong(0), r.getLong(3),
+          r.getAs[java.lang.Long]("min_ts_us"),
+          r.getAs[java.lang.Long]("max_ts_us"))
+        spark.createDataFrame(
+            java.util.Collections.singletonList(row), auditSchema)
+          .write.mode("append").parquet(auditPath)
       }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+    }
 
   // ---- custom stateful operator: streaming sessionization ----------------
 
@@ -821,21 +812,15 @@ object Streams {
   def hllMaintainStream(stream: DataFrame, groupCol: String,
       valueCol: String, regsPath: String, checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val base = batch.toDF()
-            .select(col(groupCol).as("g"),
-              col(valueCol).cast("string").as("v"))
-            .where(col("g").isNotNull && col("v").isNotNull)
-          graft.ops.Sketches.hllRegisters(base)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(regsPath)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+    eachBatch(stream, checkpointPath, trigger) { (batch, batchId) =>
+      val base = batch
+        .select(col(groupCol).as("g"),
+          col(valueCol).cast("string").as("v"))
+        .where(col("g").isNotNull && col("v").isNotNull)
+      graft.ops.Sketches.hllRegisters(base)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(regsPath)
+    }
 
   /** Continuous count-min sketch maintenance: each micro-batch's values
     * are collapsed to their d×w cell DELTA table
@@ -854,17 +839,11 @@ object Streams {
       cellsPath: String, checkpointPath: String, d: Int = 4,
       w: Int = 256,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ops.Sketches.cmsCells(batch.toDF(), col(valueCol), d, w)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(cellsPath)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+    eachBatch(stream, checkpointPath, trigger) { (batch, batchId) =>
+      graft.ops.Sketches.cmsCells(batch, col(valueCol), d, w)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(cellsPath)
+    }
 
   /** Streaming benchmark decontamination — the live tail of the batch
     * n-gram decontaminator ([[graft.ops.Dedup.ngramOverlap]], q46): a
@@ -897,26 +876,23 @@ object Streams {
     * probed cells — the postings read is dynamically pruned to the
     * batch's probe cells, so the served corpus is never rescanned, and
     * the index is never mutated (deltas land through
-    * [[graft.ops.Similarity.appendToIvfIndex]] on the build side; the
-    * next batch sees them via the fresh per-batch read). At-least-once:
+    * [[graft.ops.Similarity.appendToIvfIndex]] on the build side). One
+    * view of the root, as in [[indexMaintenanceStream]]: the quantizer
+    * is opened on the driver once (again after a rebuild), the postings
+    * and tombstones read every batch, so each batch sees appended
+    * deltas. At-least-once:
     * a retried batch re-appends its own results, keyed by query_id. */
   def annProbeStream(queries: DataFrame, idCol: String, vecCol: String,
       indexPath: String, outPath: String, checkpointPath: String,
       k: Int, nprobe: Int = 4,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    queries.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val spark = batch.sparkSession
-          val idx = graft.ops.Similarity.readIvfIndex(spark, indexPath)
-          graft.ops.Similarity.probeIvfIndex(idx, batch.toDF(), idCol,
-            vecCol, k, nprobe)
-            .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val view = new Similarity.RootView(indexPath, Similarity.IvfKind)
+    eachBatch(queries, checkpointPath, trigger) { (batch, _) =>
+      Similarity.probeIvfIndex(view.read(batch.sparkSession),
+        batch, idCol, vecCol, k, nprobe)
+        .write.mode("append").parquet(outPath)
+    }
+  }
 
   /** Incremental EMBEDDING near-dedup against a persisted IVF index —
     * the semantic sibling of [[incrementalSignatureDedupStream]] and the
@@ -939,6 +915,12 @@ object Streams {
     * cross-batch pairs (no self-pairs, no intra-batch pairs), keeping
     * the cross-batch invariant under replay.
     *
+    * One view per root, as in [[indexMaintenanceStream]]: the probe
+    * frames and the appends route under a driver-side open of each root
+    * (meta, centroids, PQ codebook) carried for the stream's life and
+    * reopened when a rebuild changes the quantizer dirs; postings,
+    * codes, tombstones and the high-water mark are read every batch.
+    *
     * Dense-cell protection: `maxPairsPerNew > 0` caps the emitted
     * partners per new row (top-c by exact quantized cosine,
     * [[graft.ops.Similarity.annNearDupPairs]]) and, when `dropsPath` is
@@ -959,8 +941,9 @@ object Streams {
     * and each batch is appended to BOTH roots so they stay
     * row-aligned. The pair output is IDENTICAL on either route (the
     * prefilter is lossless), so the routing is invisible downstream;
-    * the chosen route is logged per batch. Both indexes must share
-    * the frozen quantizer — pre-train them from one seed frame.
+    * the chosen route is logged per batch (the rule and log line of
+    * [[graft.ops.Similarity.annNearDupPairsAuto]]). Both indexes must
+    * share the frozen quantizer — pre-train them from one seed frame.
     *
     * Exactly-once under replay: each root records a batch-id
     * high-water mark ([[graft.ops.Similarity.appendToIvfIndexOnce]]),
@@ -978,79 +961,31 @@ object Streams {
       checkpointPath: String, thresholdPpm: Long, nprobe: Int = 4,
       trigger: Trigger = Trigger.AvailableNow(),
       maxPairsPerNew: Int = 0, dropsPath: String = null,
-      pqIndexPath: String = null): StreamingQuery =
-    stream.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val spark = batch.sparkSession
-          val batchDf = batch.toDF()
-          // replay detection: the pairs (and drops) of this batch land
-          // BEFORE the raw append commits its high-water mark, so a
-          // recorded mark ≥ batchId proves the probe output is already
-          // in the sink — skip it entirely instead of duplicating it
-          val rawCommitted =
-            graft.ops.Similarity.readAppendHwm(spark, indexPath) >=
-              batchId
-          if (!rawCommitted) {
-            // readIvfIndex tolerates a fresh index (no posting files)
-            val idx = graft.ops.Similarity.readIvfIndex(spark, indexPath)
-            // DUAL-INDEX mode: route by measured density — identical
-            // pairs either way, only the candidate-stage cost differs
-            val routePq = pqIndexPath != null &&
-              graft.ops.Similarity.annNearDupRoutesToPq(spark, indexPath)
-            if (pqIndexPath != null)
-              org.slf4j.LoggerFactory.getLogger("graft.streaming.Streams")
-                .info(s"incrementalAnnDedupStream batch $batchId: " +
-                  s"routing ${if (routePq) "PQ-prefiltered" else "raw"}")
-            val pqIdx =
-              if (!routePq) None
-              else Some(graft.ops.Similarity.readIvfPqIndex(spark,
-                pqIndexPath))
-            val ownIds = batchDf.select(col(idCol).cast("long").as("id"))
-            if (maxPairsPerNew > 0 && dropsPath != null) {
-              // one evaluation of the probe/threshold kernel feeds BOTH
-              // sinks — running pairs and report separately would score
-              // every candidate twice per micro-batch
-              val emit = (pairs: DataFrame, report: DataFrame) => {
-                pairs.write.mode("append").parquet(pairsPath)
-                report.withColumn("batch_id", lit(batchId))
-                  .write.mode("append").parquet(dropsPath)
-              }
-              pqIdx match {
-                case Some(pq) =>
-                  graft.ops.Similarity.annNearDupPairsPqAndDropReport(pq,
-                    idx, batchDf, idCol, vecCol, thresholdPpm,
-                    maxPairsPerNew, nprobe, excludeIds = ownIds)(emit)
-                case None =>
-                  graft.ops.Similarity.annNearDupPairsAndDropReport(idx,
-                    batchDf, idCol, vecCol, thresholdPpm, maxPairsPerNew,
-                    nprobe, excludeIds = ownIds)(emit)
-              }
-            } else {
-              val pairs = pqIdx match {
-                case Some(pq) =>
-                  graft.ops.Similarity.annNearDupPairsPq(pq, idx, batchDf,
-                    idCol, vecCol, thresholdPpm, nprobe, maxPairsPerNew,
-                    excludeIds = ownIds)
-                case None =>
-                  graft.ops.Similarity.annNearDupPairs(idx, batchDf,
-                    idCol, vecCol, thresholdPpm, nprobe, maxPairsPerNew,
-                    excludeIds = ownIds)
-              }
-              pairs.write.mode("append").parquet(pairsPath)
-            }
-          }
-          graft.ops.Similarity.appendToIvfIndexOnce(spark, indexPath,
-            batchDf, idCol, vecCol, batchId)
-          if (pqIndexPath != null)
-            graft.ops.Similarity.appendToIvfPqIndexOnce(spark,
-              pqIndexPath, batchDf, idCol, vecCol, batchId)
-          ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+      pqIndexPath: String = null): StreamingQuery = {
+    val view = new Similarity.RootView(indexPath, Similarity.IvfKind)
+    val pqView =
+      Option(pqIndexPath).map(new Similarity.RootView(_, Similarity.PqKind))
+    eachBatch(stream, checkpointPath, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // replay detection: the pairs (and drops) of this batch land
+      // BEFORE the raw append commits its high-water mark, so a
+      // recorded mark ≥ batchId proves the probe output is already
+      // in the sink — skip it entirely instead of duplicating it
+      if (Similarity.readAppendHwm(spark, indexPath) < batchId)
+        Similarity.annNearDupBatch(spark, view, pqView, batch, idCol,
+          vecCol, thresholdPpm, nprobe, maxPairsPerNew,
+          report = maxPairsPerNew > 0 && dropsPath != null,
+          s"incrementalAnnDedupStream batch $batchId") {
+          (pairs, report) =>
+            pairs.write.mode("append").parquet(pairsPath)
+            report.foreach(_.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(dropsPath))
+        }
+      Similarity.appendOnce(spark, view, batch, idCol, vecCol, batchId)
+      pqView.foreach(
+        Similarity.appendOnce(spark, _, batch, idCol, vecCol, batchId))
+    }
+  }
 
   /** Streaming index maintenance — the "index the firehose" composition
     * in one call: each micro-batch of new vectors is appended to the
@@ -1096,7 +1031,7 @@ object Streams {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     maintenanceStream(deltas, idCol, vecCol, indexPath, checkpointPath,
       compactEvery, trigger, "indexMaintenanceStream",
-      graft.ops.Similarity.IvfKind)
+      Similarity.IvfKind)
 
   /** [[indexMaintenanceStream]] for a persisted PQ index — the same
     * stream over the PQ kind: each micro-batch PQ-encoded and appended
@@ -1112,7 +1047,7 @@ object Streams {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     maintenanceStream(deltas, idCol, vecCol, indexPath, checkpointPath,
       compactEvery, trigger, "pqIndexMaintenanceStream",
-      graft.ops.Similarity.PqKind)
+      Similarity.PqKind)
 
   /** The shared body of the two maintenance streams: under the held
     * lease, each batch is appended exactly once to the `kind` root
@@ -1121,22 +1056,15 @@ object Streams {
   private def maintenanceStream(deltas: DataFrame, idCol: String,
       vecCol: String, indexPath: String, checkpointPath: String,
       compactEvery: Int, trigger: Trigger, op: String,
-      kind: graft.ops.Similarity.IndexKind[_]): StreamingQuery = {
-    val view = new graft.ops.Similarity.RootView(indexPath, kind)
+      kind: Similarity.IndexKind[_]): StreamingQuery = {
+    val view = new Similarity.RootView(indexPath, kind)
     startWithHeldLease(deltas.sparkSession, indexPath, op) {
-      deltas.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            val spark = batch.sparkSession
-            graft.ops.Similarity.appendOnce(spark, view, batch.toDF(),
-              idCol, vecCol, batchId)
-            if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-              graft.ops.Similarity.compactIndex(spark, kind, indexPath)
-        }
-        .option("checkpointLocation", checkpointPath)
-        .trigger(trigger)
-        .start()
+      eachBatch(deltas, checkpointPath, trigger) { (batch, batchId) =>
+        val spark = batch.sparkSession
+        Similarity.appendOnce(spark, view, batch, idCol, vecCol, batchId)
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          Similarity.compactIndex(spark, kind, indexPath)
+      }
     }
   }
 
@@ -1168,7 +1096,7 @@ object Streams {
         heldStreamLeases.remove(indexPath, prior)
       }
       val release =
-        graft.ops.Similarity.acquireWriterLease(spark, indexPath, op)
+        Similarity.acquireWriterLease(spark, indexPath, op)
       val query =
         try start
         catch { case t: Throwable => release(); throw t }

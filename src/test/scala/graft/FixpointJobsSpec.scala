@@ -46,7 +46,7 @@ class FixpointJobsSpec extends SparkSuite {
       Seq((0L, 5L), (2L, 7L), (3L, 9L))).toDF("parent", "child")
     val (jobs, rounds) = measure(Graphs.dagDepth(spark, edges))
     assert(rounds === 9)
-    assert(jobs <= 53)
+    assert(jobs <= 21)
   }
 
   test("kCore: a triangle with a 5-node pendant path peels in 5 rounds " +

@@ -765,6 +765,29 @@ class AnnIndexSpec extends SparkSuite {
       assert(viaPq === viaRaw, s"cap=$cap")
       assert(viaPq.nonEmpty, s"cap=$cap fixture must produce pairs")
     }
+    // both …AndDropReport calls under an exclude set: the same pairs
+    // and the same report row
+    val exclude = evens.where(pmod(col("vec_id"), lit(3)) === 0)
+      .select(col("vec_id"))
+    def emitted(viaPqRoute: Boolean): (Seq[(Long, Long)], Seq[Any]) = {
+      var out: (Seq[(Long, Long)], Seq[Any]) = null
+      val emit = (p: org.apache.spark.sql.DataFrame,
+          d: org.apache.spark.sql.DataFrame) =>
+        out = (pairs(p), d.collect().head.toSeq)
+      if (viaPqRoute)
+        Similarity.annNearDupPairsPqAndDropReport(pq, raw, odds, "vec_id",
+          "embedding", thresholdPpm = 200000L, maxPairsPerNew = 2,
+          nprobe = 3, excludeIds = exclude)(emit)
+      else
+        Similarity.annNearDupPairsAndDropReport(raw, odds, "vec_id",
+          "embedding", thresholdPpm = 200000L, maxPairsPerNew = 2,
+          nprobe = 3, excludeIds = exclude)(emit)
+      out
+    }
+    val (rawPairs, rawReport) = emitted(viaPqRoute = false)
+    assert(emitted(viaPqRoute = true) === ((rawPairs, rawReport)))
+    assert(rawPairs.nonEmpty && rawPairs.forall(p => p._2 % 3 != 0))
+    assert(rawReport(3).asInstanceOf[Long] > 0L, s"nothing dropped: $rawReport")
     // the accounting row: candidates ≥ prefilter-kept ≥ exact pairs,
     // and with a 4-point codebook the prefilter must still prune SOME
     // candidates (otherwise the test exercises nothing)
@@ -2033,5 +2056,102 @@ class AnnIndexSpec extends SparkSuite {
       .toSeq.sortBy(_._1)
     assert(rows(Similarity.readIvfIndex(spark, sm).postings) ===
       rows(tagged.withColumn("corpus_id", col("vec_id"))))
+  }
+
+  test("incrementalAnnDedupStream carries one view per root: after batch " +
+    "0 no batch scans centroids/ or codebook/, and no batch runs more " +
+    "jobs than before (single, dual routing raw, dual routing PQ)") {
+    import spark.implicits._
+    // dense: 400 rows in ONE cell routes the dual mode through the PQ
+    // codes; sparse: the same rows over 8 cells routes it raw
+    val base = (0L until 400L).map(i => (i, vec(i % 50L)))
+      .toDF("vec_id", "embedding")
+    val batches = (0 until 3).map(b =>
+      (1000L + 20 * b until 1020L + 20 * b).map(i => (i, vec(i % 60L)))
+        .toDF("vec_id", "embedding"))
+    // (mode, cells, dual, the jobs of each batch when every batch
+    // re-read its root: 18, 21 and 36)
+    for ((mode, cells, dual, parentJobs) <- Seq(
+        ("single", 8, false, 18), ("dual raw", 8, true, 21),
+        ("dual PQ", 1, true, 36))) {
+      val seeds = Similarity.hashSeeds(base, "vec_id", "embedding", cells)
+      val root = tmpDir("dedupview")
+      val (idxp, pqp) = (s"$root/index", if (dual) s"$root/pq" else null)
+      Similarity.writeIvfIndex(Similarity.buildIvfIndex(base, "vec_id",
+        "embedding", seeds, "sid", "svec"), idxp)
+      if (dual) Similarity.writeIvfPqIndex(Similarity.buildIvfPqIndex(base,
+        "vec_id", "embedding", seeds, "sid", "svec",
+        codebookIds = Seq(0L, 1L, 2L, 3L), inDims = dims, nSub = 2), pqp)
+      assert(Similarity.annNearDupRoutesToPq(spark, idxp) === (cells == 1))
+      batches.foreach(
+        _.coalesce(1).write.mode("append").parquet(s"$root/in"))
+      // each batch's jobs, with the plan of the SQL execution of each
+      val jobs = org.apache.spark.TestJobs.perBatchWithPlans(spark) {
+        graft.streaming.Streams.incrementalAnnDedupStream(
+          spark.readStream.schema(vecStreamSchema)
+            .option("maxFilesPerTrigger", "1").parquet(s"$root/in"),
+          "vec_id", "embedding", idxp, s"$root/pairs", s"$root/chk",
+          thresholdPpm = 900000L, nprobe = 2, maxPairsPerNew = 2,
+          dropsPath = s"$root/drops", pqIndexPath = pqp)
+          .awaitTermination()
+      }.map { case ((_, b), js) => b -> js }
+      assert(jobs.keySet === Set(0L, 1L, 2L), s"$mode: $jobs")
+      jobs.foreach { case (b, js) =>
+        assert(js.size <= parentJobs, s"$mode batch $b: ${js.map(_._1)}")
+        if (b > 0) assert(!js.exists { case (_, plan) =>
+          plan.contains("/centroids") || plan.contains("/codebook")
+        }, s"$mode batch $b scans a quantizer table")
+      }
+      assert(spark.read.parquet(s"$root/drops").count() === 3L)
+    }
+  }
+
+  test("a root rebuilt under other seeds between two batches of a " +
+    "running dedup stream: the next batch pairs under the new centroids") {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = tmpDir("dedupstale")
+    val (in, idxp) = (s"$root/in", s"$root/index")
+    def seedsOf(rows: DataFrame) =
+      Similarity.hashSeeds(rows, "vec_id", "embedding", 8)
+    val (oldSeeds, newSeeds) = (seedsOf(corpus.where(col("vec_id") < 100)),
+      seedsOf(corpus.where(col("vec_id") >= 100)))
+    val base = corpus.where(col("vec_id") < 150)
+    val batch0 = corpus.where(col("vec_id").between(150, 174))
+    val batch1 = corpus.where(col("vec_id") >= 175)
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(base, "vec_id",
+      "embedding", oldSeeds, "sid", "svec"), idxp)
+    new java.io.File(in).mkdirs()
+    val q = graft.streaming.Streams.incrementalAnnDedupStream(
+      spark.readStream.schema(vecStreamSchema)
+        .option("maxFilesPerTrigger", "1").parquet(in),
+      "vec_id", "embedding", idxp, s"$root/pairs", s"$root/chk",
+      thresholdPpm = 300000L, nprobe = 1,
+      trigger = Trigger.ProcessingTime(100))
+    try {
+      batch0.coalesce(1).write.mode("append").parquet(in)
+      q.processAllAvailable()
+      // another writer rebuilds the root under other seeds (a rebuild
+      // also starts a new append history)
+      Similarity.writeIvfIndex(Similarity.buildIvfIndex(base, "vec_id",
+        "embedding", newSeeds, "sid", "svec"), idxp)
+      batch1.coalesce(1).write.mode("append").parquet(in)
+      q.processAllAvailable()
+    } finally q.stop()
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select(col("id_new").cast("long"), col("id_existing").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rebuilt = Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      newSeeds, "sid", "svec")
+    val want = pairs(Similarity.annNearDupPairs(rebuilt, batch1, "vec_id",
+      "embedding", 300000L, nprobe = 1))
+    // the same postings probed under the OLD centroids pair differently
+    val stale = pairs(Similarity.annNearDupPairs(
+      Similarity.IvfIndexFrames(Similarity.buildIvfIndex(base, "vec_id",
+        "embedding", oldSeeds, "sid", "svec").centroids, rebuilt.postings),
+      batch1, "vec_id", "embedding", 300000L, nprobe = 1))
+    assert(want.nonEmpty && stale != want)
+    val got = pairs(spark.read.parquet(s"$root/pairs"))
+      .filter(_._1 >= 175L)
+    assert(got === want)
   }
 }

@@ -85,6 +85,25 @@ import graft.streaming.Streams
   * `<outDir>/ann_inquery_<tag>.{json,md}`: per call its Spark jobs, SQL
   * executions, wall time, rows and checksum.
   *
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> ann-dedup"
+  *
+  * the ANN near-dup entry points against persisted roots over the
+  * 2000-vector corpus (16 cells: 125 postings per cell, which routes
+  * raw; 4 cells: 500 per cell, which routes through the PQ codes), for
+  * a batch of 40 perturbed copies of corpus rows at cosine 0.95,
+  * nprobe 4, after one unmeasured warm-up round: `annNearDupPairs` at
+  * caps 0 and 2, `annNearDupDropReport`, both `…AndDropReport` calls,
+  * `annNearDupPairsPq`, `annNearDupAdcPrefilterReport` and
+  * `annNearDupPairsAuto` on both roots. Each call reads its frames
+  * afresh and ends in one action per output frame (row count and
+  * checksum). Then `incrementalAnnDedupStream` (cap 2 with a drop
+  * sink) single-index on the 16-cell root, dual-index on both roots,
+  * and `annProbeStream` on the 16-cell root, each over two delta files
+  * of 80 vectors. Writes `<outDir>/ann_dedup_<tag>.{json,md}`: per call
+  * its Spark jobs, SQL executions, wall time, rows and checksums; per
+  * stream batch its jobs and whether one of its SQL executions scans
+  * `centroids/` or `codebook/`.
+  *
   * Only public calls are used, so the same file measures any version of
   * the library. */
 object ProbeJobs {
@@ -100,10 +119,11 @@ object ProbeJobs {
         j => sin(col("id") * 1.37 + j * 0.61).cast("float"))
         .as("embedding"))
 
-  /** A fresh root holding the IVF index at `ivf` and the PQ one at `pq`. */
-  private def buildRoot(): String = {
+  /** A fresh root holding the IVF index at `ivf` and the PQ one at `pq`,
+    * both over `cells` hash seeds. */
+  private def buildRoot(cells: Int = 16): String = {
     val root = Files.createTempDirectory("probe_jobs").toString
-    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", 16)
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", cells)
     Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, "vec_id",
       "embedding", seeds, "sid", "svec"), s"$root/ivf")
     Similarity.writeIvfPqIndex(Similarity.buildIvfPqIndex(corpus,
@@ -121,8 +141,9 @@ object ProbeJobs {
       case Array(outDir, tag, "fhir") => fhir(outDir, tag)
       case Array(outDir, tag, "loops") => loops(outDir, tag)
       case Array(outDir, tag, "ann-inquery") => annInQuery(outDir, tag)
+      case Array(outDir, tag, "ann-dedup") => annDedup(outDir, tag)
       case _ => sys.error("usage: ProbeJobs <outDir> <tag> " +
-        "[stream|terminology|fhir|loops|ann-inquery]")
+        "[stream|terminology|fhir|loops|ann-inquery|ann-dedup]")
     }
     spark.stop()
   }
@@ -624,16 +645,21 @@ object ProbeJobs {
     * rows). */
   private def checksummed(result: => DataFrame)
       : (Int, Seq[String], Double, Long, java.math.BigDecimal) = {
-    var row: org.apache.spark.sql.Row = null
+    var row: (Long, java.math.BigDecimal) = null
     val t0 = System.nanoTime()
     val (n, plans) = org.apache.spark.TestJobs.of(spark) {
-      val df = result
-      row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
-          df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head()
+      row = rowsAndSum(result)
     }
-    (n, plans, (System.nanoTime() - t0) / 1e9, row.getLong(0),
-      row.getDecimal(1))
+    (n, plans, (System.nanoTime() - t0) / 1e9, row._1, row._2)
+  }
+
+  /** One action over `df`: its row count and the decimal sum of its
+    * rows' `xxhash64`. */
+  private def rowsAndSum(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
+        df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
+      lit(java.math.BigDecimal.ZERO))).head()
+    (row.getLong(0), row.getDecimal(1))
   }
 
   /** The executions whose plan joins over a checkpoint. */
@@ -718,6 +744,156 @@ object ProbeJobs {
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.json"), json)
     Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.md"),
+      md.mkString("", "\n", "\n"))
+    println(md.mkString("\n"))
+  }
+
+  // ===== ANN near-dup =====
+
+  /** One pass over the near-dup entry points: per call (name, jobs, SQL
+    * executions, seconds, rows and checksum of each output frame). */
+  private def annDedupRound(sparse: String, dense: String)
+      : Seq[(String, Int, Int, Double, Seq[(Long, java.math.BigDecimal)])] = {
+    val batch = spark.range(0, 40).select((col("id") + 5000L).as("vec_id"),
+      transform(sequence(lit(0), lit(63)),
+        j => sin(col("id") * 50 * 1.37 + j * 0.61 + 0.02).cast("float"))
+        .as("embedding"))
+    val exclude = corpus.where(pmod(col("vec_id"), lit(5)) === 0)
+      .select(col("vec_id"))
+    val tau = 950000L
+    def raw(root: String) = Similarity.readIvfIndex(spark, s"$root/ivf")
+    def pq(root: String) = Similarity.readIvfPqIndex(spark, s"$root/pq")
+    def call(name: String)(body: (DataFrame => Unit) => Unit) = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[
+        (Long, java.math.BigDecimal)]
+      val t0 = System.nanoTime()
+      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
+        body(df => out += rowsAndSum(df))
+      }
+      (name, n, plans.size, (System.nanoTime() - t0) / 1e9, out.toSeq)
+    }
+    Seq(
+      call("annNearDupPairs cap 0") { r =>
+        r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
+          "embedding", tau))
+      },
+      call("annNearDupPairs cap 2") { r =>
+        r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
+          "embedding", tau, maxPairsPerNew = 2))
+      },
+      call("annNearDupDropReport") { r =>
+        r(Similarity.annNearDupDropReport(raw(sparse), batch, "vec_id",
+          "embedding", tau, maxPairsPerNew = 2))
+      },
+      call("annNearDupPairsAndDropReport") { r =>
+        Similarity.annNearDupPairsAndDropReport(raw(sparse), batch,
+          "vec_id", "embedding", tau, maxPairsPerNew = 2,
+          excludeIds = exclude) { (p, d) => r(p); r(d) }
+      },
+      call("annNearDupPairsPqAndDropReport") { r =>
+        Similarity.annNearDupPairsPqAndDropReport(pq(sparse), raw(sparse),
+          batch, "vec_id", "embedding", tau, maxPairsPerNew = 2,
+          excludeIds = exclude) { (p, d) => r(p); r(d) }
+      },
+      call("annNearDupPairsPq cap 0") { r =>
+        r(Similarity.annNearDupPairsPq(pq(sparse), raw(sparse), batch,
+          "vec_id", "embedding", tau, excludeIds = exclude))
+      },
+      call("annNearDupAdcPrefilterReport") { r =>
+        r(Similarity.annNearDupAdcPrefilterReport(pq(sparse), raw(sparse),
+          batch, "vec_id", "embedding", tau))
+      },
+      call("annNearDupPairsAuto (routes raw)") { r =>
+        r(Similarity.annNearDupPairsAuto(spark, s"$sparse/ivf",
+          s"$sparse/pq", batch, "vec_id", "embedding", tau,
+          maxPairsPerNew = 2))
+      },
+      call("annNearDupPairsAuto (routes PQ)") { r =>
+        r(Similarity.annNearDupPairsAuto(spark, s"$dense/ivf",
+          s"$dense/pq", batch, "vec_id", "embedding", tau,
+          maxPairsPerNew = 2))
+      })
+  }
+
+  /** The dedup streams (single-index, dual-index on both roots) and the
+    * probe stream over two fresh delta files of 80 vectors each: per
+    * stream, per batch its jobs and whether one of them scans the
+    * quantizer tables. */
+  private def annStreamRound(): Seq[(String, Seq[(Long, Int, Boolean)])] = {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType))))
+    val streams = Seq[(String, Int, (DataFrame, String) => StreamingQuery)](
+      ("dedup single", 16, (in, root) => Streams.incrementalAnnDedupStream(
+        in, "vec_id", "embedding", s"$root/ivf", s"$root/pairs",
+        s"$root/chk", 950000L, maxPairsPerNew = 2,
+        dropsPath = s"$root/drops")),
+      ("dedup dual (routes raw)", 16, (in, root) =>
+        Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
+          s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
+          maxPairsPerNew = 2, dropsPath = s"$root/drops",
+          pqIndexPath = s"$root/pq")),
+      ("dedup dual (routes PQ)", 4, (in, root) =>
+        Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
+          s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
+          maxPairsPerNew = 2, dropsPath = s"$root/drops",
+          pqIndexPath = s"$root/pq")),
+      ("probe", 16, (in, root) => Streams.annProbeStream(in, "vec_id",
+        "embedding", s"$root/ivf", s"$root/hits", s"$root/chk", k = 10)))
+    streams.map { case (name, cells, start) =>
+      val root = buildRoot(cells)
+      (0 until 2).foreach { f =>
+        spark.range(2000 + 80 * f, 2080 + 80 * f)
+          .select(col("id").as("vec_id"),
+            transform(sequence(lit(0), lit(63)),
+              j => sin((col("id") - 2000) * 1.37 + j * 0.61 + 0.02)
+                .cast("float")).as("embedding"))
+          .coalesce(1).write.mode("append").json(s"$root/deltas")
+      }
+      val in = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").json(s"$root/deltas")
+      val jobs = org.apache.spark.TestJobs.perBatchWithPlans(spark) {
+        start(in, root).awaitTermination()
+      }
+      name -> jobs.toSeq.map { case ((_, b), js) =>
+        (b, js.size, js.exists { case (_, plan) =>
+          plan.contains("/centroids") || plan.contains("/codebook") })
+      }.sortBy(_._1)
+    }
+  }
+
+  private def annDedup(outDir: String, tag: String): Unit = {
+    val (sparse, dense) = (buildRoot(16), buildRoot(4))
+    annDedupRound(sparse, dense) // warm-up: JIT and first-plan compilation
+    val measured = annDedupRound(sparse, dense)
+    annStreamRound()
+    val streams = annStreamRound()
+    val json = measured.map { case (name, n, execs, s, outs) =>
+      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
+        f""""seconds": $s%.3f, "rows": """ +
+        outs.map(_._1).mkString("[", ", ", "]") + """, "checksums": """ +
+        outs.map(o => "\"" + o._2 + "\"").mkString("[", ", ", "]") + "}"
+    } ++ streams.map { case (name, batches) =>
+      f""""stream $name": """ + batches.map { case (b, n, scans) =>
+        s"""{"batch": $b, "jobs": $n, "scans_quantizer_tables": $scans}"""
+      }.mkString("[", ", ", "]")
+    }
+    val md = Seq("| call | jobs | SQL executions | seconds | rows | " +
+        "checksums |", "|---|---|---|---|---|---|") ++ measured.map {
+      case (name, n, execs, s, outs) =>
+        f"| $name | $n | $execs | $s%.2f | " +
+          outs.map(_._1).mkString(" / ") + " | " +
+          outs.map(_._2).mkString(" / ") + " |"
+    } ++ Seq("", "| stream | batch | jobs | scans centroids/codebook |",
+      "|---|---|---|---|") ++ streams.flatMap { case (name, batches) =>
+      batches.map { case (b, n, scans) =>
+        s"| $name | $b | $n | ${if (scans) "yes" else "no"} |"
+      }
+    }
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"ann_dedup_$tag.json"),
+      json.mkString("{", ",\n ", "}\n"))
+    Files.writeString(Paths.get(outDir, s"ann_dedup_$tag.md"),
       md.mkString("", "\n", "\n"))
     println(md.mkString("\n"))
   }

@@ -96,9 +96,18 @@ object TestJobs {
     * thread's jobs all share one call site, so the scopes are what tells
     * a schema inference from a sort or a write apart). */
   def perBatch(spark: SparkSession)(body: => Unit)
-      : Map[(String, Long), Seq[String]] = {
+      : Map[(String, Long), Seq[String]] =
+    perBatchWithPlans(spark)(body).map { case (k, v) => k -> v.map(_._1) }
+
+  /** [[perBatch]] with each job's label paired with the physical plan
+    * description of the SQL execution it belongs to ("" for a job that
+    * runs outside one, such as a schema inference). */
+  def perBatchWithPlans(spark: SparkSession)(body: => Unit)
+      : Map[(String, Long), Seq[(String, String)]] = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[(Int, (String, Long), String)]()
+    val jobs =
+      new ConcurrentLinkedQueue[(Int, (String, Long), String, String)]()
+    val plans = new ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null) {
@@ -107,8 +116,15 @@ object TestJobs {
           if (q != null && b != null)
             jobs.add((e.jobId, q -> b.toLong,
               e.stageInfos.maxBy(_.stageId).rddInfos.sortBy(_.id)
-                .flatMap(_.scope.map(_.name)).distinct.mkString(" > ")))
+                .flatMap(_.scope.map(_.name)).distinct.mkString(" > "),
+              String.valueOf(
+                e.properties.getProperty("spark.sql.execution.id"))))
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId.toString, s.physicalPlanDescription)
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try body
@@ -116,7 +132,8 @@ object TestJobs {
       sc.listenerBus.waitUntilEmpty()
       sc.removeSparkListener(listener)
     }
-    jobs.asScala.toSeq.sortBy(_._1).groupBy(_._2)
-      .map { case (k, v) => k -> v.map(_._3) }
+    jobs.asScala.toSeq.sortBy(_._1).groupBy(_._2).map { case (k, v) =>
+      k -> v.map(j => j._3 -> Option(plans.get(j._4)).getOrElse(""))
+    }
   }
 }
