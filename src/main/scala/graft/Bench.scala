@@ -144,8 +144,9 @@ object Bench {
     //
     // REFRESH POLICY (r15, VERDICT r14 #7): any query whose SOURCE changed
     // in a round gets its baseline re-recorded from a fresh-JVM
-    // `graft.tools.ProbeQuery` steady-state minimum, NOT from shared-run
-    // slots — shared slots both under-state (warm-JIT luck: the pre-r15
+    // `graft.tools.ProbeJobs … query` (test scope) steady-state minimum,
+    // NOT from shared-run slots — shared slots both under-state (warm-JIT
+    // luck: the pre-r15
     // q97 best of 2.08 vs 3.0 isolated) and over-state (scheduler
     // pressure: q161's 2.715 vs 1.9 isolated) the honest number, and
     // either error makes the guard mis-flag for rounds afterward.

@@ -1108,14 +1108,12 @@ object SparkEntry {
     }),
 
     // The same range join as q58, but written as a RAW BETWEEN join and
-    // planned by the RangeJoinRewrite optimizer rule — proving the
-    // injected Catalyst rule produces the hash plan (and the same rows)
-    // for users who never call the explicit operator
+    // planned by the RangeJoinRewrite optimizer rule (installed with the
+    // session's GraftExtensions) — proving the injected Catalyst rule
+    // produces the hash plan (and the same rows) for users who never
+    // call the explicit operator
     "q60_range_join_rewrite" -> ((s, dir) => {
       import graft.plans.RangeJoinRewrite
-      if (!s.experimental.extraOptimizations.contains(RangeJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ RangeJoinRewrite
       val hourUs = 3600L * 1000000L
       val ev = t(s, dir, "events")
       val clicks = ev.where(col("event_type") === "click")
@@ -2227,14 +2225,11 @@ object SparkEntry {
 
     // The q144 join written the way an analyst would write it — a raw
     // `levenshtein(a,b) <= 1` join condition — planned through the
-    // EditDistanceJoinRewrite optimizer rule into the same blocked
-    // equi-join (PlanSpec pins no nested loop); the oracle proves the
-    // rewrite is row-exact including the canonical-witness dedup
+    // EditDistanceJoinRewrite optimizer rule (installed with the
+    // session's GraftExtensions) into the same blocked equi-join
+    // (PlanSpec pins no nested loop); the oracle proves the rewrite is
+    // row-exact including the canonical-witness dedup
     "q157_edit_join_rewrite" -> ((s, dir) => {
-      val extra = s.experimental.extraOptimizations
-      if (!extra.contains(graft.plans.EditDistanceJoinRewrite))
-        s.experimental.extraOptimizations =
-          extra :+ graft.plans.EditDistanceJoinRewrite
       val c = t(s, dir, "customer")
       val a = c.select(col("c_custkey").as("custkey_a"),
         col("c_name").as("name_a"))

@@ -965,13 +965,16 @@ object GraftFunctions {
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the graft
   * SQL functions and optimizer rules at session build time — the
   * deployment path for clusters where user code doesn't own session
-  * construction. */
+  * construction, and how `graft.localSession` builds its session. The
+  * join rewrites run once, after filter inference: inside the operator
+  * optimization batch, `InferFiltersFromGenerate` would add a filter on
+  * the bin/variant generator's array and evaluate it twice per row. */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(
       ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.EditDistanceJoinRewrite)
+    ext.injectPreCBORule(_ => graft.plans.RangeJoinRewrite)
+    ext.injectPreCBORule(_ => graft.plans.EditDistanceJoinRewrite)
   }
 }

@@ -1861,7 +1861,7 @@ object Similarity {
       val rows = readRows(spark, kind, path)
       val root = current(spark)
       if (tables == null)
-        tables = kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}"))
+        tables = readTables(spark, kind, path)
       kind.carrying(kind.frames(tables, rows, root.meta), root)
     }
 
@@ -1892,7 +1892,8 @@ object Similarity {
     }
     val (centTab, cnTab) = quantizeTable(tables.head, qs)
     OpenedRoot(meta, centTab, cnTab,
-      payloadColumns(spark, s"$path/${kind.dataDir}", kind.core),
+      dataSchema(spark, s"$path/${kind.dataDir}")
+        .fold(Seq.empty[String])(_.fieldNames.toSeq.filterNot(kind.core)),
       tables.drop(1).flatMap(codebookRows(_, qs)))
   }
 
@@ -1969,20 +1970,32 @@ object Similarity {
       .sortBy(_._1).map(_._2)
   }
 
-  /** The payload columns of the cell-partitioned `dir` (postings or
-    * codes): the non-`core` columns of one data file's footer — what a
-    * schema-inferring read of the dir reports — or none when the dir
-    * holds no data file yet. */
-  private def payloadColumns(spark: SparkSession,
-      dir: String, core: Set[String]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    cellDirs(spark, dir).iterator
-      .flatMap(parquetDataFiles(spark, _)).nextOption() match {
-      case None => Nil
-      case Some(f) => withFooter(spark, f)(_.getFooter.getFileMetaData
-        .getSchema.getFields.asScala.map(_.getName).toSeq
-        .filterNot(core))
-    }
+  /** The schema of the cell-partitioned `dir` (postings or codes): one
+    * data file's [[footerSchema]] plus the `cell` partition column, or
+    * None when the dir holds no data file yet. */
+  private def dataSchema(spark: SparkSession,
+      dir: String): Option[StructType] =
+    cellDirs(spark, dir).iterator.flatMap(parquetDataFiles(spark, _))
+      .nextOption().map(footerSchema(spark, _).add("cell", IntegerType))
+
+  /** The parquet files directly under `dir` (a tombstone set, a quantizer
+    * table), read under the [[footerSchema]] of the first; None when it
+    * holds none. */
+  private def readStated(spark: SparkSession,
+      dir: String): Option[DataFrame] =
+    parquetDataFiles(spark, new Path(dir)).headOption.map(f =>
+      spark.read.schema(footerSchema(spark, f)).parquet(dir))
+
+  /** The Spark schema of the parquet data file `f`, read from its footer
+    * on the driver and converted as a schema-inferring read converts it:
+    * a read under it runs no inference job. */
+  private def footerSchema(spark: SparkSession, f: Path): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(f,
+        withFooter(spark, f)(_.getFooter)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** The cell partition dirs of the cell-partitioned `dir` (postings or
@@ -2343,11 +2356,7 @@ object Similarity {
   private def readTombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
     recoverTombstones(spark, path)
-    val dir = new Path(path + "/tombstones")
-    val fs = fileSystem(spark, dir)
-    if (!fs.exists(dir)) return None
-    try Some(spark.read.parquet(dir.toString))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+    readStated(spark, path + "/tombstones")
   }
 
   /** Apply the pending tombstones (if any) to a postings/codes frame. */
@@ -2465,13 +2474,13 @@ object Similarity {
     * on `cell`: a probe joining on `cell` dynamically prunes unprobed
     * cell directories instead of scanning the corpus. A fresh or empty
     * index (centroids written, no posting files yet — a cell-partitioned
-    * write of zero rows leaves no inferable files) reads back with empty
-    * postings rather than failing schema inference. */
+    * write of zero rows leaves no files) reads back with empty postings. */
   def readIvfIndex(spark: SparkSession, path: String): IvfIndexFrames =
     readIndex(spark, IvfKind, path)
 
   /** The read of either kind: the compaction-swap recovery, the meta,
-    * then the data dir, partition-discovered on `cell`. A damaged root
+    * then the data dir, partition-discovered on `cell` under the schema
+    * of one footer ([[dataSchema]]). A damaged root
     * fails loudly instead of silently serving an empty corpus; a fresh
     * one (no data files yet) reads back with empty data. Pending
     * tombstones filter EVERY consumer of the frames (probe, dedup,
@@ -2481,24 +2490,28 @@ object Similarity {
       kind: IndexKind[F], path: String): F = {
     val rows = readRows(spark, kind, path)
     val meta = readMeta(spark, kind, path, s"read${kind.label}Index")
-    kind.frames(kind.tableDirs.map(t => spark.read.parquet(s"$path/${t._1}")),
-      rows, meta)
+    kind.frames(readTables(spark, kind, path), rows, meta)
   }
 
-  /** [[readIndex]]'s data rows: recovered, tombstoned, empty if fresh. */
+  /** `kind`'s quantizer tables at `path`, each read by [[readStated]] (a
+    * table dir without a data file fails as an inferring read fails). */
+  private def readTables(spark: SparkSession, kind: IndexKind[_],
+      path: String): Seq[DataFrame] = kind.tableDirs.map { t =>
+    val dir = s"$path/${t._1}"
+    readStated(spark, dir).getOrElse(spark.read.parquet(dir))
+  }
+
+  /** [[readIndex]]'s data rows: recovered, tombstoned, typed-empty if
+    * fresh. */
   private def readRows(spark: SparkSession, kind: IndexKind[_],
       path: String): DataFrame = {
     if (recoverIvfPostings(spark, path, kind.dataDir))
       throw damagedRoot(s"read${kind.label}Index", path, kind,
         "serve an empty index")
-    val data =
-      try spark.read.parquet(s"$path/${kind.dataDir}")
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            kind.coreSchema)
-      }
+    val dir = s"$path/${kind.dataDir}"
+    val data = dataSchema(spark, dir).fold(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        kind.coreSchema))(spark.read.schema(_).parquet(dir))
     applyTombstones(spark, path, data)
   }
 
@@ -3037,7 +3050,7 @@ object Similarity {
     * kernels, in MEAN POSTINGS PER CELL — the density statistic that
     * actually prices the candidate stage (work per batch row ∝ nprobe
     * × postings-per-probed-cell). Measured on the clustered-corpus
-    * probe (SCALE_r16 dedup-prefilter; `ProbeAnn dedup-prefilter`'s
+    * probe (SCALE_r16; `ProbeJobs <outDir> <tag> dedup-prefilter`'s
     * routing fields — postings_per_cell, auto_routes_to_pq,
     * route_agrees_with_walls — re-record it any round):
     * the raw kernel wins at ≈224 postings/cell

@@ -48,11 +48,15 @@
 package object graft {
 
   /** The one local session configuration of every main here (Verify,
-    * Bench, Smoke and the `graft.tools` probes): `cpus` cores and as
-    * many shuffle partitions, the only setting that differs by main. */
+    * Bench, Smoke and the test-scope `graft.tools.ProbeJobs`): `cpus`
+    * cores and as many shuffle partitions, the only setting that differs
+    * by main. The graft SQL functions and optimizer rules are installed
+    * once, at build time ([[graft.functions.GraftExtensions]]), so no
+    * query adds a rule to the shared session. */
   private[graft] def localSession(cpus: String)
       : org.apache.spark.sql.SparkSession =
     org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

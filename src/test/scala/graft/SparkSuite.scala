@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
-  * the same forked test JVM). */
+  * the same forked test JVM), built with the graft extensions as
+  * `graft.localSession` is: the edit-distance join rewrite is on for every
+  * suite, so a naive reference turns it off for its own scope. */
 object SparkSuite {
   lazy val spark: SparkSession = SparkSession.builder()
+    .withExtensions(new graft.functions.GraftExtensions)
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")

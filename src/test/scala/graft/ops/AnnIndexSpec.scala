@@ -2058,6 +2058,55 @@ class AnnIndexSpec extends SparkSuite {
       rows(tagged.withColumn("corpus_id", col("vec_id"))))
   }
 
+  /** The jobs `body` runs on this thread that infer a parquet schema
+    * (Spark labels them `parallelize > mapPartitions`). */
+  private def inferenceJobs(body: => Unit): Seq[String] =
+    org.apache.spark.TestJobs.record(spark)(body).grouped.jobs
+      .map(_.scopes).filter(_ == "parallelize > mapPartitions")
+
+  test("an index read states its schema: raw and PQ roots, with and " +
+    "without payload columns, fresh and fully tombstoned, read as a " +
+    "schema-inferring read of the data dir reports it, with no " +
+    "inference job") {
+    val labeled = corpus.withColumn("label",
+      pmod(col("vec_id"), lit(4)).cast("int"))
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", 8)
+    for (pq <- Seq(false, true); payload <- Seq(Nil, Seq("label"));
+        state <- Seq("built", "fresh", "tombstoned")) {
+      val what = s"${if (pq) "PQ" else "raw"} $payload $state"
+      val path = tmpDir("statedschema")
+      // a fresh root: the quantizer written, no data file yet
+      def rows(df: DataFrame) = if (state == "fresh") df.where(lit(false))
+        else df
+      if (pq) {
+        val idx = Similarity.buildIvfPqIndex(labeled, "vec_id",
+          "embedding", seeds, "sid", "svec", codebookIds = Seq(1L, 2L, 3L,
+          4L), inDims = dims, nSub = 2, payloadCols = payload)
+        Similarity.writeIvfPqIndex(idx.copy(codes = rows(idx.codes)), path)
+      } else {
+        val idx = Similarity.buildIvfIndex(labeled, "vec_id", "embedding",
+          seeds, "sid", "svec", payloadCols = payload)
+        Similarity.writeIvfIndex(idx.copy(postings = rows(idx.postings)),
+          path)
+      }
+      if (state == "tombstoned") Similarity.deleteFromIvfIndex(spark, path,
+        corpus.select(col("vec_id")), "vec_id")
+      var data: DataFrame = null
+      assert(inferenceJobs {
+        data = if (pq) Similarity.readIvfPqIndex(spark, path).codes
+          else Similarity.readIvfIndex(spark, path).postings
+      }.isEmpty, what)
+      val kind = if (pq) Similarity.PqKind else Similarity.IvfKind
+      val want =
+        if (state == "fresh") kind.coreSchema
+        else spark.read.parquet(s"$path/${kind.dataDir}").schema
+      assert(data.schema === want, what)
+      assert(data.columns.contains("label") === (payload.nonEmpty &&
+        state != "fresh"), what)
+      assert(data.count() === (if (state == "built") 200L else 0L), what)
+    }
+  }
+
   test("incrementalAnnDedupStream carries one view per root: after batch " +
     "0 no batch scans centroids/ or codebook/, and no batch runs more " +
     "jobs than before (single, dual routing raw, dual routing PQ)") {
@@ -2069,11 +2118,12 @@ class AnnIndexSpec extends SparkSuite {
     val batches = (0 until 3).map(b =>
       (1000L + 20 * b until 1020L + 20 * b).map(i => (i, vec(i % 60L)))
         .toDF("vec_id", "embedding"))
-    // (mode, cells, dual, the jobs of each batch when every batch
-    // re-read its root: 18, 21 and 36)
-    for ((mode, cells, dual, parentJobs) <- Seq(
-        ("single", 8, false, 18), ("dual raw", 8, true, 21),
-        ("dual PQ", 1, true, 36))) {
+    // (mode, cells, dual, the jobs of each batch now that every read
+    // states its schema; 18, 21 and 36 when every batch re-read its root
+    // and inferred it)
+    for ((mode, cells, dual, maxJobs) <- Seq(
+        ("single", 8, false, 13), ("dual raw", 8, true, 16),
+        ("dual PQ", 1, true, 20))) {
       val seeds = Similarity.hashSeeds(base, "vec_id", "embedding", cells)
       val root = tmpDir("dedupview")
       val (idxp, pqp) = (s"$root/index", if (dual) s"$root/pq" else null)
@@ -2097,10 +2147,12 @@ class AnnIndexSpec extends SparkSuite {
       }.map { case ((_, b), js) => b -> js }
       assert(jobs.keySet === Set(0L, 1L, 2L), s"$mode: $jobs")
       jobs.foreach { case (b, js) =>
-        assert(js.size <= parentJobs, s"$mode batch $b: ${js.map(_._1)}")
+        assert(js.size <= maxJobs, s"$mode batch $b: ${js.map(_._1)}")
         if (b > 0) assert(!js.exists { case (_, plan) =>
           plan.contains("/centroids") || plan.contains("/codebook")
         }, s"$mode batch $b scans a quantizer table")
+        if (b > 0) assert(!js.exists(_._1 == "parallelize > mapPartitions"),
+          s"$mode batch $b infers a schema: ${js.map(_._1)}")
       }
       assert(spark.read.parquet(s"$root/drops").count() === 3L)
     }

@@ -555,7 +555,6 @@ class OpsSpec extends SparkSuite {
 
   test("topk_by_score usable as a SQL aggregate") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Seq((1L, 10L, 0.9), (1L, 11L, 0.5), (1L, 12L, 0.7))
       .toDF("query_id", "corpus_id", "score")
       .createOrReplaceTempView("scores_sql")
@@ -2457,9 +2456,13 @@ class OpsSpec extends SparkSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val a = c.select(col("c_custkey").as("ia"), col("c_name").as("na"))
     val b = c.select(col("c_custkey").as("ib"), col("c_name").as("nb"))
-    val want = a.join(b, col("ia") < col("ib"))
-      .where(levenshtein(col("na"), col("nb")) <= 1)
-      .select("ia", "ib").as[(Long, Long)].collect().toSet
+    // the naive plan: the session's edit-distance join rewrite off
+    val want = graft.ConfScope.withConf(spark,
+      graft.plans.EditDistanceJoinRewrite.EnabledKey, "false") {
+      a.join(b, col("ia") < col("ib"))
+        .where(levenshtein(col("na"), col("nb")) <= 1)
+        .select("ia", "ib").as[(Long, Long)].collect().toSet
+    }
     assert(got === want)
     assert(got.nonEmpty)
   }

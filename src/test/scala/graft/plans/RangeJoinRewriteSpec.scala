@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * its conf key. */
 class RangeJoinRewriteSpec extends SparkSuite {
 
-  private def withRule[A](binWidth: Option[Long])(f: => A): A = {
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(RangeJoinRewrite))
-      spark.experimental.extraOptimizations = extra :+ RangeJoinRewrite
+  /** `f` under the rule's bin width (the session installs the rule, which
+    * is inert without one). */
+  private def withWidth[A](binWidth: Option[Long])(f: => A): A = {
     binWidth match {
       case Some(w) => spark.conf.set(RangeJoinRewrite.BinWidthKey, w.toString)
       case None => spark.conf.unset(RangeJoinRewrite.BinWidthKey)
@@ -39,7 +38,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     val naive = rangeJoin().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(naive.nonEmpty)
-    withRule(Some(50L)) {
+    withWidth(Some(50L)) {
       val df = rangeJoin()
       val plan = df.queryExecution.executedPlan.toString()
       assert(!plan.contains("NestedLoopJoin"),
@@ -52,7 +51,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
   }
 
   test("mirrored operand forms rewrite too") {
-    withRule(Some(50L)) {
+    withWidth(Some(50L)) {
       val df = intervals.join(points,
         col("s") <= col("p") && col("e") >= col("p")) // point side on right
         .select("pid", "iid")
@@ -63,11 +62,11 @@ class RangeJoinRewriteSpec extends SparkSuite {
   }
 
   test("inert without the conf key; non-range joins untouched") {
-    withRule(None) {
+    withWidth(None) {
       val plan = rangeJoin().queryExecution.executedPlan.toString()
       assert(plan.contains("NestedLoopJoin")) // baseline shape, no rewrite
     }
-    withRule(Some(50L)) {
+    withWidth(Some(50L)) {
       // equi-join: rule must not touch it
       val eq = points.join(intervals, col("p") === col("s"))
       assert(eq.queryExecution.executedPlan.toString()

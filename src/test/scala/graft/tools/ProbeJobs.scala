@@ -2,10 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestJobs
+import org.apache.spark.TestJobs.Recording
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
-
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
@@ -13,105 +17,210 @@ import graft.SparkSuite
 import graft.ops.Similarity
 import graft.streaming.Streams
 
-/** Job counts, plans and phases of the persisted-index family in the
-  * benchmark's shape: 2000 64-dim vectors, 16 cells, an 8-subspace
-  * codebook of 16 codes, local[4].
+/** The evidence tool: Spark jobs, SQL executions, files read, walls,
+  * stages and result checksums of the library's entry points, all
+  * recorded by one [[org.apache.spark.TestJobs.record]].
   *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag>"
+  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> [mode ...]"
   *
-  * probes: writes `<outDir>/{ivf,pq}_probe_<tag>.txt` (the final adaptive
-  * plan of a warm probe, one driver-local query, k = 10, nprobe = 4) and
-  * `<outDir>/jobs_<tag>.json` (jobs of the first probe on freshly read
-  * frames and of a warm one, plus warm walls).
+  * Every mode but `query` and `dedup-prefilter` runs on the tests'
+  * local[4] session, measures one round after an unmeasured warm-up
+  * round (JIT and first-plan compilation), and writes
+  * `<outDir>/<report>_<tag>.{json,md}`: per verb its jobs, SQL
+  * executions, input files read (the scans' "number of files read"),
+  * seconds, and the row count and xxhash64 checksum (the decimal sum of
+  * the rows' `xxhash64`: equal sums, the same rows) of each output
+  * frame, plus the mode's own columns. The fixtures are the benchmark's
+  * shapes: 2000 64-dim vectors, 16 cells, an 8-subspace codebook of 16
+  * codes.
   *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> stream"
-  *
-  * maintenance streams: runs the IVF and the PQ maintenance stream over
-  * two JSON delta files of 80 vectors (one file per micro-batch,
-  * compaction every second batch) after one unmeasured warm-up round,
-  * and writes `<outDir>/stream_<tag>.json` and `<outDir>/stream_<tag>.md`
-  * — per batch: the Spark jobs it ran (each labelled by its result
-  * stage's operation scopes) and the stream's phase durations.
-  *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> terminology"
-  *
-  * terminology build in the benchmark's `cohort_query` shape: directory
-  * imports of 16 value sets (10 to 10k codes, every third one in two
-  * versions, some XML) and of a three-map delegation chain, a 1.2k-code
-  * DAG to level 16 closed by `withHierarchyElements`, the three table
-  * writes, the read-back, a broadcast value-set build and the chained
-  * concept map — after one unmeasured warm-up round. Writes
-  * `<outDir>/terminology_<tag>.{json,md}`: per verb its Spark jobs, SQL
-  * executions and wall time, and the closure's rounds (the executions
-  * whose plan unions a checkpointed frame with a join: one per fixpoint
-  * round).
-  *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> fhir"
-  *
-  * FHIR ingest in the benchmark's `cohort_query` shape: 48 patient
-  * bundles (a Patient with race and birth-sex extensions and a telecom,
-  * observations, a condition, an encounter and a medication request with
-  * a contained medication), one in six of them as FHIR XML. Verbs:
-  * `fromXml` plus a count, `fromJson` plus `saveAsDatabase` of the five
-  * tables (JSON and XML together), a US-Core profile `extractEntry` plus
-  * a write, and a contained `toJson` round trip — after one unmeasured
-  * warm-up round. Writes `<outDir>/fhir_<tag>.{json,md}`: per verb its
-  * Spark jobs, SQL executions, input files read (the scans' "number of
-  * files read") and wall time.
-  *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> loops"
-  *
-  * the fixpoint loops on fixed fixtures, after one unmeasured warm-up
-  * round: `closureLong` and `dagDepth` on the terminology DAG (as long
-  * ids), `addEdges` of every tenth edge into the closure of the rest,
-  * `nearDupClusters` on 40 chains of 50 ids, `addToClusters` of 40
-  * pairs joining those chains, and `kCore` (k = 2), both PageRanks (5
-  * iterations) on a 200-node ring with chords and 6-node pendant paths.
-  * Each verb ends in one action (row count and an xxhash64 checksum of
-  * the result rows). Writes `<outDir>/loops_<tag>.{json,md}`: per verb
-  * its Spark jobs, SQL executions, rounds (the executions whose plan
-  * joins over a checkpoint: one per fixpoint round, plus one for the
-  * joined seed of `addEdges`/`addToClusters`, PageRank's initial state
-  * and `addToClusters`' relabelling action), wall time, rows and
-  * checksum.
-  *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> ann-inquery"
-  *
-  * the in-query IVF and IVF-PQ top-k calls over the 2000-vector corpus
-  * in the shapes of q38 (`ivfTopKSeeded`, 16 seeds), q263 (`ivfPqTopK`),
-  * q281 (`ivfPqTopKScaled`, hash trainer), q284 (`ivfPqTopKTwoLevel`)
-  * and q290 (q281 at k = 30 re-ranked by `rerankExactTopK`), five
-  * queries, after one unmeasured warm-up round. Writes
-  * `<outDir>/ann_inquery_<tag>.{json,md}`: per call its Spark jobs, SQL
-  * executions, wall time, rows and checksum.
-  *
-  *   sbt "Test/runMain graft.tools.ProbeJobs <outDir> <tag> ann-dedup"
-  *
-  * the ANN near-dup entry points against persisted roots over the
-  * 2000-vector corpus (16 cells: 125 postings per cell, which routes
-  * raw; 4 cells: 500 per cell, which routes through the PQ codes), for
-  * a batch of 40 perturbed copies of corpus rows at cosine 0.95,
-  * nprobe 4, after one unmeasured warm-up round: `annNearDupPairs` at
-  * caps 0 and 2, `annNearDupDropReport`, both `…AndDropReport` calls,
-  * `annNearDupPairsPq`, `annNearDupAdcPrefilterReport` and
-  * `annNearDupPairsAuto` on both roots. Each call reads its frames
-  * afresh and ends in one action per output frame (row count and
-  * checksum). Then `incrementalAnnDedupStream` (cap 2 with a drop
-  * sink) single-index on the 16-cell root, dual-index on both roots,
-  * and `annProbeStream` on the 16-cell root, each over two delta files
-  * of 80 vectors. Writes `<outDir>/ann_dedup_<tag>.{json,md}`: per call
-  * its Spark jobs, SQL executions, wall time, rows and checksums; per
-  * stream batch its jobs and whether one of its SQL executions scans
-  * `centroids/` or `codebook/`.
+  *  - (no mode), report `jobs`: per index kind the read of a fresh root,
+  *    the first probe on the read frames (cold) and the next one (warm,
+  *    with the median wall of 5 more), one driver-local query, k = 10,
+  *    nprobe = 4; and `{ivf,pq}_probe_<tag>.txt`, the final adaptive plan
+  *    of a warm probe.
+  *  - `stream`: the IVF and the PQ maintenance stream over two JSON delta
+  *    files of 80 vectors (one per micro-batch, compaction every second
+  *    batch); per batch its jobs, their result stages' operation scopes
+  *    and the stream's phase durations.
+  *  - `terminology`, in the `cohort_query` shape: directory imports of 16
+  *    value sets (10 to 10k codes, every third one in two versions, some
+  *    XML) and of a three-map delegation chain, a 1.2k-code DAG to level
+  *    16 closed by `withHierarchyElements`, the three table writes, the
+  *    read-back, a broadcast value-set build and the chained concept map;
+  *    the closure's rounds (the executions whose plan unions a
+  *    checkpointed frame with a join: one per fixpoint round).
+  *  - `fhir`, in the `cohort_query` shape: 48 patient bundles (one in six
+  *    as FHIR XML) through `fromXml` plus a count, `fromJson` plus
+  *    `saveAsDatabase` of five tables, a US-Core profile `extractEntry`
+  *    plus a write, and a contained `toJson` round trip.
+  *  - `loops`: `closureLong` and `dagDepth` on the terminology DAG,
+  *    `addEdges` of every tenth edge into the closure of the rest,
+  *    `nearDupClusters` on 40 chains of 50 ids, `addToClusters` of 40
+  *    pairs joining those chains, and `kCore` (k = 2) and both PageRanks
+  *    (5 iterations) on a 200-node ring with chords and pendant paths;
+  *    rounds (the executions whose plan joins over a checkpoint).
+  *  - `ann-inquery`: q38 (`ivfTopKSeeded`), q263 (`ivfPqTopK`), q281
+  *    (`ivfPqTopKScaled`, hash trainer), q284 (`ivfPqTopKTwoLevel`) and
+  *    q290 (q281 at k = 30 re-ranked by `rerankExactTopK`).
+  *  - `ann-dedup`: every near-dup entry point against a 16-cell root (125
+  *    postings per cell: routes raw) and a 4-cell one (500: routes PQ),
+  *    for 40 perturbed corpus rows at cosine 0.95, each call reading its
+  *    frames afresh; then the dedup stream (single, dual routing raw,
+  *    dual routing PQ) and the probe stream over two delta files of 80
+  *    vectors, per batch whether a plan scans `centroids/`/`codebook/`.
+  *  - `query <name> [sfDir] [reps]`: one `SparkEntry` query in this JVM
+  *    on `graft.localSession` (SPARK_GRAFT_CPUS cores, default 32), warmed
+  *    at sf0.001 as Bench does, then `reps` (default 3) timed counts at
+  *    `sfDir` (default sf0.1); report `query_<name>`: per rep its row
+  *    over every job the rep started, on any thread (a stream query's
+  *    batches too; files read blank past the session's 8 retained SQL
+  *    executions), and the last rep's stages (wall, executor run and
+  *    CPU, shuffle, input, spill, tasks); `query_<name>_<tag>_plan.txt`
+  *    is the formatted plan.
+  *  - `dedup-prefilter [sizes]`: raw capped near-dup pairs against the
+  *    ADC-prefiltered path on a clustered, PQ-compressible corpus of each
+  *    size (default 50k, 250k, 1M; √N cells) for a fixed 10k batch, on
+  *    `graft.localSession`; both must emit the same pair count. Per size
+  *    the build and kernel walls, the candidate counts and the routing
+  *    evidence for `adcPrefilterRouteMinPostingsPerCell`.
   *
   * Only public calls are used, so the same file measures any version of
   * the library. */
 object ProbeJobs {
 
-  private val spark = SparkSuite.spark
+  /** Whether this run is a fresh-JVM `query`/`dedup-prefilter` one. */
+  private var isolated = false
 
-  private def jobs(body: => Unit): Int =
-    org.apache.spark.TestJobs.of(spark)(body)._1
+  private lazy val spark: SparkSession =
+    if (!isolated) SparkSuite.spark
+    else graft.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+
+  def main(args: Array[String]): Unit = {
+    isolated = args.lift(2).exists(Set("query", "dedup-prefilter"))
+    spark.sparkContext.setLogLevel("ERROR")
+    def twice(round: => Seq[Row]): Seq[Row] = { round; round }
+    args match {
+      case Array(outDir, tag) =>
+        report(outDir, "jobs", tag, probes(outDir, tag))
+      case Array(outDir, tag, "stream") =>
+        report(outDir, "stream", tag, twice(streamRound()))
+      case Array(outDir, tag, "terminology") =>
+        report(outDir, "terminology", tag, twice(terminologyRound()))
+      case Array(outDir, tag, "fhir") =>
+        report(outDir, "fhir", tag, twice(fhirRound()))
+      case Array(outDir, tag, "loops") =>
+        report(outDir, "loops", tag, twice(loopsRound()))
+      case Array(outDir, tag, "ann-inquery") =>
+        report(outDir, "ann_inquery", tag, twice(annInQueryRound()))
+      case Array(outDir, tag, "ann-dedup") =>
+        val (sparse, dense) = (buildRoot(16), buildRoot(4))
+        report(outDir, "ann_dedup", tag, twice(annDedupRound(sparse, dense)),
+          twice(annStreamRound()))
+      case Array(outDir, tag, "query", name, rest @ _*) =>
+        query(outDir, tag, name, rest.headOption.getOrElse(
+          "/root/testdata/sf0.1"), rest.lift(1).fold(3)(_.toInt))
+      case Array(outDir, tag, "dedup-prefilter", sizes @ _*) =>
+        report(outDir, "dedup_prefilter", tag, dedupPrefilter(
+          if (sizes.nonEmpty) sizes.map(_.toLong)
+          else Seq(50000L, 250000L, 1000000L)))
+      case _ => sys.error("usage: ProbeJobs <outDir> <tag> [stream|" +
+        "terminology|fhir|loops|ann-inquery|ann-dedup|" +
+        "query <name> [sfDir] [reps]|dedup-prefilter [sizes]]")
+    }
+    spark.stop()
+  }
+
+  // ===== the one recorder and report =====
+
+  /** One report row: its name and its columns, in order. */
+  private type Row = (String, Seq[(String, Any)])
+
+  /** A verb's row: the jobs, SQL executions and files read of `r`, the
+    * seconds, the row count and checksum of each output frame (if any),
+    * then `extra`. */
+  private def verbRow(name: String, r: Recording, seconds: Double,
+      outputs: Seq[(Long, java.math.BigDecimal)],
+      extra: Seq[(String, Any)] = Nil): Row =
+    name -> (Seq("jobs" -> r.jobs.size,
+      "sql_executions" -> r.executions.size, "files_read" -> r.filesRead,
+      "seconds" -> seconds) ++
+      (if (outputs.isEmpty) Nil
+       else Seq("rows" -> outputs.map(_._1),
+         "checksums" -> outputs.map(_._2))) ++ extra)
+
+  /** Records the verbs of one round as rows; `extra` adds a verb's own
+    * columns from its name and recording. */
+  private final class Verbs(
+      extra: (String, Recording) => Seq[(String, Any)] = (_, _) => Nil) {
+    val rows = ArrayBuffer.empty[Row]
+
+    /** Runs `body` as the verb `name` under one recording; `body` hands
+      * each output frame to its argument, which reduces it to its row
+      * count and checksum in one action. */
+    def apply[A](name: String)(body: (DataFrame => Unit) => A): A = {
+      val outputs = ArrayBuffer.empty[(Long, java.math.BigDecimal)]
+      var result: Option[A] = None
+      val t0 = System.nanoTime()
+      val r = TestJobs.record(spark) {
+        result = Some(body(df => outputs += rowsAndSum(df)))
+      }.grouped
+      rows += verbRow(name, r, (System.nanoTime() - t0) / 1e9,
+        outputs.toSeq, extra(name, r))
+      result.get
+    }
+  }
+
+  /** One action over `df`: its row count and the decimal sum of its
+    * rows' `xxhash64`. */
+  private def rowsAndSum(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
+        df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
+      lit(java.math.BigDecimal.ZERO))).head()
+    (row.getLong(0), row.getDecimal(1))
+  }
+
+  /** Writes the `tables` to `<outDir>/<file>_<tag>.json` (one object of
+    * every row by name) and `<outDir>/<file>_<tag>.md` (one table each,
+    * over its rows' columns), and prints the tables. */
+  private def report(outDir: String, file: String, tag: String,
+      tables: Seq[Row]*): Unit = {
+    def json(v: Any): String = v match {
+      case o: Option[_] => o.fold("null")(json)
+      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") +
+        "\""
+      case d: Double => f"$d%.3f"
+      case b: java.math.BigDecimal => json(b.toString)
+      case xs: Seq[_] => xs.map(json).mkString("[", ", ", "]")
+      case x => x.toString
+    }
+    def md(v: Any): String = v match {
+      case o: Option[_] => o.fold("")(md)
+      case d: Double => f"$d%.2f"
+      case b: Boolean => if (b) "yes" else "no"
+      case xs: Seq[_] => xs.map(md).mkString(" / ")
+      case x => x.toString
+    }
+    val text = tables.map { rows =>
+      val cols = rows.flatMap(_._2.map(_._1)).distinct
+      (("name" +: cols).mkString("| ", " | ", " |") +:
+        ("|---" * (cols.size + 1) + "|") +: rows.map { case (name, vs) =>
+          val m = vs.toMap
+          (name +: cols.map(c => m.get(c).fold("")(md)))
+            .mkString("| ", " | ", " |")
+        }).mkString("\n")
+    }.mkString("", "\n\n", "\n")
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, s"${file}_$tag.json"),
+      tables.flatten.map { case (name, vs) =>
+        json(name) + ": " + vs.map { case (k, v) => json(k) + ": " + json(v) }
+          .mkString("{", ", ", "}")
+      }.mkString("{", ",\n ", "}\n"))
+    Files.writeString(Paths.get(outDir, s"${file}_$tag.md"), text)
+    print(text)
+  }
+
+  // ===== index probes =====
 
   private lazy val corpus: DataFrame =
     spark.range(0, 2000).select(col("id").as("vec_id"),
@@ -132,124 +241,99 @@ object ProbeJobs {
     root
   }
 
-  def main(args: Array[String]): Unit = {
-    spark.sparkContext.setLogLevel("ERROR")
-    args match {
-      case Array(outDir, tag) => probes(outDir, tag)
-      case Array(outDir, tag, "stream") => streams(outDir, tag)
-      case Array(outDir, tag, "terminology") => terminology(outDir, tag)
-      case Array(outDir, tag, "fhir") => fhir(outDir, tag)
-      case Array(outDir, tag, "loops") => loops(outDir, tag)
-      case Array(outDir, tag, "ann-inquery") => annInQuery(outDir, tag)
-      case Array(outDir, tag, "ann-dedup") => annDedup(outDir, tag)
-      case _ => sys.error("usage: ProbeJobs <outDir> <tag> " +
-        "[stream|terminology|fhir|loops|ann-inquery|ann-dedup]")
-    }
-    spark.stop()
-  }
-
-  private def probes(outDir: String, tag: String): Unit = {
+  private def probes(outDir: String, tag: String): Seq[Row] = {
     import spark.implicits._
     val root = buildRoot()
-    val ivf = Similarity.readIvfIndex(spark, s"$root/ivf")
-    val pq = Similarity.readIvfPqIndex(spark, s"$root/pq")
     val q = Seq((7L, (0 until 64).map(j => math.sin(7 * 1.37 + j * 0.61)
       .toFloat))).toDF("qid", "qvec")
-    val probes = Seq[(String, () => DataFrame)](
+    val verbs = new Verbs()
+    val ivf = verbs("ivf read")(_ =>
+      Similarity.readIvfIndex(spark, s"$root/ivf"))
+    val pq = verbs("pq read")(_ =>
+      Similarity.readIvfPqIndex(spark, s"$root/pq"))
+    val walls = Seq[(String, () => DataFrame)](
       "ivf" -> (() => Similarity.probeIvfIndex(ivf, q, "qid", "qvec", 10)),
       "pq" -> (() => Similarity.probeIvfPqIndex(pq, q, "qid", "qvec", 10)))
-    Files.createDirectories(Paths.get(outDir))
-    val report = probes.map { case (name, probe) =>
-      val cold = jobs(probe().collect())
-      val warm = jobs(probe().collect())
-      val walls = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        probe().collect()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val df = probe()
-      df.collect()
-      Files.writeString(Paths.get(outDir, s"${name}_probe_$tag.txt"),
-        df.queryExecution.explainString(FormattedMode))
-      f""""$name": {"cold_jobs": $cold, "warm_jobs": $warm, """ +
-        f""""warm_wall_median_s": ${walls(2)}%.3f}"""
+      .map { case (name, probe) =>
+        verbs(s"$name cold")(_ => probe().collect())
+        verbs(s"$name warm")(_ => probe().collect())
+        val df = probe()
+        df.collect()
+        Files.createDirectories(Paths.get(outDir))
+        Files.writeString(Paths.get(outDir, s"${name}_probe_$tag.txt"),
+          df.queryExecution.explainString(FormattedMode))
+        s"$name warm" -> (1 to 5).map { _ =>
+          val t0 = System.nanoTime()
+          probe().collect()
+          (System.nanoTime() - t0) / 1e9
+        }.sorted.apply(2)
+      }.toMap
+    verbs.rows.toSeq.map { case (name, cols) =>
+      name -> (cols ++ walls.get(name).map("warm_wall_median_s" -> _))
     }
-    Files.writeString(Paths.get(outDir, s"jobs_$tag.json"),
-      report.mkString("{", ", ", "}\n"))
-    println(report.mkString("\n"))
   }
 
-  /** One stream's batches: (batch id, job labels, phase ms). */
-  private type Batches = Seq[(Long, Seq[String], Map[String, Long])]
+  // ===== streams =====
 
-  /** Runs both maintenance streams over two fresh delta files of 80
-    * vectors each against a freshly built root. */
-  private def streamRound(): Seq[(String, Batches)] = {
-    import scala.jdk.CollectionConverters._
-    val root = buildRoot()
+  /** Writes two fresh JSON delta files of 80 vectors under `root/deltas`
+    * (ids from 2000, embeddings `vec` of the id) and returns their
+    * one-file-per-trigger stream. */
+  private def deltaStream(root: String,
+      vec: (Column, Column) => Column): DataFrame = {
     (0 until 2).foreach { f =>
       spark.range(2000 + 80 * f, 2080 + 80 * f)
         .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)),
-            j => cos(col("id") * 0.91 + j * 0.47).cast("float"))
-            .as("embedding"))
+          transform(sequence(lit(0), lit(63)), j => vec(col("id"), j)
+            .cast("float")).as("embedding"))
         .coalesce(1).write.mode("append").json(s"$root/deltas")
     }
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType))))
-    Seq("ivf", "pq").map { kind =>
-      val deltas = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(s"$root/deltas")
-      var query: StreamingQuery = null
-      val jobs = org.apache.spark.TestJobs.perBatch(spark) {
-        query =
-          if (kind == "pq") Streams.pqIndexMaintenanceStream(deltas,
-            "vec_id", "embedding", s"$root/pq", s"$root/chk-pq",
-            compactEvery = 2)
-          else Streams.indexMaintenanceStream(deltas, "vec_id",
-            "embedding", s"$root/ivf", s"$root/chk-ivf", compactEvery = 2)
-        query.awaitTermination()
-      }
-      val byBatch = jobs.map { case ((_, b), sites) => b -> sites }
-      kind -> query.recentProgress.toSeq.filter(_.numInputRows > 0)
-        .map { p =>
-          (p.batchId, byBatch.getOrElse(p.batchId, Nil),
-            p.durationMs.asScala.map { case (k, v) => k -> v.longValue }
-              .toMap)
-        }
+    spark.readStream.schema(StructType(Seq(
+        StructField("vec_id", LongType, nullable = false),
+        StructField("embedding", ArrayType(FloatType)))))
+      .option("maxFilesPerTrigger", "1").json(s"$root/deltas")
+  }
+
+  /** Runs the stream `start` to its end: one row per micro-batch that
+    * ran jobs, named `<name> batch <id>`, with its seconds the batch's
+    * `triggerExecution` and `extra` its own columns from its id,
+    * recording and phase durations. */
+  private def batchRows(name: String, start: => StreamingQuery)(
+      extra: (Long, Recording, Map[String, Long]) => Seq[(String, Any)])
+      : Seq[Row] = {
+    var query: StreamingQuery = null
+    val batches = TestJobs.record(spark) {
+      query = start
+      query.awaitTermination()
+    }.batches
+    val phases = query.recentProgress.toSeq.map(p => p.batchId ->
+      p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)
+      .toMap
+    batches.toSeq.sortBy(_._1._2).map { case ((_, b), r) =>
+      val ms = phases.getOrElse(b, Map.empty[String, Long])
+      verbRow(s"$name batch $b", r,
+        ms.getOrElse("triggerExecution", 0L) / 1e3, Nil, extra(b, r, ms))
     }
   }
 
-  private def streams(outDir: String, tag: String): Unit = {
-    streamRound() // warm-up: JIT and first-plan compilation
-    val measured = streamRound()
-    val phases = Seq("addBatch", "triggerExecution", "queryPlanning",
-      "getBatch", "latestOffset", "walCommit", "commitOffsets")
-    def q(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
-    val json = measured.map { case (kind, batches) =>
-      q(kind) + ": " + batches.map { case (b, sites, ms) =>
-        s"""{"batch": $b, "compacting": ${(b + 1) % 2 == 0}, """ +
-          s""""jobs": ${sites.size}, "job_scopes": """ +
-          sites.map(q).mkString("[", ", ", "]") + """, "duration_ms": """ +
-          phases.filter(ms.contains).map(p => s"${q(p)}: ${ms(p)}")
-            .mkString("{", ", ", "}") + "}"
-      }.mkString("[", ", ", "]")
-    }.mkString("{", ",\n ", "}\n")
-    val rows = for ((kind, batches) <- measured; (b, sites, ms) <- batches)
-      yield s"| $kind | $b | ${if ((b + 1) % 2 == 0) "yes" else "no"} | " +
-        s"${sites.size} | " +
-        phases.map(p => ms.get(p).map(_.toString).getOrElse("")).mkString(" | ") +
-        " |"
-    val md = (s"| stream | batch | compacts | jobs | " +
-        phases.map(_ + " ms").mkString(" | ") + " |") +:
-      ("|" + Seq.fill(4 + phases.size)("---").mkString("|") + "|") +: rows
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"stream_$tag.json"), json)
-    Files.writeString(Paths.get(outDir, s"stream_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
+  private val streamPhases = Seq("addBatch", "triggerExecution",
+    "queryPlanning", "getBatch", "latestOffset", "walCommit", "commitOffsets")
+
+  /** Both maintenance streams against a freshly built root. */
+  private def streamRound(): Seq[Row] = {
+    val root = buildRoot()
+    val deltas = deltaStream(root, (id, j) => cos(id * 0.91 + j * 0.47))
+    Seq("ivf", "pq").flatMap { kind =>
+      batchRows(kind,
+        if (kind == "pq") Streams.pqIndexMaintenanceStream(deltas, "vec_id",
+          "embedding", s"$root/pq", s"$root/chk-pq", compactEvery = 2)
+        else Streams.indexMaintenanceStream(deltas, "vec_id", "embedding",
+          s"$root/ivf", s"$root/chk-ivf", compactEvery = 2)
+      ) { (b, r, ms) =>
+        Seq("compacting" -> ((b + 1) % 2 == 0),
+          "job_scopes" -> r.jobs.map(_.scopes)) ++
+          streamPhases.flatMap(p => ms.get(p).map(p + "_ms" -> _))
+      }
+    }
   }
 
   // ===== terminology =====
@@ -339,49 +423,43 @@ object ProbeJobs {
     dir
   }
 
-  /** One terminology build: per verb (name, jobs, SQL plans, seconds). */
-  private def terminologyRound(): Seq[(String, Int, Seq[String], Double)] = {
+  /** One terminology build. */
+  private def terminologyRound(): Seq[Row] = {
     import graft.fhir.TerminologyResources
     import graft.terminology._
     import spark.implicits._
     val dir = terminologyInputs()
     val db = "probe_terminology"
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (String, Int, Seq[String], Double)]
-    def verb[A](name: String)(body: => A): A = {
-      var result: Option[A] = None
-      val t0 = System.nanoTime()
-      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
-        result = Some(body)
-      }
-      out += ((name, n, plans, (System.nanoTime() - t0) / 1e9))
-      result.get
-    }
-    val vs = verb("import_valuesets") {
+    // a fixpoint round unions the checkpointed closure with its join
+    val verb = new Verbs((name, r) =>
+      if (name != "closure") Nil
+      else Seq("rounds" -> r.plans.count(p => p.contains("Union") &&
+        p.contains("Join") && p.contains("ExistingRDD"))))
+    val vs = verb("import_valuesets") { _ =>
       TerminologyResources.withValueSetsFromDirectory(spark,
         ValueSets.getEmpty(spark), dir.resolve("valuesets").toString)
     }
-    val cms = verb("import_conceptmaps") {
+    val cms = verb("import_conceptmaps") { _ =>
       TerminologyResources.withConceptMapsFromDirectory(spark,
         ConceptMaps.getEmpty(spark), dir.resolve("conceptmaps").toString)
     }
-    val h = verb("closure") {
+    val h = verb("closure") { _ =>
       Hierarchies.getEmpty(spark).withHierarchyElements(
         "urn:graft:hierarchy:probe-dx", "2024",
         spark.read.option("header", "true")
           .csv(dir.resolve("hierarchy/edges.csv").toString)
           .as[HierarchicalElement])
     }
-    verb("write_valuesets") { vs.writeToDatabase(db) }
-    verb("write_conceptmaps") { cms.writeToDatabase(db) }
-    verb("write_hierarchies") { h.writeToDatabase(db) }
-    val (vs2, h2) = verb("read_back") {
+    verb("write_valuesets") { _ => vs.writeToDatabase(db) }
+    verb("write_conceptmaps") { _ => cms.writeToDatabase(db) }
+    verb("write_hierarchies") { _ => h.writeToDatabase(db) }
+    val (vs2, h2) = verb("read_back") { _ =>
       ConceptMaps.getFromDatabase(spark, db)
       (ValueSets.getFromDatabase(spark, db),
         Hierarchies.getFromDatabase(spark, db))
     }
-    verb("broadcast_valuesets") {
+    verb("broadcast_valuesets") { _ =>
       val b = BroadcastableValueSets.newBuilder()
       (0 until 16).foreach(i =>
         b.addReference(s"vs$i", s"http://probe.example/ValueSet/vs$i"))
@@ -390,7 +468,7 @@ object ProbeJobs {
           "urn:graft:hierarchy:probe-dx"))
       b.build(spark, vs2, h2)
     }
-    val cm = verb("chained_conceptmap") {
+    val cm = verb("chained_conceptmap") { _ =>
       TerminologyResources.broadcastConceptMapFromDirectory(spark,
         dir.resolve("conceptmaps").toString,
         "http://probe.example/ConceptMap/rx-a")
@@ -404,31 +482,7 @@ object ProbeJobs {
     require(cm.getTarget("rx", "R000300") == List(
       graft.terminology.CodeValue("ing", "IR000300")), "chain broken")
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    out.toSeq
-  }
-
-  private def terminology(outDir: String, tag: String): Unit = {
-    terminologyRound() // warm-up: JIT and first-plan compilation
-    val measured = terminologyRound()
-    // a fixpoint round unions the checkpointed closure with its join
-    def rounds(plans: Seq[String]): Int = plans.count(p =>
-      p.contains("Union") && p.contains("Join") && p.contains("ExistingRDD"))
-    val json = measured.map { case (name, n, plans, s) =>
-      f""""$name": {"jobs": $n, "sql_executions": ${plans.size}, """ +
-        (if (name == "closure") s""""rounds": ${rounds(plans)}, """
-          else "") + f""""seconds": $s%.3f}"""
-    }.mkString("{", ",\n ", "}\n")
-    val md = Seq("| verb | jobs | SQL executions | rounds | seconds |",
-      "|---|---|---|---|---|") ++ measured.map { case (name, n, plans, s) =>
-      f"| $name | $n | ${plans.size} | " +
-        (if (name == "closure") rounds(plans).toString else "") +
-        f" | $s%.2f |"
-    }
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"terminology_$tag.json"), json)
-    Files.writeString(Paths.get(outDir, s"terminology_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
+    verb.rows.toSeq
   }
 
   // ===== fhir =====
@@ -498,10 +552,9 @@ object ProbeJobs {
       "", "</Bundle>"))
   }
 
-  /** One ingest: per verb (name, jobs, SQL executions, files read, s). */
-  private def fhirRound(): Seq[(String, Int, Int, Long, Double)] = {
+  /** One ingest. */
+  private def fhirRound(): Seq[Row] = {
     import graft.fhir.{Bundles, FhirSchemas, StructureDefinitions}
-    import spark.implicits._
     val dir = Files.createTempDirectory("probe_fhir")
     Files.createDirectories(dir.resolve("json"))
     Files.createDirectories(dir.resolve("xml"))
@@ -512,36 +565,26 @@ object ProbeJobs {
     }
     val db = "probe_fhir"
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (String, Int, Int, Long, Double)]
-    def verb[A](name: String)(body: => A): A = {
-      var result: Option[A] = None
-      val t0 = System.nanoTime()
-      val (n, plans, files) = org.apache.spark.TestJobs.withFiles(spark) {
-        result = Some(body)
-      }
-      out += ((name, n, plans.size, files, (System.nanoTime() - t0) / 1e9))
-      result.get
-    }
+    val verb = new Verbs()
     val jsonDir = dir.resolve("json").toString
     val reg = StructureDefinitions.shipped.registryFor(
       "http://hl7.org/fhir/us/core/StructureDefinition/us-core-patient")
     val xml = Bundles.fromXml(
       Bundles.loadFromDirectory(spark, dir.resolve("xml").toString),
       "bundle_json", FhirSchemas.defaultRegistry, fhirTables)
-    val xmlEntries = verb("xml_ingest") {
+    val xmlEntries = verb("xml_ingest") { _ =>
       xml.select(sum(size(col("bundle.entry")))).head().getLong(0)
     }
-    verb("extract_write") {
+    verb("extract_write") { _ =>
       val json = Bundles.fromJson(Bundles.loadFromDirectory(spark, jsonDir),
         "bundle_json", FhirSchemas.defaultRegistry, fhirTables)
       Bundles.saveAsDatabase(spark, json.unionByName(xml), db, fhirTables)
     }
-    verb("profile_extract") {
+    verb("profile_extract") { _ =>
       Bundles.extractEntry(spark, Bundles.loadFromDirectory(spark, jsonDir),
         "Patient", Nil, reg).write.saveAsTable(s"$db.patient_uscore")
     }
-    val roundTrip = verb("contained_tojson") {
+    val roundTrip = verb("contained_tojson") { _ =>
       val orders = Bundles.extractEntry(spark,
         Bundles.loadFromDirectory(spark, jsonDir), "MedicationRequest",
         Seq("Medication"))
@@ -561,43 +604,19 @@ object ProbeJobs {
       s"unexpected ingest: xml $xmlEntries, tables $counts, " +
         s"round trip $roundTrip")
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    out.toSeq
-  }
-
-  private def fhir(outDir: String, tag: String): Unit = {
-    fhirRound() // warm-up: JIT and first-plan compilation
-    val measured = fhirRound()
-    val json = measured.map { case (name, n, execs, files, s) =>
-      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
-        f""""files_read": $files, "seconds": $s%.3f}"""
-    }.mkString("{", ",\n ", "}\n")
-    val md = Seq("| verb | jobs | SQL executions | files read | seconds |",
-      "|---|---|---|---|---|") ++ measured.map {
-      case (name, n, execs, files, s) =>
-        f"| $name | $n | $execs | $files | $s%.2f |"
-    }
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"fhir_$tag.json"), json)
-    Files.writeString(Paths.get(outDir, s"fhir_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
+    verb.rows.toSeq
   }
 
   // ===== loops =====
 
-  /** One pass over the loops: per verb (name, jobs, SQL executions,
-    * rounds, seconds, rows, checksum). */
-  private def loopsRound()
-      : Seq[(String, Int, Int, Int, Double, Long, java.math.BigDecimal)] = {
+  /** One pass over the loops, each verb ending in one action. */
+  private def loopsRound(): Seq[Row] = {
     import graft.closure.TransitiveClosure
     import graft.ops.{Dedup, Graphs}
     import spark.implicits._
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (String, Int, Int, Int, Double, Long, java.math.BigDecimal)]
-    def verb(name: String)(result: => DataFrame): Unit = out += {
-      val (n, plans, s, rows, sum) = checksummed(result)
-      (name, n, plans.size, loopRounds(plans), s, rows, sum)
-    }
+    val verbs = new Verbs((_, r) => Seq("rounds" -> loopRounds(r.plans)))
+    def verb(name: String)(result: => DataFrame): Unit =
+      verbs(name)(_(result))
     val dag = dagEdges.map { case (a, c) => (a.toLong, c.toLong) }
     val (delta, base) = dag.partition { case (_, c) => c % 10 == 0 }
     verb("closureLong") {
@@ -636,124 +655,56 @@ object ProbeJobs {
     verb("personalizedPageRank") {
       Graphs.personalizedPageRank(spark, sym, Seq(0L, 1005L), iterations = 5)
     }
-    out.toSeq
-  }
-
-  /** Builds `result` and reduces it to one row: the Spark jobs and SQL
-    * execution plans of both, the seconds, the result's row count and
-    * the decimal sum of its rows' `xxhash64` (equal sums: the same
-    * rows). */
-  private def checksummed(result: => DataFrame)
-      : (Int, Seq[String], Double, Long, java.math.BigDecimal) = {
-    var row: (Long, java.math.BigDecimal) = null
-    val t0 = System.nanoTime()
-    val (n, plans) = org.apache.spark.TestJobs.of(spark) {
-      row = rowsAndSum(result)
-    }
-    (n, plans, (System.nanoTime() - t0) / 1e9, row._1, row._2)
-  }
-
-  /** One action over `df`: its row count and the decimal sum of its
-    * rows' `xxhash64`. */
-  private def rowsAndSum(df: DataFrame): (Long, java.math.BigDecimal) = {
-    val row = df.agg(count(lit(1)), coalesce(sum(xxhash64(
-        df.columns.map(col).toSeq: _*).cast("decimal(38,0)")),
-      lit(java.math.BigDecimal.ZERO))).head()
-    (row.getLong(0), row.getDecimal(1))
+    verbs.rows.toSeq
   }
 
   /** The executions whose plan joins over a checkpoint. */
   private[graft] def loopRounds(plans: Seq[String]): Int =
     plans.count(p => p.contains("Join") && p.contains("ExistingRDD"))
 
-  private def loops(outDir: String, tag: String): Unit = {
-    loopsRound() // warm-up: JIT and first-plan compilation
-    val measured = loopsRound()
-    val json = measured.map { case (name, n, execs, rounds, s, rows, sum) =>
-      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
-        f""""rounds": $rounds, "seconds": $s%.3f, "rows": $rows, """ +
-        f""""checksum": "$sum"}"""
-    }.mkString("{", ",\n ", "}\n")
-    val md = Seq("| verb | jobs | SQL executions | rounds | seconds | rows | " +
-        "checksum |",
-      "|---|---|---|---|---|---|---|") ++ measured.map {
-      case (name, n, execs, rounds, s, rows, sum) =>
-        f"| $name | $n | $execs | $rounds | $s%.2f | $rows | $sum |"
-    }
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"loops_$tag.json"), json)
-    Files.writeString(Paths.get(outDir, s"loops_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
-  }
-
   // ===== in-query ANN =====
 
-  /** One pass over the in-query IVF / IVF-PQ calls: per call (name, jobs,
-    * SQL executions, seconds, rows, checksum). */
-  private def annInQueryRound()
-      : Seq[(String, Int, Int, Double, Long, java.math.BigDecimal)] = {
+  /** One pass over the in-query IVF / IVF-PQ calls. */
+  private def annInQueryRound(): Seq[Row] = {
     val q = corpus.where(col("vec_id") < 5)
     val seeds = corpus.where(col("vec_id") < 16)
-    def call(name: String)(result: => DataFrame) = {
-      val (n, plans, s, rows, sum) = checksummed(result)
-      (name, n, plans.size, s, rows, sum)
+    val verbs = new Verbs()
+    def call(name: String)(result: => DataFrame): Unit =
+      verbs(name)(_(result))
+    call("q38 ivfTopKSeeded") {
+      Similarity.ivfTopKSeeded(corpus, "vec_id", "embedding", q, "vec_id",
+        "embedding", seeds, "vec_id", "embedding", k = 10, nprobe = 4)
     }
-    Seq(
-      call("q38 ivfTopKSeeded") {
-        Similarity.ivfTopKSeeded(corpus, "vec_id", "embedding", q, "vec_id",
-          "embedding", seeds, "vec_id", "embedding", k = 10, nprobe = 4)
-      },
-      call("q263 ivfPqTopK") {
-        Similarity.ivfPqTopK(corpus, "vec_id", "embedding", q, "vec_id",
-          "embedding", seeds, "vec_id", "embedding",
-          codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 10,
-          nProbe = 4)
-      },
-      call("q281 ivfPqTopKScaled") {
-        Similarity.ivfPqTopKScaled(corpus, "vec_id", "embedding", q,
-          "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
-          nSub = 8, k = 10, trainer = "hash")
-      },
-      call("q284 ivfPqTopKTwoLevel") {
-        Similarity.ivfPqTopKTwoLevel(corpus, "vec_id", "embedding", q,
-          "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
-          nSub = 8, k = 10)
-      },
-      call("q290 ivfPqTopKScaled + rerank") {
-        Similarity.rerankExactTopK(corpus, "vec_id", "embedding", q,
-          "vec_id", "embedding", Similarity.ivfPqTopKScaled(corpus,
-            "vec_id", "embedding", q, "vec_id", "embedding",
-            codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 30,
-            trainer = "hash"), k = 10)
-      })
-  }
-
-  private def annInQuery(outDir: String, tag: String): Unit = {
-    annInQueryRound() // warm-up: JIT and first-plan compilation
-    val measured = annInQueryRound()
-    val json = measured.map { case (name, n, execs, s, rows, sum) =>
-      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
-        f""""seconds": $s%.3f, "rows": $rows, "checksum": "$sum"}"""
-    }.mkString("{", ",\n ", "}\n")
-    val md = Seq("| call | jobs | SQL executions | seconds | rows | checksum |",
-      "|---|---|---|---|---|---|") ++ measured.map {
-      case (name, n, execs, s, rows, sum) =>
-        f"| $name | $n | $execs | $s%.2f | $rows | $sum |"
+    call("q263 ivfPqTopK") {
+      Similarity.ivfPqTopK(corpus, "vec_id", "embedding", q, "vec_id",
+        "embedding", seeds, "vec_id", "embedding",
+        codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 10,
+        nProbe = 4)
     }
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.json"), json)
-    Files.writeString(Paths.get(outDir, s"ann_inquery_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
+    call("q281 ivfPqTopKScaled") {
+      Similarity.ivfPqTopKScaled(corpus, "vec_id", "embedding", q,
+        "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
+        nSub = 8, k = 10, trainer = "hash")
+    }
+    call("q284 ivfPqTopKTwoLevel") {
+      Similarity.ivfPqTopKTwoLevel(corpus, "vec_id", "embedding", q,
+        "vec_id", "embedding", codebookIds = 16L to 23L, inDims = 64,
+        nSub = 8, k = 10)
+    }
+    call("q290 ivfPqTopKScaled + rerank") {
+      Similarity.rerankExactTopK(corpus, "vec_id", "embedding", q,
+        "vec_id", "embedding", Similarity.ivfPqTopKScaled(corpus,
+          "vec_id", "embedding", q, "vec_id", "embedding",
+          codebookIds = 16L to 23L, inDims = 64, nSub = 8, k = 30,
+          trainer = "hash"), k = 10)
+    }
+    verbs.rows.toSeq
   }
 
   // ===== ANN near-dup =====
 
-  /** One pass over the near-dup entry points: per call (name, jobs, SQL
-    * executions, seconds, rows and checksum of each output frame). */
-  private def annDedupRound(sparse: String, dense: String)
-      : Seq[(String, Int, Int, Double, Seq[(Long, java.math.BigDecimal)])] = {
+  /** One pass over the near-dup entry points. */
+  private def annDedupRound(sparse: String, dense: String): Seq[Row] = {
     val batch = spark.range(0, 40).select((col("id") + 5000L).as("vec_id"),
       transform(sequence(lit(0), lit(63)),
         j => sin(col("id") * 50 * 1.37 + j * 0.61 + 0.02).cast("float"))
@@ -763,138 +714,197 @@ object ProbeJobs {
     val tau = 950000L
     def raw(root: String) = Similarity.readIvfIndex(spark, s"$root/ivf")
     def pq(root: String) = Similarity.readIvfPqIndex(spark, s"$root/pq")
-    def call(name: String)(body: (DataFrame => Unit) => Unit) = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[
-        (Long, java.math.BigDecimal)]
-      val t0 = System.nanoTime()
-      val (n, plans) = org.apache.spark.TestJobs.of(spark) {
-        body(df => out += rowsAndSum(df))
-      }
-      (name, n, plans.size, (System.nanoTime() - t0) / 1e9, out.toSeq)
+    val call = new Verbs()
+    call("annNearDupPairs cap 0") { r =>
+      r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
+        "embedding", tau))
     }
-    Seq(
-      call("annNearDupPairs cap 0") { r =>
-        r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
-          "embedding", tau))
-      },
-      call("annNearDupPairs cap 2") { r =>
-        r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
-          "embedding", tau, maxPairsPerNew = 2))
-      },
-      call("annNearDupDropReport") { r =>
-        r(Similarity.annNearDupDropReport(raw(sparse), batch, "vec_id",
-          "embedding", tau, maxPairsPerNew = 2))
-      },
-      call("annNearDupPairsAndDropReport") { r =>
-        Similarity.annNearDupPairsAndDropReport(raw(sparse), batch,
-          "vec_id", "embedding", tau, maxPairsPerNew = 2,
-          excludeIds = exclude) { (p, d) => r(p); r(d) }
-      },
-      call("annNearDupPairsPqAndDropReport") { r =>
-        Similarity.annNearDupPairsPqAndDropReport(pq(sparse), raw(sparse),
-          batch, "vec_id", "embedding", tau, maxPairsPerNew = 2,
-          excludeIds = exclude) { (p, d) => r(p); r(d) }
-      },
-      call("annNearDupPairsPq cap 0") { r =>
-        r(Similarity.annNearDupPairsPq(pq(sparse), raw(sparse), batch,
-          "vec_id", "embedding", tau, excludeIds = exclude))
-      },
-      call("annNearDupAdcPrefilterReport") { r =>
-        r(Similarity.annNearDupAdcPrefilterReport(pq(sparse), raw(sparse),
-          batch, "vec_id", "embedding", tau))
-      },
-      call("annNearDupPairsAuto (routes raw)") { r =>
-        r(Similarity.annNearDupPairsAuto(spark, s"$sparse/ivf",
-          s"$sparse/pq", batch, "vec_id", "embedding", tau,
-          maxPairsPerNew = 2))
-      },
-      call("annNearDupPairsAuto (routes PQ)") { r =>
-        r(Similarity.annNearDupPairsAuto(spark, s"$dense/ivf",
-          s"$dense/pq", batch, "vec_id", "embedding", tau,
-          maxPairsPerNew = 2))
-      })
+    call("annNearDupPairs cap 2") { r =>
+      r(Similarity.annNearDupPairs(raw(sparse), batch, "vec_id",
+        "embedding", tau, maxPairsPerNew = 2))
+    }
+    call("annNearDupDropReport") { r =>
+      r(Similarity.annNearDupDropReport(raw(sparse), batch, "vec_id",
+        "embedding", tau, maxPairsPerNew = 2))
+    }
+    call("annNearDupPairsAndDropReport") { r =>
+      Similarity.annNearDupPairsAndDropReport(raw(sparse), batch,
+        "vec_id", "embedding", tau, maxPairsPerNew = 2,
+        excludeIds = exclude) { (p, d) => r(p); r(d) }
+    }
+    call("annNearDupPairsPqAndDropReport") { r =>
+      Similarity.annNearDupPairsPqAndDropReport(pq(sparse), raw(sparse),
+        batch, "vec_id", "embedding", tau, maxPairsPerNew = 2,
+        excludeIds = exclude) { (p, d) => r(p); r(d) }
+    }
+    call("annNearDupPairsPq cap 0") { r =>
+      r(Similarity.annNearDupPairsPq(pq(sparse), raw(sparse), batch,
+        "vec_id", "embedding", tau, excludeIds = exclude))
+    }
+    call("annNearDupAdcPrefilterReport") { r =>
+      r(Similarity.annNearDupAdcPrefilterReport(pq(sparse), raw(sparse),
+        batch, "vec_id", "embedding", tau))
+    }
+    call("annNearDupPairsAuto (routes raw)") { r =>
+      r(Similarity.annNearDupPairsAuto(spark, s"$sparse/ivf",
+        s"$sparse/pq", batch, "vec_id", "embedding", tau,
+        maxPairsPerNew = 2))
+    }
+    call("annNearDupPairsAuto (routes PQ)") { r =>
+      r(Similarity.annNearDupPairsAuto(spark, s"$dense/ivf",
+        s"$dense/pq", batch, "vec_id", "embedding", tau,
+        maxPairsPerNew = 2))
+    }
+    call.rows.toSeq
   }
 
   /** The dedup streams (single-index, dual-index on both roots) and the
-    * probe stream over two fresh delta files of 80 vectors each: per
-    * stream, per batch its jobs and whether one of them scans the
-    * quantizer tables. */
-  private def annStreamRound(): Seq[(String, Seq[(Long, Int, Boolean)])] = {
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType))))
-    val streams = Seq[(String, Int, (DataFrame, String) => StreamingQuery)](
-      ("dedup single", 16, (in, root) => Streams.incrementalAnnDedupStream(
-        in, "vec_id", "embedding", s"$root/ivf", s"$root/pairs",
-        s"$root/chk", 950000L, maxPairsPerNew = 2,
-        dropsPath = s"$root/drops")),
-      ("dedup dual (routes raw)", 16, (in, root) =>
-        Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
-          s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
-          maxPairsPerNew = 2, dropsPath = s"$root/drops",
-          pqIndexPath = s"$root/pq")),
-      ("dedup dual (routes PQ)", 4, (in, root) =>
-        Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
-          s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
-          maxPairsPerNew = 2, dropsPath = s"$root/drops",
-          pqIndexPath = s"$root/pq")),
-      ("probe", 16, (in, root) => Streams.annProbeStream(in, "vec_id",
-        "embedding", s"$root/ivf", s"$root/hits", s"$root/chk", k = 10)))
-    streams.map { case (name, cells, start) =>
+    * probe stream, each against a fresh root: per batch whether one of
+    * its SQL executions scans the quantizer tables. */
+  private def annStreamRound(): Seq[Row] = Seq[(String, Int,
+      (DataFrame, String) => StreamingQuery)](
+    ("dedup single", 16, (in, root) => Streams.incrementalAnnDedupStream(
+      in, "vec_id", "embedding", s"$root/ivf", s"$root/pairs",
+      s"$root/chk", 950000L, maxPairsPerNew = 2,
+      dropsPath = s"$root/drops")),
+    ("dedup dual (routes raw)", 16, (in, root) =>
+      Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
+        s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
+        maxPairsPerNew = 2, dropsPath = s"$root/drops",
+        pqIndexPath = s"$root/pq")),
+    ("dedup dual (routes PQ)", 4, (in, root) =>
+      Streams.incrementalAnnDedupStream(in, "vec_id", "embedding",
+        s"$root/ivf", s"$root/pairs", s"$root/chk", 950000L,
+        maxPairsPerNew = 2, dropsPath = s"$root/drops",
+        pqIndexPath = s"$root/pq")),
+    ("probe", 16, (in, root) => Streams.annProbeStream(in, "vec_id",
+      "embedding", s"$root/ivf", s"$root/hits", s"$root/chk", k = 10)))
+    .flatMap { case (name, cells, start) =>
       val root = buildRoot(cells)
-      (0 until 2).foreach { f =>
-        spark.range(2000 + 80 * f, 2080 + 80 * f)
-          .select(col("id").as("vec_id"),
-            transform(sequence(lit(0), lit(63)),
-              j => sin((col("id") - 2000) * 1.37 + j * 0.61 + 0.02)
-                .cast("float")).as("embedding"))
-          .coalesce(1).write.mode("append").json(s"$root/deltas")
+      val in = deltaStream(root,
+        (id, j) => sin((id - 2000) * 1.37 + j * 0.61 + 0.02))
+      batchRows(s"stream $name", start(in, root)) { (_, r, _) =>
+        Seq("scans_quantizer_tables" -> r.plans.exists(p =>
+          p.contains("/centroids") || p.contains("/codebook")))
       }
-      val in = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(s"$root/deltas")
-      val jobs = org.apache.spark.TestJobs.perBatchWithPlans(spark) {
-        start(in, root).awaitTermination()
-      }
-      name -> jobs.toSeq.map { case ((_, b), js) =>
-        (b, js.size, js.exists { case (_, plan) =>
-          plan.contains("/centroids") || plan.contains("/codebook") })
-      }.sortBy(_._1)
     }
+
+  // ===== one query in a fresh JVM =====
+
+  /** `reps` timed counts of the `SparkEntry` query `name` at `dir` after a
+    * warm-up at sf0.001 (codegen and parquet footers, as Bench warms):
+    * per rep its row, then the last rep's stages, heaviest first; the
+    * formatted plan goes to `query_<name>_<tag>_plan.txt`. */
+  private def query(outDir: String, tag: String, name: String, dir: String,
+      reps: Int): Unit = {
+    val fn = graft.SparkEntry.queries(name)
+    try fn(spark, "/root/testdata/sf0.001").count()
+    catch { case _: Throwable => () }
+    val runs = (1 to reps).map { i =>
+      var n = 0L
+      val t0 = System.nanoTime()
+      val r = TestJobs.record(spark) { n = fn(spark, dir).count() }
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"PROBE $name rep $i: $s%.3f s rows=$n")
+      (verbRow(s"rep $i", r, s, Nil, Seq("rows" -> n,
+        "stages" -> r.stages.size)), r.stages)
+    }
+    val stages = runs.last._2.sortBy(-_.runMs).map { s =>
+      s"stage ${s.id}" -> Seq("wall_ms" -> s.wallMs, "run_ms" -> s.runMs,
+        "cpu_ms" -> s.cpuMs, "shuffle_read" -> s.shuffleRead,
+        "shuffle_write" -> s.shuffleWrite, "input" -> s.input,
+        "spill" -> s.spill, "tasks" -> s.tasks, "call_site" -> s.name.take(90))
+    }
+    report(outDir, s"query_$name", tag, runs.map(_._1), stages)
+    Files.writeString(Paths.get(outDir, s"query_${name}_${tag}_plan.txt"),
+      fn(spark, dir).queryExecution.explainString(FormattedMode))
   }
 
-  private def annDedup(outDir: String, tag: String): Unit = {
-    val (sparse, dense) = (buildRoot(16), buildRoot(4))
-    annDedupRound(sparse, dense) // warm-up: JIT and first-plan compilation
-    val measured = annDedupRound(sparse, dense)
-    annStreamRound()
-    val streams = annStreamRound()
-    val json = measured.map { case (name, n, execs, s, outs) =>
-      f""""$name": {"jobs": $n, "sql_executions": $execs, """ +
-        f""""seconds": $s%.3f, "rows": """ +
-        outs.map(_._1).mkString("[", ", ", "]") + """, "checksums": """ +
-        outs.map(o => "\"" + o._2 + "\"").mkString("[", ", ", "]") + "}"
-    } ++ streams.map { case (name, batches) =>
-      f""""stream $name": """ + batches.map { case (b, n, scans) =>
-        s"""{"batch": $b, "jobs": $n, "scans_quantizer_tables": $scans}"""
-      }.mkString("[", ", ", "]")
+  // ===== ADC-prefiltered near-dup routing =====
+
+  /** The clustered, PQ-compressible corpus the ADC prefilter (and IVF-PQ
+    * itself) exists for. Each vector's 8-dim subspace blocks are drawn
+    * from a shared 64-pattern pool keyed by the row's cluster (id mod
+    * `nClusters`), so a 256-sample codebook reconstructs almost exactly
+    * while distinct clusters collide on a block with probability 1/64:
+    * same-cluster cosine ≈ 0.995, cross-cluster ≤ 0.58 (measured max).
+    * At τ = 0.8 a probed cell's candidates are mostly refutable — the
+    * real dedup shape: few true duplicates among many coarse-cell
+    * neighbours. */
+  private def synthClustered(from: Long, until: Long,
+      nClusters: Long): DataFrame =
+    spark.range(from, until).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)), j => {
+        val cl = pmod(col("id"), lit(nClusters))
+        // a nonlinear pool hash of (cluster, block): a linear form makes
+        // the 8 pool choices of two clusters shift together, collapsing
+        // thousands of clusters into ~64 twins
+        val hx = sin((cl * 8 + floor(j / 8).cast("long")) * 12.9898) *
+          43758.5453
+        val pool = floor((hx - floor(hx)) * 64).cast("long")
+        // fract-sin pattern values: near-iid uniform in [-1, 1], so
+        // blocks of different pools are near-orthogonal
+        val base = sin(pool * 378.233 + j * 12.9898) * 43758.5453
+        ((base - floor(base)) * 2 - 1 +
+          sin(col("id") * 97.17 + j * 31.7) * 0.05).cast("float")
+      }).as("embedding"))
+
+  /** Per corpus size `n` (√n cells, one cluster per 16 rows), both roots
+    * built afresh, then the raw capped dedup, the ADC-prefiltered one and
+    * the prefilter report for the next 10k ids (which have same-cluster
+    * near-duplicates in the corpus), each timed twice with the minimum
+    * kept (a real cost is slow both times, a host stall is not). */
+  private def dedupPrefilter(sizes: Seq[Long]): Seq[Row] = sizes.map { n =>
+    def timed[T](body: => T): (Double, T) = {
+      val t0 = System.nanoTime()
+      val r = body
+      ((System.nanoTime() - t0) / 1e9, r)
     }
-    val md = Seq("| call | jobs | SQL executions | seconds | rows | " +
-        "checksums |", "|---|---|---|---|---|---|") ++ measured.map {
-      case (name, n, execs, s, outs) =>
-        f"| $name | $n | $execs | $s%.2f | " +
-          outs.map(_._1).mkString(" / ") + " | " +
-          outs.map(_._2).mkString(" / ") + " |"
-    } ++ Seq("", "| stream | batch | jobs | scans centroids/codebook |",
-      "|---|---|---|---|") ++ streams.flatMap { case (name, batches) =>
-      batches.map { case (b, n, scans) =>
-        s"| $name | $b | $n | ${if (scans) "yes" else "no"} |"
-      }
+    def timeMin[T](body: => T): (Double, T) = {
+      val (t1, r) = timed(body)
+      (math.min(t1, timed(body)._1), r)
     }
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(outDir, s"ann_dedup_$tag.json"),
-      json.mkString("{", ",\n ", "}\n"))
-    Files.writeString(Paths.get(outDir, s"ann_dedup_$tag.md"),
-      md.mkString("", "\n", "\n"))
-    println(md.mkString("\n"))
+    val cells = math.ceil(math.sqrt(n.toDouble)).toInt
+    val nClusters = math.max(64L, n / 16L)
+    val root = Files.createTempDirectory("probe_prefilter").toString
+    val corpus = synthClustered(0L, n, nClusters)
+    val seeds = Similarity.hashSeeds(corpus, "vec_id", "embedding", cells)
+    val (tBuildRaw, _) = timed(Similarity.writeIvfIndex(
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", seeds, "sid",
+        "svec", twoLevelThreshold = 1), s"$root/raw"))
+    val (tBuildPq, _) = timed {
+      val pq = Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
+        seeds, "sid", "svec", codebookIds = 0L until 256L, inDims = 64,
+        nSub = 8, twoLevelThreshold = 1)
+      Similarity.writeIvfPqIndex(pq, s"$root/pq")
+      graft.Lineage.retireDependents(pq.codes)
+    }
+    val raw = Similarity.readIvfIndex(spark, s"$root/raw")
+    val pq = Similarity.readIvfPqIndex(spark, s"$root/pq")
+    val batch = synthClustered(n, n + 10000L, nClusters)
+    val (tRaw, nRaw) = timeMin(Similarity.annNearDupPairs(raw, batch,
+      "vec_id", "embedding", thresholdPpm = 800000L, nprobe = 4,
+      maxPairsPerNew = 8).count())
+    val (tPre, nPre) = timeMin(Similarity.annNearDupPairsPq(pq, raw, batch,
+      "vec_id", "embedding", thresholdPpm = 800000L, nprobe = 4,
+      maxPairsPerNew = 8).count())
+    val (tReport, rep) = timeMin(Similarity.annNearDupAdcPrefilterReport(
+      pq, raw, batch, "vec_id", "embedding", thresholdPpm = 800000L,
+      nprobe = 4).collect().head)
+    require(nRaw == nPre,
+      s"the prefilter lost pairs at n=$n: raw $nRaw, prefiltered $nPre")
+    val routesPq = Similarity.annNearDupRoutesToPq(spark, s"$root/raw")
+    s"n=$n" -> Seq("cells" -> cells, "build_raw_sec" -> tBuildRaw,
+      "build_pq_sec" -> tBuildPq, "dedup_raw_capped_sec" -> tRaw,
+      "dedup_adc_prefiltered_sec" -> tPre, "pairs_raw" -> nRaw,
+      "pairs_prefiltered" -> nPre,
+      "postings_per_cell" -> n.toDouble / cells,
+      "route_threshold" -> Similarity.adcPrefilterRouteMinPostingsPerCell,
+      "auto_routes_to_pq" -> routesPq,
+      "route_agrees_with_walls" -> (routesPq == (tPre < tRaw)),
+      "prefilter_report_sec" -> tReport,
+      "n_candidates" -> rep.getLong(0), "n_prefilter_kept" -> rep.getLong(1),
+      "n_pairs" -> rep.getLong(2),
+      "pruned_candidate_share_ppm" -> rep.getLong(3))
   }
 }
