@@ -326,8 +326,8 @@ object SparkEntry {
           col("rk").cast("long").as("rk"))
     }),
 
-    // G1: distributed transitive closure (prefix-doubling fixpoint join);
-    // shuffle width sized to the iteration data, not session parallelism
+    // G1: transitive closure (an executor-side ancestor walk over a
+    // broadcast edge table; 8 slices of code ids)
     "q16_closure" -> ((s, dir) => {
       val edges = t(s, dir, "customer")
         .where(col("c_custkey") >= 1)
@@ -5304,7 +5304,7 @@ object SparkEntry {
     // Hierarchical subtree rollup: total account balance under every
     // node of the deep customer tree (self + all transitive
     // descendants) — the org/BOM/category report a one-level groupBy
-    // can't answer; closure in O(log depth) rounds, DECIMAL-exact sums
+    // can't answer; closure by the ancestor walk, DECIMAL-exact sums
     "q179_subtree_rollup" -> ((s, dir) => {
       val cust = t(s, dir, "customer")
       val edges = cust.where(col("c_custkey") >= 1)

@@ -1,41 +1,39 @@
 package graft.closure
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  Generator, JoinedRow, UnaryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.StructType
 import graft.Lineage._
+import graft.distinctAtMost
 import org.apache.spark.sql.functions._
 
-/** Distributed transitive closure over a parent-child edge list.
+/** Transitive closure over a parent-child edge list.
   *
-  * The reference computes ancestor expansion entirely on the driver — it
-  * collects every edge, walks an in-memory graph per node, and re-parallelizes
-  * the result in 100k-row slices (Hierarchies.expandElements,
-  * /root/reference/bunsen-spark/.../codes/Hierarchies.java:314-391). That is
-  * driver-memory-bound and cannot scale past a few million edges.
-  *
-  * This implementation keeps the computation on the cluster as an iterative
-  * self-join by **prefix doubling**: after round i, `closure` holds every
-  * path of length <= 2^i, so the round count is O(log d) for depth d. Each
-  * round joins closure ⋈ closure — whose build side keyed on `ancestor` is
-  * skewed at hub nodes (a root is the ancestor of every descendant), which
-  * AQE skew-splitting absorbs. It is cycle-safe (`distinct` + self-loop
-  * drop reach a fixpoint). The rounds run on the library's one round
-  * driver, [[graft.Lineage.fixpoint]]: each round is checkpointed, its
-  * count — the fixpoint test — is its one measuring job, and the
-  * superseded round is retired. The full closure and the incremental
-  * [[addEdges]] share one round ([[fixpoint]]).
-  *
-  * The loop runs on long ids. The (system, value)-keyed [[closure]]
-  * encodes its codes to dense dictionary ids first — every round then
-  * shuffles 8-byte keys instead of system+code strings — and decodes the
-  * pairs with two joins at the end. The ids come from one checkpointed
-  * frame of the distinct codes, so two codes can never share an id and
-  * no collision check or fallback is needed.
-  *
-  * At 100 TB scale: equi-joins shuffle by key, `distinct` partially
-  * aggregates map-side, AQE rebalances; the driver sees counts only (per
-  * round, and the dictionary's per-partition code counts).
+  * The reference walks each node's ancestors on the driver over all the
+  * collected edges (Hierarchies.expandElements, bunsen-spark's
+  * codes/Hierarchies.java:314-391). Here
+  * that walk runs on the executors under a size gate: a bounded collect of
+  * the distinct edges, a broadcast child → parents table over dense code
+  * ids, and the lazy generator `ancestors_of` ([[AncestorsOf]]) over them.
+  * Above [[WalkMaxEdges]] the closure is a self-join by **prefix doubling**
+  * (paths <= 2^i after round i: O(log d) rounds for depth d; AQE skew
+  * splits the hub keys of the `ancestor`-keyed build side) on
+  * [[graft.Lineage.fixpoint]], shared with the incremental [[addEdges]].
+  * Both return paths >= 1 (no self-pairs), terminate on cycles, drop edges
+  * with a null endpoint and collapse duplicates; `maxIterations` bounds
+  * only the loop.
   */
 object TransitiveClosure {
+
+  /** The walk's gate in distinct edges (see the README for its heap). */
+  private[graft] val WalkMaxEdges = 1000000
+
+  /** The gate that sends every graph to the loop. */
+  private[graft] val LoopOnly = -1
 
   private val codeColumns = Seq("ancestorSystem", "ancestorValue",
     "descendantSystem", "descendantValue")
@@ -43,20 +41,23 @@ object TransitiveClosure {
   /** Closure over (ancestorSystem, ancestorValue, descendantSystem,
     * descendantValue) edges; returns every transitive pair, paths >= 1, in
     * those four columns. Edges with a null system or value are dropped.
-    * The codes are encoded to dense ids ([[dictionary]]), closed by
-    * [[closureLong]] and decoded. The loop width is `shufflePartitions` or,
-    * by default, scaled to the code count: max(8, min(session width,
-    * codes / 50k)) — a 30k-code hierarchy does not need the session's full
-    * width per round (narrower shuffles cut per-round overhead), a
-    * 100M-code one gets the session width back. The dictionary's
-    * checkpoint belongs to the result ([[graft.Lineage.retireDependents]]). */
-  def closure(
-      spark: SparkSession,
-      edges: org.apache.spark.sql.Dataset[_],
-      maxIterations: Int = 25,
-      shufflePartitions: Option[Int] = None): DataFrame = {
+    * Above the gate the codes are encoded ([[dictionary]]), closed by the
+    * loop at width `shufflePartitions` or max(8, min(session width, codes /
+    * 50k)) and decoded; the dictionary's checkpoint belongs to the result. */
+  def closure(spark: SparkSession, edges: org.apache.spark.sql.Dataset[_],
+      maxIterations: Int = 25, shufflePartitions: Option[Int] = None)
+      : DataFrame = closureWith(spark, edges, maxIterations, shufflePartitions)
+
+  /** [[closure]] under the gate `walkMaxEdges`. */
+  private[graft] def closureWith(spark: SparkSession,
+      edges: org.apache.spark.sql.Dataset[_], maxIterations: Int = 25,
+      shufflePartitions: Option[Int] = None,
+      walkMaxEdges: Int = WalkMaxEdges): DataFrame = {
     val clean = edges.toDF().select(codeColumns.map(col): _*)
       .where(codeColumns.map(c => col(c).isNotNull).reduce(_ && _))
+    val walked =
+      walk(spark, clean, codeColumns, true, shufflePartitions, walkMaxEdges)
+    if (walked.isDefined) return walked.get
     val (dict, codes) = dictionary(clean)
     def role(name: String, id: String): DataFrame = dict.select(
       col("system").as(s"${name}System"), col("value").as(s"${name}Value"),
@@ -68,7 +69,7 @@ object TransitiveClosure {
       .select(col("parent"), col("child"))
     val width = shufflePartitions.getOrElse(math.max(8L, math.min(
       graft.ConfScope.sessionShuffleWidth(spark).toLong, codes / 50000L)).toInt)
-    closureLong(spark, ids, maxIterations, Some(width))
+    closureLongWith(spark, ids, maxIterations, Some(width), LoopOnly)
       .join(role("ancestor", "ancestor"), Seq("ancestor"))
       .join(role("descendant", "descendant"), Seq("descendant"))
       .select(codeColumns.map(col): _*)
@@ -101,21 +102,65 @@ object TransitiveClosure {
 
   /** Closure over arbitrary (parent, child) long-keyed edges — used by the
     * relational-analog correctness queries. Output columns (ancestor,
-    * descendant). The loop width is `shufflePartitions` or, by default,
-    * sized to the edge count ([[graft.ConfScope.loopEntry]]). */
-  def closureLong(
-      spark: SparkSession,
-      edges: DataFrame, // columns: parent, child
-      maxIterations: Int = 25,
-      shufflePartitions: Option[Int] = None): DataFrame =
-    graft.ConfScope.loopEntry(spark, edges, shufflePartitions) { entry =>
-      val start = entry.frame
-        .select(col("parent").as("ancestor"), col("child").as("descendant"))
-        .where(col("parent").isNotNull && col("child").isNotNull)
-        .distinct()
-        .truncateLineage(eager = false)
-      fixpoint(start, start.count(), maxIterations)
+    * descendant). Above the gate the loop width is `shufflePartitions` or,
+    * by default, sized to the edge count ([[graft.ConfScope.loopEntry]]). */
+  def closureLong(spark: SparkSession, edges: DataFrame, // parent, child
+      maxIterations: Int = 25, shufflePartitions: Option[Int] = None)
+      : DataFrame =
+    closureLongWith(spark, edges, maxIterations, shufflePartitions)
+
+  /** [[closureLong]] under the gate `walkMaxEdges`. */
+  private[graft] def closureLongWith(spark: SparkSession, edges: DataFrame,
+      maxIterations: Int = 25, shufflePartitions: Option[Int] = None,
+      walkMaxEdges: Int = WalkMaxEdges): DataFrame = {
+    val clean = (e: DataFrame) => e.select(col("parent").as("ancestor"),
+        col("child").as("descendant"))
+      .where(col("ancestor").isNotNull && col("descendant").isNotNull)
+    walk(spark, clean(edges), Seq("ancestor", "descendant"), false,
+        shufflePartitions, walkMaxEdges)
+      .getOrElse(graft.ConfScope.loopEntry(spark, edges, shufflePartitions) {
+        entry =>
+          val start = clean(entry.frame).distinct()
+            .truncateLineage(eager = false)
+          fixpoint(start, start.count(), maxIterations)
+      })
+  }
+
+  /** The walk over `clean` (k parent key columns, then k child key columns
+    * of the same types, no nulls) as columns `out`, or None above the gate;
+    * `width` slices of code ids (default: one per 25k edges, at most the
+    * session width). */
+  private def walk(spark: SparkSession, clean: DataFrame, out: Seq[String],
+      nullable: Boolean, width: Option[Int],
+      walkMaxEdges: Int): Option[DataFrame] = {
+    val k = out.length / 2
+    val fields = clean.schema.fields.toSeq
+    if (walkMaxEdges < 0 || fields.take(k).map(_.dataType) !=
+        fields.drop(k).map(_.dataType)) return None
+    val edges = distinctAtMost(clean, walkMaxEdges).getOrElse(return None)
+    val ids = scala.collection.mutable.HashMap.empty[UnsafeRow, Int]
+    val Seq(parent, child) = Seq(0, k).map { from =>
+      val key = UnsafeProjection.create(fields.slice(from, from + k)
+        .zipWithIndex.map(f => BoundReference(from + f._2, f._1.dataType, false)))
+      edges.map(e => ids.getOrElseUpdate(key(e).copy(), ids.size))
     }
+    val offsets = new Array[Int](ids.size + 1)
+    child.foreach(c => offsets(c + 1) += 1)
+    (1 to ids.size).foreach(c => offsets(c) += offsets(c - 1))
+    val (parents, fill) = (new Array[Int](edges.length), offsets.clone())
+    edges.indices.foreach { e =>
+      parents(fill(child(e))) = parent(e); fill(child(e)) += 1
+    }
+    val keys = new Array[Array[Byte]](ids.size)
+    ids.foreach { case (r, id) => keys(id) = r.getBytes }
+    val slices = width.getOrElse(graft.ConfScope.autoLoopPartitions(
+      edges.length, graft.ConfScope.sessionShuffleWidth(spark), 25000L))
+    Some(spark.range(0, ids.size, 1, slices).select(GraftShim.column(
+      AncestorsOf(GraftShim.expression(col("id")),
+        spark.sparkContext.broadcast((offsets, parents, keys)),
+        StructType(out.zip(fields).map { case (n, f) =>
+          f.copy(name = n, nullable = nullable) })))))
+  }
 
   /** The pairs (a, c) with (a, b) in `l` and (b, c) in `r`. */
   private def compose(l: DataFrame, r: DataFrame): DataFrame =
@@ -161,37 +206,71 @@ object TransitiveClosure {
       maxIterations: Int = 25,
       shufflePartitions: Option[Int] = None): DataFrame =
     graft.ConfScope.withIsolatedSession(spark) { (iso, rebind) =>
-      addEdgesImpl(iso, rebind(closure), rebind(delta), maxIterations,
-        shufflePartitions)
+      val c = rebind(closure).select(col("ancestor"), col("descendant"))
+        .distinct().truncateLineage(eager = false)
+      // the delta feeds FOUR plan branches (d, cd, dc, m's union) — the
+      // checkpoint also stops 4x re-execution of the caller's delta plan
+      val d = rebind(delta)
+        .select(col("parent").as("ancestor"), col("child").as("descendant"))
+        .where(col("parent").isNotNull && col("child").isNotNull)
+        .distinct().truncateLineage(eager = false)
+      // seed joins at the full closure's width, prefix doubling at the
+      // seed's; `shufflePartitions` pins both
+      val closed = graft.ConfScope.withTwoWidths(iso, shufflePartitions,
+          math.max(c.count(), d.count())) {
+        val cd = compose(c, d)
+        Seq(cd, compose(d, c), compose(cd, c)).foldLeft(d)(_ unionAll _)
+          .where(col("ancestor") =!= col("descendant"))
+          .distinct()
+      } { (m, seedCount) =>
+        graft.Lineage.retire(d)
+        fixpoint(m, seedCount, maxIterations)
+      }
+      c.unionAll(closed).distinct()
     }
+}
 
-  /** Seed joins at the full closure's width, prefix doubling at the
-    * seed's ([[graft.ConfScope.withTwoWidths]]); an explicit `fixedWidth`
-    * pins both. */
-  private def addEdgesImpl(
-      iso: SparkSession,
-      closure: DataFrame,
-      delta: DataFrame,
-      maxIterations: Int,
-      fixedWidth: Option[Int]): DataFrame = {
-    val c = closure.select(col("ancestor"), col("descendant"))
-      .distinct().truncateLineage(eager = false)
-    // the delta feeds FOUR plan branches (d, cd, dc, m's union) — the
-    // checkpoint also stops 4x re-execution of the caller's delta plan
-    val d = delta
-      .select(col("parent").as("ancestor"), col("child").as("descendant"))
-      .where(col("parent").isNotNull && col("child").isNotNull)
-      .distinct().truncateLineage(eager = false)
-    val closed = graft.ConfScope.withTwoWidths(iso, fixedWidth,
-        math.max(c.count(), d.count())) {
-      val cd = compose(c, d)
-      Seq(cd, compose(d, c), compose(cd, c)).foldLeft(d)(_ unionAll _)
-        .where(col("ancestor") =!= col("descendant"))
-        .distinct()
-    } { (m, seedCount) =>
-      graft.Lineage.retire(d)
-      fixpoint(m, seedCount, maxIterations)
+/** `ancestors_of(id)`: a (ancestor key, descendant key) row per code
+  * reachable from `id` over the broadcast child → parents table
+  * (`parents(offsets(c) until offsets(c + 1))`, keys as UnsafeRow bytes),
+  * `id` excluded: a breadth-first walk with a per-call visited stamp, so
+  * cycles terminate. The buffers are per task. */
+private[closure] case class AncestorsOf(child: Expression,
+    table: Broadcast[(Array[Int], Array[Int], Array[Array[Byte]])],
+    elementSchema: StructType)
+    extends UnaryExpression with Generator with CodegenFallback {
+  override def prettyName: String = "ancestors_of"
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  @transient private lazy val t = table.value
+  @transient private lazy val seen = new Array[Int](t._3.length)
+  @transient private lazy val found = new Array[Int](t._3.length)
+  @transient private lazy val rows = (new UnsafeRow(elementSchema.length / 2),
+    new UnsafeRow(elementSchema.length / 2), new JoinedRow)
+  @transient private var epoch = 0
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val ((offsets, parents, keys), (ancestor, descendant, joined)) = (t, rows)
+    val d = child.eval(input).asInstanceOf[Long].toInt
+    epoch += 1
+    seen(d) = epoch
+    var (n, next, c) = (0, 0, d)
+    while (c >= 0) {
+      var j = offsets(c)
+      while (j < offsets(c + 1)) {
+        val p = parents(j)
+        if (seen(p) != epoch) { seen(p) = epoch; found(n) = p; n += 1 }
+        j += 1
+      }
+      c = if (next < n) found(next) else -1
+      next += 1
     }
-    c.unionAll(closed).distinct()
+    descendant.pointTo(keys(d), keys(d).length)
+    Iterator.range(0, n).map { i =>
+      ancestor.pointTo(keys(found(i)), keys(found(i)).length)
+      joined(ancestor, descendant)
+    }
   }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): AncestorsOf = copy(child = newChild)
 }

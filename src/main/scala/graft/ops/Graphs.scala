@@ -452,9 +452,10 @@ object Graphs {
     * every manager"), which a plain one-level groupBy(parent) cannot
     * answer.
     *
-    * Plan: the distributed transitive closure (prefix-doubled, O(log
-    * depth) rounds — closure/TransitiveClosure.scala) expands each node
-    * to its descendant set, self-pairs are unioned in, and one keyed
+    * Plan: the transitive closure (closure/TransitiveClosure.scala: an
+    * executor-side ancestor walk over one bounded edge collect, prefix
+    * doubling in O(log depth) rounds above its edge gate) expands each
+    * node to its descendant set, self-pairs are unioned in, and one keyed
     * aggregation sums the measure per ancestor — no per-level driver
     * loop over the tree, and the measure is DECIMAL-summed so the
     * rolled-up totals are engine-exact. Nodes with no value rows

@@ -1978,13 +1978,12 @@ object Similarity {
     cellDirs(spark, dir).iterator.flatMap(parquetDataFiles(spark, _))
       .nextOption().map(footerSchema(spark, _).add("cell", IntegerType))
 
-  /** The parquet files directly under `dir` (a tombstone set, a quantizer
-    * table), read under the [[footerSchema]] of the first; None when it
-    * holds none. */
+  /** The parquet `files` (a tombstone set, a quantizer table), read
+    * under the [[footerSchema]] of the first; None when there are none. */
   private def readStated(spark: SparkSession,
-      dir: String): Option[DataFrame] =
-    parquetDataFiles(spark, new Path(dir)).headOption.map(f =>
-      spark.read.schema(footerSchema(spark, f)).parquet(dir))
+      files: Seq[Path]): Option[DataFrame] =
+    files.headOption.map(f => spark.read.schema(footerSchema(spark, f))
+      .parquet(files.map(_.toString): _*))
 
   /** The Spark schema of the parquet data file `f`, read from its footer
     * on the driver and converted as a schema-inferring read converts it:
@@ -2356,7 +2355,7 @@ object Similarity {
   private def readTombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
     recoverTombstones(spark, path)
-    readStated(spark, path + "/tombstones")
+    readStated(spark, parquetDataFiles(spark, new Path(path + "/tombstones")))
   }
 
   /** Apply the pending tombstones (if any) to a postings/codes frame. */
@@ -2498,7 +2497,8 @@ object Similarity {
   private def readTables(spark: SparkSession, kind: IndexKind[_],
       path: String): Seq[DataFrame] = kind.tableDirs.map { t =>
     val dir = s"$path/${t._1}"
-    readStated(spark, dir).getOrElse(spark.read.parquet(dir))
+    readStated(spark, parquetDataFiles(spark, new Path(dir)))
+      .getOrElse(spark.read.parquet(dir))
   }
 
   /** [[readIndex]]'s data rows: recovered, tombstoned, typed-empty if
@@ -2744,13 +2744,14 @@ object Similarity {
     * engine-replayable. Bounded O(c) partial buffers, map-side
     * combined; account for what the cap drops with
     * [[annNearDupDropReport]] (the q279 no-silent-caps pattern). */
-  private def pairsFromScored(scored: DataFrame,
+  private[graft] def pairsFromScored(scored: DataFrame,
       maxPairsPerNew: Int): DataFrame =
     if (maxPairsPerNew <= 0) scored.select(col("id_new"), col("id_existing"))
     else scored
       .withColumn("__key", expr(
         "cast((cast(dotq as decimal(19,0)) * cast(dotq as " +
-          "decimal(19,0))) div cast(nb2 as decimal(19,0)) as double)"))
+          "decimal(19,0))) div cast(nullif(nb2, 0) as decimal(19,0)) " +
+          "as double)"))
       .groupBy(col("id_new"))
       .agg(GraftFunctions.topKByScore(col("__key"), col("id_existing"),
         maxPairsPerNew).as("kept"))
@@ -2863,9 +2864,8 @@ object Similarity {
           "under one shared quantizer")
     }
     if (centTab.isEmpty || pq.exists(_.codebookTable.isEmpty)) {
-      // each frame ONE projection over the empty input: a stacked
-      // literal projection is constant-folded into the cap key's
-      // division by nb2 = 0 before the empty relation is propagated
+      // literal frames over the empty input: however Catalyst folds
+      // them, the cap key's nullif(nb2, 0) never divides by zero
       val pairs = newRows.limit(0)
         .select(col(idCol).cast("long").as("id_new"),
           lit(0L).as("id_existing"), lit(0).cast("int").as("cell"))
@@ -3829,12 +3829,10 @@ object Similarity {
     val fs = fileSystem(spark, live)
     fs.delete(staged, true)
     fs.delete(retired, true)
-    // a fresh/empty index has no posting files to compact: schema
-    // inference over the dir throws exactly when there is nothing
-    // inferable to compact
-    val input =
-      try spark.read.parquet(live.toString)
-      catch { case _: org.apache.spark.sql.AnalysisException => return }
+    // read under one footer's schema (no inference job); a fresh/empty
+    // index has no posting files to compact
+    val input = dataSchema(spark, live.toString)
+      .fold(return)(spark.read.schema(_).parquet(live.toString))
     // file sets are compared RELATIVE to their root dir, so the same
     // set can be re-checked after the retire rename moves it wholesale
     def relativize(root: Path, p: Path): String = {
@@ -3866,10 +3864,7 @@ object Similarity {
     // not in this list) and is folded by the next compaction.
     recoverTombstones(spark, path)
     val tombFiles = parquetDataFiles(spark, new Path(path + "/tombstones"))
-    val folded =
-      if (tombFiles.isEmpty) input
-      else withoutIds(input,
-        spark.read.parquet(tombFiles.map(_.toString): _*))
+    val folded = readStated(spark, tombFiles).fold(input)(withoutIds(input, _))
     writeCells(folded, footerRowCount(spark, path + "/centroids").toInt,
       "overwrite", staged.toString)
     afterStage()

@@ -1,3 +1,11 @@
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.FutureAction
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
+
 /** Graft — a Spark-native analytics engine with the query and
   * data-processing surface of cerner/bunsen, re-expressed as idiomatic
   * DataFrame/Catalyst code, plus the operator families a large-scale
@@ -82,4 +90,33 @@ package object graft {
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "1000")
       .getOrCreate()
+
+  /** The distinct rows of `frame`, or None when there are more than `cap`:
+    * the bounded driver collect, in one job. Each task deduplicates its
+    * partition and stops past `cap` rows (returning none); the driver
+    * merges up to `cap` + 1 and cancels the job once past `cap`, so it
+    * holds at most `cap` + 1 rows plus the task results in flight. */
+  private[graft] def distinctAtMost(frame: org.apache.spark.sql.DataFrame,
+      cap: Int): Option[Array[UnsafeRow]] = {
+    val schema = frame.schema
+    val rdd = frame.queryExecution.toRdd
+    val merged = new java.util.HashSet[UnsafeRow]()
+    var over = false
+    lazy val job: FutureAction[Unit] = frame.sparkSession.sparkContext
+      .submitJob(rdd, (rows: Iterator[InternalRow]) => {
+        val unsafe = UnsafeProjection.create(schema)
+        val local = new java.util.HashSet[UnsafeRow]()
+        while (rows.hasNext && local.size <= cap)
+          local.add(unsafe(rows.next()).copy())
+        if (local.size > cap) null else local.toArray(new Array[UnsafeRow](0))
+      }, rdd.partitions.indices, (_: Int, part: Array[UnsafeRow]) => {
+        if (part == null) over = true
+        else part.iterator.takeWhile(_ => merged.size <= cap).foreach(merged.add)
+        if (over || merged.size > cap) { over = true; job.cancel() }
+      }, ())
+    SQLExecution.withNewExecutionId(frame.queryExecution, Some("collect")) {
+      Await.ready(job, Duration.Inf)
+    }.value.get.recover { case _ if over => }.get
+    Option.when(!over)(merged.toArray(new Array[UnsafeRow](0)))
+  }
 }

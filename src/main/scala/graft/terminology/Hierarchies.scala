@@ -11,10 +11,11 @@ import graft.closure.TransitiveClosure
   * Reference behavior: /root/reference/bunsen-spark/.../codes/Hierarchies.java
   * (members :88-101, latest versions :185-200, withHierarchyElements :211-230,
   * expandElements :314-391, writeToTables :420-466). The one deliberate
-  * divergence (documented in SURVEY §2.7 G1): ancestor expansion is computed
-  * with a distributed prefix-doubling join over dense dictionary ids
-  * ([[graft.closure.TransitiveClosure.closure]]) instead of a driver-side
-  * DFS, so it scales with the cluster rather than driver memory.
+  * divergence (documented in SURVEY §2.7 G1): ancestor expansion
+  * ([[graft.closure.TransitiveClosure.closure]]) walks each code's
+  * ancestors on the executors over a broadcast edge table rather than on
+  * the driver, and above its edge gate runs as a distributed prefix-doubling
+  * join, so it scales with the cluster rather than driver memory.
   */
 class Hierarchies private (
     val spark: SparkSession,
@@ -41,12 +42,13 @@ class Hierarchies private (
     HierarchyKind.latestMap(members.toDF(), includeExperimental = true)
 
   /** Add a hierarchy given its direct parent-child elements; the transitive
-    * closure is computed here, distributed, by
-    * [[graft.closure.TransitiveClosure.closure]] (prefix doubling: real code
-    * hierarchies are 10-20 deep, so it converges in ⌈log₂ d⌉+1 ≈ 5 rounds;
-    * the round budget allows 2^64 depth and the closure throws rather than
-    * truncating). Duplicate (uri, version) is an error, matching reference
-    * semantics (Hierarchies.java:216-222). */
+    * closure is computed here by [[graft.closure.TransitiveClosure.closure]]:
+    * up to its gate (a million distinct edges) one bounded edge collect and
+    * a lazy executor-side ancestor walk, with no rounds; above it prefix
+    * doubling (real code hierarchies are 10-20 deep, so ⌈log₂ d⌉+1 ≈ 5
+    * rounds; the round budget allows 2^64 depth and the loop throws rather
+    * than truncating). Duplicate (uri, version) is an error, matching
+    * reference semantics (Hierarchies.java:216-222). */
   def withHierarchyElements(
       uri: String,
       version: String,

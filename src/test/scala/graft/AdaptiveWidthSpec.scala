@@ -38,8 +38,9 @@ class AdaptiveWidthSpec extends SparkSuite {
       edges.unionAll(edges.select(col("dst").as("src"),
         col("src").as("dst"))), k = 2)
     assert(kc.rdd.getNumPartitions === 1)
-    val cl = closure.TransitiveClosure.closureLong(spark,
-      Seq((1L, 2L), (2L, 3L)).toDF("parent", "child"))
+    val cl = closure.TransitiveClosure.closureLongWith(spark,
+      Seq((1L, 2L), (2L, 3L)).toDF("parent", "child"),
+      walkMaxEdges = closure.TransitiveClosure.LoopOnly)
     assert(cl.rdd.getNumPartitions === 1)
     assert(cl.count() === 3L)
     val nd = ops.Dedup.nearDupClusters(

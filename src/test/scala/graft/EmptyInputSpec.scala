@@ -33,4 +33,23 @@ class EmptyInputSpec extends SparkSuite {
     assert(failures.isEmpty,
       failures.map { case (n, e) => s"\n  $n -> $e" }.mkString)
   }
+
+  test("the capped ANN pair route over an empty quantizer returns an " +
+      "empty frame, also when its literal frame is two stacked " +
+      "projections") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.Similarity
+    val e = spark.read.parquet(s"$emptyDir/embeddings.parquet")
+    val idx = Similarity.buildIvfIndex(e, "vec_id", "embedding",
+      Similarity.hashSeeds(e, "vec_id", "embedding", 4), "sid", "svec")
+    assert(Similarity.annNearDupPairs(idx, e, "vec_id", "embedding",
+      thresholdPpm = 200000L, maxPairsPerNew = 2).count() === 0L)
+    val scored = e.limit(0)
+      .select(col("vec_id").cast("long").as("id_new"),
+        lit(0L).as("id_existing"))
+      .select(col("id_new"), col("id_existing"), lit(0.0).as("dotq"),
+        lit(0.0).as("nq2"), lit(0.0).as("nb2"))
+    assert(Similarity.pairsFromScored(scored, maxPairsPerNew = 2)
+      .count() === 0L)
+  }
 }

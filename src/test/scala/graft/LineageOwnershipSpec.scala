@@ -64,7 +64,8 @@ class LineageOwnershipSpec extends SparkSuite {
     import spark.implicits._
     val base = (1L until 32L).map(i => (i, i + 1)).toDF("parent", "child")
     val left = leftovers {
-      val closed = TransitiveClosure.closureLong(spark, base)
+      val closed = TransitiveClosure.closureLongWith(spark, base,
+        walkMaxEdges = TransitiveClosure.LoopOnly)
       TransitiveClosure.addEdges(spark, closed,
         Seq((0L, 1L)).toDF("parent", "child"))
     }
@@ -148,9 +149,9 @@ class LineageOwnershipSpec extends SparkSuite {
         .toDF("parent", "child"), maxIterations = 4)
     }
     intercept[IllegalStateException] {
-      TransitiveClosure.closureLong(spark,
+      TransitiveClosure.closureLongWith(spark,
         (1L until 32L).map(i => (i, i + 1)).toDF("parent", "child"),
-        maxIterations = 2)
+        maxIterations = 2, walkMaxEdges = TransitiveClosure.LoopOnly)
     }
     intercept[IllegalStateException] {
       Dedup.nearDupClusters((0 until 40).map(i => (i.toLong, i + 1L))

@@ -18,7 +18,8 @@ class LineageSpec extends SparkSuite {
   private def closurePairs(): Set[(Long, Long)] = {
     import spark.implicits._
     val edges = (1L until 64L).map(i => (i, i + 1)).toDF("parent", "child")
-    TransitiveClosure.closureLong(spark, edges)
+    TransitiveClosure.closureLongWith(spark, edges,
+        walkMaxEdges = TransitiveClosure.LoopOnly)
       .as[(Long, Long)].collect().toSet
   }
 

@@ -1,12 +1,21 @@
 package graft.closure
 
+import org.apache.spark.TestJobs
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSuite
 import graft.terminology.HierarchicalElement
 
 /** Distributed closure vs an in-memory DFS oracle, including cycles —
   * mirrors the reference's cycle test
-  * (ValueSetUdfsTest.testHasCyclicAncestor:234-248). */
+  * (ValueSetUdfsTest.testHasCyclicAncestor:234-248). The oracle tests run
+  * against both the walk (under the gate) and the prefix-doubling loop
+  * (the gate [[TransitiveClosure.LoopOnly]]); the round-count and skew
+  * tests pin the loop alone. */
 class TransitiveClosureSpec extends SparkSuite {
+
+  private val Walk = TransitiveClosure.WalkMaxEdges
+  private val Loop = TransitiveClosure.LoopOnly
 
   /** In-memory oracle: DFS with visited set per node (the reference's
     * driver-side algorithm, Hierarchies.java:295-307). */
@@ -23,26 +32,34 @@ class TransitiveClosureSpec extends SparkSuite {
     }.toSet
   }
 
-  private def run(edges: Seq[(Int, Int)]): Set[(Int, Int)] = {
+  private def run(edges: Seq[(Int, Int)],
+      gate: Int = Walk): Set[(Int, Int)] = {
     import spark.implicits._
     val df = edges.toDF("parent", "child")
-    TransitiveClosure.closureLong(spark, df)
+    TransitiveClosure.closureLongWith(spark, df, walkMaxEdges = gate)
       .as[(Long, Long)].collect().map { case (a, d) => (a.toInt, d.toInt) }
       .toSet
   }
 
+  /** The pairs of `edges` by both paths, required equal. */
+  private def both(edges: Seq[(Int, Int)]): Set[(Int, Int)] = {
+    val walked = run(edges)
+    assert(walked === run(edges, Loop), s"walk != loop on $edges")
+    walked
+  }
+
   test("chain closure") {
-    assert(run(Seq(1 -> 2, 2 -> 3, 3 -> 4)) ===
+    assert(both(Seq(1 -> 2, 2 -> 3, 3 -> 4)) ===
       Set((1, 2), (2, 3), (3, 4), (1, 3), (1, 4), (2, 4)))
   }
 
   test("diamond closure") {
     val edges = Seq(1 -> 2, 1 -> 3, 2 -> 4, 3 -> 4)
-    assert(run(edges) === dfsOracle(edges))
+    assert(both(edges) === dfsOracle(edges))
   }
 
   test("cycle-safe: closure of a cycle terminates and excludes self-loops") {
-    val got = run(Seq(1 -> 2, 2 -> 3, 3 -> 1))
+    val got = both(Seq(1 -> 2, 2 -> 3, 3 -> 1))
     // every distinct ordered pair is in the closure, no self-pairs
     assert(got === Set((1, 2), (2, 3), (3, 1), (1, 3), (2, 1), (3, 2)))
   }
@@ -52,12 +69,75 @@ class TransitiveClosureSpec extends SparkSuite {
     val edges = Seq(
       HierarchicalElement("s", "a", "s", "b"),
       HierarchicalElement("s", "b", "s", "c")).toDS()
-    val got = TransitiveClosure.closure(spark, edges)
-      .as[HierarchicalElement].collect().toSet
-    assert(got === Set(
-      HierarchicalElement("s", "a", "s", "b"),
-      HierarchicalElement("s", "b", "s", "c"),
-      HierarchicalElement("s", "a", "s", "c")))
+    for (gate <- Seq(Walk, Loop)) {
+      val got = TransitiveClosure.closureWith(spark, edges,
+          walkMaxEdges = gate)
+        .as[HierarchicalElement].collect().toSet
+      assert(got === Set(
+        HierarchicalElement("s", "a", "s", "b"),
+        HierarchicalElement("s", "b", "s", "c"),
+        HierarchicalElement("s", "a", "s", "c")), s"gate=$gate")
+    }
+  }
+
+  test("the walk returns the loop's columns and types; maxIterations " +
+      "bounds only the loop") {
+    import spark.implicits._
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("parent", "child")
+    val walked = TransitiveClosure.closureLong(spark, chain, maxIterations = 1)
+    assert(walked.count() === 41L * 40L / 2)
+    assert(walked.schema === TransitiveClosure.closureLongWith(spark, chain,
+      walkMaxEdges = Loop).schema)
+    val typed = Seq(HierarchicalElement("s", "a", "s", "b")).toDS()
+    assert(TransitiveClosure.closure(spark, typed).schema ===
+      TransitiveClosure.closureWith(spark, typed, walkMaxEdges = Loop).schema)
+    val ints = Seq((1, 2), (2, 3)).toDF("parent", "child")
+    assert(TransitiveClosure.closureLong(spark, ints).schema ===
+      TransitiveClosure.closureLongWith(spark, ints, walkMaxEdges = Loop)
+        .schema)
+  }
+
+  test("the gate: at most walkMaxEdges distinct edges walk, one more " +
+      "falls back to the loop") {
+    import spark.implicits._
+    def walks(df: DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.contains("ancestors_of")
+    // 3 distinct edges, one of them repeated
+    val three = Seq((1L, 2L), (2L, 3L), (3L, 4L), (3L, 4L))
+      .toDF("parent", "child")
+    val four = three.union(Seq((4L, 5L)).toDF("parent", "child"))
+    val at = TransitiveClosure.closureLongWith(spark, three, walkMaxEdges = 3)
+    val over = TransitiveClosure.closureLongWith(spark, four, walkMaxEdges = 3)
+    // over the gate across tasks, and within one task
+    val overInOne = TransitiveClosure.closureLongWith(spark, four.coalesce(1),
+      walkMaxEdges = 3)
+    assert(walks(at) && !walks(over) && !walks(overInOne))
+    assert(at.count() === 6L && over.count() === 10L &&
+      overInOne.count() === 10L)
+    val typed = Seq(HierarchicalElement("s", "a", "s", "b"),
+      HierarchicalElement("s", "b", "s", "c")).toDS()
+    assert(walks(TransitiveClosure.closureWith(spark, typed,
+      walkMaxEdges = 2)))
+    val loop = TransitiveClosure.closureWith(spark, typed, walkMaxEdges = 1)
+    assert(!walks(loop) && loop.count() === 3L)
+  }
+
+  test("under the gate closure and closureLong run at most 2 jobs, the " +
+      "result action included, and the plan shows ancestors_of") {
+    import spark.implicits._
+    val longs = (0L until 200L).map(i => (i / 2, i + 1))
+      .toDF("parent", "child")
+    val codes = (0 until 200).map(i => HierarchicalElement(
+      "urn:sys", (i / 2).toString, "urn:sys", (i + 1).toString)).toDS()
+    for ((name, result) <- Seq[(String, () => DataFrame)](
+        "closureLong" -> (() => TransitiveClosure.closureLong(spark, longs)),
+        "closure" -> (() => TransitiveClosure.closure(spark, codes)))) {
+      var rows = 0L
+      val (jobs, plans) = TestJobs.of(spark) { rows = result().count() }
+      assert(rows === 1160L, name)
+      assert(jobs <= 2, s"$name: $jobs jobs")
+      assert(plans.exists(_.contains("ancestors_of")), s"$name: $plans")
+    }
   }
 
   test("property: closure matches DFS oracle on random graphs (incl cycles)") {
@@ -65,7 +145,7 @@ class TransitiveClosureSpec extends SparkSuite {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(12)((rnd.nextInt(8), rnd.nextInt(8)))
         .filter(e => e._1 != e._2).distinct
-      assert(run(edges) === dfsOracle(edges), s"seed=$seed edges=$edges")
+      assert(both(edges) === dfsOracle(edges), s"seed=$seed edges=$edges")
     }
   }
 
@@ -89,13 +169,17 @@ class TransitiveClosureSpec extends SparkSuite {
         HierarchicalElement("urn:sys:a", null, "urn:sys:b", "2"),
         HierarchicalElement("urn:sys:b", "3", null, "4"),
         HierarchicalElement("urn:sys:b", "3", "urn:sys:a", null))
-      val got = TransitiveClosure.closure(spark, (typed ++ nulls).toDS())
-        .as[HierarchicalElement].collect()
       val want = dfsOracle(edges).toSeq.map { case (a, d) =>
         HierarchicalElement(code(a)._1, code(a)._2, code(d)._1, code(d)._2)
       }
-      assert(got.length === got.distinct.length, s"seed=$seed")
-      assert(got.toSet === want.toSet, s"seed=$seed edges=$edges")
+      for (gate <- Seq(Walk, Loop)) {
+        val got = TransitiveClosure.closureWith(spark,
+            (typed ++ nulls ++ typed.take(2)).toDS(), walkMaxEdges = gate)
+          .as[HierarchicalElement].collect()
+        assert(got.length === got.distinct.length, s"seed=$seed gate=$gate")
+        assert(got.toSet === want.toSet,
+          s"seed=$seed gate=$gate edges=$edges")
+      }
     }
   }
 
@@ -113,15 +197,15 @@ class TransitiveClosureSpec extends SparkSuite {
     // depth 66 → prefix doubling needs ceil(log2(66))=7 growth rounds + 1
     // fixpoint round; maxIterations=8 IS the O(log d) round-count
     // assertion — the run throws if any more were needed
-    val got = TransitiveClosure.closureLong(spark,
+    val got = TransitiveClosure.closureLongWith(spark,
       edges.toDF("parent", "child"), maxIterations = 8,
-      shufflePartitions = Some(8))
+      shufflePartitions = Some(8), walkMaxEdges = Loop)
     assert(got.count() === expected)
     // one round short of that budget it must refuse loudly rather than
     // return a truncated closure
     assertThrows[IllegalStateException] {
-      TransitiveClosure.closureLong(spark, edges.toDF("parent", "child"),
-        maxIterations = 7, shufflePartitions = Some(8))
+      TransitiveClosure.closureLongWith(spark, edges.toDF("parent", "child"),
+        maxIterations = 7, shufflePartitions = Some(8), walkMaxEdges = Loop)
     }
   }
 
@@ -174,9 +258,9 @@ class TransitiveClosureSpec extends SparkSuite {
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1k")
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-        val got = TransitiveClosure.closureLong(spark,
+        val got = TransitiveClosure.closureLongWith(spark,
           edges.toDF("parent", "child"), maxIterations = 3,
-          shufflePartitions = Some(8))
+          shufflePartitions = Some(8), walkMaxEdges = Loop)
         assert(got.count() === expected)
       } finally {
         // the listener bus is asynchronous — wait for task-end events to

@@ -206,7 +206,7 @@ class IndexMaintenanceSpec extends SparkSuite {
       assert(byBatch.keySet === Set(0L, 1L, 2L, 3L), s"$kind: $jobs")
       // batch 0 opens the root (no job either); batches 1 and 3 compact
       assert(byBatch(2L) <= 3, s"$kind append batch: $byBatch")
-      assert(byBatch(1L) <= 6 && byBatch(3L) <= 6,
+      assert(byBatch(1L) <= 5 && byBatch(3L) <= 5,
         s"$kind compacting batches: $byBatch")
     }
     // the maintained indexes hold exactly a batch build over the union

@@ -54,12 +54,24 @@ import graft.streaming.Streams
   *    as FHIR XML) through `fromXml` plus a count, `fromJson` plus
   *    `saveAsDatabase` of five tables, a US-Core profile `extractEntry`
   *    plus a write, and a contained `toJson` round trip.
-  *  - `loops`: `closureLong` and `dagDepth` on the terminology DAG,
+  *  - `loops`: `closureLong` (the walk), its prefix-doubling loop
+  *    (`closureLong loop`) and `dagDepth` on the terminology DAG,
   *    `addEdges` of every tenth edge into the closure of the rest,
   *    `nearDupClusters` on 40 chains of 50 ids, `addToClusters` of 40
   *    pairs joining those chains, and `kCore` (k = 2) and both PageRanks
   *    (5 iterations) on a 200-node ring with chords and pendant paths;
   *    rounds (the executions whose plan joins over a checkpoint).
+  *  - `closure-scale [edges]`: the q106-shaped tree (`parent = k / 2` for
+  *    k = 1 to `edges`, default 150,000) closed by the walk and by the
+  *    loop, string-keyed (`closure`) and long-keyed (`closureLong`); per
+  *    row its rounds, and the walk and loop checksums must be equal.
+  *    `closure-scale <edges> snomed`: the string-keyed walk alone over a
+  *    SNOMED-shaped DAG of about `edges` distinct edges (SCTID-like codes;
+  *    every concept one parent drawn uniformly from the earlier ones, three
+  *    in five a second), with the heap live after the build (after a GC,
+  *    the result still held) and the old generation's peak over the build
+  *    and count, against the JVM's maximum: run it under the heap to check
+  *    (`SPARK_DRIVER_MEM=2g`) at the gate.
   *  - `ann-inquery`: q38 (`ivfTopKSeeded`), q263 (`ivfPqTopK`), q281
   *    (`ivfPqTopKScaled`, hash trainer), q284 (`ivfPqTopKTwoLevel`) and
   *    q290 (q281 at k = 30 re-ranked by `rerankExactTopK`).
@@ -72,7 +84,8 @@ import graft.streaming.Streams
   *  - `query <name> [sfDir] [reps]`: one `SparkEntry` query in this JVM
   *    on `graft.localSession` (SPARK_GRAFT_CPUS cores, default 32), warmed
   *    at sf0.001 as Bench does, then `reps` (default 3) timed counts at
-  *    `sfDir` (default sf0.1); report `query_<name>`: per rep its row
+  *    `sfDir` (default sf0.1), then one untimed count and checksum of the
+  *    result (row `result`); report `query_<name>`: per rep its row
   *    over every job the rep started, on any thread (a stream query's
   *    batches too; files read blank past the session's 8 retained SQL
   *    executions), and the last rep's stages (wall, executor run and
@@ -86,7 +99,8 @@ import graft.streaming.Streams
   *    evidence for `adcPrefilterRouteMinPostingsPerCell`.
   *
   * Only public calls are used, so the same file measures any version of
-  * the library. */
+  * the library, except the loop entry of the closure (`closureLongWith`
+  * and `closureWith` with `walkMaxEdges = LoopOnly`). */
 object ProbeJobs {
 
   /** Whether this run is a fresh-JVM `query`/`dedup-prefilter` one. */
@@ -111,6 +125,11 @@ object ProbeJobs {
         report(outDir, "fhir", tag, twice(fhirRound()))
       case Array(outDir, tag, "loops") =>
         report(outDir, "loops", tag, twice(loopsRound()))
+      case Array(outDir, tag, "closure-scale", edges, "snomed") =>
+        report(outDir, "closure_heap", tag, snomedWalk(edges.toLong))
+      case Array(outDir, tag, "closure-scale", edges @ _*) =>
+        report(outDir, "closure_scale", tag, twice(closureScaleRound(
+          edges.headOption.fold(150000L)(_.toLong))))
       case Array(outDir, tag, "ann-inquery") =>
         report(outDir, "ann_inquery", tag, twice(annInQueryRound()))
       case Array(outDir, tag, "ann-dedup") =>
@@ -125,7 +144,7 @@ object ProbeJobs {
           if (sizes.nonEmpty) sizes.map(_.toLong)
           else Seq(50000L, 250000L, 1000000L)))
       case _ => sys.error("usage: ProbeJobs <outDir> <tag> [stream|" +
-        "terminology|fhir|loops|ann-inquery|ann-dedup|" +
+        "terminology|fhir|loops|closure-scale [edges]|ann-inquery|ann-dedup|" +
         "query <name> [sfDir] [reps]|dedup-prefilter [sizes]]")
     }
     spark.stop()
@@ -622,6 +641,10 @@ object ProbeJobs {
     verb("closureLong") {
       TransitiveClosure.closureLong(spark, dag.toDF("parent", "child"))
     }
+    verb("closureLong loop") {
+      TransitiveClosure.closureLongWith(spark, dag.toDF("parent", "child"),
+        walkMaxEdges = TransitiveClosure.LoopOnly)
+    }
     val closed = TransitiveClosure.closureLong(spark,
       base.toDF("parent", "child")).persist()
     closed.count()
@@ -656,6 +679,72 @@ object ProbeJobs {
       Graphs.personalizedPageRank(spark, sym, Seq(0L, 1005L), iterations = 5)
     }
     verbs.rows.toSeq
+  }
+
+  /** The walk and the loop of both closure entries over the q106-shaped
+    * tree of `edges` edges; each pair's checksums must be equal. */
+  private def closureScaleRound(edges: Long): Seq[Row] = {
+    import graft.closure.TransitiveClosure.{closureLongWith, closureWith,
+      LoopOnly, WalkMaxEdges}
+    val verbs = new Verbs((_, r) => Seq("rounds" -> loopRounds(r.plans)))
+    val tree = spark.range(1, edges + 1)
+      .select((col("id") / 2).cast("long").as("parent"), col("id").as("child"))
+    val codes = tree.select(lit("urn:graft:tree").as("ancestorSystem"),
+      col("parent").cast("string").as("ancestorValue"),
+      lit("urn:graft:tree").as("descendantSystem"),
+      col("child").cast("string").as("descendantValue"))
+    for (gate <- Seq(WalkMaxEdges, LoopOnly)) {
+      val path = if (gate == LoopOnly) "loop" else "walk"
+      verbs(s"closure $path")(_(closureWith(spark, codes,
+        maxIterations = 64, walkMaxEdges = gate)))
+      verbs(s"closureLong $path")(_(closureLongWith(spark, tree,
+        walkMaxEdges = gate)))
+    }
+    val sums = verbs.rows.toSeq.map { case (name, cols) =>
+      name -> cols.toMap.apply("checksums") }.toMap
+    Seq("closure", "closureLong").foreach(e => require(
+      sums(s"$e walk") == sums(s"$e loop"), s"$e: walk != loop: $sums"))
+    verbs.rows.toSeq
+  }
+
+  /** The string-keyed walk over a SNOMED-shaped DAG of about `edges`
+    * distinct edges, with the peak heap of the build and count. */
+  private def snomedWalk(edges: Long): Seq[Row] = {
+    import java.lang.management.{ManagementFactory, MemoryType}
+    val concepts = edges * 5 / 8 + 1
+    def sctid(c: Column): Column = (c * 1009 + 100000).cast("string")
+    val ids = spark.range(1, concepts)
+    val dag = ids.select(pmod(xxhash64(col("id"), lit(1)), col("id"))
+        .as("parent"), col("id").as("child"))
+      .union(ids.where(pmod(col("id"), lit(5)) < 3).select(
+        pmod(xxhash64(col("id"), lit(2)), col("id")), col("id")))
+      .select(lit("http://snomed.info/sct").as("ancestorSystem"),
+        sctid(col("parent")).as("ancestorValue"),
+        lit("http://snomed.info/sct").as("descendantSystem"),
+        sctid(col("child")).as("descendantValue"))
+    val old = ManagementFactory.getMemoryPoolMXBeans.asScala.filter(p =>
+      p.getType == MemoryType.HEAP && p.getName.matches(".*(Old|Tenured).*"))
+    val mb = 1L << 20
+    def live(): Long = {
+      System.gc()
+      val rt = Runtime.getRuntime
+      (rt.totalMemory - rt.freeMemory) / mb
+    }
+    val before = live()
+    old.foreach(_.resetPeakUsage())
+    val verbs = new Verbs()
+    var after = 0L
+    verbs("closure walk") { out =>
+      val walked = graft.closure.TransitiveClosure.closure(spark, dag,
+        maxIterations = 64)
+      after = live()
+      out(walked)
+    }
+    verbs.rows.toSeq.map { case (name, cols) => name -> (cols ++ Seq(
+      "distinct_edges" -> dag.distinct().count(),
+      "live_heap_before_mb" -> before, "live_heap_after_build_mb" -> after,
+      "old_gen_peak_mb" -> old.map(_.getPeakUsage.getUsed).sum / mb,
+      "heap_max_mb" -> Runtime.getRuntime.maxMemory / mb)) }
   }
 
   /** The executions whose plan joins over a checkpoint. */
@@ -815,7 +904,10 @@ object ProbeJobs {
         "shuffle_write" -> s.shuffleWrite, "input" -> s.input,
         "spill" -> s.spill, "tasks" -> s.tasks, "call_site" -> s.name.take(90))
     }
-    report(outDir, s"query_$name", tag, runs.map(_._1), stages)
+    val (rows, sum) = rowsAndSum(fn(spark, dir))
+    println(s"PROBE $name checksum: rows=$rows xxhash64-sum=$sum")
+    report(outDir, s"query_$name", tag, runs.map(_._1) :+ ("result" ->
+      Seq("rows" -> rows, "checksums" -> Seq(sum))), stages)
     Files.writeString(Paths.get(outDir, s"query_${name}_${tag}_plan.txt"),
       fn(spark, dir).queryExecution.explainString(FormattedMode))
   }
