@@ -4469,29 +4469,15 @@ object SparkEntry {
         .truncateLineage(eager = false)
       // descending cumulative via the blocked pattern (suffix offsets
       // from higher bit-length blocks) — no single-partition window
-      val bt = hist.groupBy(col("block"))
-        .agg(sum(col("n_sessions")).as("tn"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-        .sortBy(-_._1)
-      var acc = 0L
-      val off = scala.collection.mutable.Map.empty[Int, Long]
-      bt.foreach { case (b, tn) => off(b) = acc; acc += tn }
-      val nTotal = acc
-      if (nTotal == 0) {
-        hist.select(col("depth"), col("n_sessions"),
+      graft.ops.RunningSums(hist, Nil, -col("block"),
+          Seq(col("depth").desc), Seq("n_reaching" -> col("n_sessions"))
+        ) match {
+        case None => hist.select(col("depth"), col("n_sessions"),
           col("n_sessions").as("n_reaching"),
           col("n_sessions").as("reach_ppm")).limit(0)
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("block")).orderBy(col("depth").desc)
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        hist
-          .withColumn("n_reaching", sum(col("n_sessions")).over(w) +
-            element_at(typedLit(off.toMap), col("block")))
+        case Some(sums) => sums.rows
           .select(col("depth"), col("n_sessions"), col("n_reaching"),
-            expr(s"n_reaching * 1000000 div ${nTotal}L")
+            expr(s"n_reaching * 1000000 div ${sums.total("n_reaching")}L")
               .as("reach_ppm"))
       }
     }),

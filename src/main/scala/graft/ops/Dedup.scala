@@ -646,24 +646,15 @@ object Dedup {
       .select(col("id"), col("k"),
         size(filter(col("__bs"),
           b => enc.cast("double") > b)).cast("int").as("band"))
-    val offsets: Map[Int, Long] = {
-      val counts = base.groupBy(col("band"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      var acc = 0L
-      counts.map { case (b, c) => val o = acc; acc += c; b -> o }.toMap
+    val ranked = RunningSums(base, Nil, col("band"),
+        Seq(col("k"), col("id")), Seq("rank" -> lit(1L))) match {
+      case None =>
+        return pts.select(col("id").as("id_a"), col("id").as("id_b"),
+          col("k").as("k_a"), col("k").as("k_b"),
+          lit(0L).as("rank_dist")).limit(0)
+      case Some(sums) => sums.rows.select(col("id"), col("k"), col("rank"))
+        .withColumn("bkt", expr(s"rank div $w"))
     }
-    if (offsets.isEmpty)
-      return pts.select(col("id").as("id_a"), col("id").as("id_b"),
-        col("k").as("k_a"), col("k").as("k_b"),
-        lit(0L).as("rank_dist")).limit(0)
-    val win = Window.partitionBy(col("band"))
-      .orderBy(col("k"), col("id"))
-    val ranked = base
-      .select(col("id"), col("k"),
-        (row_number().over(win).cast("long") +
-          element_at(typedLit(offsets), col("band"))).as("rank"))
-      .withColumn("bkt", expr(s"rank div $w"))
     val probes = ranked.select(col("id").as("id_a"), col("k").as("k_a"),
       col("rank").as("ra"),
       explode(array(col("bkt"), col("bkt") + 1L)).as("jb"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for LLM training pipelines: lay documents end-to-end
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   * primitive Spark's window functions only give you single-reducer (an
   * `ORDER BY` window with no `PARTITION BY` collapses 100 TB onto one
   * task). This implementation is the classic two-phase distributed prefix
-  * sum instead:
+  * sum instead ([[RunningSums]], the op modules' one blocked running sum):
   *
   *   1. split the id range into `buckets` contiguous blocks and compute
   *      each block's token-count subtotal — one map-side-combined
@@ -64,22 +63,11 @@ object Packing {
     val blockSize = math.max(1L, (span + buckets - 1) / buckets)
     val withBlock = base.withColumn("block",
       ((col("id") - lo) / blockSize).cast("long"))
-    // Phase 1: per-block subtotals → cumulative offsets (driver-side).
-    val subtotals = withBlock.groupBy(col("block"))
-      .agg(sum(col("n_tokens")).as("subtotal"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets: Map[Long, Long] = {
-      var acc = 0L
-      subtotals.map { case (b, t) => val o = acc; acc += t; b -> o }.toMap
-    }
-    // Phase 2: within-block running sum (one window partition per block,
-    // parallel) + the block's global offset.
-    val w = Window.partitionBy(col("block")).orderBy(col("id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val start = coalesce(sum(col("n_tokens")).over(w), lit(0L)) +
-      element_at(typedLit(offsets), col("block"))
-    withBlock
-      .withColumn("start_tok", start)
+    // Per-block subtotals → driver offsets → one window per block; a
+    // document starts where the running sum before it ends.
+    RunningSums(withBlock, Nil, col("block"), Seq(col("id")),
+        Seq("end_tok" -> col("n_tokens"))).get.rows
+      .withColumn("start_tok", col("end_tok") - col("n_tokens"))
       .withColumn("first_chunk",
         floor(col("start_tok") / capacity).cast("long"))
       .withColumn("last_chunk",

@@ -107,13 +107,8 @@ object Profiling {
   def equiDepthHistogram(df: DataFrame, groupCol: String,
       valueCol: String, buckets: Int): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    import org.apache.spark.sql.expressions.Window
-    val byG = Window.partitionBy(col("g"))
-    df.groupBy(col(groupCol).as("g"),
-        col(valueCol).cast("decimal(20,4)").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(byG.orderBy(col("v"))))
-      .withColumn("n", sum(col("c")).over(byG))
+    valueHistogram(df.select(col(groupCol).as("g"),
+        col(valueCol).cast("decimal(20,4)").as("v")))
       .withColumn("bucket",
         expr(s"((cum - c) * $buckets) div n").cast("int"))
       .groupBy(col("g").as(groupCol), col("bucket"))
@@ -294,31 +289,13 @@ object Profiling {
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
     // descending sweep: offsets accumulate from the HIGHEST block down
-    val blockTotals = per.groupBy(col("block"))
-      .agg(sum(col("c")).as("tc"), sum(col("p")).as("tp"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1),
-        r.getLong(2))).sortBy(-_._1)
-    if (blockTotals.isEmpty) {
+    val sums = RunningSums(per, Nil, -col("block"), Seq(col("v").desc),
+        Seq("n_kept" -> col("c"), "n_pos" -> col("p"))).getOrElse {
       return per.select(lit(0L).as("target_ppm"), col("v").as("threshold"),
         lit(0L).as("n_kept"), lit(0L).as("n_pos"),
         lit(0L).as("precision_ppm")).limit(0)
     }
-    var accC = 0L; var accP = 0L
-    val offC = scala.collection.mutable.Map.empty[Long, Long]
-    val offP = scala.collection.mutable.Map.empty[Long, Long]
-    blockTotals.foreach { case (b, tc, tp) =>
-      offC(b) = accC; offP(b) = accP; accC += tc; accP += tp
-    }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("block")).orderBy(col("v").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pr = per.select(col("v"),
-        (sum(col("c")).over(w) +
-          element_at(typedLit(offC.toMap), col("block").cast("long")))
-          .as("n_kept"),
-        (sum(col("p")).over(w) +
-          element_at(typedLit(offP.toMap), col("block").cast("long")))
-          .as("n_pos"))
+    val pr = sums.rows.select(col("v"), col("n_kept"), col("n_pos"))
       .withColumn("precision_ppm",
         expr("n_pos * 1000000L div n_kept"))
       .truncateLineage(eager = false)
@@ -449,42 +426,21 @@ object Profiling {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val blockTotals = per.groupBy(col("block"))
-      .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"),
-        count(lit(1)).as("nv"))
-    val collected = blockTotals.collect()
-      .map(r => (r.getInt(0).toLong, r.getLong(1), r.getLong(2),
-        r.getLong(3)))
-    if (collected.isEmpty) {
-      return per.select(lit(0L).as("n_a"), lit(0L).as("n_b"),
-        lit(0L).as("n_values"), col("v").as("ks_at"),
-        lit(0L).as("ks_ppm")).limit(0)
-    }
-    val sorted = collected.sortBy(_._1)
-    var accA = 0L; var accB = 0L; var accV = 0L
-    val offA = scala.collection.mutable.Map.empty[Long, Long]
-    val offB = scala.collection.mutable.Map.empty[Long, Long]
-    sorted.foreach { case (b, ta, tb, nv) =>
-      offA(b) = accA; offB(b) = accB; accA += ta; accB += tb; accV += nv
-    }
-    val (na, nb, nv) = (accA, accB, accV)
+    val sums = RunningSums(per, Nil, col("block"), Seq(col("v")),
+        Seq("cuma" -> col("ca"), "cumb" -> col("cb"), "nv" -> lit(1L)))
+      .getOrElse {
+        return per.select(lit(0L).as("n_a"), lit(0L).as("n_b"),
+          lit(0L).as("n_values"), col("v").as("ks_at"),
+          lit(0L).as("ks_ppm")).limit(0)
+      }
+    val Seq(na, nb, nv) = Seq("cuma", "cumb", "nv").map(sums.total(_).toLong)
     if (na == 0 || nb == 0) {
       return per.select(lit(na).as("n_a"), lit(nb).as("n_b"),
         lit(nv).as("n_values"), col("v").as("ks_at"),
         lit(0L).as("ks_ppm")).limit(0)
     }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("block")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def dec(c: Column) = c.cast("decimal(38,0)")
-    val best = per
-      .select(col("v"),
-        (sum(col("ca")).over(w) +
-          element_at(typedLit(offA.toMap), col("block").cast("long")))
-          .as("cuma"),
-        (sum(col("cb")).over(w) +
-          element_at(typedLit(offB.toMap), col("block").cast("long")))
-          .as("cumb"))
+    val best = sums.rows
       .select(col("v"),
         abs(dec(col("cuma")) * nb - dec(col("cumb")) * na).as("diff"))
       .groupBy(lit(1).as("__g"))
@@ -663,16 +619,8 @@ object Profiling {
     val hiBd = BigDecimal(hi.toString)
     require(loBd.scale <= 6 && hiBd.scale <= 6,
       s"lo/hi must have <= 6 decimal digits, got [$lo, $hi]")
-    import org.apache.spark.sql.expressions.Window
     val vdec = col(valueCol).cast("decimal(20,4)")
-    // distinct-value histogram with running count AND group total: both
-    // windows share partitionBy(g), so Catalyst plans them over one
-    // exchange (the unordered total uses the whole-partition frame)
-    val byG = Window.partitionBy(col("g"))
-    val cum = df.groupBy(col(groupCol).as("g"), vdec.as("v"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(byG.orderBy(col("v"))))
-      .withColumn("n", sum(col("c")).over(byG))
+    val cum = valueHistogram(df.select(col(groupCol).as("g"), vdec.as("v")))
     // fractional target positions p·(n−1), exact decimal; k = floor,
     // frac = remainder. k+1 clamps to n−1 (frac is 0 there anyway).
     // n is a per-row column now, so the ranks are too — the order
@@ -745,6 +693,22 @@ object Profiling {
         (col("n_violating_keys") === 0).as("holds"))
   }
 
+  /** The per-group distinct-value histogram of `rows`' (`g`, `v`)
+    * columns: one row per distinct (g, v) with its count `c`, its
+    * running count `cum` in ascending v and its group's total `n`. Both
+    * windows share partitionBy(g), so Catalyst plans them over one
+    * exchange, and no state reaches the driver, so any number of groups
+    * fits (the blocked [[RunningSums]] holds groups × blocks offsets on
+    * the driver instead, and serves few, huge groups). */
+  private def valueHistogram(rows: DataFrame, g: String = "g",
+      v: String = "v"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byG = Window.partitionBy(col(g))
+    rows.groupBy(col(g), col(v)).agg(count(lit(1)).as("c"))
+      .withColumn("cum", sum(col("c")).over(byG.orderBy(col(v))))
+      .withColumn("n", sum(col("c")).over(byG))
+  }
+
   /** Doubled exact median per group over `(g, v DECIMAL)` rows:
     * returns `(g, n, m2)` with `m2 = v_k + v_j` for 0-based order
     * statistics `k = (n−1) div 2`, `j = n div 2` — that is EXACTLY
@@ -754,11 +718,7 @@ object Profiling {
     * [[winsorize]]: one groupBy, two windows over one exchange, order
     * statistics without a probe join. */
   private def medianX2(vals: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byG = Window.partitionBy(col("g"))
-    val cum = vals.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(byG.orderBy(col("v"))))
-      .withColumn("n", sum(col("c")).over(byG))
+    val cum = valueHistogram(vals)
     val k = expr("(n - 1) div 2")
     val j = expr("n div 2")
     def hit(r: Column) = col("cum") - col("c") <= r && r < col("cum")
@@ -845,13 +805,9 @@ object Profiling {
     * onto the rows. */
   def quantileTransform(df: DataFrame, groupCol: String, idCol: String,
       valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vdec = col(valueCol).cast("decimal(20,4)")
-    val byG = Window.partitionBy(col("__qg"))
-    val cum = df.groupBy(col(groupCol).as("__qg"), vdec.as("__qv"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(byG.orderBy(col("__qv"))))
-      .withColumn("n", sum(col("c")).over(byG))
+    val cum = valueHistogram(df.select(col(groupCol).as("__qg"),
+        vdec.as("__qv")), "__qg", "__qv")
       .select(col("__qg"), col("__qv"),
         when(col("n") === 1, lit(0L)).otherwise(
           expr("((cum - c) * 1000000L) div (n - 1)")).as("pct_ppm"))
@@ -1062,35 +1018,17 @@ object Profiling {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val bt = per.groupBy(col("metric"), col("block"))
-      .agg(sum(col("c")).as("tc"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    if (bt.isEmpty) {
+    val sums = RunningSums(per, Seq(col("metric")), col("block"),
+        Seq(col("v")), Seq("cum" -> col("c"))).getOrElse {
       return per.select(lit(null).cast("int").as("r_q"),
         lit(null).cast("int").as("f_q"),
         lit(null).cast("int").as("m_q"), col("c").as("n_customers"),
         col("c").as("sum_monetary_cents")).limit(0)
     }
-    val off = scala.collection.mutable.Map.empty[String, Long]
-    val nTot = scala.collection.mutable.Map.empty[String, Long]
-    bt.groupBy(_._1).foreach { case (metric, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).foreach { case (_, b, tc) =>
-        off(s"$metric:$b") = acc; acc += tc
-      }
-      nTot(metric) = acc
-    }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("metric"), col("block"))
-      .orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bucketed = per
+    val bucketed = sums.rows
       .select(col("metric"), col("v"),
-        (sum(col("c")).over(w) - col("c") +
-          element_at(typedLit(off.toMap),
-            concat_ws(":", col("metric"), col("block")))).as("mr"),
-        element_at(typedLit(nTot.toMap), col("metric")).as("n"))
+        (col("cum") - col("c")).as("mr"),
+        sums.groupTotal("cum").as("n"))
       .select(col("metric"), col("v"),
         (expr(s"(mr * $buckets) div n") + 1).cast("int").as("q"))
     val scored = long.join(bucketed, Seq("metric", "v"))
@@ -1254,9 +1192,10 @@ object Profiling {
     * (value desc, key asc — fully tie-deterministic) in period A and
     * period B, top `topK` by absolute rank change. The naive form is
     * two global ORDER BY DESC row_numbers; here each period's rank is
-    * `count-of-strictly-greater + within-tie row_number`, from the
-    * blocked (period, bit-length) COUNT prefix (RANGE frames so tie
-    * groups count whole) with driver offsets — parallel windows, no
+    * `total − count-at-or-below + 1`, the count being the blocked
+    * (period, bit-length) running count ([[RunningSums]]) over (value
+    * asc, key desc) — keys are unique per period, so that order is the
+    * exact reverse of the rank order; parallel windows, no
     * single-reducer sort. Entities present in only one period are
     * excluded (no rank to compare).
     *
@@ -1274,34 +1213,15 @@ object Profiling {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val bt = per.groupBy(col("p"), col("block"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    if (bt.isEmpty) {
+    // keys are unique per period, so the running count over
+    // (value asc, key desc) is the row's rank from the bottom
+    val sums = RunningSums(per, Seq(col("p")), col("block"),
+        Seq(col("v"), col("k").desc), Seq("cnt" -> lit(1L))).getOrElse {
       return per.select(col("k").as(keyCol), col("v").as("rank_a"),
         col("v").as("rank_b"), col("v").as("delta")).limit(0)
     }
-    val off = scala.collection.mutable.Map.empty[String, Long]
-    val pTot = scala.collection.mutable.Map.empty[String, Long]
-    bt.groupBy(_._1).foreach { case (p, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).foreach { case (_, b, c) =>
-        off(s"$p:$b") = acc; acc += c
-      }
-      pTot(p) = acc
-    }
-    import org.apache.spark.sql.expressions.Window
-    val wCnt = Window.partitionBy(col("p"), col("block"))
-      .orderBy(col("v"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTie = Window.partitionBy(col("p"), col("v")).orderBy(col("k"))
-    val ranked = per
-      .withColumn("cumCnt", count(lit(1)).over(wCnt) +
-        element_at(typedLit(off.toMap),
-          concat_ws(":", col("p"), col("block"))))
-      .withColumn("rank",
-        element_at(typedLit(pTot.toMap), col("p")) - col("cumCnt") +
-          row_number().over(wTie))
+    val ranked = sums.rows.withColumn("rank",
+      sums.groupTotal("cnt") - col("cnt") + 1L)
     val ra = ranked.where(col("p") === "a")
       .select(col("k"), col("rank").as("rank_a"))
     val rb = ranked.where(col("p") === "b")
@@ -1318,12 +1238,12 @@ object Profiling {
     * carrying the first 80% of total value, B = the next 15%, C = the
     * tail. The naive form is one global ORDER BY value DESC with a
     * running sum — a single-reducer sort at 100 TB. Here the
-    * descending cumulative "mass before this entity" comes from the
-    * blocked ascending mass prefix (mass-above = S − cumAsc) plus a
-    * within-tie prefix ((rank−1)·v over the tie group, ordered by
-    * entity id — tie groups are same-cents entities, tiny), so the
-    * classification predicate `before·100 < 80·S` is exact integer
-    * arithmetic with full tie determinism.
+    * descending cumulative "mass before this entity" is S − the blocked
+    * running mass ([[RunningSums]]) over (value asc, entity desc):
+    * entities are unique, so that order is the exact reverse of (value
+    * desc, entity asc), and the classification predicate
+    * `before·100 < 80·S` is exact integer arithmetic with full tie
+    * determinism.
     *
     * Output: one row per class — (abc_class, n_entities, mass_cents,
     * share_ppm). */
@@ -1336,43 +1256,26 @@ object Profiling {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val bt = per.groupBy(col("block"))
-      .agg(sum(col("v").cast("decimal(38,0)")).as("tm"))
-      .collect()
-      .map(r => (r.getInt(0).toLong, BigInt(r.getDecimal(1)
-        .toBigInteger)))
-      .sortBy(_._1)
-    if (bt.isEmpty) {
-      return per.select(lit("A").as("abc_class"),
-        col("v").as("n_entities"), col("v").as("mass_cents"),
-        col("v").as("share_ppm")).limit(0)
-    }
-    var acc = BigInt(0)
-    val offM = scala.collection.mutable.Map.empty[Long, String]
-    bt.foreach { case (b, tm) => offM(b) = acc.toString; acc += tm }
-    val s = acc
+    def d38(c: Column) = c.cast("decimal(38,0)")
+    // entities are unique, so the running mass over (value asc, key
+    // desc) is the mass at and after the entity in (value desc, key asc)
+    val sums = RunningSums(per, Nil, col("block"),
+        Seq(col("v"), col("k").desc), Seq("cum" -> d38(col("v"))))
+      .getOrElse {
+        return per.select(lit("A").as("abc_class"),
+          col("v").as("n_entities"), col("v").as("mass_cents"),
+          col("v").as("share_ppm")).limit(0)
+      }
+    val s = sums.total("cum")
     if (s <= 0) {
       return per.groupBy(lit("C").as("abc_class"))
         .agg(count(lit(1)).as("n_entities"), sum(col("v"))
           .as("mass_cents"),
           max(lit(null).cast("long")).as("share_ppm"))
     }
-    import org.apache.spark.sql.expressions.Window
-    // RANGE frame: cumAsc must include the WHOLE tie group (a ROWS
-    // frame would split ties in arbitrary physical order)
-    val wB = Window.partitionBy(col("block")).orderBy(col("v"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTie = Window.partitionBy(col("v")).orderBy(col("k"))
-    def d38(c: Column) = c.cast("decimal(38,0)")
     val sLit = lit(s.toString).cast("decimal(38,0)")
-    val classed = per
-      .withColumn("cumAsc",
-        sum(d38(col("v"))).over(wB) +
-          element_at(typedLit(offM.toMap), col("block").cast("long"))
-            .cast("decimal(38,0)"))
-      .withColumn("before",
-        (sLit - col("cumAsc")) +
-          d38(row_number().over(wTie) - 1) * col("v"))
+    val classed = sums.rows
+      .withColumn("before", sLit - col("cum"))
       .withColumn("abc_class",
         when(col("before") * 100 < sLit * 80, "A")
           .when(col("before") * 100 < sLit * 95, "B")
@@ -1521,26 +1424,15 @@ object Profiling {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val bt = per.groupBy(col("block"))
-      .agg(sum(col("c")).as("tc"),
-        sum(col("c").cast("decimal(38,0)") * col("v")).as("tm"))
-      .collect()
-      .map(r => (r.getInt(0).toLong, r.getLong(1),
-        BigInt(r.getDecimal(2).toBigInteger)))
-      .sortBy(_._1)
-    if (bt.isEmpty) {
-      return per.select(lit("gini").as("stat"), col("c").as("ppm"),
-        col("c").as("n_rows"), col("c").as("total_cents")).limit(0)
-    }
-    var accC = 0L; var accM = BigInt(0)
-    val offC = scala.collection.mutable.Map.empty[Long, Long]
-    val offM = scala.collection.mutable.Map.empty[Long, String]
-    bt.foreach { case (b, tc, tm) =>
-      offC(b) = accC; offM(b) = accM.toString
-      accC += tc; accM += tm
-    }
-    val n = accC
-    val s = accM
+    def d38(c: Column) = c.cast("decimal(38,0)")
+    val sums = RunningSums(per, Nil, col("block"), Seq(col("v")),
+        Seq("cumc" -> col("c"), "cumm" -> d38(col("c")) * col("v")))
+      .getOrElse {
+        return per.select(lit("gini").as("stat"), col("c").as("ppm"),
+          col("c").as("n_rows"), col("c").as("total_cents")).limit(0)
+      }
+    val n = sums.total("cumc").toLong
+    val s = sums.total("cumm")
     if (s == 0) {
       // degenerate all-zero mass: Lorenz/Gini undefined — report nulls
       return Seq("gini", "top1", "top10").map { st =>
@@ -1550,18 +1442,7 @@ object Profiling {
             lit(0L).as("total_cents"))
       }.reduce(_ unionAll _)
     }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("block")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def d38(c: Column) = c.cast("decimal(38,0)")
-    val cum = per.select(col("v"), col("c"),
-        (sum(col("c")).over(w) +
-          element_at(typedLit(offC.toMap), col("block").cast("long")))
-          .as("cumc"),
-        (sum(d38(col("c")) * col("v")).over(w) +
-          element_at(typedLit(offM.toMap),
-            col("block").cast("long")).cast("decimal(38,0)"))
-          .as("cumm"))
+    val cum = sums.rows.select(col("v"), col("c"), col("cumc"), col("cumm"))
       .truncateLineage(eager = false)
     val sLit = lit(new java.math.BigDecimal(s.bigInteger))
       .cast("decimal(38,0)")
@@ -1832,14 +1713,9 @@ object Profiling {
     * arithmetic exact longs; values carried as DECIMAL(20,4). */
   def quantileMatch(df: DataFrame, groupCol: String, valueCol: String,
       refGroup: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byG = Window.partitionBy(col("g"))
-    val cum = df.select(col(groupCol).as("g"),
+    val cum = valueHistogram(df.select(col(groupCol).as("g"),
         col(valueCol).cast("decimal(20,4)").as("v"))
-      .where(col("g").isNotNull && col("v").isNotNull)
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(byG.orderBy(col("v"))))
-      .withColumn("n", sum(col("c")).over(byG))
+      .where(col("g").isNotNull && col("v").isNotNull))
       .truncateLineage(eager = false)
     val ref = cum.where(col("g") === refGroup)
       .select(col("v").as("r_v"), (col("cum") - col("c")).as("r_lo"),
@@ -1937,29 +1813,13 @@ object Profiling {
         s"maxGroups=$maxGroups — the blocked-rank kernel holds groups x " +
         "<=65 block subtotals on the driver. Use a genuinely low-" +
         "cardinality group column, or raise maxGroups deliberately")
-    val bt = per.groupBy(col("g"), col("block"))
-      .agg(sum(col("c")).as("tc"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    if (bt.isEmpty) {
+    val sums = RunningSums(per, Seq(col("g")), col("block"),
+        Seq(col("v")), Seq("cum" -> col("c"))).getOrElse {
       return per.select(col("g").as(groupCol), col("c").as("n"),
         col("v").as("sum_value"), col("v").as("gini_ppm")).limit(0)
     }
-    val off = scala.collection.mutable.Map.empty[String, Long]
-    bt.groupBy(_._1).foreach { case (g, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).foreach { case (_, b, tc) =>
-        off(g + "\u0001" + b) = acc; acc += tc
-      }
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g"), col("block")).orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, org.apache.spark.sql.expressions.Window
-        .currentRow)
-    per.select(col("g"), col("v"), col("c"),
-        (sum(col("c")).over(w) - col("c") +
-          element_at(typedLit(off.toMap),
-            concat_ws("\u0001", col("g"), col("block")))).as("lo"))
+    sums.rows.select(col("g"), col("v"), col("c"),
+        (col("cum") - col("c")).as("lo"))
       .groupBy(col("g"))
       .agg(sum(col("c")).as("n"),
         sum(d38c(col("v")) * d38c(col("c"))).as("sx"),

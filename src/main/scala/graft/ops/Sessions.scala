@@ -619,25 +619,13 @@ object Sessions {
       .withColumn("block", when(col("h") <= 0, lit(-1))
         .otherwise((length(bin(col("h"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val bt = axis.groupBy(col("block")).agg(sum(col("net")).as("tn"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
-      .sortBy(_._1)
-    if (bt.isEmpty) {
-      return axis.select(col("h").as("hour"),
+    RunningSums(axis, Nil, col("block"), Seq(col("h")),
+        Seq("cur" -> col("net"))) match {
+      case None => axis.select(col("h").as("hour"),
         col("net").as("rolling_users")).limit(0)
+      case Some(sums) => sums.rows.where(col("obs") === 1)
+        .select(col("h").as("hour"), col("cur").as("rolling_users"))
     }
-    var acc = 0L
-    val off = scala.collection.mutable.Map.empty[Long, Long]
-    bt.foreach { case (b, tn) => off(b) = acc; acc += tn }
-    val wB = Window.partitionBy(col("block")).orderBy(col("h"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    axis
-      .select(col("h"), col("obs"),
-        (sum(col("net")).over(wB) +
-          element_at(typedLit(off.toMap), col("block").cast("long")))
-          .as("cur"))
-      .where(col("obs") === 1)
-      .select(col("h").as("hour"), col("cur").as("rolling_users"))
   }
 
   /** CUSUM changepoint detection on the per-group hourly count series —
@@ -1077,23 +1065,11 @@ object Sessions {
         (count(lit(1)) - sum(col("churn"))).as("n_censored"))
       .withColumn("block", (length(bin(col("t"))) - 1).cast("int"))
       .truncateLineage(eager = false)
-    // suffix offsets from higher bit-length blocks (block count ≤ 64,
-    // so the driver-side fold is constant-size by construction)
-    val bt = byT.groupBy(col("block"))
-      .agg(sum(col("n_churn") + col("n_censored")).as("tn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(-_._1)
-    var acc = 0L
-    val off = scala.collection.mutable.Map.empty[Int, Long]
-    bt.foreach { case (b, tn) => off(b) = acc; acc += tn }
-    val offCol = bt.map { case (b, _) =>
-      when(col("block") === b, lit(off(b)))
-    }.foldLeft(lit(0L): Column)((a, c) => c.otherwise(a))
-    val wDesc = Window.partitionBy(col("block")).orderBy(col("t").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    byT
-      .withColumn("n_risk",
-        sum(col("n_churn") + col("n_censored")).over(wDesc) + offCol)
+    // descending sweep: suffix offsets from higher bit-length blocks
+    // (block count ≤ 64, so the driver state is constant-size)
+    RunningSums(byT, Nil, -col("block"), Seq(col("t").desc),
+        Seq("n_risk" -> (col("n_churn") + col("n_censored"))))
+      .map(_.rows).getOrElse(byT.withColumn("n_risk", col("n_churn")).limit(0))
       .select(col("t").as("duration"), col("n_risk"), col("n_churn"),
         col("n_censored"),
         expr("n_churn * 1000000 div n_risk").as("hazard_ppm"))

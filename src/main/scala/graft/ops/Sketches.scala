@@ -242,26 +242,14 @@ object Sketches {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val blockTotals = per.groupBy(col("block"))
-      .agg(sum(col("c")).as("tc"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
-      .sortBy(_._1)
-    if (blockTotals.isEmpty) {
+    val sums = RunningSums(per, Nil, col("block"), Seq(col("v")),
+        Seq("cum" -> col("c"))).getOrElse {
       return per.select(lit(0).as("p_num"), lit(1).as("p_den"),
         lit(0L).as("rank"), col("v").as("value"), lit(0L).as("n_rows"))
         .limit(0)
     }
-    var acc = 0L
-    val off = scala.collection.mutable.Map.empty[Long, Long]
-    blockTotals.foreach { case (b, tc) => off(b) = acc; acc += tc }
-    val n = acc
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("block")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = per.select(col("v"), col("c"),
-        (sum(col("c")).over(w) +
-          element_at(typedLit(off.toMap), col("block").cast("long")))
-          .as("cum"))
+    val n = sums.total("cum").toLong
+    val cum = sums.rows.select(col("v"), col("c"), col("cum"))
       .truncateLineage(eager = false)
     // ONE pass over the cumulative frame for ALL requested fractions
     // (r11 directive #6 — the old per-fraction filter re-ran the frame
@@ -326,31 +314,14 @@ object Sketches {
         "groups x <=65 block subtotals on the driver. Use grouped " +
         "quantile SKETCHES for high-cardinality groups, or raise " +
         "maxGroups deliberately")
-    val bt = per.groupBy(col("g"), col("block"))
-      .agg(sum(col("c")).as("tc"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    if (bt.isEmpty) {
+    val sums = RunningSums(per, Seq(col("g")), col("block"),
+        Seq(col("v")), Seq("cum" -> col("c"))).getOrElse {
       return per.select(col("g").as(groupCol), lit(0).as("p_num"),
         lit(1).as("p_den"), col("c").as("rank"), col("v").as("value"),
         col("c").as("n_rows")).limit(0)
     }
-    val off = scala.collection.mutable.Map.empty[String, Long]
-    val nTot = scala.collection.mutable.Map.empty[String, Long]
-    bt.groupBy(_._1).foreach { case (g, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).foreach { case (_, b, tc) =>
-        off(g + "\u0001" + b) = acc; acc += tc
-      }
-      nTot(g) = acc
-    }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("g"), col("block")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = per.select(col("g"), col("v"), col("c"),
-        (sum(col("c")).over(w) +
-          element_at(typedLit(off.toMap),
-            concat_ws("\u0001", col("g"), col("block")))).as("cum"),
-        element_at(typedLit(nTot.toMap), col("g")).as("n"))
+    val cum = sums.rows.select(col("g"), col("v"), col("c"), col("cum"),
+        sums.groupTotal("cum").as("n"))
       .truncateLineage(eager = false)
     ps.map { case (num, den) =>
       val rk = expr(s"($num * n + ${den - 1}) div $den - 1")
@@ -384,26 +355,15 @@ object Sketches {
       .withColumn("block", when(col("v") <= 0, lit(-1))
         .otherwise((length(bin(col("v"))) - 1).cast("int")))
       .truncateLineage(eager = false)
-    val blockTotals = per.groupBy(col("block"))
-      .agg(sum(col("w")).as("tw"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
-      .sortBy(_._1)
-    if (blockTotals.isEmpty) {
+    // values are distinct, so ROWS and RANGE frames agree
+    val sums = RunningSums(per, Nil, col("block"), Seq(col("v")),
+        Seq("cum" -> col("w"))).getOrElse {
       return per.select(lit(0).as("p_num"), lit(1).as("p_den"),
         col("w").as("wrank"), col("v").as("value"),
         col("w").as("total_weight")).limit(0)
     }
-    var acc = 0L
-    val off = scala.collection.mutable.Map.empty[Long, Long]
-    blockTotals.foreach { case (b, tw) => off(b) = acc; acc += tw }
-    val wTot = acc
-    import org.apache.spark.sql.expressions.Window
-    val wnd = Window.partitionBy(col("block")).orderBy(col("v"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = per.select(col("v"), col("w"),
-        (sum(col("w")).over(wnd) +
-          element_at(typedLit(off.toMap), col("block").cast("long")))
-          .as("cum"))
+    val wTot = sums.total("cum").toLong
+    val cum = sums.rows.select(col("v"), col("w"), col("cum"))
       .truncateLineage(eager = false)
     ps.map { case (num, den) =>
       // 1-based weight rank ceil(p*W) in pure integer arithmetic

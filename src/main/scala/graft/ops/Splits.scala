@@ -150,22 +150,13 @@ object Splits {
     // silent misassignment the moment the key widens. `div` stays long.
     val base = df.select(col(idCol).as("id"), key.as("shuffle_key"))
       .withColumn("block", expr(s"shuffle_key div ${blockWidth}L"))
-    val offsets: Map[Long, Long] = {
-      val counts = base.groupBy(col("block"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-      var acc = 0L
-      counts.map { case (b, c) => val o = acc; acc += c; b -> o }.toMap
-    }
-    if (offsets.isEmpty)
-      return base.select(col("id"), col("shuffle_key"),
+    RunningSums(base, Nil, col("block"), Seq(col("shuffle_key"), col("id")),
+        Seq("position" -> lit(1L))) match {
+      case None => base.select(col("id"), col("shuffle_key"),
         lit(0L).as("position")).limit(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("block"))
-      .orderBy(col("shuffle_key"), col("id"))
-    base.select(col("id"), col("shuffle_key"),
-      (row_number().over(w).cast("long") - 1L +
-        element_at(typedLit(offsets), col("block"))).as("position"))
+      case Some(sums) => sums.rows.select(col("id"), col("shuffle_key"),
+        (col("position") - 1L).as("position"))
+    }
   }
 
   /** Curriculum ordering: a deterministic global reading order that is
@@ -197,27 +188,13 @@ object Splits {
           b => col(scoreCol).cast("double") > b)).cast("int").as("band"),
         key.as("shuffle_key"))
       .withColumn("block", expr(s"shuffle_key div ${blockWidth}L"))
-    val offsets: Map[Long, Long] = {
-      val counts = base.groupBy(col("band"), col("block"))
-        .agg(count(lit(1)).as("c"))
-        .collect()
-        .map(r => (r.getInt(0).toLong * (buckets + 1) + r.getLong(1),
-          r.getLong(2)))
-        .sortBy(_._1)
-      var acc = 0L
-      counts.map { case (k, c) => val o = acc; acc += c; k -> o }.toMap
-    }
-    if (offsets.isEmpty)
-      return base.select(col("id"), col("score"), col("band"),
+    RunningSums(base, Nil, struct(col("band"), col("block")),
+        Seq(col("shuffle_key"), col("id")), Seq("position" -> lit(1L))) match {
+      case None => base.select(col("id"), col("score"), col("band"),
         lit(0L).as("position")).limit(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("block"))
-      .orderBy(col("shuffle_key"), col("id"))
-    base.select(col("id"), col("score"), col("band"),
-      (row_number().over(w).cast("long") - 1L +
-        element_at(typedLit(offsets),
-          col("band").cast("long") * (buckets + 1) + col("block")))
-        .as("position"))
+      case Some(sums) => sums.rows.select(col("id"), col("score"),
+        col("band"), (col("position") - 1L).as("position"))
+    }
   }
 
   /** Deterministic per-stratum quota: min(n, |stratum|) rows per stratum,
@@ -378,23 +355,8 @@ object Splits {
     stats.foreach { case (g, nh, _, _) =>
       alloc(g) = math.min(alloc(g), nh) }
     // blocked two-phase per-stratum rank over (hash, id)
-    val bt = base.groupBy(col("g"), col("block"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    val off = scala.collection.mutable.Map.empty[String, Long]
-    bt.groupBy(_._1).foreach { case (g, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).foreach { case (_, b, c) =>
-        off(g + "\u0001" + b) = acc; acc += c
-      }
-    }
-    import org.apache.spark.sql.expressions.Window
-    val wnd = Window.partitionBy(col("g"), col("block"))
-      .orderBy(col("h"), col("id"))
-    val sampled = base
-      .withColumn("rank", row_number().over(wnd) +
-        element_at(typedLit(off.toMap),
-          concat_ws("\u0001", col("g"), col("block"))))
+    val sampled = RunningSums(base, Seq(col("g")), col("block"),
+        Seq(col("h"), col("id")), Seq("rank" -> lit(1L))).get.rows
       .where(col("rank") <=
         element_at(typedLit(alloc.toMap), col("g")))
     val statsMapN: Map[String, Long] = stats.map(s => s._1 -> s._2).toMap

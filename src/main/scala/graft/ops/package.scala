@@ -16,7 +16,7 @@ package graft
   *     TF-IDF, boilerplate, n-gram LMs, Zipf/Heaps, BPE, readability,
   *     PII audits, URL canonicalization, hashing-trick classifier.
   *   - [[graft.ops.Sketches]] — KMV, HLL, CMS, Bloom, heavy hitters,
-  *     exact/weighted/grouped quantiles via blocked two-phase ranks.
+  *     exact/weighted/grouped quantiles via blocked running sums.
   *   - [[graft.ops.Graphs]] — PageRank (skew-split, exchange-free
   *     rounds), k-core, BFS, triangles, two-hop reach, DAG depth,
   *     assortativity, negative sampling.
@@ -36,5 +36,12 @@ package graft
   *   - [[graft.ops.Skew]] — salted joins and skew diagnostics.
   *   - [[graft.ops.MediaCodecs]] / [[graft.ops.Multimodal]] — BMP/PPM/
   *     WAV/JPEG/PNG headers, pHash, audio fingerprints, scene cuts.
+  *
+  * Every rank, quantile or running total over a table or a group runs
+  * through one library-internal helper, `RunningSums`: per-(group, block)
+  * subtotals in one driver collect, offsets folded on the driver, then
+  * one window per (group, block) — never a single-reducer window. The
+  * driver holds groups × blocks subtotals, which the callers' block
+  * definitions (bit lengths, key ranges, quantile bands) keep small.
   */
 package object ops
